@@ -1,0 +1,71 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+/** One memoized per-(session, dir) artifact: a derived table that every
+  * consumer reads instead of re-deriving it — locally a localCheckpoint,
+  * at 100 TB a written table. Declared once in its owner object as
+  * `val x = Artifact(group, name) { (s, d) => ... }`; the declaration
+  * registers the entry, so warm-up walks the registry instead of a
+  * hand-kept list. Each entry owns a [[BoundedMemo]] of 8 live keys.
+  */
+final class Artifact[V <: AnyRef](val group: String, val name: String)(
+    build: (SparkSession, String) => V) {
+  private val memo = new BoundedMemo[(SparkSession, String), V](8)
+
+  def key: String = s"$group.$name"
+  def apply(s: SparkSession, d: String): V =
+    memo.getOrCompute((s, d))(build(s, d))
+  private[graft] def isBuilt(s: SparkSession, d: String): Boolean =
+    memo.contains((s, d))
+}
+
+object Artifact {
+  private val registered =
+    new java.util.concurrent.CopyOnWriteArrayList[Artifact[_ <: AnyRef]]()
+
+  /** Declares and registers an entry. Owner objects register when they
+    * initialise, so read [[all]] only after touching
+    * `SparkEntry.queries`, which initialises every owner. */
+  def apply[V <: AnyRef](group: String, name: String)(
+      build: (SparkSession, String) => V): Artifact[V] = {
+    val a = new Artifact(group, name)(build)
+    require(!all.exists(_.key == a.key), s"duplicate artifact ${a.key}")
+    registered.add(a)
+    a
+  }
+
+  /** Every registered entry, in registration order. */
+  def all: Seq[Artifact[_ <: AnyRef]] = registered.asScala.toSeq
+
+  /** Builds one group's entries; the first failure propagates. */
+  def warm(group: String, s: SparkSession, d: String): Unit =
+    all.filter(_.group == group).foreach(_(s, d))
+
+  /** Builds each entry in turn and times it. A failure is returned under
+    * the entry's key instead of thrown, and the later entries still
+    * build — at scale an out-of-memory build must name its artifact. */
+  def build(entries: Seq[Artifact[_ <: AnyRef]], s: SparkSession,
+      d: String): Seq[(String, Either[Throwable, Double])] =
+    entries.map { a =>
+      val t0 = System.nanoTime()
+      a.key -> (try { a(s, d); Right((System.nanoTime() - t0) / 1e9) }
+        catch { case e: Throwable => Left(e) })
+    }
+
+  def warmAll(s: SparkSession, d: String)
+      : Seq[(String, Either[Throwable, Double])] = build(all, s, d)
+
+  /** Eager localCheckpoint sized to the artifact: in-heap while `size`
+    * is within the caller's measured `inHeapMax`, DISK_ONLY beyond it.
+    * Past the boundary the 32-way concurrent unroll of deserialized row
+    * copies overflows one JVM (the sf30 probes OOM'd in
+    * `MemoryStore.putIteratorAsValues`); DISK_ONLY streams the blocks
+    * with no unroll phase, and the page cache keeps re-reads fast —
+    * also the closer analogue of the stored-table contract. */
+  def checkpoint(df: DataFrame, size: Long, inHeapMax: Long): DataFrame =
+    if (size <= inHeapMax) df.localCheckpoint()
+    else df.localCheckpoint(true,
+      org.apache.spark.storage.StorageLevel.DISK_ONLY)
+}

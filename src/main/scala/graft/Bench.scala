@@ -16,7 +16,11 @@ import org.apache.spark.sql.SparkSession
   * mid-line and fails to parse (this is exactly what happened to
   * rounds 1-2). `value` still totals ALL queries; the full per-query
   * map goes to `BENCH_FULL.json` in the working directory, committed
-  * every round (see BASELINE.md "Bench artifact notes").
+  * every round (see BASELINE.md "Bench artifact notes"), with each
+  * registered [[Artifact]]'s build seconds (`artifacts_sec`) and the
+  * entries whose build failed (`warm_failed`, also on stdout when
+  * non-empty). A filtered run (`runMain graft.Bench <names>`) times the
+  * artifacts the same way, so an at-scale build failure is named.
   */
 object Bench {
 
@@ -56,36 +60,32 @@ object Bench {
         .queryExecution.toRdd.count()
       catch { case _: Throwable => () }
     }
-    // ... and every shared memoized artifact (session frame, shingle
-    // index, k-gram tables, cluster labels, basket/pair graphs,
-    // quantized-embedding chain): each localCheckpoint build lands in
-    // whichever consumer runs FIRST — the round-7 sweep's 4 s
-    // events_session_overlap spike was exactly this. The memos are
-    // once-per-deployment stored tables, like the bucketed layouts;
-    // their builds must never be timed inside one arbitrary query.
-    // GRAFT_BENCH_WARM=tables skips them: a TARGETED scale probe of
-    // queries that read no memo must not spend the host's bounded
-    // scratch on ~50 GB of DISK_ONLY artifacts the probe never joins —
-    // the round-14 sf30 drives measured the wnv geometry queries dying
-    // in SPILL ENOSPC purely because full warmup had eaten the
-    // headroom their own shuffles needed. A full sweep must NEVER set
-    // this (a memo build would land inside a timed query); the emitted
-    // JSON records the mode for provenance.
     // codec first-touch (ms of work, runs in EVERY warm mode): ImageIO
     // plugin-registry scan + PNG reader class-init otherwise land
     // inside whichever mm query runs first — the r14 sf1 watch item
     // (mm_decode_image 3.36 s in-sweep vs 1.64 s filtered record).
     try graft.ops.Multimodal.warmCodec()
     catch { case _: Throwable => () }
+    // selecting the queries initialises every owner object, which
+    // registers its artifacts before the registry is read
+    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter(q => only.isEmpty || only(q._1))
+    // ... and every registered artifact, each timed and any failure
+    // named: a build left to the first consumer lands inside that
+    // query's timing (the round-7 4 s events_session_overlap spike).
+    // GRAFT_BENCH_WARM=tables skips them: a targeted scale probe of
+    // queries that read no artifact must not fill the host's scratch
+    // with DISK_ONLY artifacts (the round-14 sf30 SPILL ENOSPC). Such a
+    // run is a probe, never a record (see fullPath below).
     val warmTablesOnly = sys.env.get("GRAFT_BENCH_WARM").contains("tables")
-    if (!warmTablesOnly)
-      Seq[(org.apache.spark.sql.SparkSession, String) => Unit](
-        (s, d) => { graft.ops.Events.sessionFrame(s, d); () },
-        graft.ops.Dedup.warmArtifacts,
-        graft.ops.Relational.warmArtifacts,
-        graft.ops.Similarity.warmArtifacts)
-        .foreach(w => try w(spark, sfDir)
-          catch { case _: Throwable => () })
+    val artifacts =
+      if (warmTablesOnly) Seq.empty else Artifact.warmAll(spark, sfDir)
+    artifacts.foreach {
+      case (k, Right(sec)) => System.err.println(f"[bench] warm $k $sec%.3f s")
+      case (k, Left(e)) => System.err.println(
+        s"[bench] warm $k FAILED: ${e.getClass.getSimpleName} ${e.getMessage}")
+    }
+    val warmFailed = artifacts.collect { case (k, Left(_)) => k }
     val warmupSec = (System.nanoTime() - warmup0) / 1e9
     // steal_factor baseline: per-query times of the previous full
     // sweep AT THE SAME SCALE FACTOR, read BEFORE this run overwrites
@@ -131,8 +131,7 @@ object Bench {
     // A query still >5x prev after the retries is marked `suspect` in
     // the artifact instead of silently reading as a regression.
     val StallRatio = 5.0
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(q => only.isEmpty || only(q._1)).map { case (name, fn) =>
+    val results = selected.map { case (name, fn) =>
       def once(): Option[Double] = {
         val t0 = System.nanoTime()
         try {
@@ -165,6 +164,8 @@ object Bench {
     val suspects = results.collect { case (n, _, true) => n }
     def r3(v: Double): String =
       if (v < 0) "-1" else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+    def jlist(field: String, names: Seq[String]): String =
+      names.map("\"" + _ + "\"").mkString(s""","$field":[""", ",", "]")
     val timed = results.map { case (k, v, _) => (k, v) }
     val ratios = timed.collect { case (k, v)
         if v > 0 && prevTimes.get(k).exists(_ > 0) => v / prevTimes(k) }
@@ -195,9 +196,7 @@ object Bench {
     // under the old uniform 2x trigger) is listed in `regressed`.
     val regressed = BenchGuard.regressed(timed, prevTimes, stealFactor)
     val regressedField =
-      if (regressed.isEmpty) ""
-      else regressed.map("\"" + _ + "\"")
-        .mkString(""","regressed":[""", ",", "]")
+      if (regressed.isEmpty) "" else jlist("regressed", regressed)
     // a uniform slowdown inflates the steal median itself and hides
     // every per-query regression behind the normalization — flag it
     val stealAlertField =
@@ -211,18 +210,19 @@ object Bench {
       }.getOrElse("")
       s""","steal_factor":${r3(sfv)}$base$stealAlertField"""
     }.getOrElse("")
-    val suspectField =
-      if (suspects.isEmpty) ""
-      else suspects.map("\"" + _ + "\"")
-        .mkString(""","suspect":[""", ",", "]")
+    val suspectField = if (suspects.isEmpty) "" else jlist("suspect", suspects)
+    val warmFailedField =
+      if (warmFailed.isEmpty) "" else jlist("warm_failed", warmFailed)
     val warmField = s""","warmup_sec":${r3(warmupSec)}""" +
       (if (warmTablesOnly) ""","warm":"tables"""" else "")
     def jmap(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
+    val artifactsField = ""","artifacts_sec":""" +
+      jmap(artifacts.collect { case (k, Right(sec)) => (k, sec) })
     val total = timed.map(_._2).filter(_ >= 0).sum
     // full per-query detail → file (committed per-round as the record)
     val full =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","nq":${results.size}$stealField$suspectField$regressedField$warmField,"queries":${jmap(timed)},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","nq":${results.size}$stealField$suspectField$regressedField$warmField$artifactsField$warmFailedField,"queries":${jmap(timed)},"sf":"$sfDir"}"""
     // the committed record is the driver's sweep (sf0.1, unfiltered);
     // local smoke runs at other SFs land in a per-SF file instead of
     // clobbering the round artifact. A FILTERED run never writes a
@@ -253,14 +253,15 @@ object Bench {
     }
     // compact headline line → stdout (fits the harness's 2000-char
     // tail): slowest queries first, greedily filled to the byte budget
+    // left after the warm_failed list
     val bySlowest = timed.sortBy(-_._2)
-    var used = 0
+    var used = warmFailedField.length
     val head = bySlowest.takeWhile { case (k, v) =>
       used += k.length + r3(v).length + 4; used <= HeadlineBudget
     }.sortBy(_._1)
     // the pointer names the file actually written THIS run
     val fullRef = if (wrote) s""","full":"$fullPath"""" else ""
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","nq":${results.size}$stealField$suspectField$warmField,"queries":${jmap(head)}$fullRef,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","nq":${results.size}$stealField$suspectField$warmField$warmFailedField,"queries":${jmap(head)}$fullRef,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

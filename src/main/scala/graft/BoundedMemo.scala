@@ -1,7 +1,7 @@
 package graft
 
-/** Bounded access-order LRU memo — the one shape behind the table-plan,
-  * dedup-label and k-means-assignment caches: a value is computed at
+/** Bounded access-order LRU memo — the one shape behind the table-plan
+  * caches and every [[Artifact]]: a value is computed at
   * most once per live key, the map never outgrows `max` (values pin
   * their SparkSession, so an unbounded map would keep every session
   * that ever touched it alive for the JVM lifetime), and eviction only
@@ -28,4 +28,7 @@ final class BoundedMemo[K, V <: AnyRef](max: Int) {
       v
     }
   }
+
+  /** Presence check that leaves the access order alone. */
+  def contains(k: K): Boolean = map.synchronized(map.containsKey(k))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.XF
+import graft.Artifact
 import graft.sources.Tables.t
 
 /** Deduplication operators over `documents` / `embeddings` — the
@@ -56,6 +57,17 @@ object Dedup {
 
   // ---- shingling ------------------------------------------------------
 
+  /** Boundary of the in-heap memo regime (docs) for
+    * [[graft.Artifact.checkpoint]]. Every committed bench record at
+    * sf0.1/sf1 was measured on the in-heap path and sf10+ on the
+    * DISK_ONLY path; DedupSpec pins the shipped corpora against this
+    * constant so silent docs-count drift in the generators cannot flip
+    * a committed regime's storage path. */
+  private[graft] val MemoInHeapMaxDocs = 600000L
+  private def ckptSized(s: SparkSession, d: String,
+      df: DataFrame): DataFrame =
+    Artifact.checkpoint(df, nDocs(s, d), MemoInHeapMaxDocs)
+
   /** Distinct 3-token shingle HASHES of `text` (docs with <3 tokens emit
     * nothing): the [[graft.functions.ShingleHashes]] generator — one JVM
     * loop per document. All downstream set operations (freq counts,
@@ -74,37 +86,8 @@ object Dedup {
     * every downstream pass joins, exactly like the k-means assignment
     * memo ([[Similarity]]) and the cluster-label memo below.
     */
-  /** localCheckpoint with a storage level sized to the corpus. The
-    * memoized frames here are WRITTEN TABLES at 100 TB (each memo's
-    * scaladoc says so); in-heap deserialized caching is the right
-    * local default, but past ~10⁶ docs the 32-way concurrent unroll of
-    * row COPIES overflows a single 96 GB JVM — the round-13 sf30 probe
-    * OOM'd exactly there (`Dataset.checkpoint` →
-    * `MemoryStore.putIteratorAsValues` → `UnsafeRow.copy`, killing the
-    * context and every query after it). DISK_ONLY streams the blocks
-    * through the disk store with no unroll phase, and the OS page
-    * cache keeps hot re-reads memory-speed — which is also the closer
-    * analogue of the stored-table contract these memos document. The
-    * threshold keeps every committed bench regime (sf0.1/sf1/sf10,
-    * ≤ 500k docs) on the measured in-heap path bit-for-bit.
-    */
-  /** Boundary of the in-heap memo regime (docs). Every committed bench
-    * record at sf0.1/sf1 was measured on the in-heap path and sf10+ on
-    * the DISK_ONLY path; DedupSpec pins the shipped corpora against
-    * this constant so silent docs-count drift in the generators cannot
-    * flip a committed regime's storage path. */
-  private[graft] val MemoInHeapMaxDocs = 600000L
-  private def ckptSized(s: SparkSession, d: String,
-      df: DataFrame): DataFrame =
-    if (nDocs(s, d) <= MemoInHeapMaxDocs) df.localCheckpoint()
-    else df.localCheckpoint(true,
-      org.apache.spark.storage.StorageLevel.DISK_ONLY)
-
-  private val shingleMemo =
-    new graft.BoundedMemo[(SparkSession, String), DataFrame](8)
-
-  def shingleDf(spark: SparkSession, d: String): DataFrame =
-    shingleMemo.getOrCompute((spark, d))(
+  val shingleDf: Artifact[DataFrame] = Artifact("dedup", "shingles") {
+    (spark, d) =>
       // spread before the generator: the checkpointed index otherwise
       // inherits the single-row-group scan's ONE partition, putting the
       // whole shingle explode AND the first stage of every consumer on
@@ -113,18 +96,17 @@ object Dedup {
       ckptSized(spark, d, t(spark, d, "documents")
         .repartition(spark.sparkContext.defaultParallelism)
         .select(col("doc_id"),
-          graft.functions.ShingleHashes(col("text"), 3))))
-
-  /** Materialize every shared memoized artifact of this module —
-    * called by Bench's UNTIMED warmup: at 100 TB these are stored
-    * tables (shingle index, positional k-gram table, duplicated-start
-    * frame, cluster labels), and their one-time build must never land
-    * inside whichever timed query happens to run first.
-    */
-  private[graft] def warmArtifacts(s: SparkSession, d: String): Unit = {
-    shingleDf(s, d); rankedSets(s, d); corpusSigs(s, d)
-    posKgrams(s, d); dupKgramStarts(s, d); clusterLabels(s, d); ()
+          graft.functions.ShingleHashes(col("text"), 3)))
   }
+
+  /** Bench's untimed warmup builds this module's artifacts (shingle
+    * index, ranked sets, signatures, positional k-gram table,
+    * duplicated-start frame, cluster labels): at 100 TB these are
+    * stored tables, and their one-time build must never land inside
+    * whichever timed query happens to run first.
+    */
+  private[graft] def warmArtifacts(s: SparkSession, d: String): Unit =
+    Artifact.warm("dedup", s, d)
 
   /** DuckDB twin of [[shingleDf]] as a CTE body (same md5-derived 32-bit
     * hash; DISTINCT over hashes, matching the generator's set semantics).
@@ -357,21 +339,17 @@ object Dedup {
     * stored-table contract; sf10's 26M-row regroup exchanges per branch
     * are the motivating cost.
     */
-  private val rankedMemo =
-    new graft.BoundedMemo[(SparkSession, String), DataFrame](8)
-
-  private def rankedSets(s: SparkSession, d: String): DataFrame =
-    rankedMemo.getOrCompute((s, d)) {
-      val sh = shingleDf(s, d)
-      val freq = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
-      ckptSized(s, d, sh.join(freq, Seq("s"))
-        .groupBy(col("doc_id"))
-        .agg(sort_array(collect_list(struct(col("df"), col("s"))))
-          .as("fs"))
-        .select(col("doc_id"),
-          size(col("fs")).cast(LongType).as("n"),
-          transform(col("fs"), x => x.getField("s")).as("ss")))
-    }
+  private val rankedSets = Artifact("dedup", "ranked_sets") { (s, d) =>
+    val sh = shingleDf(s, d)
+    val freq = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
+    ckptSized(s, d, sh.join(freq, Seq("s"))
+      .groupBy(col("doc_id"))
+      .agg(sort_array(collect_list(struct(col("df"), col("s"))))
+        .as("fs"))
+      .select(col("doc_id"),
+        size(col("fs")).cast(LongType).as("n"),
+        transform(col("fs"), x => x.getField("s")).as("ss")))
+  }
 
   /** Row view `(doc_id, s, rk, n)` of [[rankedSets]] — a map-side
     * posexplode (rk = 1-based rank position), for the consumers that
@@ -579,12 +557,9 @@ object Dedup {
     * stored signature index a crawl pipeline maintains next to the
     * shingle index — the same artifact contract as [[shingleDf]].
     */
-  private val sigsMemo =
-    new graft.BoundedMemo[(SparkSession, String), DataFrame](8)
-
-  private def corpusSigs(s: SparkSession, d: String): DataFrame =
-    sigsMemo.getOrCompute((s, d))(
-      ckptSized(s, d, minhashSigs(shingleDf(s, d))))
+  private val corpusSigs = Artifact("dedup", "corpus_sigs") { (s, d) =>
+    ckptSized(s, d, minhashSigs(shingleDf(s, d)))
+  }
 
   /** Band rows from an existing signature frame (Bands-way explode). */
   private def bandsFromSigs(mh: DataFrame): DataFrame = {
@@ -770,19 +745,14 @@ object Dedup {
     * storage. On a cluster, `checkpoint` to reliable storage also buys
     * fault tolerance past executor loss.
     */
-  /** Memo of the computed label frame per (session, dir): the labels are
-    * a MATERIALIZED artifact of the corpus (the loop ends in a
-    * localCheckpoint — real data blocks, no lineage), and both consumers
-    * (`dedup_clusters`, `dedup_apply`) read the same artifact, exactly as
-    * a production pipeline writes the labels table once and joins it from
-    * every downstream pass. Bounded LRU like [[graft.sources.Tables]]'s
-    * plan memo, so no session is pinned forever.
+  /** The label frame is a MATERIALIZED artifact of the corpus (the loop
+    * ends in a localCheckpoint — real data blocks, no lineage), and both
+    * consumers (`dedup_clusters`, `dedup_apply`) read the same artifact,
+    * exactly as a production pipeline writes the labels table once and
+    * joins it from every downstream pass.
     */
-  private val labelMemo =
-    new graft.BoundedMemo[(SparkSession, String), DataFrame](8)
-
-  private def clusterLabels(s: SparkSession, d: String): DataFrame =
-    labelMemo.getOrCompute((s, d))(computeClusterLabels(s, d))
+  private val clusterLabels =
+    Artifact("dedup", "cluster_labels")(computeClusterLabels)
 
   private def computeClusterLabels(s: SparkSession, d: String): DataFrame = {
     val pairs = simhashPairs(s, d)
@@ -1499,23 +1469,6 @@ object Dedup {
   private def h60Sql(e: String): String =
     s"CAST(('0x' || substr(md5($e), 1, 15)) AS BIGINT)"
 
-  /** Start positions (1-based, long) of every K-gram whose hash occurs
-    * ≥ 2 times corpus-wide — the shared frame behind both
-    * duplicate-substring queries. One narrow pass builds the positional
-    * K-gram hashes from each row's token array (`transform` over the
-    * valid start indices + `posexplode` — no join, no window); one
-    * hash-groupBy isolates the duplicated hashes; one equi-join marks
-    * the positions.
-    */
-  /** Positional K-gram hashes (doc_id, pos, kh) — THE written K-gram
-    * table of the substring-dedup family: the dup-hash groupBy, the
-    * position join back, and the incremental new-batch probe all read
-    * this one materialized frame (at 100 TB a stored table, like the
-    * shingle index).
-    */
-  private val kgramMemo =
-    new graft.BoundedMemo[(SparkSession, String), DataFrame](8)
-
   /** Mode-agnostic positional K-gram builder over a (doc_id, text)
     * frame: (doc_id, n_tokens, pos, kh). Pure narrow expressions (no
     * join, no window, no state), so the SAME code runs on a batch
@@ -1537,14 +1490,19 @@ object Dedup {
       .select(col("doc_id"), col("n_tokens"),
         (col("p0") + 1).cast(LongType).as("pos"), col("kh"))
 
-  private def posKgrams(s: SparkSession, d: String): DataFrame =
-    kgramMemo.getOrCompute((s, d)) {
-      // spread before the k-gram explode (the codec-stage rule — see
-      // shingleDf)
-      ckptSized(s, d, kgramsOf(t(s, d, "documents")
-          .repartition(s.sparkContext.defaultParallelism))
-        .select(col("doc_id"), col("pos"), col("kh")))
-    }
+  /** Positional K-gram hashes (doc_id, pos, kh) — THE written K-gram
+    * table of the substring-dedup family: the dup-hash groupBy, the
+    * position join back, and the incremental new-batch probe all read
+    * this one materialized frame (at 100 TB a stored table, like the
+    * shingle index).
+    */
+  private val posKgrams = Artifact("dedup", "pos_kgrams") { (s, d) =>
+    // spread before the k-gram explode (the codec-stage rule — see
+    // shingleDf)
+    ckptSized(s, d, kgramsOf(t(s, d, "documents")
+        .repartition(s.sparkContext.defaultParallelism))
+      .select(col("doc_id"), col("pos"), col("kh")))
+  }
 
   /** The distinct corpus K-gram hash set — the stored index a
     * continuous crawl probes (the static side of the streaming span
@@ -1556,11 +1514,16 @@ object Dedup {
     posKgrams(s, d).filter(pmod(col("doc_id"), lit(5)) =!= 4)
       .select(col("kh")).distinct()
 
-  private val dupStartsMemo =
-    new graft.BoundedMemo[(SparkSession, String), DataFrame](8)
-
-  private def dupKgramStarts(s: SparkSession, d: String): DataFrame =
-    dupStartsMemo.getOrCompute((s, d)) {
+  /** Start positions (1-based, long) of every K-gram whose hash occurs
+    * ≥ 2 times corpus-wide — the shared frame behind both
+    * duplicate-substring queries. One narrow pass builds the positional
+    * K-gram hashes from each row's token array (`transform` over the
+    * valid start indices + `posexplode` — no join, no window); one
+    * hash-groupBy isolates the duplicated hashes; one equi-join marks
+    * the positions.
+    */
+  private val dupKgramStarts = Artifact("dedup", "dup_kgram_starts") {
+    (s, d) =>
       val kg = posKgrams(s, d)
       val dup = kg.groupBy(col("kh")).agg(count(lit(1)).as("nocc"))
         .filter(col("nocc") >= 2L)
@@ -1569,7 +1532,7 @@ object Dedup {
       // and feeds both span queries — memoized + checkpointed
       kg.join(dup, Seq("kh")).select(col("doc_id"), col("pos"))
         .localCheckpoint()
-    }
+  }
 
   /** DuckDB twin of [[dupKgramStarts]] as CTE bodies ending in
     * `dp(doc_id, pos)`.

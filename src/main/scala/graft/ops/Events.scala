@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.XF
+import graft.Artifact
 import graft.sources.Tables.t
 
 /** Event-stream operators over the `events` table, batch-form.
@@ -87,14 +88,9 @@ object Events {
     * every consumer (and every timed bench repeat) reads blocks, not
     * lineage.
     */
-  private val sessMemo =
-    new graft.BoundedMemo[(SparkSession, String), DataFrame](8)
-  // private[graft]: Bench pre-warms this memo (the once-per-deployment
-  // artifact build must never land inside one arbitrary timed query)
-  private[graft] def sessionFrame(s: SparkSession, d: String): DataFrame =
-    sessMemo.getOrCompute((s, d)) {
-      sessionsOver(t(s, d, "events")).localCheckpoint()
-    }
+  private[graft] val sessionFrame = Artifact("events", "session_frame") {
+    (s, d) => sessionsOver(t(s, d, "events")).localCheckpoint()
+  }
 
   /** Presentation projection shared by `events_sessions` and its
     * bucketed twin — one schema so the byte-identical-oracle design

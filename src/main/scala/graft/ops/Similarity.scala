@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.ops.Dedup.{idot, idotSql, qcos, qcosSql, qEmb, qEmbSql}
 import graft.functions.XF
+import graft.Artifact
 import graft.sources.Tables.t
 
 /** Similarity search over the `embeddings` table (SURVEY.md §2.8):
@@ -77,21 +78,15 @@ object Similarity {
     * exactly as a production pipeline writes the cluster-assignment
     * table once and joins it from every downstream pass.
     */
-  /** Materialize this module's shared memoized artifacts (quantized
-    * embeddings via the k-means chain, PQ distance table, PCA parts,
-    * IVF cell assignment) — Bench's untimed warmup calls this so the
+  private val kmeansFinalAssign =
+    Artifact("similarity", "kmeans_assign")(computeKmeansAssign)
+
+  /** Bench's untimed warmup builds this module's artifacts (k-means
+    * assignment, PQ distance table, PCA parts, ranked IVF cells) so the
     * one-time builds never land in a timed query.
     */
-  private[graft] def warmArtifacts(s: SparkSession, d: String): Unit = {
-    kmeansFinalAssign(s, d); pqDist(s, d); pcaParts(s, d)
-    ivfCells(s, d); ()
-  }
-
-  private def kmeansFinalAssign(s: SparkSession, d: String): DataFrame =
-    assignMemo.getOrCompute((s, d))(computeKmeansAssign(s, d))
-
-  private val assignMemo =
-    new graft.BoundedMemo[(SparkSession, String), DataFrame](8)
+  private[graft] def warmArtifacts(s: SparkSession, d: String): Unit =
+    Artifact.warm("similarity", s, d)
 
   private def computeKmeansAssign(s: SparkSession, d: String): DataFrame = {
     val corpus = qEmb(s, d)
@@ -130,17 +125,6 @@ object Similarity {
     assign(cents).localCheckpoint()
   }
 
-  /** PQ sub-distance table (vec_id, m, cvid, d2): exact integer L2²
-    * from each vector's 16-dim subvector in subspace m to centroid
-    * cvid's subvector — the encode-time artifact both `sim_pq_adc`
-    * (codes + ADC lookups) and `emb_pq_error` (reconstruction audit)
-    * consume. Memoized + localCheckpoint per (session, dir) like the
-    * shingle index: the cells×codebook join runs once per corpus, and
-    * every consumer reads the materialized N×M×K frame.
-    */
-  private val pqMemo =
-    new graft.BoundedMemo[(SparkSession, String), DataFrame](8)
-
   /** PQ codebook sampling step: every `cstep`-th vector is a centroid,
     * with cstep scaled to the corpus so the codebook holds ~256 entries
     * (Jégou'11's canonical K) at ANY scale. The previous
@@ -169,7 +153,7 @@ object Similarity {
     * (~50 GB deserialized) OOM'd the 96 GB drive inside the 32-way
     * concurrent checkpoint unroll (round-14 warm probe — the same
     * failure class as the Dedup memo OOM eed4443 fixed). Past the
-    * ceiling the memo streams DISK_ONLY — which is also the
+    * ceiling [[graft.Artifact.checkpoint]] streams DISK_ONLY — also the
     * stored-table contract at 100 TB (the encode artifact is a written
     * table every ANN consumer joins). SimilaritySpec pins the shipped
     * corpora against this constant so generator drift cannot silently
@@ -182,8 +166,16 @@ object Similarity {
     nEmbMemo.getOrCompute((s, d))(
       java.lang.Long.valueOf(qEmb(s, d).count())).longValue()
 
-  private def pqDist(s: SparkSession, d: String): DataFrame =
-    pqMemo.getOrCompute((s, d)) {
+  /** PQ sub-distance table (vec_id, m, cvid, d2): exact integer L2²
+    * from each vector's 16-dim subvector in subspace m to centroid
+    * cvid's subvector — the encode-time artifact both `sim_pq_adc`
+    * (codes + ADC lookups) and `emb_pq_error` (reconstruction audit)
+    * consume. Memoized + localCheckpoint per (session, dir) like the
+    * shingle index: the cells×codebook join runs once per corpus, and
+    * every consumer reads the materialized N×M×K frame.
+    */
+  private val pqDist = Artifact("similarity", "pq_dist") {
+    (s, d) =>
       val cstep = pqCstep(s, d)
       // single-file corpora hand this ~K-way row expansion ONE scan
       // partition unless spread first (the codec-stage lesson,
@@ -207,10 +199,8 @@ object Similarity {
       // spec-pinned storage path moves.
       val n = nEmb(s, d)
       val estRows = n * 8L * ((n + cstep - 1L) / cstep)
-      if (estRows <= PqInHeapMaxRows) enc.localCheckpoint()
-      else enc.localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    }
+      Artifact.checkpoint(enc, estRows, PqInHeapMaxRows)
+  }
 
   /** The DuckDB CTE chain both PCA oracles share (through `x3`, the
     * final loading vector). HUGEINT mirrors Spark's DECIMAL(38,0);
@@ -263,11 +253,8 @@ object Similarity {
     * C fan-in (emb_covariance's plan shape) runs once; the iterations
     * are 4 096×64 joins — constant-size work regardless of corpus.
     */
-  private val pcaMemo = new graft.BoundedMemo[(SparkSession, String),
-    (DataFrame, DataFrame)](8)
-
-  private def pcaParts(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    pcaMemo.getOrCompute((s, d)) {
+  private val pcaParts = Artifact("similarity", "pca_parts") {
+    (s, d) =>
       val dec = DecimalType(38, 0)
       // spread before the 64-way explode: the checkpointed frame
       // otherwise inherits the single-row-group scan's ONE partition
@@ -320,7 +307,7 @@ object Similarity {
               .as("xv"))
       }
       (cNum, x.localCheckpoint())
-    }
+  }
 
   /** Per-(vector, subspace) nearest-centroid code (argmin with the
     * d2·4096+rank composite tie-break both engines share, where rank
@@ -339,9 +326,6 @@ object Similarity {
     pqDist(s, d).groupBy(col("vec_id"), col("m"))
       .agg(min_by(col("cvid"), col("d2") * 4096 + denseRank).as("code"))
   }
-
-  private val ivfMemo =
-    new graft.BoundedMemo[(SparkSession, String), DataFrame](8)
 
   /** Probe ranks materialized in the ranked IVF artifact: rank 1 is the
     * home cell (= the former [[ivfCells]] assignment, identical
@@ -365,8 +349,8 @@ object Similarity {
     * artifact is memoized + localCheckpointed like the PQ chain (a
     * production index stores exactly this table).
     */
-  private[graft] def ivfCellsRanked(s: SparkSession, d: String): DataFrame =
-    ivfMemo.getOrCompute((s, d)) {
+  private[graft] val ivfCellsRanked =
+    Artifact("similarity", "ivf_cells_ranked") { (s, d) =>
       val cents = qEmb(s, d).filter(col("vec_id") % 100 === 0)
         .select(col("vec_id").as("cvid"), col("q").as("cq"),
           col("n2").as("ccn2"))
