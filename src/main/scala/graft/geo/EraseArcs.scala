@@ -195,37 +195,6 @@ object EraseArcs {
     math.max(0.0, zonePart - bufferPart)
   }
 
-  /** Surviving area per zone in square feet (see [[erasedArea]]):
-    * same broadcast-join candidate generation as [[eraseArcs]], the
-    * per-zone geometry evaluated in `mapGroups` (candidate sets are
-    * locality-bounded; at extreme buffer densities the buffer-buffer
-    * pairing inside becomes its own grid-cell join — the documented
-    * swap). Zones with no candidate buffer keep the full πR².
-    */
-  def eraseArea(spark: SparkSession, zones: DataFrame, buffers: DataFrame,
-      bufferFt: Double): DataFrame = {
-    import spark.implicits._
-    val zcat = zones.select(col("zone_id").cast("int"),
-      col("cx_ft"), col("cy_ft"), col("radius_ft"))
-    val pairs = buffers.select(col("x_ft"), col("y_ft"))
-      .join(broadcast(zcat),
-        Geo.dist2(col("x_ft"), col("y_ft"), col("cx_ft"), col("cy_ft"))
-          < (col("radius_ft") + bufferFt) * (col("radius_ft") + bufferFt))
-      .select(col("zone_id").cast("int"),
-        (col("x_ft") - col("cx_ft")).as("dx"),
-        (col("y_ft") - col("cy_ft")).as("dy"), col("radius_ft"))
-      .as[(Int, Double, Double, Double)]
-    val touched = pairs.groupByKey(_._1).mapGroups { (zid, rows) =>
-      val rs = rows.toSeq
-      zid -> erasedArea(rs.head._4, rs.map(t => (t._2, t._3)), bufferFt)
-    }.collect().toMap
-    val all = zcat.select(col("zone_id"), col("radius_ft"))
-      .as[(Int, Double)].collect().toSeq.sortBy(_._1).map { case (z, rr) =>
-        (z, touched.getOrElse(z, math.Pi * rr * rr))
-      }
-    all.toDF("zone_id", "area_sqft")
-  }
-
   /** CONVEX-POLYGON generalization of [[erasedArea]] — the last
     * reference-geometry scope item (arcpy Erase on polygon zones,
     * reference GSheetsETL_Lab2.py:133) for convex vertex rings: EXACT
@@ -723,10 +692,9 @@ object EraseArcs {
 
   /** Common face of the two boundary-piece vocabularies ([[LinePiece]]
     * straight segments, [[RingPiece]] circular arcs): traversal
-    * endpoints for endpoint-matching stitchers and the Green's-theorem
-    * term along the traversal direction. Sealed here so the MIXED
-    * stitcher ([[stitchMixedPieces]] — disk subtrahends on polygon
-    * zones, where one output ring alternates line and arc pieces) can
+    * endpoints for the endpoint-matching [[stitch]] and the
+    * Green's-theorem term along the traversal direction. Sealed so the
+    * stitcher (one ring may alternate line and arc pieces) can
     * pattern-match exhaustively.
     */
   private[graft] sealed trait BoundaryPiece extends Serializable {
@@ -773,11 +741,10 @@ object EraseArcs {
     zoneEdgePieces(ax, ay, bx, by, covered).map(_.signedArea).sum
 
   /** The (b) term for ONE CCW subtrahend ring `p` against a convex
-    * zone: its edge pieces inside the zone and outside every OTHER
-    * subtrahend (the `others` rings, any exact superset of the actual
-    * coverers — non-coverers contribute empty interval lists),
-    * traversed reversed. Shared by the kernel and the distributed
-    * wrapper; arithmetic per piece is identical in both.
+    * zone, for the area kernel and plan: its edge pieces inside the
+    * zone and outside every OTHER subtrahend (the `others` rings, any
+    * exact superset of the actual coverers — non-coverers contribute
+    * empty interval lists), traversed reversed.
     */
   private def subEdgePieces(
       zEdges: IndexedSeq[((Double, Double), (Double, Double))],
@@ -831,39 +798,24 @@ object EraseArcs {
       others: Int => Seq[Seq[(Double, Double)]]): Double =
     subEdgePieces(zEdges, p, others).map(_.signedArea).sum
 
-  /** EXACT area of (convex zone polygon − union of subtrahend simple
-    * polygons) — see the family header above. Zone ring requirements
-    * match [[erasedAreaPoly]] (convex, loud guards); subtrahends may
-    * be any simple rings in either winding and in general position
-    * (no exactly-shared boundary segments between subtrahends).
+  /** Bbox-grid candidate lookup — the spatial prune for the pairwise
+    * terms, shared by the area and ring kernels. A member whose
+    * bounding box misses a query box cannot cover any part of it, so
+    * bucket the boxes on a grid (cell = the largest box extent) and
+    * probe only the cells a query box touches. Without this the
+    * member-vs-member term is quadratic in the LOCAL member count —
+    * measured 17 s at sf1 (~700 footprints/zone) and unusable at sf10;
+    * physically near-disjoint parcels prune to O(1) candidates per
+    * edge. Returns the sorted indices whose box may intersect the box
+    * spanned by two corners (an exact superset of the coverers).
     */
-  /** Canonical distinct subtrahends + a bbox-grid candidate lookup —
-    * the spatial prune for the pairwise term, shared by the area and
-    * ring kernels. A subtrahend whose bounding box misses a segment's
-    * bounding box cannot cover any part of it, so bucket subtrahends
-    * on a grid (cell = the largest bbox extent) and probe only the
-    * cells a segment's bbox touches. Without this the ∂P_k-vs-P_j term
-    * is quadratic in the LOCAL footprint count — measured 17 s at sf1
-    * (~700 footprints/zone) and unusable at sf10; physically
-    * near-disjoint parcels prune to O(1) candidates per edge,
-    * restoring the linear shape the disk kernels have.
-    * Canonicalization (CCW + rotation-normalized) + distinct is
-    * load-bearing: two same-polygon rings would otherwise each see the
-    * other covering all their edges and the union boundary would
-    * vanish.
-    */
-  private def subPruneIndex(subsIn: Seq[Seq[(Double, Double)]])
-      : (IndexedSeq[Seq[(Double, Double)]],
-         (Double, Double, Double, Double) => Seq[Int]) = {
-    val subs = subsIn.map(canonicalRing).distinct.toIndexedSeq
-    val bboxes = subs.map { p =>
-      (p.map(_._1).min, p.map(_._2).min, p.map(_._1).max, p.map(_._2).max)
-    }
-    val cellSz = math.max(1.0, bboxes.map { case (x0, y0, x1, y1) =>
+  private def bboxIndex(boxes: IndexedSeq[(Double, Double, Double, Double)])
+      : (Double, Double, Double, Double) => Seq[Int] = {
+    val cellSz = math.max(1.0, boxes.map { case (x0, y0, x1, y1) =>
       math.max(x1 - x0, y1 - y0) }.foldLeft(0.0)(math.max))
     val grid = new java.util.HashMap[Long, List[Int]]()
     def cellKey(cx: Long, cy: Long): Long = cx * 0x100000000L + cy
-    bboxes.zipWithIndex.foreach { case ((x0, y0, x1, y1), k) =>
+    boxes.zipWithIndex.foreach { case ((x0, y0, x1, y1), k) =>
       var cx = math.floor(x0 / cellSz).toLong
       while (cx <= math.floor(x1 / cellSz).toLong) {
         var cy = math.floor(y0 / cellSz).toLong
@@ -875,16 +827,11 @@ object EraseArcs {
         cx += 1
       }
     }
-    // distinct subtrahend indices whose bbox may intersect the given
-    // segment bbox (exact superset of the covering subs). EMPTY subs
-    // short-circuit: with no bboxes cellSz floors at 1.0 ft and the
-    // scan below would walk every 1-ft cell of the edge bbox — at
-    // state-plane coordinates that is ~10⁶ iterations per edge for a
-    // guaranteed-empty answer (measured: 36 s of driver CPU building
-    // the rings plan at sf0.001, where most zones are untouched and
-    // take the subs-free driver path).
-    def candidatesNear(ax: Double, ay: Double, bx: Double,
-        by: Double): Seq[Int] = if (subs.isEmpty) Nil else {
+    // EMPTY boxes short-circuit: with no boxes cellSz floors at 1.0 ft
+    // and the scan below would walk every 1-ft cell of the query box —
+    // at state-plane coordinates ~10⁶ iterations for a guaranteed-empty
+    // answer
+    (ax, ay, bx, by) => if (boxes.isEmpty) Nil else {
       val x0 = math.min(ax, bx); val x1 = math.max(ax, bx)
       val y0 = math.min(ay, by); val y1 = math.max(ay, by)
       val out = scala.collection.mutable.SortedSet.empty[Int]
@@ -894,7 +841,7 @@ object EraseArcs {
         while (cy <= math.floor(y1 / cellSz).toLong) {
           val l = grid.get(cellKey(cx, cy))
           if (l != null) l.foreach { k =>
-            val (bx0, by0, bx1, by1) = bboxes(k)
+            val (bx0, by0, bx1, by1) = boxes(k)
             if (bx0 <= x1 && x0 <= bx1 && by0 <= y1 && y0 <= by1) out += k
           }
           cy += 1
@@ -903,13 +850,27 @@ object EraseArcs {
       }
       out.toSeq
     }
-    (subs, candidatesNear)
   }
 
+  private def ringBox(p: Seq[(Double, Double)])
+      : (Double, Double, Double, Double) =
+    (p.map(_._1).min, p.map(_._2).min, p.map(_._1).max, p.map(_._2).max)
+
+  /** EXACT area of (convex zone polygon − union of subtrahend simple
+    * polygons) — see the family header above. Zone ring requirements
+    * match [[erasedAreaPoly]] (convex, loud guards); subtrahends may
+    * be any simple rings in either winding and in general position
+    * (no exactly-shared boundary segments between subtrahends).
+    * Canonicalization (CCW + rotation-normalized) + distinct is
+    * load-bearing: two same-polygon rings would otherwise each see the
+    * other covering all their edges and the union boundary would
+    * vanish.
+    */
   private[graft] def erasedAreaPolySub(verticesIn: Seq[(Double, Double)],
       subsIn: Seq[Seq[(Double, Double)]]): Double = {
     val zEdges = convexZoneEdges(verticesIn)
-    val (subs, candidatesNear) = subPruneIndex(subsIn)
+    val subs = subsIn.map(canonicalRing).distinct.toIndexedSeq
+    val candidatesNear = bboxIndex(subs.map(ringBox))
     // (a) zone-edge pieces outside every subtrahend, CCW
     val edgePart = zEdges.map { case ((ax, ay), (bx, by)) =>
       zoneEdgeGreen(ax, ay, bx, by,
@@ -928,120 +889,6 @@ object EraseArcs {
     math.max(0.0, edgePart + subPart)
   }
 
-  /** ALL directed boundary pieces of (convex zone − union of
-    * subtrahend polygons): the zone-edge survivors (CCW) and the
-    * subtrahend-edge survivors (reversed) — exactly the terms
-    * [[erasedAreaPolySub]] integrates, emitted as segments instead of
-    * summed. [[eraseRingsPolySub]] stitches them into closed rings.
-    */
-  private[graft] def erasePolySubPieces(verticesIn: Seq[(Double, Double)],
-      subsIn: Seq[Seq[(Double, Double)]]): Seq[LinePiece] = {
-    val zEdges = convexZoneEdges(verticesIn)
-    val (subs, candidatesNear) = subPruneIndex(subsIn)
-    val zonePieces = zEdges.flatMap { case ((ax, ay), (bx, by)) =>
-      zoneEdgePieces(ax, ay, bx, by,
-        mergeIntervals(candidatesNear(ax, ay, bx, by)
-          .flatMap(k => segInPolyIntervals(ax, ay, bx, by, subs(k)))))
-    }
-    val subPieces = subs.zipWithIndex.flatMap { case (p, k) =>
-      subEdgePieces(zEdges, p, { i =>
-        val (cx, cy) = p(i)
-        val (ex, ey) = p((i + 1) % p.size)
-        candidatesNear(cx, cy, ex, ey).filter(_ != k).map(subs)
-      })
-    }
-    zonePieces ++ subPieces
-  }
-
-  /** Stitch directed line pieces into closed boundary rings — the
-    * straight-edge analogue of [[eraseRings]]'s arc stitcher: at every
-    * boundary vertex of a manifold region exactly one piece starts
-    * where another ends, so following end → start until closure
-    * reconstructs each loop. Endpoints computed through two different
-    * parametrizations (a zone-edge crossing parameter vs the
-    * subtrahend edge's zone-clip parameter) agree to IEEE rounding;
-    * the match tolerance is 1e-9 × the coordinate scale, nearest
-    * candidate wins, and the chain FAILS loudly if no piece continues
-    * (non-manifold boundary — tangency-degenerate input, outside the
-    * general-position contract). Rings and their starting pieces are
-    * rotated / ordered by a canonical key so output is deterministic
-    * regardless of piece arrival order. Orientation falls out of
-    * construction: loops enclosing surviving area run CCW (signed
-    * area > 0), hole loops run CW (< 0), and Σ signed areas ==
-    * [[erasedAreaPolySub]] (same Green terms, re-associated only).
-    */
-  private[graft] def stitchLinePieces(
-      piecesIn: Seq[LinePiece]): Seq[Seq[LinePiece]] = {
-    val pieces = piecesIn.toIndexedSeq
-    if (pieces.isEmpty) return Seq.empty
-    val scale = pieces.iterator.flatMap(p =>
-      Iterator(p.x1.abs, p.y1.abs, p.x2.abs, p.y2.abs)).max
-    val tol = 1e-9 * math.max(1.0, scale)
-    def dist(a: (Double, Double), b: (Double, Double)): Double =
-      math.hypot(a._1 - b._1, a._2 - b._2)
-    val hcell = 4 * tol
-    def hkey(p: (Double, Double)): (Long, Long) =
-      (math.floor(p._1 / hcell).toLong, math.floor(p._2 / hcell).toLong)
-    val byStart = scala.collection.mutable.HashMap
-      .empty[(Long, Long), List[Int]]
-    pieces.zipWithIndex.foreach { case (p, i) =>
-      val k = hkey(p.start)
-      byStart(k) = i :: byStart.getOrElse(k, Nil)
-    }
-    val used = Array.fill(pieces.size)(false)
-    def takeAt(pt: (Double, Double)): Option[Int] = {
-      val (ki, kj) = hkey(pt)
-      val cands = for {
-        dx <- -1L to 1L; dy <- -1L to 1L
-        i <- byStart.getOrElse((ki + dx, kj + dy), Nil)
-        if !used(i) && dist(pieces(i).start, pt) <= tol
-      } yield i
-      if (cands.isEmpty) None
-      else Some(cands.minBy(i => (dist(pieces(i).start, pt), i)))
-    }
-    val chains = Vector.newBuilder[Seq[LinePiece]]
-    pieces.indices.foreach { seed =>
-      if (!used(seed)) {
-        used(seed) = true
-        val first = pieces(seed)
-        val chain = scala.collection.mutable.ArrayBuffer(first)
-        var cur = first
-        while (dist(cur.end, first.start) > tol) {
-          val idx = takeAt(cur.end).getOrElse(throw new
-            IllegalArgumentException(
-              "requirement failed: stitchLinePieces: no piece starts " +
-                "at a boundary vertex — tangency-degenerate input"))
-          used(idx) = true
-          cur = pieces(idx)
-          chain += cur
-        }
-        chains += chain.toSeq
-      }
-    }
-    def key(p: LinePiece): (Int, Double, Double, Double, Double) =
-      (if (p.kind == "zone") 0 else 1, p.x1, p.y1, p.x2, p.y2)
-    val ord = Ordering.Tuple5[Int, Double, Double, Double, Double]
-    val rings = chains.result().map { ring =>
-      val i = ring.indices.minBy(j => key(ring(j)))(ord)
-      ring.drop(i) ++ ring.take(i)
-    }
-    rings.sortBy(ring => key(ring.head))(ord)
-  }
-
-  /** OUTPUT RINGS of (convex zone polygon − union of subtrahend
-    * polygons) — the feature class arcpy's Erase emits
-    * (GSheetsETL_Lab2.py:133) under its GENERAL erase-feature
-    * signature, completing the geometric contract the disk-subtrahend
-    * [[eraseRings]] covers for buffer erasure: each closed boundary
-    * loop alternates zone-edge segments (CCW) and subtrahend-edge
-    * segments (reversed / hole side) joined at edge-edge intersection
-    * points. GeoSpec pins closure, orientation, Σ ring signed areas ==
-    * [[erasedAreaPolySub]], and determinism under input order/winding.
-    */
-  private[graft] def eraseRingsPolySub(verticesIn: Seq[(Double, Double)],
-      subsIn: Seq[Seq[(Double, Double)]]): Seq[Seq[LinePiece]] =
-    stitchLinePieces(erasePolySubPieces(verticesIn, subsIn))
-
   /** GENERAL zone rings with polygon subtrahends: ear-clip the outer
     * and hole rings and sum the convex kernel per triangle — the same
     * additive-measure reduction as [[erasedAreaConcave]].
@@ -1054,30 +901,26 @@ object EraseArcs {
     math.max(0.0, piece(outer) - holes.map(piece).sum)
   }
 
-  /** Edge pieces of ONE member ring `p` (CCW) against a GENERAL simple
+  /** Edge pieces of ONE ring member `p` (CCW) against a GENERAL simple
     * outer ring: the pieces of p's edges inside the outer ring and
-    * outside every OTHER member (the `others` rings, any exact
+    * outside every OTHER member (`others`, rings or disks — any
     * superset of the actual coverers), traversed REVERSED (kept region
-    * on the left — the hole side). The general-zone analogue of
-    * [[subEdgePieces]]: the convex parametric half-plane clip is
-    * replaced by [[segInPolyIntervals]] against the outer ring, which
-    * needs no convexity (a member edge can enter and leave a concave
-    * outer ring several times — each surviving sub-interval becomes
-    * its own piece). Shared by the driver kernel and the distributed
-    * plan so their per-piece arithmetic is identical.
+    * on the left — the hole side). [[segInPolyIntervals]] against the
+    * outer ring needs no convexity: a member edge can enter and leave a
+    * concave outer ring several times, and each surviving sub-interval
+    * becomes its own piece.
     */
   private def memberEdgePieces(outer: Seq[(Double, Double)],
-      p: Seq[(Double, Double)],
-      others: Int => Seq[Seq[(Double, Double)]]): Seq[LinePiece] =
+      p: Seq[(Double, Double)], others: Seq[Member]): Seq[LinePiece] =
     p.indices.flatMap { i =>
       val (cx, cy) = p(i)
       val (ex, ey) = p((i + 1) % p.size)
       val dx = ex - cx; val dy = ey - cy
       require(dx != 0.0 || dy != 0.0,
-        s"eraseRingsConcaveSub: degenerate member edge at ($cx,$cy)")
+        s"polyZoneRings: degenerate member edge at ($cx,$cy)")
       val inOuter = segInPolyIntervals(cx, cy, ex, ey, outer)
       val covered = mergeIntervals(
-        others(i).flatMap(o => segInPolyIntervals(cx, cy, ex, ey, o)))
+        others.flatMap(o => memberCover(cx, cy, ex, ey, o)))
       def reversedPiece(s: Double, e: Double): LinePiece =
         LinePiece("sub", cx + e * dx, cy + e * dy,
           cx + s * dx, cy + s * dy)
@@ -1096,75 +939,16 @@ object EraseArcs {
       }
     }
 
-  /** ALL directed boundary pieces of (GENERAL simple zone polygon −
-    * union of member polygons), where the zone's HOLE rings are passed
-    * as members: R = outer ∖ ∪members, so holes and subtrahends are
-    * the same thing to the boundary algebra (a subtrahend overlapping
-    * a hole is resolved by the mutual member-vs-member clipping,
-    * exactly like two overlapping subtrahends in the convex kernel).
-    * Piece set: (a) outer-ring edges CCW minus the intervals covered
-    * by any member ([[zoneEdgePieces]] — already general); (b) each
-    * member's edges inside the outer ring and outside every other
-    * member, REVERSED ([[memberEdgePieces]]). [[stitchLinePieces]]
-    * chains them into closed rings. Same general-position contract as
-    * the convex path (tangency fails loudly in the stitcher —
-    * GeoPropertySpec pins the failure is never silent).
-    */
-  private[graft] def eraseGeneralPieces(outerIn: Seq[(Double, Double)],
-      membersIn: Seq[Seq[(Double, Double)]]): Seq[LinePiece] = {
-    require(outerIn.size >= 3, "polygon needs >= 3 vertices")
-    val outer = normalizeCcw(outerIn)
-    val (members, candidatesNear) = subPruneIndex(membersIn)
-    val zonePieces = outer.indices.flatMap { i =>
-      val (ax, ay) = outer(i)
-      val (bx, by) = outer((i + 1) % outer.size)
-      zoneEdgePieces(ax, ay, bx, by, mergeIntervals(
-        candidatesNear(ax, ay, bx, by)
-          .flatMap(k => segInPolyIntervals(ax, ay, bx, by, members(k)))))
-    }
-    val memberPieces = members.zipWithIndex.flatMap { case (p, k) =>
-      memberEdgePieces(outer, p, { i =>
-        val (cx, cy) = p(i)
-        val (ex, ey) = p((i + 1) % p.size)
-        candidatesNear(cx, cy, ex, ey).filter(_ != k).map(members)
-      })
-    }
-    zonePieces ++ memberPieces
-  }
-
-  /** OUTPUT RINGS of (GENERAL zone polygon − holes − union of
-    * subtrahend polygons) — ring output for CONCAVE zones (with
-    * holes), the one geometry cell [[eraseRingsPolySub]]'s convex-only
-    * stitch left uncovered (r13 verdict): each closed boundary loop
-    * alternates outer-ring segments (CCW) and member segments
-    * (reversed / hole side). GeoSpec pins closure, orientation,
-    * Σ ring signed areas == [[erasedAreaConcaveSub]] (an INDEPENDENT
-    * method — triangulation × the convex area kernel), convex
-    * agreement with [[eraseRingsPolySub]], and determinism.
-    */
-  private[graft] def eraseRingsConcaveSub(outer: Seq[(Double, Double)],
-      holes: Seq[Seq[(Double, Double)]],
-      subs: Seq[Seq[(Double, Double)]]): Seq[Seq[LinePiece]] =
-    stitchLinePieces(eraseGeneralPieces(outer, holes ++ subs))
-
-  // ---- DISK SUBTRAHENDS ON POLYGON ZONES: RING OUTPUT (round 15) ----
-  // The one remaining geometry-OUTPUT cell — and the reference's
-  // literal Erase shape: arcpy erases 1500-ft DISK buffers from
-  // POLYGON high-risk zones (GSheetsETL_Lab2.py:129-133). Area and
-  // selection were exact here since rounds 8/9 ([[erasedAreaPoly]] /
-  // [[erasedAreaConcave]]); rings existed for circle zones
-  // ([[eraseRings]], arc pieces) and polygon subtrahends
-  // ([[eraseRingsPolySub]] / [[eraseRingsConcaveSub]], line pieces).
-  // This family unifies the two piece vocabularies: a boundary ring of
-  // (general polygon − holes − union of disks) alternates STRAIGHT
-  // pieces (outer-ring edges CCW / hole-ring edges reversed, minus the
-  // t-intervals covered by any disk — the same line-circle quadratic
-  // the area kernel integrates) and ARC pieces (each disk circle's
-  // intervals inside the outer ring, outside every hole and every
-  // other disk, traversed CW — hole side), joined at segment-circle
-  // and circle-circle intersection points. [[stitchMixedPieces]]
-  // chains them by endpoint matching exactly like the two
-  // single-vocabulary stitchers.
+  // ---- POLYGON ZONES: RING OUTPUT ------------------------------------
+  // One kernel and one distributed plan emit the output rings of
+  // (polygon zone − ∪members) for every polygon-zone cell: a member is
+  // a RING (a zone hole or a polygon subtrahend) or a DISK (a buffer).
+  // A ring of the result alternates STRAIGHT pieces (outer edges CCW /
+  // ring-member edges reversed, minus the t-intervals any member
+  // covers) and ARC pieces (each disk circle's intervals inside the
+  // outer ring and outside every other member, CW), joined at
+  // edge-edge, segment-circle and circle-circle intersection points;
+  // [[stitch]] chains them by endpoint matching.
 
   /** Raw parametric roots of ‖A + t·(dx,dy) − o‖² = r² (the covered
     * t-window of the segment's supporting line), or None when the line
@@ -1195,21 +979,6 @@ object EraseArcs {
       val s = math.max(0.0, t1); val e = math.min(1.0, t2)
       if (s < e) Some((s, e)) else None
     }
-
-  /** Survivors of one CCW member (hole) edge minus its covered
-    * intervals (MERGED, sorted), traversed REVERSED (kept region on
-    * the left — the hole side): the complement logic of
-    * [[zoneEdgePieces]] with the traversal flipped. */
-  private def reversedEdgePieces(cx: Double, cy: Double, ex: Double,
-      ey: Double, covered: List[(Double, Double)]): Seq[LinePiece] = {
-    val dx = ex - cx; val dy = ey - cy
-    require(dx != 0.0 || dy != 0.0,
-      s"erasePolyDisk: degenerate zero-length hole edge at ($cx,$cy)")
-    val bounds = 0.0 +: covered.flatMap { case (s, e) => Seq(s, e) } :+ 1.0
-    bounds.grouped(2).collect { case Seq(s, e) if e > s =>
-      LinePiece("sub", cx + e * dx, cy + e * dy, cx + s * dx, cy + s * dy)
-    }.toSeq
-  }
 
   /** The arc pieces of ONE disk circle (center (ox,oy), radius r) on
     * the boundary of (outer − holes − disks): partition the circle at
@@ -1327,85 +1096,30 @@ object EraseArcs {
     }
   }
 
-  /** ALL directed boundary pieces of ((general simple zone polygon −
-    * holes) − union of DISK subtrahends): (a) outer-ring edges CCW
-    * minus the t-intervals covered by any disk ([[zoneEdgePieces]]
-    * over the shared quadratic); (b) hole-ring edges minus disk cover,
-    * REVERSED ([[reversedEdgePieces]] — holes are strictly inside the
-    * outer ring and pairwise disjoint by the family's caller contract,
-    * so disks are their only coverers); (c) per disk, its circle's
-    * surviving arcs, CW ([[diskArcPieces]]). Same general-position
-    * contract as the line-only family: tangency fails loudly in the
-    * stitcher, never silently. Disks are deduped and sorted so piece
-    * generation order is deterministic.
+  /** Stitch directed boundary pieces (straight [[LinePiece]]s and
+    * circle-arc [[RingPiece]]s, mixed freely) into closed rings: a
+    * full-circle arc closes alone; every other piece chains end → start
+    * by nearest-candidate endpoint matching through a start-point hash
+    * grid (cell 4·tol, 3×3 probe — a nearest-scan over every remaining
+    * piece made stitching O(pieces²) per zone). At every vertex of a
+    * manifold boundary exactly one piece starts where another ends, and
+    * the two endpoints — one point computed through two
+    * parametrizations — agree to IEEE rounding, well inside `tol`. The
+    * chain FAILS loudly when no piece continues (a non-manifold
+    * boundary: tangency-degenerate input, outside the general-position
+    * contract). Each ring is rotated to start at its smallest-keyed
+    * piece and rings are ordered by that key, so the output does not
+    * depend on piece arrival order. Orientation falls out of
+    * construction (loops enclosing surviving area run CCW, hole loops
+    * CW) and Σ ring signed areas is the region's Green's-theorem area.
     */
-  private[graft] def erasePolyDiskPieces(outerIn: Seq[(Double, Double)],
-      holesIn: Seq[Seq[(Double, Double)]],
-      disksIn: Seq[(Double, Double)], r: Double): Seq[BoundaryPiece] = {
-    require(outerIn.size >= 3, "polygon needs >= 3 vertices")
-    val outer = normalizeCcw(outerIn)
-    val holes = holesIn.map(normalizeCcw)
-    val disks = disksIn.distinct.sorted
-    val zonePieces: Seq[BoundaryPiece] = outer.indices.flatMap { i =>
-      val (ax, ay) = outer(i)
-      val (bx, by) = outer((i + 1) % outer.size)
-      val dx = bx - ax; val dy = by - ay
-      val len2 = dx * dx + dy * dy
-      require(len2 > 0,
-        s"erasePolyDisk: degenerate zero-length edge at ($ax,$ay)")
-      zoneEdgePieces(ax, ay, bx, by, mergeIntervals(
-        disks.flatMap { case (ox, oy) =>
-          segDiskCover(ax, ay, dx, dy, len2, ox, oy, r) }))
-    }
-    val holePieces: Seq[BoundaryPiece] = holes.flatMap { h =>
-      h.indices.flatMap { i =>
-        val (cx, cy) = h(i)
-        val (ex, ey) = h((i + 1) % h.size)
-        val dx = ex - cx; val dy = ey - cy
-        val len2 = dx * dx + dy * dy
-        require(len2 > 0,
-          s"erasePolyDisk: degenerate zero-length hole edge at ($cx,$cy)")
-        reversedEdgePieces(cx, cy, ex, ey, mergeIntervals(
-          disks.flatMap { case (ox, oy) =>
-            segDiskCover(cx, cy, dx, dy, len2, ox, oy, r) }))
-      }
-    }
-    val arcPieces: Seq[BoundaryPiece] = disks.zipWithIndex.flatMap {
-      case ((ox, oy), k) =>
-        diskArcPieces(outer, holes, ox, oy, r, disks.patch(k, Nil, 1))
-    }
-    zonePieces ++ holePieces ++ arcPieces
-  }
-
-  /** Stitch MIXED line+arc boundary pieces into closed rings — the
-    * unification of [[stitchLinePieces]] (straight segments) and
-    * [[eraseRings]]'s arc chain (circle arcs): full-circle arc pieces
-    * close alone; every other piece chains end → start by
-    * nearest-candidate endpoint matching through a hash grid. Line and
-    * arc endpoints at the same segment-circle intersection are
-    * computed through two parametrizations (the quadratic t-root vs
-    * the atan2→cos/sin roundtrip of the same point) and agree to IEEE
-    * rounding — well inside the 1e-9·scale tolerance. FAILS loudly
-    * when no piece continues (non-manifold boundary —
-    * tangency-degenerate input, outside the general-position
-    * contract). Rings and their starting pieces are rotated / ordered
-    * by a canonical key so output is deterministic regardless of piece
-    * arrival order. Orientation falls out of construction (outer loops
-    * CCW, holes CW) and Σ ring signed areas equals the Green's-theorem
-    * area of the region (same terms, re-associated only).
-    */
-  private[graft] def stitchMixedPieces(
-      piecesIn: Seq[BoundaryPiece]): Seq[Seq[BoundaryPiece]] = {
-    val (closedSeq, openSeq) = piecesIn.partition {
+  private[graft] def stitch[P <: BoundaryPiece](piecesIn: Seq[P],
+      tol: Double): Seq[Seq[P]] = {
+    val (closed, openSeq) = piecesIn.partition {
       case rp: RingPiece => rp.isFullCircle
       case _ => false
     }
     val pieces = openSeq.toIndexedSeq
-    if (pieces.isEmpty && closedSeq.isEmpty) return Seq.empty
-    val scale = (closedSeq ++ pieces).iterator.flatMap(p =>
-      Iterator(p.start._1.abs, p.start._2.abs, p.end._1.abs,
-        p.end._2.abs)).max
-    val tol = 1e-9 * math.max(1.0, scale)
     def dist(a: (Double, Double), b: (Double, Double)): Double =
       math.hypot(a._1 - b._1, a._2 - b._2)
     val hcell = 4 * tol
@@ -1428,7 +1142,7 @@ object EraseArcs {
       if (cands.isEmpty) None
       else Some(cands.minBy(i => (dist(pieces(i).start, pt), i)))
     }
-    val chains = Vector.newBuilder[Seq[BoundaryPiece]]
+    val chains = Vector.newBuilder[Seq[P]]
     pieces.indices.foreach { seed =>
       if (!used(seed)) {
         used(seed) = true
@@ -1438,8 +1152,8 @@ object EraseArcs {
         while (dist(cur.end, first.start) > tol) {
           val idx = takeAt(cur.end).getOrElse(throw new
             IllegalArgumentException(
-              "requirement failed: stitchMixedPieces: no piece starts " +
-                "at a boundary vertex — tangency-degenerate input"))
+              "requirement failed: stitch: no piece starts at a " +
+                "boundary vertex — tangency-degenerate input"))
           used(idx) = true
           cur = pieces(idx)
           chain += cur
@@ -1447,48 +1161,121 @@ object EraseArcs {
         chains += chain.toSeq
       }
     }
+    // zone pieces first; distinct arcs on one circle have distinct
+    // starts, so `e` never breaks a tie between circle-zone arcs
     def key(p: BoundaryPiece): (Int, Double, Double, Double, Double) =
       p match {
         case lp: LinePiece =>
           (if (lp.kind == "zone") 0 else 1, lp.x1, lp.y1, lp.x2, lp.y2)
-        case rp: RingPiece => (2, rp.cx, rp.cy, rp.s, rp.e)
+        case rp: RingPiece => (if (rp.ccw) 0 else 2, rp.cx, rp.cy, rp.s, rp.e)
       }
     val ord = Ordering.Tuple5[Int, Double, Double, Double, Double]
-    val rings = (closedSeq.map(Seq(_)) ++ chains.result()).map { ring =>
+    val rings = (closed.map(Seq(_)) ++ chains.result()).map { ring =>
       val i = ring.indices.minBy(j => key(ring(j)))(ord)
       ring.drop(i) ++ ring.take(i)
     }
     rings.sortBy(ring => key(ring.head))(ord)
   }
 
-  /** OUTPUT RINGS of ((general zone polygon − holes) − union of DISK
-    * subtrahends) — the reference's LITERAL Erase shape (1500-ft disk
-    * buffers erased from polygon high-risk zones,
-    * GSheetsETL_Lab2.py:129-133) emitted as the feature class arcpy
-    * produces: each closed boundary loop alternates straight pieces
-    * (outer edges CCW / hole edges reversed) and circle arcs (CW),
-    * joined at segment-circle and circle-circle intersection points.
-    * With this kernel the RING-OUTPUT contract matches the AREA
-    * contract on EVERY input cell ({circle, convex, concave-with-holes
-    * zones} × {disk, polygon subtrahends}). GeoSpec pins closure,
-    * orientation, Σ ring signed areas == [[erasedAreaPoly]] /
-    * [[erasedAreaConcave]] (INDEPENDENT kernels — half-plane interval
-    * algebra / triangulation), n-gon convergence to [[eraseRings]]'s
-    * circle-zone areas, determinism, and the distributed replay.
-    */
-  private[graft] def eraseRingsPolyDisk(outer: Seq[(Double, Double)],
-      holes: Seq[Seq[(Double, Double)]],
-      disks: Seq[(Double, Double)], r: Double): Seq[Seq[BoundaryPiece]] =
-    stitchMixedPieces(erasePolyDiskPieces(outer, holes, disks, r))
+  /** Stitch tolerance for polygon zones: 1e-9 × the coordinate scale
+    * of the pieces (state-plane feet reach ~10⁶–10⁷). */
+  private def polyTol(pieces: Seq[BoundaryPiece]): Double =
+    1e-9 * pieces.iterator.flatMap(p => Iterator(p.start._1.abs,
+      p.start._2.abs, p.end._1.abs, p.end._2.abs)).foldLeft(1.0)(math.max)
 
-  /** One output row of the mixed-piece ring frame: line pieces carry
+  /** One member of a polygon zone's erase set: a RING (`kind` "ring" —
+    * a zone hole or a polygon subtrahend, canonical CCW `vertices`) or
+    * a DISK (`kind` "disk" — center (ox, oy), radius `rad`, no
+    * vertices). In the distributed frame a ring's (ox, oy, rad) is the
+    * bounding circle of its bounding box (the zone-assignment test).
+    */
+  private[graft] case class Member(kind: String, ox: Double, oy: Double,
+      rad: Double, vertices: Seq[(Double, Double)]) {
+    def isDisk: Boolean = kind == "disk"
+    def box: (Double, Double, Double, Double) =
+      if (isDisk) (ox - rad, oy - rad, ox + rad, oy + rad)
+      else ringBox(vertices)
+  }
+
+  /** Raw (unmerged) t-intervals of segment A→B covered by member `m`:
+    * the line-circle quadratic for a disk, segment-in-polygon for a
+    * ring. */
+  private def memberCover(ax: Double, ay: Double, bx: Double, by: Double,
+      m: Member): Seq[(Double, Double)] =
+    if (m.isDisk) {
+      val dx = bx - ax; val dy = by - ay
+      segDiskCover(ax, ay, dx, dy, dx * dx + dy * dy, m.ox, m.oy, m.rad)
+        .toSeq
+    } else segInPolyIntervals(ax, ay, bx, by, m.vertices)
+
+  /** The boundary pieces member `m` contributes: a ring's edges inside
+    * `outer` and outside every other member, reversed
+    * ([[memberEdgePieces]]); a disk's arcs inside `outer` and outside
+    * every other member, CW ([[diskArcPieces]], the ring members in the
+    * role of holes). `others` may be any superset of the members whose
+    * bounding box meets m's: a member that misses m adds no cover and
+    * no crossing, so the kernel and the distributed plan emit the SAME
+    * pieces.
+    */
+  private def memberPieces(outer: Seq[(Double, Double)], m: Member,
+      others: Seq[Member]): Seq[BoundaryPiece] =
+    if (!m.isDisk) memberEdgePieces(outer, m.vertices, others)
+    else {
+      val (disks, rings) = others.partition(_.isDisk)
+      diskArcPieces(outer, rings.map(_.vertices), m.ox, m.oy, m.rad,
+        disks.map(d => (d.ox, d.oy)))
+    }
+
+  private def ringEdges(ring: Seq[(Double, Double)])
+      : IndexedSeq[((Double, Double), (Double, Double))] =
+    ring.indices.map(i => (ring(i), ring((i + 1) % ring.size)))
+
+  /** OUTPUT RINGS of (general simple zone polygon − ∪ ring members −
+    * ∪ disks of radius `r`) — the feature class arcpy's Erase emits
+    * (GSheetsETL_Lab2.py:133) on polygon zones. The zone's holes are
+    * passed as ring members: R = outer ∖ ∪members, so holes and
+    * polygon subtrahends are the same thing to the boundary algebra (a
+    * subtrahend overlapping a hole is resolved by the mutual
+    * member-vs-member clipping); a convex zone is a zone with no
+    * holes. Pieces: (a) outer edges CCW minus every member's cover;
+    * (b) each ring member's edges inside the outer ring and outside
+    * every other member, reversed; (c) each disk's arcs, CW; then
+    * [[stitch]]. Rings are canonicalized and deduplicated, disks
+    * deduplicated and sorted (identical members would erase each
+    * other's boundary). Caller contract: simple rings in general
+    * position, holes inside the outer ring; tangency fails loudly in
+    * the stitcher. GeoSpec pins closure, orientation, Σ ring signed
+    * areas against the INDEPENDENT area kernels, determinism, and the
+    * distributed replay.
+    */
+  private[graft] def polyZoneRings(outerIn: Seq[(Double, Double)],
+      rings: Seq[Seq[(Double, Double)]], disks: Seq[(Double, Double)] = Nil,
+      r: Double = 0.0): Seq[Seq[BoundaryPiece]] = {
+    require(outerIn.size >= 3, "polygon needs >= 3 vertices")
+    val outer = normalizeCcw(outerIn)
+    val members = (rings.map(canonicalRing).distinct
+      .map(Member("ring", 0.0, 0.0, 0.0, _)) ++
+      disks.distinct.sorted.map { case (x, y) => Member("disk", x, y, r, Nil) })
+      .toIndexedSeq
+    val near = bboxIndex(members.map(_.box))
+    val zonePieces = ringEdges(outer).flatMap { case ((ax, ay), (bx, by)) =>
+      zoneEdgePieces(ax, ay, bx, by, mergeIntervals(near(ax, ay, bx, by)
+        .flatMap(k => memberCover(ax, ay, bx, by, members(k)))))
+    }
+    val pieces = zonePieces ++ members.indices.flatMap { k =>
+      val (x0, y0, x1, y1) = members(k).box
+      memberPieces(outer, members(k),
+        near(x0, y0, x1, y1).filter(_ != k).map(members))
+    }
+    stitch(pieces, polyTol(pieces))
+  }
+
+  /** One output row of the polygon-zone ring frame: line pieces carry
     * their endpoints and NULL arc columns; arc pieces carry traversal
     * endpoints (start/end of the CW traversal) plus center, radius,
-    * and the CCW-parameter angle window in degrees. Shared by the
-    * distributed stitch groups and the untouched-zone driver rows so
-    * both paths emit identical encodings.
+    * and the CCW-parameter angle window in degrees.
     */
-  private def polyDiskRow(z: Int, ri: Long, pi: Long, p: BoundaryPiece,
+  private def ringRow(z: Int, ri: Long, pi: Long, p: BoundaryPiece,
       area: Double): (Int, Long, Long, String, Double, Double, Double,
         Double, Option[Double], Option[Double], Option[Double],
         Option[Double], Option[Double], Double) = p match {
@@ -1502,208 +1289,217 @@ object EraseArcs {
         Some(rp.e * 180.0 / math.Pi), area)
   }
 
-  /** One cached frame per LAZY ring plan: the three ring queries
-    * return frames that re-read their cached zone-assigned member
-    * frame only when the CALLER executes them, so the plan cannot
-    * unpersist before returning — but each invocation previously
-    * cached a FRESH copy, and repeated bench iterations accumulated
-    * cached frames until block-manager LRU pressure (r14 ADVICE #3).
-    * Swapping through a one-slot registry unpersists the PREVIOUS
-    * invocation's frame at entry, so steady-state residency is one
-    * frame per plan. Unpersisting a frame a stale caller still holds
-    * is safe (Spark recomputes lineage); blocking=false keeps entry
-    * non-blocking.
+  /** The ring plan returns a LAZY frame that re-reads its cached
+    * zone-assigned member frame only when the CALLER executes it, so
+    * it cannot unpersist before returning; a fresh cached copy per
+    * invocation would pile up across bench iterations. Swapping
+    * through a one-slot registry unpersists the PREVIOUS invocation's
+    * frame at entry, so steady-state residency is one frame. The
+    * unpersist comes FIRST: a repeated call builds the same plan, and
+    * `cache()` of a plan already cached is a no-op — unpersisting the
+    * previous frame after it would drop the new frame's cache too.
+    * Unpersisting a frame a stale caller still holds is safe (Spark
+    * recomputes lineage); blocking=false keeps entry non-blocking.
     */
-  private def swapPlanCache(
-      slot: java.util.concurrent.atomic.AtomicReference[DataFrame],
-      zf: DataFrame): Unit = {
-    zf.cache()
-    val prev = slot.getAndSet(zf)
+  private val ringsPlanCache =
+    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
+  private def swapPlanCache(zf: DataFrame): Unit = {
+    val prev = ringsPlanCache.getAndSet(zf)
     if (prev != null && (prev ne zf)) prev.unpersist(false)
+    zf.cache()
   }
-  private val polyDiskRingsCache =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-  private val concaveSubRingsCache =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-  private val polySubRingsCache =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
 
-  /** OUTPUT RINGS per GENERAL polygon zone under DISK subtrahends (see
-    * [[eraseRingsPolyDisk]]) — the DISTRIBUTED plan, same shape as the
-    * polygon-subtrahend ring plans: the per-piece interval work
-    * distributes, only the stitch is zone-serial.
-    *
-    *   (a) outer-edge and hole-edge covered t-intervals stream from a
-    *       flatMap over the zone-assigned disk frame (one row per
-    *       (disk, edge) hit — interval endpoints, never geometry,
-    *       shuffle here); the zone's edge catalogs ride task closures
-    *       (bounded: the zone catalog is cluster-constant — SCALE.md);
-    *   (b) each disk's surviving arcs come from a grid-cell neighbor
-    *       self-join at cell size 2r (only disks within 2r can cover
-    *       each other's circles — the [[boundaryDecomp]] bound), so
-    *       per-disk work tracks LOCAL disk density, and
-    *       [[diskArcPieces]]'s kept-arc merge makes the pieces
-    *       IDENTICAL to the kernel's under the grid's candidate
-    *       superset (non-coverers add nothing);
-    *
-    * then one `flatMapGroups` per zone chains that zone's pieces
-    * (bounded by zone-local crossing count) and emits ring rows from
-    * executors. Zones with no candidate disk emit their full outer CCW
-    * + hole CW rings driver-side (bounded by the zone catalog).
-    * Transcendental (atan2/acos/cos/sin) — rows-only by the erase
-    * family's declared rule; GeoSpec pins the distributed == driver
-    * replay and conservation against the independent area kernels.
-    */
-  def eraseRingsPolyDiskPerZone(spark: SparkSession, zones: DataFrame,
-      buffers: DataFrame, bufferFt: Double): DataFrame = {
+  /** Columns of a member frame (see [[Member]]) plus its bounding box. */
+  private val memberCols =
+    Seq("kind", "ox", "oy", "rad", "vertices", "x0", "y0", "x1", "y1")
+
+  /** Disk members: one per buffer center (`x_ft`, `y_ft`), radius `r`. */
+  def diskMembers(buffers: DataFrame, r: Double): DataFrame =
+    buffers.select(lit("disk").as("kind"), col("x_ft").as("ox"),
+      col("y_ft").as("oy"), lit(r).as("rad"),
+      typedLit(Seq.empty[(Double, Double)]).as("vertices"),
+      (col("x_ft") - r).as("x0"), (col("y_ft") - r).as("y0"),
+      (col("x_ft") + r).as("x1"), (col("y_ft") + r).as("y1"))
+
+  /** Ring members: one per distinct `vertices` ring, canonicalized
+    * first ([[canonicalRing]] — so re-wound or rotated copies of one
+    * polygon count once). */
+  def ringMembers(subs: DataFrame): DataFrame = {
+    import subs.sparkSession.implicits._
+    ringFrame(subs.select(col("vertices")).as[Seq[(Double, Double)]]
+      .map(canonicalRing(_)).toDF("vertices").dropDuplicates("vertices"))
+  }
+
+  /** Member columns for a frame of canonical `vertices` rings (other
+    * leading columns kept): bbox, and its bounding circle as (ox, oy,
+    * rad). */
+  private def ringFrame(df: DataFrame): DataFrame = {
+    val xs = transform(col("vertices"), v => v.getField("_1"))
+    val ys = transform(col("vertices"), v => v.getField("_2"))
+    val (x0, y0) = (array_min(xs), array_min(ys))
+    val (x1, y1) = (array_max(xs), array_max(ys))
+    df.select(df.columns.filter(_ != "vertices").map(col) ++ Seq(
+      lit("ring").as("kind"), ((x0 + x1) / 2).as("ox"),
+      ((y0 + y1) / 2).as("oy"),
+      (sqrt(Geo.dist2(x0, y0, x1, y1)) / 2).as("rad"), col("vertices"),
+      x0.as("x0"), y0.as("y0"), x1.as("x1"), y1.as("y1")): _*)
+  }
+
+  /** `members` assigned to every zone whose outer ring's bounding
+    * circle meets the member's (ox, oy, rad) circle — an exact superset
+    * of the zones the member can touch. */
+  private def assignMembers(spark: SparkSession,
+      zcat: Seq[(Int, Seq[(Double, Double)])], members: DataFrame)
+      : DataFrame = {
     import spark.implicits._
-    val zcat = zones.select(col("zone_id").cast("int"),
-        col("vertices"), col("holes"))
-      .as[(Int, Seq[(Double, Double)], Seq[Seq[(Double, Double)]])]
-      .collect().toSeq
-    val bound = zcat.map { case (z, vs, _) =>
+    val bound = zcat.map { case (z, vs) =>
       val cx = vs.map(_._1).sum / vs.size
       val cy = vs.map(_._2).sum / vs.size
       val rad = vs.map { case (x, y) => math.hypot(x - cx, y - cy) }.max
       (z, cx, cy, rad)
     }.toDF("zone_id", "bcx", "bcy", "brad")
-    // bounded catalogs ride task closures (the zEdgesMap convention)
-    val zRingMap = zcat.map { case (z, vs, _) => z -> normalizeCcw(vs) }.toMap
-    val zHolesMap = zcat.map { case (z, _, hs) =>
-      z -> hs.map(normalizeCcw) }.toMap
-    // zone-assigned deduped disk centers (dedup == the kernel's
-    // distinct: identical circles would erase each other's boundary)
-    val zb = buffers.select(col("x_ft"), col("y_ft"))
-      .join(broadcast(bound),
-        Geo.dist2(col("x_ft"), col("y_ft"), col("bcx"), col("bcy"))
-          < (col("brad") + bufferFt) * (col("brad") + bufferFt))
-      .select(col("zone_id").cast("int"),
-        col("x_ft").as("ox"), col("y_ft").as("oy"))
-      .dropDuplicates("zone_id", "ox", "oy")
-    swapPlanCache(polyDiskRingsCache, zb)
-    // tag 0 = outer-edge interval (ei, s, e); tag 1 = hole-edge
-    // interval (hi, ei, s, e); tag 2 = arc piece (ox, oy, s, e);
-    // tag 3 = seed (a zone whose disks all miss still emits rings);
-    // row type (Int, Int, Int, Int, Double, Double, Double, Double)
-    val ivRows = zb.as[(Int, Double, Double)].flatMap { case (z, ox, oy) =>
-      val outer = zRingMap(z)
-      val outerIv = outer.indices.flatMap { i =>
-        val (ax, ay) = outer(i)
-        val (bx, by) = outer((i + 1) % outer.size)
-        val dx = bx - ax; val dy = by - ay
-        segDiskCover(ax, ay, dx, dy, dx * dx + dy * dy, ox, oy, bufferFt)
-          .map { case (s, e) => (z, 0, i, 0, s, e, 0.0, 0.0) }
-      }
-      val holeIv = zHolesMap(z).zipWithIndex.flatMap {
-        case (h, hi) =>
-          h.indices.flatMap { i =>
-            val (cx, cy) = h(i)
-            val (ex, ey) = h((i + 1) % h.size)
-            val dx = ex - cx; val dy = ey - cy
-            segDiskCover(cx, cy, dx, dy, dx * dx + dy * dy, ox, oy,
-                bufferFt)
-              .map { case (s, e) => (z, 1, hi, i, s, e, 0.0, 0.0) }
-          }
-      }
-      outerIv ++ holeIv
-    }
-    // (b) per-disk arcs via the 2r grid-cell neighbor self-join: the
-    // left side probes its 3×3 cell neighborhood, the right side sits
-    // in its own cell, so each true neighbor pair matches exactly once
-    val cell = 2 * bufferFt
-    val l = zb
-      .withColumn("dxc", explode(array(lit(-1L), lit(0L), lit(1L))))
-      .withColumn("dyc", explode(array(lit(-1L), lit(0L), lit(1L))))
-      .select(col("zone_id"), col("ox"), col("oy"),
-        (floor(col("ox") / cell).cast("long") + col("dxc")).as("cx"),
-        (floor(col("oy") / cell).cast("long") + col("dyc")).as("cy"))
-    val rt = zb.select(col("zone_id").as("rz"), col("ox").as("rox"),
-      col("oy").as("roy"),
-      floor(col("ox") / cell).cast("long").as("rcx"),
-      floor(col("oy") / cell).cast("long").as("rcy"))
-    val arcRows = l.join(rt,
-        col("zone_id") === col("rz") && col("cx") === col("rcx") &&
+    members.join(broadcast(bound),
+        Geo.dist2(col("ox"), col("oy"), col("bcx"), col("bcy"))
+          < (col("brad") + col("rad")) * (col("brad") + col("rad")))
+      .select(col("zone_id") +: memberCols.map(col): _*)
+  }
+
+  /** The grid-cell self-join of a zone-assigned member frame, grouped
+    * per (zone, member): each group carries the member's
+    * bbox-overlapping NEIGHBORS (the cell explode can deliver a
+    * neighbor once per shared cell — consumers take `distinct`;
+    * left_outer keeps neighbor-free members). Self-pair exclusion and
+    * grouping key on the member ITSELF (ring vertices / disk center) —
+    * exact, no hash-collision failure mode. A pair must also pass the
+    * bounding-circle test (for two disks: centers closer than r + r').
+    * The grid cell is the largest member bbox extent (at least 1 ft),
+    * so a member spans at most 2×2 cells; it is read with one small
+    * agg, which also fills the caller's cache of `zf` once, before the
+    * plan's three readers of it run. Shared by the polygon
+    * subtrahend area plan and the ring plan.
+    */
+  private def neighborGroups(spark: SparkSession, zf: DataFrame)
+      : org.apache.spark.sql.KeyValueGroupedDataset[
+        (Int, Member), (Int, Member, Option[Member])] = {
+    import spark.implicits._
+    val cell = math.max(1.0, Option(zf
+      .agg(max(greatest(col("x1") - col("x0"), col("y1") - col("y0"))))
+      .head().get(0)).map(_.asInstanceOf[Double]).getOrElse(1.0))
+    def withCells(df: DataFrame): DataFrame = df
+      .withColumn("cx", explode(sequence(
+        floor(col("x0") / cell), floor(col("x1") / cell))))
+      .withColumn("cy", explode(sequence(
+        floor(col("y0") / cell), floor(col("y1") / cell))))
+    val right = withCells(zf).select(
+      (("zone_id" +: memberCols) ++ Seq("cx", "cy"))
+        .map(c => col(c).as("r" + c)): _*)
+    def member(p: String) = struct(
+      Seq("kind", "ox", "oy", "rad", "vertices").map(c => col(p + c).as(c)): _*)
+    withCells(zf).join(right,
+        col("zone_id") === col("rzone_id") && col("cx") === col("rcx") &&
           col("cy") === col("rcy") &&
-          !(col("ox") === col("rox") && col("oy") === col("roy")) &&
+          !(col("vertices") === col("rvertices") &&
+            col("ox") === col("rox") && col("oy") === col("roy")) &&
+          col("rx0") <= col("x1") && col("x0") <= col("rx1") &&
+          col("ry0") <= col("y1") && col("y0") <= col("ry1") &&
           Geo.dist2(col("ox"), col("oy"), col("rox"), col("roy"))
-            < lit(4 * bufferFt * bufferFt),
+            < (col("rad") + col("rrad")) * (col("rad") + col("rrad")),
         "left_outer")
-      .select(col("zone_id"), col("ox"), col("oy"), col("rox"), col("roy"))
-      .as[(Int, Double, Double, Option[Double], Option[Double])]
-      .groupByKey(r => (r._1, r._2, r._3))
-      .flatMapGroups { (k: (Int, Double, Double),
-          rows: Iterator[(Int, Double, Double, Option[Double],
-            Option[Double])]) =>
-        val (z, ox, oy) = k
-        val neighbors = rows.flatMap(r =>
-          r._4.zip(r._5)).toSeq.distinct
-        diskArcPieces(zRingMap(z), zHolesMap(z), ox, oy, bufferFt,
-            neighbors)
-          .map(p => (z, 2, 0, 0, p.s, p.e, ox, oy))
+      .select(col("zone_id"), member(""),
+        when(col("rzone_id").isNotNull, member("r")))
+      .as[(Int, Member, Option[Member])]
+      .groupByKey(r => (r._1, r._2))
+  }
+
+  /** OUTPUT RINGS per polygon zone (see [[polyZoneRings]]) — the
+    * distributed plan for every polygon-zone ring query. `zones` holds
+    * (zone_id, vertices[, holes]); `members` is a [[diskMembers]] or
+    * [[ringMembers]] frame. The zone catalog is collected (bounded —
+    * SCALE.md) and its rings ride task closures. Members are assigned
+    * to zones by bounding circle, the zones' holes join as ring
+    * members, and the frame is deduplicated per zone. The per-piece
+    * work distributes:
+    *
+    *   (a) outer-edge cover t-intervals stream from a flatMap over the
+    *       member frame (interval endpoints, never geometry, shuffle);
+    *   (b) each member's pieces come from the grid-cell neighbor
+    *       self-join ([[neighborGroups]]), bounded by local overlap
+    *       density — [[memberPieces]] makes them identical to the
+    *       kernel's under the grid's candidate superset;
+    *
+    * and only the STITCH is zone-serial: one `flatMapGroups` per zone
+    * (seeded from the catalog, so a zone no member touches still emits
+    * its full rings) chains the zone's pieces and emits ring rows from
+    * the executors. Rows: zone_id, ring_id, piece_seq, kind ("zone" /
+    * "sub" / "arc"), x1..y2, arc center/radius/degree window (NULL on
+    * line pieces), ring_area_sqft.
+    */
+  def polyZoneRingsPerZone(spark: SparkSession, zones: DataFrame,
+      members: DataFrame): DataFrame = {
+    import spark.implicits._
+    val zcat = zones.select(col("zone_id").cast("int"), col("vertices"),
+        if (zones.columns.contains("holes")) col("holes")
+        else typedLit(Seq.empty[Seq[(Double, Double)]]))
+      .as[(Int, Seq[(Double, Double)], Seq[Seq[(Double, Double)]])]
+      .collect().toSeq
+    val zOuter = zcat.map { case (z, vs, _) => z -> normalizeCcw(vs) }.toMap
+    val holes = ringFrame(zcat.flatMap { case (z, _, hs) =>
+      hs.map(h => (z, canonicalRing(h))) }.toDF("zone_id", "vertices"))
+    val zf = assignMembers(spark, zcat.map(c => (c._1, c._2)), members)
+      .unionByName(holes)
+      .dropDuplicates("zone_id", "ox", "oy", "vertices")
+    swapPlanCache(zf)
+    // rows per zone, tagged: 0 = outer-edge cover (edge, s, e);
+    // 1 = line piece (x1, y1, x2, y2); 2 = arc (cx, cy, rho, s, e);
+    // 3 = seed
+    val covers = zf.select(col("zone_id"),
+        struct(col("kind"), col("ox"), col("oy"), col("rad"),
+          col("vertices")))
+      .as[(Int, Member)].flatMap { case (z, m) =>
+        ringEdges(zOuter(z)).zipWithIndex.flatMap {
+          case (((ax, ay), (bx, by)), ei) =>
+            memberCover(ax, ay, bx, by, m)
+              .map { case (s, e) => (z, 0, ei, s, e, 0.0, 0.0, 0.0) }
+        }
       }
-    val seedRows = zb.select(col("zone_id")).distinct().as[Int]
-      .map(z => (z, 3, 0, 0, 0.0, 0.0, 0.0, 0.0))
-    val stitched = ivRows.union(arcRows).union(seedRows)
+    val pieces = neighborGroups(spark, zf)
+      .flatMapGroups { (k: (Int, Member),
+          rows: Iterator[(Int, Member, Option[Member])]) =>
+        val z = k._1
+        memberPieces(zOuter(z), k._2, rows.flatMap(_._3).toSeq.distinct)
+          .map {
+            case p: LinePiece => (z, 1, 0, p.x1, p.y1, p.x2, p.y2, 0.0)
+            case p: RingPiece => (z, 2, 0, p.cx, p.cy, p.rho, p.s, p.e)
+          }
+      }
+    val seeds = zcat.map(c => (c._1, 3, 0, 0.0, 0.0, 0.0, 0.0, 0.0)).toDS()
+    covers.union(pieces).union(seeds)
       .groupByKey(_._1)
-      .flatMapGroups { (z: Int,
-          rowsIt: Iterator[(Int, Int, Int, Int, Double, Double, Double,
-            Double)]) =>
+      .flatMapGroups { (z: Int, rowsIt: Iterator[(Int, Int, Int, Double,
+          Double, Double, Double, Double)]) =>
         val rs = rowsIt.toSeq
-        val outer = zRingMap(z)
-        val outerIv = rs.filter(_._2 == 0).groupBy(_._3)
-          .map { case (ei, ivs) =>
-            ei -> mergeIntervals(ivs.map(r => (r._5, r._6))) }
-        val zonePieces: Seq[BoundaryPiece] =
-          outer.indices.flatMap { ei =>
-            val (ax, ay) = outer(ei)
-            val (bx, by) = outer((ei + 1) % outer.size)
-            zoneEdgePieces(ax, ay, bx, by, outerIv.getOrElse(ei, Nil))
+        val cover = rs.filter(_._2 == 0).groupBy(_._3).map {
+          case (ei, ivs) => ei -> mergeIntervals(ivs.map(r => (r._4, r._5)))
+        }
+        val zonePieces: Seq[BoundaryPiece] = ringEdges(zOuter(z))
+          .zipWithIndex.flatMap { case (((ax, ay), (bx, by)), ei) =>
+            zoneEdgePieces(ax, ay, bx, by, cover.getOrElse(ei, Nil))
           }
-        val holeIv = rs.filter(_._2 == 1).groupBy(r => (r._3, r._4))
-          .map { case (k, ivs) =>
-            k -> mergeIntervals(ivs.map(r => (r._5, r._6))) }
-        val holePieces: Seq[BoundaryPiece] =
-          zHolesMap(z).zipWithIndex.flatMap { case (h, hi) =>
-            h.indices.flatMap { ei =>
-              val (cx, cy) = h(ei)
-              val (ex, ey) = h((ei + 1) % h.size)
-              reversedEdgePieces(cx, cy, ex, ey,
-                holeIv.getOrElse((hi, ei), Nil))
-            }
+        val all = zonePieces ++ rs.collect {
+          case r if r._2 == 1 => LinePiece("sub", r._4, r._5, r._6, r._7)
+          case r if r._2 == 2 =>
+            RingPiece(ccw = false, r._4, r._5, r._6, r._7, r._8)
+        }
+        stitch(all, polyTol(all)).zipWithIndex.flatMap { case (ring, ri) =>
+          val area = ring.map(_.signedArea).sum
+          ring.zipWithIndex.map { case (p, pi) =>
+            ringRow(z, ri.toLong, pi.toLong, p, area)
           }
-        val arcPieces: Seq[BoundaryPiece] = rs.filter(_._2 == 2)
-          .map(r => RingPiece(ccw = false, r._7, r._8, bufferFt,
-            r._5, r._6))
-        stitchMixedPieces(zonePieces ++ holePieces ++ arcPieces)
-          .zipWithIndex.flatMap { case (ring, ri) =>
-            val area = ring.map(_.signedArea).sum
-            ring.zipWithIndex.map { case (p, pi) =>
-              polyDiskRow(z, ri.toLong, pi.toLong, p, area)
-            }
-          }
+        }
       }
       .toDF("zone_id", "ring_id", "piece_seq", "kind",
         "x1_ft", "y1_ft", "x2_ft", "y2_ft", "cx_ft", "cy_ft", "rho_ft",
         "start_deg", "end_deg", "ring_area_sqft")
-    // zones with NO candidate disk: full outer CCW + hole CW rings via
-    // the driver kernel (bounded catalog); zb stays cached past return
-    // — the stitched path is lazy, residency bounded by swapPlanCache
-    // (the eraseRingsPolySubPerZone convention)
-    val touched = zb.select(col("zone_id")).distinct()
-      .as[Int].collect().toSet
-    val untouched = zcat.filter(zc => !touched(zc._1))
-      .sortBy(_._1).flatMap { case (z, vs, hs) =>
-        eraseRingsPolyDisk(vs, hs, Seq.empty, bufferFt).zipWithIndex
-          .flatMap { case (ring, ri) =>
-            val area = ring.map(_.signedArea).sum
-            ring.zipWithIndex.map { case (p, pi) =>
-              polyDiskRow(z, ri.toLong, pi.toLong, p, area)
-            }
-          }
-      }
-    stitched.union(untouched.toDF("zone_id", "ring_id", "piece_seq",
-      "kind", "x1_ft", "y1_ft", "x2_ft", "y2_ft", "cx_ft", "cy_ft",
-      "rho_ft", "start_deg", "end_deg", "ring_area_sqft"))
   }
 
   /** Surviving area per GENERAL (concave, with holes) polygon zone
@@ -1759,20 +1555,10 @@ object EraseArcs {
     // triangle vertices ride task closures (bounded: zones × ~12 tris
     // of 3 vertices — the zEdgesMap convention)
     val tris = tcat.map { case (z, i, _, t) => (z, i) -> t }.toMap
-    val footCanon = subs.select(col("vertices"))
-      .as[Seq[(Double, Double)]].map(canonicalRing(_)).toDF("vertices")
-    val xs = transform(col("vertices"), v => v.getField("_1"))
-    val ys = transform(col("vertices"), v => v.getField("_2"))
-    val foot = footCanon.dropDuplicates("vertices")
-      .select(col("vertices"),
-        ((array_min(xs) + array_max(xs)) / 2).as("sx"),
-        ((array_min(ys) + array_max(ys)) / 2).as("sy"),
-        (sqrt(Geo.dist2(array_min(xs), array_min(ys),
-          array_max(xs), array_max(ys))) / 2).as("sr"))
-    val pairs = foot
+    val pairs = ringMembers(subs)
       .join(broadcast(bound),
-        Geo.dist2(col("sx"), col("sy"), col("bcx"), col("bcy"))
-          < (col("brad") + col("sr")) * (col("brad") + col("sr")))
+        Geo.dist2(col("ox"), col("oy"), col("bcx"), col("bcy"))
+          < (col("brad") + col("rad")) * (col("brad") + col("rad")))
       .select(col("zone_id").cast("int"), col("tri_id").cast("int"),
         col("vertices"))
       .as[(Int, Int, Seq[(Double, Double)])]
@@ -1793,166 +1579,23 @@ object EraseArcs {
     all.toDF("zone_id", "area_sqft")
   }
 
-  /** OUTPUT RINGS per GENERAL (concave, with holes) zone under POLYGON
-    * subtrahends (see [[eraseRingsConcaveSub]]) — the DISTRIBUTED
-    * plan. Same shape as [[eraseRingsPolySubPerZone]], with the zone's
-    * HOLE rings injected as member rows of the zone-assigned frame
-    * (holes and subtrahends are the same thing to the boundary
-    * algebra), the convex edge catalog replaced by the general CCW
-    * outer-ring edges, and the member clip running through
-    * [[memberEdgePieces]] (segment-in-polygon intervals — no
-    * convexity). The expensive per-piece interval work distributes:
-    * (a) outer-edge coverage intervals stream from a flatMap over the
-    * member frame; (b) each member's surviving pieces come from the
-    * shared grid-cell neighbor self-join, bounded by local overlap
-    * density. Only the stitch is zone-serial (bounded by zone-local
-    * crossing count). Rows-only by the family's declared rule; GeoSpec
-    * pins the distributed == driver-replay parity and conservation
-    * against the triangulation area kernel.
-    */
-  def eraseRingsConcaveSubPerZone(spark: SparkSession, zones: DataFrame,
-      subs: DataFrame): DataFrame = {
-    import spark.implicits._
-    val zcat = zones.select(col("zone_id").cast("int"),
-        col("vertices"), col("holes"))
-      .as[(Int, Seq[(Double, Double)], Seq[Seq[(Double, Double)]])]
-      .collect().toSeq
-    val bound = zcat.map { case (z, vs, _) =>
-      val cx = vs.map(_._1).sum / vs.size
-      val cy = vs.map(_._2).sum / vs.size
-      val rad = vs.map { case (x, y) => math.hypot(x - cx, y - cy) }.max
-      (z, cx, cy, rad)
-    }.toDF("zone_id", "bcx", "bcy", "brad")
-    // bounded catalogs ride task closures (the zEdgesMap convention)
-    val zRingMap = zcat.map { case (z, vs, _) => z -> normalizeCcw(vs) }.toMap
-    val zEdgesMap = zRingMap.map { case (z, ring) =>
-      z -> ring.indices.map(i =>
-        (ring(i), ring((i + 1) % ring.size))).toIndexedSeq
-    }
-    val zHolesMap = zcat.map { case (z, _, hs) =>
-      z -> hs.map(canonicalRing) }.toMap
-    val footCanon = subs.select(col("vertices"))
-      .as[Seq[(Double, Double)]].map(canonicalRing(_)).toDF("vertices")
-    val xs = transform(col("vertices"), v => v.getField("_1"))
-    val ys = transform(col("vertices"), v => v.getField("_2"))
-    val foot = footCanon.dropDuplicates("vertices")
-      .select(col("vertices"),
-        array_min(xs).as("x0"), array_min(ys).as("y0"),
-        array_max(xs).as("x1"), array_max(ys).as("y1"))
-    val scx = (col("x0") + col("x1")) / 2
-    val scy = (col("y0") + col("y1")) / 2
-    val srad = sqrt(Geo.dist2(col("x0"), col("y0"), col("x1"), col("y1"))) / 2
-    val zfFoot = foot
-      .join(broadcast(bound),
-        Geo.dist2(scx, scy, col("bcx"), col("bcy"))
-          < (col("brad") + srad) * (col("brad") + srad))
-      .select(col("zone_id").cast("int"), col("vertices"),
-        col("x0"), col("y0"), col("x1"), col("y1"))
-    // hole member rows: driver rows, bounded by the zone catalog
-    val holeRows = zcat.flatMap { case (z, _, hs) =>
-      hs.map { h0 =>
-        val h = canonicalRing(h0)
-        (z, h, h.map(_._1).min, h.map(_._2).min,
-          h.map(_._1).max, h.map(_._2).max)
-      }
-    }
-    // per-zone member SET: an exact duplicate (a footprint coinciding
-    // with a hole) must erase once, not twice — two identical members
-    // would each see the other covering all their edges and the union
-    // boundary would vanish (the canonicalRing pitfall)
-    val zf = zfFoot
-      .union(holeRows.toDF("zone_id", "vertices", "x0", "y0", "x1", "y1"))
-      .dropDuplicates("zone_id", "vertices")
-    swapPlanCache(concaveSubRingsCache, zf)
-    val cellSz = math.max(1.0, Option(zf
-      .agg(max(greatest(col("x1") - col("x0"), col("y1") - col("y0"))))
-      .head().get(0)).map(_.asInstanceOf[Double]).getOrElse(1.0))
-    // tag 0 = outer-edge coverage interval; tag 1 = member piece;
-    // tag 2 = seed (a zone whose members all miss still emits rings)
-    val aRows = zf.select(col("zone_id"), col("vertices"))
-      .as[(Int, Seq[(Double, Double)])]
-      .flatMap { case (z, member) =>
-        zEdgesMap(z).zipWithIndex.flatMap {
-          case (((ax, ay), (bx, by)), ei) =>
-            segInPolyIntervals(ax, ay, bx, by, member)
-              .map { case (s, e) => (z, 0, ei, s, e, 0.0, 0.0) }
-        }
-      }
-    val bRows = polySubNeighborGroups(spark, zf, cellSz)
-      .flatMapGroups { (key: (Int, Seq[(Double, Double)]),
-          rows: Iterator[(Int, Seq[(Double, Double)],
-            Option[Seq[(Double, Double)]])]) =>
-        val neighbors = rows.flatMap(_._3).toSeq.distinct
-        memberEdgePieces(zRingMap(key._1), key._2, _ => neighbors)
-          .map(p => (key._1, 1, -1, p.x1, p.y1, p.x2, p.y2))
-      }
-    val seedRows = zf.select(col("zone_id")).distinct().as[Int]
-      .map(z => (z, 2, 0, 0.0, 0.0, 0.0, 0.0))
-    val stitched = aRows.union(bRows).union(seedRows)
-      .groupByKey(_._1)
-      .flatMapGroups { (z: Int,
-          rows: Iterator[(Int, Int, Int, Double, Double, Double, Double)]) =>
-        val rs = rows.toSeq
-        val ivByEdge = rs.filter(_._2 == 0).groupBy(_._3)
-          .map { case (ei, ivs) =>
-            ei -> mergeIntervals(ivs.map(r => (r._4, r._5))) }
-        val zonePieces = zEdgesMap(z).zipWithIndex.flatMap {
-          case (((ax, ay), (bx, by)), ei) =>
-            zoneEdgePieces(ax, ay, bx, by, ivByEdge.getOrElse(ei, Nil))
-        }
-        val memberPieces = rs.filter(_._2 == 1)
-          .map(r => LinePiece("sub", r._4, r._5, r._6, r._7))
-        stitchLinePieces(zonePieces ++ memberPieces).zipWithIndex
-          .flatMap { case (ring, ri) =>
-            val area = ring.map(_.signedArea).sum
-            ring.zipWithIndex.map { case (p, pi) =>
-              (z, ri.toLong, pi.toLong, p.kind,
-                p.x1, p.y1, p.x2, p.y2, area)
-            }
-          }
-      }
-      .toDF("zone_id", "ring_id", "piece_seq", "kind",
-        "x1_ft", "y1_ft", "x2_ft", "y2_ft", "ring_area_sqft")
-    // zones with NO member at all (no holes, no candidate footprint):
-    // full CCW outer ring via the driver kernel (bounded catalog);
-    // zf stays cached past return — the stitched path is lazy, and
-    // swapPlanCache bounds residency to one frame per plan (see
-    // eraseRingsPolySubPerZone)
-    val touched = zf.select(col("zone_id")).distinct()
-      .as[Int].collect().toSet
-    val untouched = zcat.filter(zc => !touched(zc._1))
-      .sortBy(_._1).flatMap { case (z, vs, hs) =>
-        eraseRingsConcaveSub(vs, hs, Seq.empty).zipWithIndex.flatMap {
-          case (ring, ri) =>
-            val area = ring.map(_.signedArea).sum
-            ring.zipWithIndex.map { case (p, pi) =>
-              (z, ri.toLong, pi.toLong, p.kind,
-                p.x1, p.y1, p.x2, p.y2, area)
-            }
-        }
-      }
-    stitched.union(untouched.toDF("zone_id", "ring_id", "piece_seq",
-      "kind", "x1_ft", "y1_ft", "x2_ft", "y2_ft", "ring_area_sqft"))
-  }
-
   /** Surviving area per CONVEX polygon zone under POLYGON subtrahends
     * (see [[erasedAreaPolySub]]) — the DISTRIBUTED plan. A first cut
     * ran the whole JVM kernel per zone inside `mapGroups`; at sf10 the
     * generator's opt-out density gives ~30× footprint over-coverage
     * per zone and that single task serialized ~10⁴ footprints' pairwise
     * interval work (measured 262 s). The area decomposes exactly into
-    * per-piece terms, so the plan now distributes them:
+    * per-piece terms, so the plan distributes them:
     *
     *   (a) per (zone, zone-edge): covered t-intervals are produced by a
     *       flatMap over the zone-assigned footprint frame (one row per
     *       footprint), merged per edge in a 4-groups-per-zone
     *       mapGroups — interval endpoints, never rings, shuffle here;
     *   (b) per (zone, footprint): the footprint's reversed-Green
-    *       contribution needs only its bbox-overlapping NEIGHBORS — a
-    *       grid-cell self-join of the zone-assigned frame (cell = the
-    *       largest footprint bbox extent, one tiny agg job) bounds the
-    *       group to local overlap density, and every (zone, footprint)
-    *       group computes independently across the cluster.
+    *       contribution needs only its bbox-overlapping NEIGHBORS — the
+    *       grid-cell self-join ([[neighborGroups]]) bounds the group to
+    *       local overlap density, and every (zone, footprint) group
+    *       computes independently across the cluster.
     *
     * A footprint covering part of another's edge inside the zone has
     * interior points in the zone, so it is in the zone's touch set —
@@ -1962,101 +1605,11 @@ object EraseArcs {
     * kernel's own ([[subContribution]]/[[zoneEdgeGreen]], shared code);
     * only float summation ORDER across footprints differs, and GeoSpec
     * pins the wrapper against a driver-side kernel replay at 1e-9
-    * relative. Duplicate rings are dropped before the join (duplicates
-    * erase once — same load-bearing distinct as the kernel). Zones
-    * with no candidate footprint keep the exact shoelace area.
+    * relative. Canonical duplicate rings are dropped before the join
+    * (duplicates erase once — same load-bearing distinct as the
+    * kernel). Zones with no candidate footprint keep the exact
+    * shoelace area.
     */
-  /** Shared distributed frames of the polygon-subtrahend family
-    * ([[eraseAreaPolySub]] / [[eraseRingsPolySubPerZone]]): the
-    * driver-bounded zone catalog + per-zone edge map, and the
-    * zone-assigned CANONICAL footprint frame `zf` (CCW +
-    * rotation-normalized rings, [[canonicalRing]] — so dropDuplicates
-    * also catches re-wound / rotated copies of the same polygon), with
-    * bbox columns and the grid cell size (= the largest footprint bbox
-    * extent, one tiny agg job). The ring array is its own key
-    * downstream (r12 ADVICE: a 64-bit hash pk collision would have
-    * collapsed two rings' groups, silently dropping one ring's
-    * boundary contribution).
-    */
-  private case class PolySubFrames(
-      zcat: Seq[(Int, Seq[(Double, Double)])],
-      zEdgesMap: Map[Int, IndexedSeq[((Double, Double), (Double, Double))]],
-      zf: DataFrame, cellSz: Double)
-
-  private def polySubFrames(spark: SparkSession, zones: DataFrame,
-      subs: DataFrame): PolySubFrames = {
-    import spark.implicits._
-    val zcat = zones.select(col("zone_id").cast("int"), col("vertices"))
-      .as[(Int, Seq[(Double, Double)])]
-      .collect().toSeq
-    val bound = zcat.map { case (z, vs) =>
-      val cx = vs.map(_._1).sum / vs.size
-      val cy = vs.map(_._2).sum / vs.size
-      val rad = vs.map { case (x, y) => math.hypot(x - cx, y - cy) }.max
-      (z, cx, cy, rad)
-    }.toDF("zone_id", "bcx", "bcy", "brad")
-    // zone edges (bounded catalog) ride task closures
-    val zEdgesMap = zcat.map { case (z, vs) => z -> convexZoneEdges(vs) }.toMap
-    val footCanon = subs.select(col("vertices"))
-      .as[Seq[(Double, Double)]].map(canonicalRing(_)).toDF("vertices")
-    val xs = transform(col("vertices"), v => v.getField("_1"))
-    val ys = transform(col("vertices"), v => v.getField("_2"))
-    val foot = footCanon.dropDuplicates("vertices")
-      .select(col("vertices"),
-        array_min(xs).as("x0"), array_min(ys).as("y0"),
-        array_max(xs).as("x1"), array_max(ys).as("y1"))
-    val cellSz = math.max(1.0, Option(foot
-      .agg(max(greatest(col("x1") - col("x0"), col("y1") - col("y0"))))
-      .head().get(0)).map(_.asInstanceOf[Double]).getOrElse(1.0))
-    // assign footprints to the zones they can touch
-    val scx = (col("x0") + col("x1")) / 2
-    val scy = (col("y0") + col("y1")) / 2
-    val srad = sqrt(Geo.dist2(col("x0"), col("y0"), col("x1"), col("y1"))) / 2
-    val zf = foot
-      .join(broadcast(bound),
-        Geo.dist2(scx, scy, col("bcx"), col("bcy"))
-          < (col("brad") + srad) * (col("brad") + srad))
-      .select(col("zone_id").cast("int"), col("vertices"),
-        col("x0"), col("y0"), col("x1"), col("y1"))
-    PolySubFrames(zcat, zEdgesMap, zf, cellSz)
-  }
-
-  /** The grid-cell self-join of the zone-assigned footprint frame,
-    * grouped per (zone, footprint): each group carries the footprint's
-    * bbox-overlapping NEIGHBORS (distinct — the cell explode can
-    * deliver a neighbor once per shared cell; left_outer keeps
-    * neighbor-free footprints). Self-pair exclusion and grouping both
-    * key on the canonical ring ITSELF — exact, no hash-collision
-    * failure mode. Shared by the area and ring paths.
-    */
-  private def polySubNeighborGroups(spark: SparkSession, zf: DataFrame,
-      cellSz: Double): org.apache.spark.sql.KeyValueGroupedDataset[
-        (Int, Seq[(Double, Double)]),
-        (Int, Seq[(Double, Double)], Option[Seq[(Double, Double)]])] = {
-    import spark.implicits._
-    def withCells(df: DataFrame): DataFrame = df
-      .withColumn("cx", explode(sequence(
-        floor(col("x0") / cellSz), floor(col("x1") / cellSz))))
-      .withColumn("cy", explode(sequence(
-        floor(col("y0") / cellSz), floor(col("y1") / cellSz))))
-    val left = withCells(zf)
-    val right = withCells(zf).select(col("zone_id").as("rz"),
-      col("vertices").as("rvertices"),
-      col("x0").as("rx0"), col("y0").as("ry0"),
-      col("x1").as("rx1"), col("y1").as("ry1"),
-      col("cx").as("rcx"), col("cy").as("rcy"))
-    left.join(right,
-        col("zone_id") === col("rz") && col("cx") === col("rcx") &&
-          col("cy") === col("rcy") &&
-          col("vertices") =!= col("rvertices") &&
-          col("rx0") <= col("x1") && col("x0") <= col("rx1") &&
-          col("ry0") <= col("y1") && col("y0") <= col("ry1"),
-        "left_outer")
-      .select(col("zone_id"), col("vertices"), col("rvertices"))
-      .as[(Int, Seq[(Double, Double)], Option[Seq[(Double, Double)]])]
-      .groupByKey(r => (r._1, r._2))
-  }
-
   def eraseAreaPolySub(spark: SparkSession, zones: DataFrame,
       subs: DataFrame): DataFrame = {
     import spark.implicits._
@@ -2065,17 +1618,17 @@ object EraseArcs {
         val (x1, y1) = vs(i); val (x2, y2) = vs((i + 1) % vs.size)
         x1 * y2 - x2 * y1
       }.sum) / 2
-    val frames = polySubFrames(spark, zones, subs)
-    val zcat = frames.zcat
-    val zEdgesMap = frames.zEdgesMap
-    val cellSz = frames.cellSz
-    val zf = frames.zf
+    val zcat = zones.select(col("zone_id").cast("int"), col("vertices"))
+      .as[(Int, Seq[(Double, Double)])]
+      .collect().toSeq
+    // zone edges (bounded catalog) ride task closures
+    val zEdgesMap = zcat.map { case (z, vs) => z -> convexZoneEdges(vs) }.toMap
+    val zf = assignMembers(spark, zcat, ringMembers(subs))
     zf.cache()
     // ---- (a) zone-edge coverage intervals, merged per (zone, edge) --
     val aEdge = zf.select(col("zone_id"), col("vertices"))
       .as[(Int, Seq[(Double, Double)])]
-      .flatMap { case (z, ringIn) =>
-        val ring = normalizeCcw(ringIn)
+      .flatMap { case (z, ring) =>
         zEdgesMap(z).zipWithIndex.flatMap {
           case (((ax, ay), (bx, by)), ei) =>
             segInPolyIntervals(ax, ay, bx, by, ring)
@@ -2102,14 +1655,12 @@ object EraseArcs {
       }.sum
     }.toMap
     // ---- (b) per-footprint contributions via a grid-cell self-join --
-    val bRows = polySubNeighborGroups(spark, zf, cellSz)
-      .mapGroups { (key: (Int, Seq[(Double, Double)]),
-          rows: Iterator[(Int, Seq[(Double, Double)],
-            Option[Seq[(Double, Double)]])]) =>
-        // rings arrive canonical (CCW) from the footprint frame
-        // the cell explode can deliver a neighbor once per shared cell
-        val neighbors = rows.flatMap(_._3).toSeq.distinct
-        (key._1, subContribution(zEdgesMap(key._1), key._2, _ => neighbors))
+    val bRows = neighborGroups(spark, zf)
+      .mapGroups { (key: (Int, Member),
+          rows: Iterator[(Int, Member, Option[Member])]) =>
+        val neighbors = rows.flatMap(_._3).map(_.vertices).toSeq.distinct
+        (key._1, subContribution(zEdgesMap(key._1), key._2.vertices,
+          _ => neighbors))
       }
       .groupByKey(_._1)
       .mapGroups((z: Int, rows: Iterator[(Int, Double)]) =>
@@ -2124,122 +1675,6 @@ object EraseArcs {
       }
     }
     all.toDF("zone_id", "area_sqft")
-  }
-
-  /** OUTPUT RINGS per zone under POLYGON subtrahends (see
-    * [[eraseRingsPolySub]]) — the DISTRIBUTED plan, closing the one
-    * asymmetry the r12 verdict named (disk subtrahends emit rings via
-    * [[eraseRingsPerZone]]; polygon subtrahends emitted only area +
-    * selection). Same shape as [[eraseAreaPolySub]]: the expensive
-    * per-piece interval work distributes —
-    *
-    *   (a) zone-edge coverage intervals stream from a flatMap over the
-    *       zone-assigned footprint frame (interval endpoints, never
-    *       rings, shuffle here);
-    *   (b) each footprint's surviving edge pieces come from the shared
-    *       grid-cell neighbor self-join ([[polySubNeighborGroups]]),
-    *       bounded by local overlap density;
-    *
-    * and only the STITCH is zone-serial: one `flatMapGroups` per zone
-    * chains that zone's pieces (bounded by zone-local crossing count,
-    * not the corpus) and emits ring rows directly from executors — no
-    * driver collect on the data path (the zone catalog and the
-    * touched-zone id set are the only bounded collects). Interval
-    * merge values are order-independent (sorted merge, float `max`),
-    * and every piece's endpoint arithmetic is the kernel's own
-    * ([[zoneEdgePieces]]/[[subEdgePieces]], shared code), so the
-    * distributed output equals a driver-side [[eraseRingsPolySub]]
-    * replay exactly up to float re-association — GeoSpec pins it.
-    * Zones with no candidate footprint emit their full CCW ring.
-    * Transcendental-free but SQL-inexpressible (the clipping/stitching
-    * algorithm) — rows-only by the family's declared rule; GeoSpec
-    * pins closure, orientation, and Σ ring areas == erasedAreaPolySub.
-    */
-  def eraseRingsPolySubPerZone(spark: SparkSession, zones: DataFrame,
-      subs: DataFrame): DataFrame = {
-    import spark.implicits._
-    val frames = polySubFrames(spark, zones, subs)
-    val zEdgesMap = frames.zEdgesMap
-    val zf = frames.zf
-    swapPlanCache(polySubRingsCache, zf)
-    // tagged per-zone rows: tag 0 = (a) zone-edge coverage interval
-    // (ei, s, e); tag 1 = (b) surviving footprint piece (x1,y1,x2,y2)
-    val aRows = zf.select(col("zone_id"), col("vertices"))
-      .as[(Int, Seq[(Double, Double)])]
-      .flatMap { case (z, ringIn) =>
-        val ring = normalizeCcw(ringIn)
-        zEdgesMap(z).zipWithIndex.flatMap {
-          case (((ax, ay), (bx, by)), ei) =>
-            segInPolyIntervals(ax, ay, bx, by, ring)
-              .map { case (s, e) => (z, 0, ei, s, e, 0.0, 0.0) }
-        }
-      }
-    val bRows = polySubNeighborGroups(spark, zf, frames.cellSz)
-      .flatMapGroups { (key: (Int, Seq[(Double, Double)]),
-          rows: Iterator[(Int, Seq[(Double, Double)],
-            Option[Seq[(Double, Double)]])]) =>
-        val neighbors = rows.flatMap(_._3).toSeq.distinct
-        subEdgePieces(zEdgesMap(key._1), key._2, _ => neighbors)
-          .map(p => (key._1, 1, -1, p.x1, p.y1, p.x2, p.y2))
-      }
-    // tag 2 = touched-zone seed: a zone whose candidate footprints all
-    // miss the convex ring yields no (a)/(b) rows but must still emit
-    // its full ring — the seed forces its stitch group to exist
-    val seedRows = zf.select(col("zone_id")).distinct().as[Int]
-      .map(z => (z, 2, 0, 0.0, 0.0, 0.0, 0.0))
-    val stitched = aRows.union(bRows).union(seedRows)
-      .groupByKey(_._1)
-      .flatMapGroups { (z: Int,
-          rows: Iterator[(Int, Int, Int, Double, Double, Double, Double)]) =>
-        val rs = rows.toSeq
-        val ivByEdge = rs.filter(_._2 == 0).groupBy(_._3)
-          .map { case (ei, ivs) =>
-            ei -> mergeIntervals(ivs.map(r => (r._4, r._5))) }
-        // untouched / partially-covered zone edges keep their full or
-        // surviving pieces; fully-covered edges yield none
-        val zonePieces = zEdgesMap(z).zipWithIndex.flatMap {
-          case (((ax, ay), (bx, by)), ei) =>
-            zoneEdgePieces(ax, ay, bx, by, ivByEdge.getOrElse(ei, Nil))
-        }
-        val subPieces = rs.filter(_._2 == 1)
-          .map(r => LinePiece("sub", r._4, r._5, r._6, r._7))
-        stitchLinePieces(zonePieces ++ subPieces).zipWithIndex
-          .flatMap { case (ring, ri) =>
-            val area = ring.map(_.signedArea).sum
-            ring.zipWithIndex.map { case (p, pi) =>
-              (z, ri.toLong, pi.toLong, p.kind,
-                p.x1, p.y1, p.x2, p.y2, area)
-            }
-          }
-      }
-      .toDF("zone_id", "ring_id", "piece_seq", "kind",
-        "x1_ft", "y1_ft", "x2_ft", "y2_ft", "ring_area_sqft")
-    // zones with no candidate footprint: full CCW ring (driver rows —
-    // bounded by the zone catalog, same convention as eraseAreaPolySub)
-    val touched = zf.select(col("zone_id")).distinct()
-      .as[Int].collect().toSet
-    // zf stays CACHED past return: unlike eraseAreaPolySub (which
-    // collects every result before unpersisting), this data path is
-    // LAZY — the returned frame re-reads zf (aRows, both self-join
-    // sides, seedRows) only when the CALLER executes it, so an
-    // unpersist here would evict the cache before its real consumers
-    // run and recompute zf's canonicalize + dedup shuffle +
-    // zone-assignment join ~4×. Steady-state residency is bounded by
-    // swapPlanCache (one frame per plan — the previous invocation's
-    // frame unpersists at entry).
-    val untouched = frames.zcat.filter(z => !touched(z._1))
-      .sortBy(_._1).flatMap { case (z, vs) =>
-        eraseRingsPolySub(vs, Seq.empty).zipWithIndex.flatMap {
-          case (ring, ri) =>
-            val area = ring.map(_.signedArea).sum
-            ring.zipWithIndex.map { case (p, pi) =>
-              (z, ri.toLong, pi.toLong, p.kind,
-                p.x1, p.y1, p.x2, p.y2, area)
-            }
-        }
-      }
-    stitched.union(untouched.toDF("zone_id", "ring_id", "piece_seq",
-      "kind", "x1_ft", "y1_ft", "x2_ft", "y2_ft", "ring_area_sqft"))
   }
 
   /** One directed boundary piece of an erased-zone output ring
@@ -2269,19 +1704,12 @@ object EraseArcs {
     * integrates ([[boundaryDecomp]]): each connected boundary loop
     * alternates zone arcs (CCW) and buffer hole arcs (CW) joined at
     * circle-circle intersection points; a full untouched circle (zone
-    * or strictly-interior buffer) closes alone. Stitching is endpoint
-    * matching: at every intersection point exactly one piece starts
-    * where another ends, so following end → start until closure
-    * reconstructs each loop; the match tolerance is 1e-6·(R+r) against
-    * endpoints that agree to IEEE rounding (the same point computed
-    * through two trig paths), and the chain FAILS loudly if no piece
-    * continues (would mean a non-manifold boundary — tangency-
-    * degenerate input). Rings and their starting pieces are rotated /
-    * ordered by a canonical key so output is deterministic regardless
-    * of buffer arrival order. Orientation falls out of construction:
-    * loops enclosing surviving area run CCW (signed area > 0), hole
-    * loops run CW (< 0), and Σ signed areas == [[erasedArea]] exactly
-    * (same arcContrib terms, same grouping).
+    * or strictly-interior buffer) closes alone. [[stitch]] chains them
+    * at tolerance 1e-6·(R+r) (intersection endpoints agree to IEEE
+    * rounding — the same point computed through two trig paths).
+    * Orientation falls out of construction: loops enclosing surviving
+    * area run CCW (signed area > 0), hole loops run CW (< 0), and
+    * Σ signed areas == [[erasedArea]] (same arcContrib terms).
     */
   private[graft] def eraseRings(bigR: Double,
       buffersIn: Seq[(Double, Double)], r: Double)
@@ -2293,69 +1721,7 @@ object EraseArcs {
       bufferArcs.flatMap { case ((ox, oy), arcs) =>
         arcs.map { case (s, e) =>
           RingPiece(ccw = false, ox, oy, r, s, e) } }
-    val (closed, openSeq) = pieces.partition(_.isFullCircle)
-    // indexed: the stitcher addresses pieces by position (see byStart)
-    val open = openSeq.toIndexedSeq
-    val tol = 1e-6 * (bigR + r)
-    def dist(a: (Double, Double), b: (Double, Double)): Double =
-      math.hypot(a._1 - b._1, a._2 - b._2)
-    // endpoint matching via a start-point hash grid (cell 4·tol, 3×3
-    // probe) instead of a nearest-scan over every remaining piece —
-    // the scan made stitching O(pieces²) per zone and dominated the
-    // sf10 line. A manifold boundary has exactly ONE piece starting at
-    // each intersection point, so the ≤ tol candidate is unique and
-    // the result is identical to the global nearest-scan; ties beyond
-    // that would be tangency-degenerate input, which still fails
-    // loudly below. Chain seeds keep the original piece order.
-    val hcell = 4 * tol
-    def hkey(p: (Double, Double)): (Long, Long) =
-      (math.floor(p._1 / hcell).toLong, math.floor(p._2 / hcell).toLong)
-    val byStart = scala.collection.mutable.HashMap
-      .empty[(Long, Long), List[Int]]
-    open.zipWithIndex.foreach { case (p, i) =>
-      val k = hkey(p.start)
-      byStart(k) = i :: byStart.getOrElse(k, Nil)
-    }
-    val used = Array.fill(open.size)(false)
-    def takeAt(pt: (Double, Double)): Option[Int] = {
-      val (ki, kj) = hkey(pt)
-      val cands = for {
-        dx <- -1L to 1L; dy <- -1L to 1L
-        i <- byStart.getOrElse((ki + dx, kj + dy), Nil)
-        if !used(i) && dist(open(i).start, pt) <= tol
-      } yield i
-      if (cands.isEmpty) None
-      else Some(cands.minBy(i => (dist(open(i).start, pt), i)))
-    }
-    val chains = Vector.newBuilder[Seq[RingPiece]]
-    open.indices.foreach { seed =>
-      if (!used(seed)) {
-        used(seed) = true
-        val first = open(seed)
-        val chain = scala.collection.mutable.ArrayBuffer(first)
-        var cur = first
-        while (dist(cur.end, first.start) > tol) {
-          val idx = takeAt(cur.end).getOrElse(throw new
-            IllegalArgumentException(
-              "requirement failed: eraseRings: no piece starts at an " +
-                "arc endpoint — tangency-degenerate input"))
-          used(idx) = true
-          cur = open(idx)
-          chain += cur
-        }
-        chains += chain.toSeq
-      }
-    }
-    // canonical form: rotate each ring to start at its smallest-keyed
-    // piece; order rings by that head key
-    def key(p: RingPiece): (Int, Double, Double, Double) =
-      (if (p.ccw) 0 else 1, p.cx, p.cy, p.s)
-    val ord = Ordering.Tuple4[Int, Double, Double, Double]
-    val rings = (closed.map(Seq(_)) ++ chains.result()).map { ring =>
-      val i = ring.indices.minBy(j => key(ring(j)))(ord)
-      ring.drop(i) ++ ring.take(i)
-    }
-    rings.sortBy(ring => key(ring.head))(ord)
+    stitch(pieces, 1e-6 * (bigR + r))
   }
 
   /** Output rings per zone (see [[eraseRings]]): one row per ring

@@ -404,13 +404,19 @@ object Wnv {
         .orderBy(col("zone_id"))
     }),
 
-    // J2 GEOMETRY (round 7): the exact zone-boundary arcs surviving
-    // the opt-out buffer disks — the true-geometry slice of arcpy's
-    // Erase (see geo/EraseArcs.scala). Transcendental (atan2/acos), so
-    // rows-only in the driver check (the agg_approx_distinct rule: no
-    // DuckDB hash twin by declared design); the geometry itself is
-    // pinned in GeoSpec against hand-built circle-circle cases and the
-    // 360° conservation property. Angles emitted in degrees, r6.
+    // The erase-geometry family: the GEOMETRY of the reference's one
+    // arcpy Erase (opt-out buffers removed from the high-risk zones,
+    // GSheetsETL_Lab2.py:129-133) on circle, convex (diamond) and
+    // concave star-with-hole zones, erased by the 1500 ft buffer disks
+    // or by rotated-square parcel footprints (arcpy Erase accepts any
+    // erase features). None has a DuckDB twin: the arc terms are
+    // transcendental, and the clipping/stitching algorithms have no SQL
+    // form. GeoSpec/GeoPropertySpec pin the kernels (hand cases, grid
+    // sampling, winding invariance, n-gon convergence, conservation
+    // between independent kernels, the distributed == driver replay)
+    // and perfbench/reference.json pins the outputs. Floats are r6.
+
+    // Surviving boundary arcs of each zone circle, degrees.
     "wnv_erase_arcs" -> ((s: SparkSession, d: String) => {
       graft.geo.EraseArcs.eraseArcs(s, zones(s, d),
           optOut(s, d).select(col("x_ft"), col("y_ft")), BufferFt)
@@ -422,33 +428,14 @@ object Wnv {
         .orderBy(col("zone_id"), col("start_deg"))
     }),
 
-    // J2 GEOMETRY, polygon zones (round 8): the convex-vertex-ring
-    // generalization of the Erase geometry — each zone as a diamond
-    // (4-vertex convex ring inscribed in its circle, rational
-    // coordinates), erased by the same opt-out buffer disks via
-    // straight-edge clipping + hole arcs (geo/EraseArcs.erasedAreaPoly,
-    // Green's theorem). Same no-oracle rule as wnv_erase_arcs
-    // (transcendental arc terms); the kernel is spec-pinned in GeoSpec
-    // by hand cases, grid sampling, winding invariance, and a
-    // fine-regular-polygon convergence check against the circle kernel.
+    // Surviving area of each diamond zone under the buffer disks.
     "wnv_erase_poly" -> ((s: SparkSession, d: String) =>
       graft.geo.EraseArcs.eraseAreaPoly(s, polygonZones(s, d),
           optOut(s, d).select(col("x_ft"), col("y_ft")), BufferFt)
         .select(col("zone_id"), XF.r6(col("area_sqft")).as("area_sqft"))
         .orderBy(col("zone_id"))),
 
-    // J2 GEOMETRY, POLYGON SUBTRAHENDS (round 12): the general arcpy
-    // Erase contract — erase features are ARBITRARY polygons, not only
-    // buffer disks (the reference's one concrete use). Diamond zone
-    // rings minus rotated-square parcel footprints around the opt-out
-    // addresses (geo/EraseArcs.erasedAreaPolySub: Green's-theorem
-    // boundary decomposition with parametric edge clipping in place of
-    // the angular-interval machinery). All intersection points are
-    // rational in the vertex coordinates, but the clipping algorithm
-    // has no SQL form — same declared no-oracle rule as the other
-    // erase-geometry queries; GeoSpec pins exact rectangle algebra,
-    // inclusion-exclusion, winding invariance, grid sampling, n-gon
-    // convergence to the disk kernel, and the distributed-path replay.
+    // Surviving area of each diamond zone under the parcel footprints.
     "wnv_erase_poly_sub" -> ((s: SparkSession, d: String) =>
       graft.geo.EraseArcs.eraseAreaPolySub(s, polygonZones(s, d),
           parcelFootprints(s, d))
@@ -462,125 +449,42 @@ object Wnv {
         .select(col("c_custkey"), col("x_ft"), col("y_ft"))
         .orderBy(col("c_custkey"))),
 
-    // J2 GEOMETRY OUTPUT, POLYGON SUBTRAHENDS (round 13): the erased
-    // polygons THEMSELVES under the general erase-feature signature —
-    // per zone, the ordered boundary rings of (diamond zone − parcel
-    // footprints), each ring a sequence of directed straight segments
-    // (zone edges CCW / footprint edges reversed) stitched at
-    // edge-edge intersection points
-    // (geo/EraseArcs.eraseRingsPolySubPerZone) — closing the one
-    // geometric asymmetry the r12 verdict named (disk subtrahends had
-    // wnv_erase_rings; polygon subtrahends emitted only area +
-    // selection). Transcendental-free but SQL-inexpressible (the
-    // clipping/stitching algorithm has no SQL form) — same declared
-    // rows-only rule as the erase-geometry family; GeoSpec pins ring
-    // closure, orientation (outer CCW positive / holes CW negative),
-    // Σ ring signed areas == erasedAreaPolySub, determinism, and the
-    // distributed-path replay.
+    // Output rings of (diamond zone − parcel footprints): per zone,
+    // ordered rings of directed segments (zone edges CCW / footprint
+    // edges reversed).
     "wnv_erase_poly_sub_rings" -> ((s: SparkSession, d: String) =>
-      graft.geo.EraseArcs.eraseRingsPolySubPerZone(s, polygonZones(s, d),
-          parcelFootprints(s, d))
-        .select(col("zone_id"), col("ring_id"), col("piece_seq"),
-          col("kind"), XF.r6(col("x1_ft")).as("x1_ft"),
-          XF.r6(col("y1_ft")).as("y1_ft"),
-          XF.r6(col("x2_ft")).as("x2_ft"),
-          XF.r6(col("y2_ft")).as("y2_ft"),
-          XF.r6(col("ring_area_sqft")).as("ring_area_sqft"))
-        // barrier before the global sort: the range sampler would
-        // otherwise re-run the per-zone ring stitcher (flatMapGroups)
-        .repartition(col("zone_id"))
-        .orderBy(col("zone_id"), col("ring_id"), col("piece_seq"))),
+      lineRings(graft.geo.EraseArcs.polyZoneRingsPerZone(s,
+        polygonZones(s, d),
+        graft.geo.EraseArcs.ringMembers(parcelFootprints(s, d))))),
 
-    // J2 GEOMETRY, GENERAL polygon zones (round 9): concave rings WITH
-    // holes — the full arcpy-Erase input domain (reference
-    // GSheetsETL_Lab2.py:133). Each zone as a concave 4-point star
-    // (8-vertex ring, rational coordinates: axis tips at radius R,
-    // pulled-in diagonal vertices at 0.35R) minus a square hole
-    // (half-width 0.15R at the center — strictly inside the star's
-    // 0.474R inradius), erased by the same opt-out buffer disks
-    // (geo/EraseArcs.erasedAreaConcave: ear-clip triangulation → the
-    // convex Green's-theorem kernel per triangle, areas add exactly).
-    // Same no-oracle rule as wnv_erase_poly (transcendental arc
-    // terms); GeoSpec pins the kernel by hand cases, grid sampling,
-    // winding invariance, convex-agreement, and an annulus convergence
-    // check against two circle-kernel calls.
+    // Surviving area of each star-with-hole zone under the buffer disks.
     "wnv_erase_concave" -> ((s: SparkSession, d: String) =>
       graft.geo.EraseArcs.eraseAreaConcave(s, starZones(s, d),
           optOut(s, d).select(col("x_ft"), col("y_ft")), BufferFt)
         .select(col("zone_id"), XF.r6(col("area_sqft")).as("area_sqft"))
         .orderBy(col("zone_id"))),
 
-    // J2, CONCAVE zones × POLYGON subtrahends (round 14): the last
-    // Erase input-domain cell — arcpy's Erase accepts ANY feature
-    // class pair (GSheetsETL_Lab2.py:133), and the three other
-    // quadrants ({convex, concave} zones × disk subtrahends, convex ×
-    // polygon) each already have a query. Star-with-hole zones (the
-    // wnv_erase_concave catalog) minus rotated-square parcel
-    // footprints (the wnv_erase_poly_sub erase features), via
-    // triangle-granular distribution
-    // (geo/EraseArcs.eraseAreaConcaveSub: ear-clip driver-side →
-    // broadcast triangle bounds → the convex polygon-subtrahend
-    // kernel per (zone, triangle) group → Σ sign·triangle). Same
-    // no-oracle rule as the erase-geometry family (the edge-clipping
-    // algebra has no SQL form; coordinates here are rational so the
-    // kernel is transcendental-free); GeoSpec pins hand cases,
-    // hole/notch algebra, convex-agreement, and the distributed ==
-    // driver-replay parity.
+    // Surviving area of each star-with-hole zone under the parcel
+    // footprints.
     "wnv_erase_concave_sub" -> ((s: SparkSession, d: String) =>
       graft.geo.EraseArcs.eraseAreaConcaveSub(s, starZones(s, d),
           parcelFootprints(s, d))
         .select(col("zone_id"), XF.r6(col("area_sqft")).as("area_sqft"))
         .orderBy(col("zone_id"))),
 
-    // J2 GEOMETRY OUTPUT, CONCAVE zones × POLYGON subtrahends
-    // (round 14): the erased polygons THEMSELVES on the full general
-    // input — star-with-hole zones minus parcel footprints, each
-    // output ring a sequence of directed straight segments (outer-ring
-    // edges CCW / member edges reversed; the zone's hole ring IS a
-    // member to the boundary algebra) stitched at edge-edge
-    // intersection points
-    // (geo/EraseArcs.eraseRingsConcaveSubPerZone). With this entry the
-    // RING-OUTPUT contract matched the area contract on every
-    // polygon-subtrahend input cell (round 15 then closed the disk ×
-    // polygon-zone cell below — wnv_erase_poly_disk_rings). Same
-    // declared rows-only rule; GeoSpec pins closure, orientation,
-    // Σ ring signed areas == the triangulation kernel (an INDEPENDENT
-    // method), convex agreement, determinism, and the
-    // distributed-path replay.
+    // Output rings of (star − hole − parcel footprints): the zone's
+    // hole is one more ring member, so its edges appear reversed.
     "wnv_erase_concave_sub_rings" -> ((s: SparkSession, d: String) =>
-      graft.geo.EraseArcs.eraseRingsConcaveSubPerZone(s, starZones(s, d),
-          parcelFootprints(s, d))
-        .select(col("zone_id"), col("ring_id"), col("piece_seq"),
-          col("kind"), XF.r6(col("x1_ft")).as("x1_ft"),
-          XF.r6(col("y1_ft")).as("y1_ft"),
-          XF.r6(col("x2_ft")).as("x2_ft"),
-          XF.r6(col("y2_ft")).as("y2_ft"),
-          XF.r6(col("ring_area_sqft")).as("ring_area_sqft"))
-        // barrier before the global sort: the range sampler would
-        // otherwise re-run the per-zone ring stitcher (flatMapGroups)
-        .repartition(col("zone_id"))
-        .orderBy(col("zone_id"), col("ring_id"), col("piece_seq"))),
+      lineRings(graft.geo.EraseArcs.polyZoneRingsPerZone(s,
+        starZones(s, d),
+        graft.geo.EraseArcs.ringMembers(parcelFootprints(s, d))))),
 
-    // J2 GEOMETRY OUTPUT, DISK subtrahends on POLYGON zones
-    // (round 15): the reference's LITERAL Erase shape — arcpy erases
-    // 1500-ft DISK buffers from POLYGON high-risk zones
-    // (GSheetsETL_Lab2.py:129-133) — emitted as ordered boundary
-    // rings. The one previously-scoped-out geometry-OUTPUT cell: each
-    // ring ALTERNATES straight pieces (star outer edges CCW / hole
-    // edges reversed, minus the line-circle quadratic's covered
-    // t-intervals) and circle arcs (each disk's surviving intervals,
-    // CW), joined at segment-circle and circle-circle intersection
-    // points by the MIXED stitcher
-    // (geo/EraseArcs.eraseRingsPolyDiskPerZone). With this entry the
-    // ring-output contract matches the area contract on EVERY input
-    // cell. Transcendental (atan2/acos/cos/sin) — rows-only by the
-    // family's declared rule; GeoSpec pins closure, orientation,
-    // Σ ring signed areas == erasedAreaConcave (the INDEPENDENT
-    // triangulation kernel), n-gon convergence to the circle-zone
-    // kernel, determinism, and the distributed-path replay.
+    // Output rings of (star − hole − buffer disks) — the reference's
+    // literal Erase shape: rings alternate straight pieces and CW arcs.
     "wnv_erase_poly_disk_rings" -> ((s: SparkSession, d: String) =>
-      graft.geo.EraseArcs.eraseRingsPolyDiskPerZone(s, starZones(s, d),
-          optOut(s, d).select(col("x_ft"), col("y_ft")), BufferFt)
+      graft.geo.EraseArcs.polyZoneRingsPerZone(s, starZones(s, d),
+          graft.geo.EraseArcs.diskMembers(
+            optOut(s, d).select(col("x_ft"), col("y_ft")), BufferFt))
         .select(col("zone_id"), col("ring_id"), col("piece_seq"),
           col("kind"), XF.r6(col("x1_ft")).as("x1_ft"),
           XF.r6(col("y1_ft")).as("y1_ft"),
@@ -596,17 +500,8 @@ object Wnv {
         .repartition(col("zone_id"))
         .orderBy(col("zone_id"), col("ring_id"), col("piece_seq"))),
 
-    // J2 GEOMETRY OUTPUT (round 10): the erased polygons THEMSELVES —
-    // arcpy Erase emits a feature class of clipped geometries
-    // (GSheetsETL_Lab2.py:133), and this is its ring-level analogue:
-    // per zone, the ordered boundary rings of (zone disk − opt-out
-    // buffers), each ring a sequence of directed arc pieces (zone arcs
-    // CCW / buffer hole arcs CW) stitched at circle-circle
-    // intersection points (geo/EraseArcs.eraseRings — the last
-    // fidelity gap of the one arcpy call not previously mirrored in
-    // full). Same no-oracle rule as wnv_erase_arcs (transcendental);
-    // GeoSpec pins ring closure, orientation (outer CCW positive /
-    // holes CW negative), and Σ ring signed areas == erasedArea.
+    // Output rings of (zone circle − buffer disks): arc pieces (zone
+    // arcs CCW / buffer arcs CW).
     "wnv_erase_rings" -> ((s: SparkSession, d: String) =>
       graft.geo.EraseArcs.eraseRingsPerZone(s, zones(s, d),
           optOut(s, d).select(col("x_ft"), col("y_ft")), BufferFt)
@@ -622,6 +517,20 @@ object Wnv {
         .repartition(col("zone_id"))
         .orderBy(col("zone_id"), col("ring_id"), col("piece_seq")))
   )
+
+  /** The 9 columns of a line-only ring query (no arc columns), r6,
+    * ordered by zone, ring and piece. */
+  private def lineRings(rings: DataFrame): DataFrame =
+    rings.select(col("zone_id"), col("ring_id"), col("piece_seq"),
+        col("kind"), XF.r6(col("x1_ft")).as("x1_ft"),
+        XF.r6(col("y1_ft")).as("y1_ft"),
+        XF.r6(col("x2_ft")).as("x2_ft"),
+        XF.r6(col("y2_ft")).as("y2_ft"),
+        XF.r6(col("ring_area_sqft")).as("ring_area_sqft"))
+      // barrier before the global sort: the range sampler would
+      // otherwise re-run the per-zone ring stitcher (flatMapGroups)
+      .repartition(col("zone_id"))
+      .orderBy(col("zone_id"), col("ring_id"), col("piece_seq"))
 
   /** Diamond (4-vertex convex ring) form of the zone catalog: vertices
     * at (cx±R, cy), (cx, cy±R) — rational coordinates, inscribed in

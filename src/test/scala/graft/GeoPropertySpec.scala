@@ -182,7 +182,7 @@ class GeoPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
       .withInitialSeed(Seed(0x7A96L))
     val res = SCTest.check(p, Prop.forAll(genCells) { cells =>
       val subs = cells.map { case (i, j) => cellSq(i, j) }
-      scala.util.Try(EraseArcs.eraseRingsPolySub(zone, subs)) match {
+      scala.util.Try(EraseArcs.polyZoneRings(zone, subs)) match {
         case scala.util.Failure(e) =>
           // LOUD is the contract: the declared failure type only
           e.isInstanceOf[IllegalArgumentException]
@@ -230,7 +230,7 @@ class GeoPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
       .withInitialSeed(Seed(0x5C41L))
     val res = SCTest.check(p, Prop.forAll(genDisks) { cells =>
       val disks = cells.map { case (i, j) => (r * i, r * j) }
-      scala.util.Try(EraseArcs.eraseRingsPolyDisk(zone, Nil, disks, r))
+      scala.util.Try(EraseArcs.polyZoneRings(zone, Nil, disks, r))
         .map { rings =>
           val closed = rings.forall { ring =>
             ring.indices.forall { i =>

@@ -170,36 +170,6 @@ class GeoSpec extends SparkSpec {
     assert(arcs.exists(_.len > 0))
   }
 
-  test("erase area: the distributed path equals a driver-side replay") {
-    // drives the Spark plumbing of eraseArea — the broadcast touch
-    // join, per-zone group assembly, and the untouched-zone full-disk
-    // fallback — against a driver-side replay that feeds the same pure
-    // kernel directly (the kernel itself is validated by the closed
-    // form / grid-sampling test above)
-    import graft.geo.EraseArcs
-    val zones = graft.ops.Wnv.zones(spark, sf)
-    val buffers = graft.ops.Wnv.optOut(spark, sf)
-      .select(col("x_ft"), col("y_ft"))
-    val r = graft.ops.Wnv.BufferFt
-    val got = EraseArcs.eraseArea(spark, zones, buffers, r)
-      .collect().map(row => row.getInt(0) -> row.getDouble(1)).toMap
-    val zs = zones.select(col("zone_id").cast("int"), col("cx_ft"),
-        col("cy_ft"), col("radius_ft"))
-      .collect().map(w => (w.getInt(0), w.getDouble(1), w.getDouble(2),
-        w.getDouble(3)))
-    val bs = buffers.collect().map(w => (w.getDouble(0), w.getDouble(1)))
-    assert(got.keySet === zs.map(_._1).toSet)
-    zs.foreach { case (z, cx, cy, rr) =>
-      val near = bs.toSeq.collect { case (x, y)
-          if (x - cx) * (x - cx) + (y - cy) * (y - cy) < (rr + r) * (rr + r) =>
-        (x - cx, y - cy)
-      }
-      val want = EraseArcs.erasedArea(rr, near, r)
-      assert(math.abs(got(z) - want) <= 1e-9 * math.max(1.0, want),
-        s"zone $z: spark ${got(z)} vs replay $want")
-    }
-  }
-
   test("erase rings: closure, orientation, area conservation, determinism") {
     import graft.geo.EraseArcs
     val R = 1000.0; val r = 300.0
@@ -395,6 +365,29 @@ class GeoSpec extends SparkSpec {
     assert(math.abs(got - want) / want < 1e-3, s"ngon $got vs circle $want")
   }
 
+  /** Exact surviving area of each circle zone (driver kernel on the
+    * buffers within R + r of its center). */
+  private def circleAreas(bs: Seq[(Double, Double)], r: Double)
+      : Map[Int, Double] =
+    graft.ops.Wnv.zones(spark, sf).select(col("zone_id").cast("int"),
+        col("cx_ft"), col("cy_ft"), col("radius_ft")).collect()
+      .map { w =>
+        val (cx, cy, rr) = (w.getDouble(1), w.getDouble(2), w.getDouble(3))
+        val near = bs.collect { case (x, y)
+            if (x - cx) * (x - cx) + (y - cy) * (y - cy) < (rr + r) * (rr + r) =>
+          (x - cx, y - cy)
+        }
+        w.getInt(0) -> graft.geo.EraseArcs.erasedArea(rr, near, r)
+      }.toMap
+
+  /** Rings of line pieces only (the polygon-subtrahend cells). */
+  private def lineRings(rings: Seq[Seq[graft.geo.EraseArcs.BoundaryPiece]])
+      : Seq[Seq[graft.geo.EraseArcs.LinePiece]] =
+    rings.map(_.map {
+      case lp: graft.geo.EraseArcs.LinePiece => lp
+      case p => fail(s"arc piece in a polygon-subtrahend ring: $p")
+    })
+
   test("polygon erase: the distributed path equals a driver-side replay") {
     import graft.geo.EraseArcs
     val zones = graft.ops.Wnv.polygonZones(spark, sf)
@@ -427,9 +420,7 @@ class GeoSpec extends SparkSpec {
     }
     // the diamond is inscribed in the circle: its surviving area can
     // never exceed the circle zone's
-    val circ = EraseArcs.eraseArea(spark, graft.ops.Wnv.zones(spark, sf),
-        buffers, r)
-      .collect().map(row => row.getInt(0) -> row.getDouble(1)).toMap
+    val circ = circleAreas(bs.toSeq, r)
     got.foreach { case (z, a) =>
       assert(a <= circ(z) + 1e-6, s"zone $z diamond $a > circle ${circ(z)}")
     }
@@ -601,9 +592,7 @@ class GeoSpec extends SparkSpec {
     }
     // the star is inscribed in the circle zone: surviving area can
     // never exceed the circle's
-    val circ = EraseArcs.eraseArea(spark, graft.ops.Wnv.zones(spark, sf),
-        buffers, r)
-      .collect().map(row => row.getInt(0) -> row.getDouble(1)).toMap
+    val circ = circleAreas(bs.toSeq, r)
     got.foreach { case (z, a) =>
       assert(a <= circ(z) + 1e-6, s"zone $z star $a > circle ${circ(z)}")
     }
@@ -843,7 +832,7 @@ class GeoSpec extends SparkSpec {
   }
 
   test("concave-zone rings: closure, orientation, conservation vs the " +
-      "triangulation kernel, convex agreement, determinism") {
+      "triangulation kernel, determinism") {
     import graft.geo.EraseArcs
     def sq(cx: Double, cy: Double, hw: Double) = Seq(
       (cx - hw, cy - hw), (cx + hw, cy - hw),
@@ -852,7 +841,7 @@ class GeoSpec extends SparkSpec {
         holes: Seq[Seq[(Double, Double)]],
         subs: Seq[Seq[(Double, Double)]])
         : Seq[Seq[EraseArcs.LinePiece]] = {
-      val rings = EraseArcs.eraseRingsConcaveSub(outer, holes, subs)
+      val rings = lineRings(EraseArcs.polyZoneRings(outer, holes ++ subs))
       val scale = (outer ++ holes.flatten ++ subs.flatten)
         .flatMap(p => Seq(p._1.abs, p._2.abs)).max
       val tol = 1e-9 * math.max(1.0, scale)
@@ -875,8 +864,8 @@ class GeoSpec extends SparkSpec {
       assert(math.abs(sum - want) <= 1e-9 * math.max(1.0, want),
         s"rings $sum vs erasedAreaConcaveSub $want")
       // determinism under member order and winding
-      val again = EraseArcs.eraseRingsConcaveSub(outer,
-        holes.map(_.reverse), subs.reverse.map(_.reverse))
+      val again = EraseArcs.polyZoneRings(outer,
+        holes.map(_.reverse) ++ subs.reverse.map(_.reverse))
       assert(again === rings, "rings depend on member order/winding")
       rings
     }
@@ -912,25 +901,6 @@ class GeoSpec extends SparkSpec {
     val bar = Seq((1000.0, 1400.0), (2500.0, 1400.0),
       (2500.0, 1600.0), (1000.0, 1600.0))
     checkRings(ell, Nil, Seq(bar))
-    // convex agreement: on a convex zone the general path matches the
-    // convex stitcher ring-for-ring, piece-for-piece (the crossing
-    // parameters come from different but algebraically-equal float
-    // expressions — parametric half-plane clip vs segment-crossing
-    // params — so coordinates agree to a few ulps, not bitwise)
-    val square = Seq((-1000.0, -1000.0), (1000.0, -1000.0),
-      (1000.0, 1000.0), (-1000.0, 1000.0))
-    val subs = Seq(sq(100, 50, 300), sq(-300, 200, 250), sq(1000, 0, 300))
-    val gen = EraseArcs.eraseRingsConcaveSub(square, Nil, subs)
-    val convex = EraseArcs.eraseRingsPolySub(square, subs)
-    assert(gen.size === convex.size)
-    gen.zip(convex).foreach { case (g, c) =>
-      assert(g.size === c.size)
-      g.zip(c).foreach { case (pg, pc) =>
-        assert(pg.kind === pc.kind)
-        assert(math.hypot(pg.x1 - pc.x1, pg.y1 - pc.y1) <= 1e-9 * 1000)
-        assert(math.hypot(pg.x2 - pc.x2, pg.y2 - pc.y2) <= 1e-9 * 1000)
-      }
-    }
   }
 
   test("concave-zone rings: the distributed path equals a driver-side " +
@@ -938,11 +908,12 @@ class GeoSpec extends SparkSpec {
     import graft.geo.EraseArcs
     val zones = graft.ops.Wnv.starZones(spark, sf)
     val subs = graft.ops.Wnv.parcelFootprints(spark, sf)
-    val got = EraseArcs.eraseRingsConcaveSubPerZone(spark, zones, subs)
+    val got = EraseArcs.polyZoneRingsPerZone(spark, zones,
+        EraseArcs.ringMembers(subs))
       .collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getString(3),
         r.getDouble(4), r.getDouble(5), r.getDouble(6), r.getDouble(7),
-        r.getDouble(8)))
+        r.getDouble(13)))
     def ring(rows: Seq[org.apache.spark.sql.Row]): Seq[(Double, Double)] =
       rows.map(v => (v.getDouble(0), v.getDouble(1)))
     val zs = zones.select(col("zone_id").cast("int"), col("vertices"),
@@ -968,7 +939,7 @@ class GeoSpec extends SparkSpec {
           s0.map(_._2).max - s0.map(_._2).min) / 2
         (sx - cx) * (sx - cx) + (sy - cy) * (sy - cy) < (rad + sr) * (rad + sr)
       }.toSeq
-      val want = EraseArcs.eraseRingsConcaveSub(vs, hs, near)
+      val want = lineRings(EraseArcs.polyZoneRings(vs, hs ++ near))
       val gotRings = byZone(z).sortBy(r => (r._2, r._3))
         .groupBy(_._2).toSeq.sortBy(_._1).map(_._2)
       assert(gotRings.size === want.size, s"zone $z ring count")
@@ -1001,7 +972,7 @@ class GeoSpec extends SparkSpec {
     def checkRings(zone: Seq[(Double, Double)],
         subs: Seq[Seq[(Double, Double)]])
         : Seq[Seq[EraseArcs.LinePiece]] = {
-      val rings = EraseArcs.eraseRingsPolySub(zone, subs)
+      val rings = lineRings(EraseArcs.polyZoneRings(zone, subs))
       val scale = (zone ++ subs.flatten)
         .flatMap(p => Seq(p._1.abs, p._2.abs)).max
       val tol = 1e-9 * math.max(1.0, scale)
@@ -1073,11 +1044,11 @@ class GeoSpec extends SparkSpec {
     checkRings(pent, subs)
     // deterministic output regardless of subtrahend arrival order /
     // winding / vertex rotation
-    val canon = EraseArcs.eraseRingsPolySub(pent, subs)
-    assert(EraseArcs.eraseRingsPolySub(pent, subs.reverse) === canon)
-    assert(EraseArcs.eraseRingsPolySub(pent,
+    val canon = EraseArcs.polyZoneRings(pent, subs)
+    assert(EraseArcs.polyZoneRings(pent, subs.reverse) === canon)
+    assert(EraseArcs.polyZoneRings(pent,
       subs.map(_.reverse)) === canon)
-    assert(EraseArcs.eraseRingsPolySub(pent,
+    assert(EraseArcs.polyZoneRings(pent,
       subs.map(s => s.drop(1) ++ s.take(1))) === canon)
   }
 
@@ -1086,11 +1057,12 @@ class GeoSpec extends SparkSpec {
     import graft.geo.EraseArcs
     val zones = graft.ops.Wnv.polygonZones(spark, sf)
     val subs = graft.ops.Wnv.parcelFootprints(spark, sf)
-    val got = EraseArcs.eraseRingsPolySubPerZone(spark, zones, subs)
+    val got = EraseArcs.polyZoneRingsPerZone(spark, zones,
+        EraseArcs.ringMembers(subs))
       .collect()
       .map(w => (w.getInt(0), w.getLong(1), w.getLong(2)) ->
         (w.getString(3), w.getDouble(4), w.getDouble(5), w.getDouble(6),
-          w.getDouble(7), w.getDouble(8)))
+          w.getDouble(7), w.getDouble(13)))
       .toMap
     def ring(rows: Seq[org.apache.spark.sql.Row]): Seq[(Double, Double)] =
       rows.map(v => (v.getDouble(0), v.getDouble(1)))
@@ -1111,7 +1083,7 @@ class GeoSpec extends SparkSpec {
           s.map(_._2).max - s.map(_._2).min) / 2
         (sx - cx) * (sx - cx) + (sy - cy) * (sy - cy) < (rad + sr) * (rad + sr)
       }.toSeq
-      val want = EraseArcs.eraseRingsPolySub(vs, near)
+      val want = lineRings(EraseArcs.polyZoneRings(vs, near))
       val wantRows = want.zipWithIndex.flatMap { case (r, ri) =>
         val area = r.map(_.signedArea).sum
         r.zipWithIndex.map { case (p, pi) =>
@@ -1140,7 +1112,7 @@ class GeoSpec extends SparkSpec {
         holes: Seq[Seq[(Double, Double)]],
         disks: Seq[(Double, Double)], r: Double)
         : Seq[Seq[EraseArcs.BoundaryPiece]] = {
-      val rings = EraseArcs.eraseRingsPolyDisk(outer, holes, disks, r)
+      val rings = EraseArcs.polyZoneRings(outer, holes, disks, r)
       val scale = (outer ++ holes.flatten ++ disks)
         .flatMap(p => Seq(p._1.abs, p._2.abs)).max
       val tol = 1e-9 * math.max(1.0, scale)
@@ -1167,7 +1139,7 @@ class GeoSpec extends SparkSpec {
       assert(math.abs(sum - want) <= 1e-9 * math.max(1.0, want),
         s"rings $sum vs erasedAreaConcave $want")
       // determinism under disk order
-      val again = EraseArcs.eraseRingsPolyDisk(outer, holes,
+      val again = EraseArcs.polyZoneRings(outer, holes,
         disks.reverse, r)
       assert(again === rings, "rings depend on disk order")
       rings
@@ -1233,7 +1205,7 @@ class GeoSpec extends SparkSpec {
       (1000.0 * math.cos(a), 1000.0 * math.sin(a))
     }
     val disks = Seq((800.0, 150.0), (-200.0, 400.0), (-900.0, -500.0))
-    val got = EraseArcs.eraseRingsPolyDisk(ngon, Nil, disks, 300.0)
+    val got = EraseArcs.polyZoneRings(ngon, Nil, disks, 300.0)
       .flatten.map(_.signedArea).sum
     val want = EraseArcs.erasedArea(1000.0, disks, 300.0)
     assert(math.abs(got - want) / want < 1e-3,
@@ -1247,7 +1219,8 @@ class GeoSpec extends SparkSpec {
     val buffers = graft.ops.Wnv.optOut(spark, sf)
       .select(col("x_ft"), col("y_ft"))
     val r = graft.ops.Wnv.BufferFt
-    val got = EraseArcs.eraseRingsPolyDiskPerZone(spark, zones, buffers, r)
+    val got = EraseArcs.polyZoneRingsPerZone(spark, zones,
+        EraseArcs.diskMembers(buffers, r))
       .collect()
       .map(w => (w.getInt(0), w.getLong(1), w.getLong(2)) ->
         (w.getString(3), w.getDouble(4), w.getDouble(5), w.getDouble(6),
@@ -1274,7 +1247,7 @@ class GeoSpec extends SparkSpec {
       val near = bs.filter { case (ox, oy) =>
         (ox - cx) * (ox - cx) + (oy - cy) * (oy - cy) < (rad + r) * (rad + r)
       }.toSeq
-      val want = EraseArcs.eraseRingsPolyDisk(vs, hs, near, r)
+      val want = EraseArcs.polyZoneRings(vs, hs, near, r)
       val wantRows = want.zipWithIndex.flatMap { case (rg, ri) =>
         val area = rg.map(_.signedArea).sum
         rg.zipWithIndex.map { case (p, pi) =>

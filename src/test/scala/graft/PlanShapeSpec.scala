@@ -338,7 +338,12 @@ class PlanShapeSpec extends SparkSpec {
     "curate_url_canonical" -> 2, "curate_url_dedup" -> 3,
     "curate_domain_caps" -> 3, "stream_span_probe" -> 4,
     // zero-shuffle by design: the only exchange is the output sort
-    "wnv_erase_poly" -> 2, "text_dup_ngram_mass" -> 2)
+    "wnv_erase_poly" -> 2, "text_dup_ngram_mass" -> 2,
+    // the one polygon-zone ring plan (member dedup, neighbor self-join,
+    // per-member and per-zone groups, the sort barrier) — measured 10,
+    // 16 (the zone holes join the member frame) and 10; +1 headroom
+    "wnv_erase_poly_sub_rings" -> 11, "wnv_erase_concave_sub_rings" -> 17,
+    "wnv_erase_poly_disk_rings" -> 11)
 
   shuffleCeilings.foreach { case (q, ceiling) =>
     test(s"$q: at most $ceiling shuffle exchanges") {
@@ -346,6 +351,50 @@ class PlanShapeSpec extends SparkSpec {
       val n = "Exchange (?:range|hash)partitioning".r.findAllIn(p).length
       assert(n <= ceiling,
         s"$q grew to $n shuffles (pinned <= $ceiling)\n${p.take(1500)}")
+    }
+  }
+
+  // Jobs run while BUILDING (not executing) a polygon-zone ring query:
+  // the zone-catalog collect and the one small agg that reads the
+  // neighbor-grid cell size and fills the member-frame cache (with the
+  // jobs AQE runs for its exchanges and the frame's own). Every zone is
+  // seeded from the catalog, so no job asks which zones the members
+  // touched. Measured at sf0.001 / 4 cores on a second build (the first
+  // also warms the session).
+  private val ringBuilderJobs = Seq("wnv_erase_poly_sub_rings" -> 6,
+    "wnv_erase_concave_sub_rings" -> 7, "wnv_erase_poly_disk_rings" -> 6)
+
+  ringBuilderJobs.foreach { case (q, pinned) =>
+    test(s"$q: building the plan runs $pinned Spark jobs") {
+      import java.util.concurrent.ConcurrentLinkedQueue
+      import scala.jdk.CollectionConverters._
+      import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+      SparkEntry.queries(q)(spark, sf)
+      val tag = "graft.planShapeSpec"
+      val tags = new ConcurrentLinkedQueue[String]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          Option(e.properties).flatMap(p => Option(p.getProperty(tag)))
+            .foreach(tags.add)
+      }
+      val sc = spark.sparkContext
+      sc.addSparkListener(listener)
+      try {
+        sc.setLocalProperty(tag, "build")
+        SparkEntry.queries(q)(spark, sf)
+        // listener events arrive asynchronously and in order: once the
+        // sentinel job is seen, every build job has been counted
+        sc.setLocalProperty(tag, "sentinel")
+        spark.range(1).count()
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        while (!tags.contains("sentinel") && System.nanoTime() < deadline)
+          Thread.sleep(20)
+        assert(tags.contains("sentinel"), "listener never saw the sentinel")
+        assert(tags.asScala.count(_ == "build") === pinned)
+      } finally {
+        sc.setLocalProperty(tag, null)
+        sc.removeSparkListener(listener)
+      }
     }
   }
 
