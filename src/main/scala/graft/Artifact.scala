@@ -48,11 +48,15 @@ object Artifact {
     * build — at scale an out-of-memory build must name its artifact. */
   def build(entries: Seq[Artifact[_ <: AnyRef]], s: SparkSession,
       d: String): Seq[(String, Either[Throwable, Double])] =
-    entries.map { a =>
-      val t0 = System.nanoTime()
-      a.key -> (try { a(s, d); Right((System.nanoTime() - t0) / 1e9) }
-        catch { case e: Throwable => Left(e) })
-    }
+    entries.map(a => timed(a.key)(a(s, d)))
+
+  /** Runs one warm-up step and times it; a failure is returned under
+    * `key` instead of thrown. */
+  def timed(key: String)(body: => Unit): (String, Either[Throwable, Double]) = {
+    val t0 = System.nanoTime()
+    key -> (try { body; Right((System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable => Left(e) })
+  }
 
   def warmAll(s: SparkSession, d: String)
       : Seq[(String, Either[Throwable, Double])] = build(all, s, d)

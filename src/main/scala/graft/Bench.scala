@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.metrics.source.CodegenMetrics
 
 /** Benchmark main: runs every query in [[SparkEntry.queries]] against
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line with per-query seconds.
@@ -14,12 +14,15 @@ import org.apache.spark.sql.SparkSession
   * byte budget: the harness that consumes stdout keeps only a
   * ~2000-char tail, and a complete ~200-entry map (~5 kB) gets cut
   * mid-line and fails to parse (this is exactly what happened to
-  * rounds 1-2). `value` still totals ALL queries; the full per-query
-  * map goes to `BENCH_FULL.json` in the working directory, committed
-  * every round (see BASELINE.md "Bench artifact notes"), with each
-  * registered [[Artifact]]'s build seconds (`artifacts_sec`) and the
-  * entries whose build failed (`warm_failed`, also on stdout when
-  * non-empty). A filtered run (`runMain graft.Bench <names>`) times the
+  * rounds 1-2). `value` still totals ALL queries, a failed one at its
+  * committed-record time ([[BenchGuard.total]]), and the failed queries
+  * are listed as `failed` (also on stdout when non-empty). The full
+  * per-query map goes to `BENCH_FULL.json` in the working directory,
+  * committed every round (see BASELINE.md "Bench artifact notes"), with
+  * each registered [[Artifact]]'s build seconds (`artifacts_sec`), the
+  * warm-up steps that failed (`warm_failed`, also on stdout when
+  * non-empty) and, per query, the classes Janino compiled during its
+  * second call (`recompiled`, queries with 0 left out). A filtered run (`runMain graft.Bench <names>`) times the
   * artifacts the same way, so an at-scale build failure is named.
   */
 object Bench {
@@ -47,25 +50,25 @@ object Bench {
     // first query to touch each table absorbing its cold read (the
     // round-6 dedup_exact 0.19→1.34 s phantom "regression" was exactly
     // the documents scan's first touch landing inside the timed run).
-    graft.sources.Tables.names.foreach { n =>
-      try graft.sources.Tables.t(spark, sfDir, n)
-        .queryExecution.toRdd.count()
-      catch { case _: Throwable => () }
-    }
-    // ... and the bucketed layouts (one-time sorted table writes): a
-    // timed sample must never pay an ingest cost the layout registry
-    // says is paid once per deployment
-    graft.sources.Tables.bucketedLayouts.keys.foreach { n =>
-      try graft.sources.Tables.bucketedFor(spark, sfDir, n)
-        .queryExecution.toRdd.count()
-      catch { case _: Throwable => () }
-    }
-    // codec first-touch (ms of work, runs in EVERY warm mode): ImageIO
-    // plugin-registry scan + PNG reader class-init otherwise land
-    // inside whichever mm query runs first — the r14 sf1 watch item
-    // (mm_decode_image 3.36 s in-sweep vs 1.64 s filtered record).
-    try graft.ops.Multimodal.warmCodec()
-    catch { case _: Throwable => () }
+    // Every warm-up step is named (`table.<name>`, `bucketed.<name>`,
+    // `codec`, then `<group>.<name>` per artifact) and a failed one
+    // goes to `warm_failed`.
+    val sources = graft.sources.Tables.names.map { n =>
+      Artifact.timed(s"table.$n")(graft.sources.Tables.t(spark, sfDir, n)
+        .queryExecution.toRdd.count())
+    } ++
+      // ... and the bucketed layouts (one-time sorted table writes): a
+      // timed sample must never pay an ingest cost the layout registry
+      // says is paid once per deployment
+      graft.sources.Tables.bucketedLayouts.keys.toSeq.map { n =>
+        Artifact.timed(s"bucketed.$n")(graft.sources.Tables
+          .bucketedFor(spark, sfDir, n).queryExecution.toRdd.count())
+      } :+
+      // codec first-touch (ms of work, runs in EVERY warm mode): ImageIO
+      // plugin-registry scan + PNG reader class-init otherwise land
+      // inside whichever mm query runs first — the r14 sf1 watch item
+      // (mm_decode_image 3.36 s in-sweep vs 1.64 s filtered record).
+      Artifact.timed("codec")(graft.ops.Multimodal.warmCodec())
     // selecting the queries initialises every owner object, which
     // registers its artifacts before the registry is read
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -80,12 +83,13 @@ object Bench {
     val warmTablesOnly = sys.env.get("GRAFT_BENCH_WARM").contains("tables")
     val artifacts =
       if (warmTablesOnly) Seq.empty else Artifact.warmAll(spark, sfDir)
-    artifacts.foreach {
+    val warmed = sources ++ artifacts
+    warmed.foreach {
       case (k, Right(sec)) => System.err.println(f"[bench] warm $k $sec%.3f s")
       case (k, Left(e)) => System.err.println(
         s"[bench] warm $k FAILED: ${e.getClass.getSimpleName} ${e.getMessage}")
     }
-    val warmFailed = artifacts.collect { case (k, Left(_)) => k }
+    val warmFailed = warmed.collect { case (k, Left(_)) => k }
     val warmupSec = (System.nanoTime() - warmup0) / 1e9
     // steal_factor baseline: per-query times of the previous full
     // sweep AT THE SAME SCALE FACTOR, read BEFORE this run overwrites
@@ -131,6 +135,9 @@ object Bench {
     // A query still >5x prev after the retries is marked `suspect` in
     // the artifact instead of silently reading as a regression.
     val StallRatio = 5.0
+    // classes Janino compiled during a call: the JVM-global codegen
+    // cache should hold every class a repeated query generates
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val results = selected.map { case (name, fn) =>
       def once(): Option[Double] = {
         val t0 = System.nanoTime()
@@ -142,7 +149,11 @@ object Bench {
           None
         }
       }
-      val times = Seq(once(), once()).flatten
+      val first = once()
+      val c0 = compiles
+      val second = once()
+      val recompiled = compiles - c0
+      val times = Seq(first, second).flatten
       val withThird =
         if (times.size == 2 && times.max / times.min > 1.5)
           times ++ once() else times
@@ -159,14 +170,15 @@ object Bench {
       }.dropWhile { case (ts, n) => stalled(ts) && n < 2 }
         .next()._1
       // a query with no successful run reports -1, not a fast-fail time
-      (name, if (all.isEmpty) -1.0 else all.min, stalled(all))
+      (name, if (all.isEmpty) -1.0 else all.min, stalled(all), recompiled)
     }
-    val suspects = results.collect { case (n, _, true) => n }
+    val suspects = results.collect { case (n, _, true, _) => n }
     def r3(v: Double): String =
       if (v < 0) "-1" else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     def jlist(field: String, names: Seq[String]): String =
       names.map("\"" + _ + "\"").mkString(s""","$field":[""", ",", "]")
-    val timed = results.map { case (k, v, _) => (k, v) }
+    val timed = results.map { case (k, v, _, _) => (k, v) }
+    val failed = timed.collect { case (k, v) if v < 0 => k }
     val ratios = timed.collect { case (k, v)
         if v > 0 && prevTimes.get(k).exists(_ > 0) => v / prevTimes(k) }
       .sorted
@@ -219,10 +231,13 @@ object Bench {
       rs.map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
     val artifactsField = ""","artifacts_sec":""" +
       jmap(artifacts.collect { case (k, Right(sec)) => (k, sec) })
-    val total = timed.map(_._2).filter(_ >= 0).sum
+    val failedField = if (failed.isEmpty) "" else jlist("failed", failed)
+    val recompiledField = results.collect { case (k, _, _, n) if n > 0 =>
+      "\"" + k + "\":" + n }.mkString(""","recompiled":{""", ",", "}")
+    val total = BenchGuard.total(timed, prevTimes)
     // full per-query detail → file (committed per-round as the record)
     val full =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","nq":${results.size}$stealField$suspectField$regressedField$warmField$artifactsField$warmFailedField,"queries":${jmap(timed)},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","nq":${results.size}$stealField$suspectField$regressedField$warmField$artifactsField$warmFailedField$failedField$recompiledField,"queries":${jmap(timed)},"sf":"$sfDir"}"""
     // the committed record is the driver's sweep (sf0.1, unfiltered);
     // local smoke runs at other SFs land in a per-SF file instead of
     // clobbering the round artifact. A FILTERED run never writes a
@@ -253,15 +268,15 @@ object Bench {
     }
     // compact headline line → stdout (fits the harness's 2000-char
     // tail): slowest queries first, greedily filled to the byte budget
-    // left after the warm_failed list
+    // left after the warm_failed and failed lists
     val bySlowest = timed.sortBy(-_._2)
-    var used = warmFailedField.length
+    var used = warmFailedField.length + failedField.length
     val head = bySlowest.takeWhile { case (k, v) =>
       used += k.length + r3(v).length + 4; used <= HeadlineBudget
     }.sortBy(_._1)
     // the pointer names the file actually written THIS run
     val fullRef = if (wrote) s""","full":"$fullPath"""" else ""
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","nq":${results.size}$stealField$suspectField$warmField$warmFailedField,"queries":${jmap(head)}$fullRef,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","nq":${results.size}$stealField$suspectField$warmField$warmFailedField$failedField,"queries":${jmap(head)}$fullRef,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -46,6 +46,13 @@ object BenchGuard {
             p > 0 && v / p / sfv > threshold(v)) => k }.sorted
     }.getOrElse(Seq.empty)
 
+  /** The sweep total (`value`). A failed query (time < 0) counts at its
+    * committed-record time, so a crash can never make the sweep read
+    * faster than the record; one with no committed time counts 0. The
+    * failure itself is listed in `failed`. */
+  def total(timed: Seq[(String, Double)], prev: Map[String, Double]): Double =
+    timed.map { case (k, v) => if (v >= 0) v else prev.getOrElse(k, 0.0) }.sum
+
   /** True when the sweep-median factor itself reads as a regression —
     * a uniform slowdown the per-query normalization cannot see. */
   def stealAlert(steal: Option[Double]): Boolean =

@@ -84,8 +84,26 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   * these to executor-count-scaled values), UTC, AQE on (default in 4.x,
   * kept explicit — it handles skew splits and partition coalescing at
   * runtime), and the graft extensions.
+  *
+  * The generated-code cache is sized to the engine's working set
+  * ([[CodegenCacheEntries]]), so a class compiles once per JVM.
   */
 object GraftSession {
+
+  /** `spark.sql.codegen.cache.maxEntries`: the JVM-global cache of
+    * Janino-compiled classes. Spark's default of 100 is split by Guava
+    * into LRU segments of about 25, and one pass of a repeated request
+    * set generates more classes than that (measured at sf0.01: the
+    * `spray` benchmark requests generate 133 per pass, `session`'s 196),
+    * so every later pass compiled 126 and 189 of them again. Compiled
+    * with no eviction, the whole query registry holds 3,035 distinct
+    * classes; 4096 leaves headroom for the per-segment split. The
+    * setting is static and read once, when the cache is created at the
+    * JVM's first codegen, so it must be on the first session the JVM
+    * builds.
+    */
+  val CodegenCacheEntries = 4096
+
   def build(cpus: String): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -103,6 +121,8 @@ object GraftSession {
       // iterative loop missing its checkpoint) must not stall the driver
       // rendering gigabytes of tree text.
       .config("spark.sql.maxPlanStringLength", "100000")
+      .config("spark.sql.codegen.cache.maxEntries",
+        CodegenCacheEntries.toString)
       .getOrCreate()
     // post-subquery-rewrite tier: EXISTS predicates only become the
     // semi/anti joins BoundAntiJoinRule matches in Catalyst's final

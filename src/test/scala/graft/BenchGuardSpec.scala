@@ -58,6 +58,24 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(BenchGuard.stealAlert(steal2))
   }
 
+  test("a failing query cannot lower the total") {
+    val record = prev.values.sum
+    def near(a: Double, b: Double): Boolean = math.abs(a - b) < 1e-9
+    val ok = prev.toSeq
+    assert(near(BenchGuard.total(ok, prev), record))
+    // a crash (-1) counts at its committed time, never as a free query
+    val crashed = ok.map { case (k, v) =>
+      k -> (if (k == "dedup_minhash_lsh") -1.0 else v) }
+    assert(near(BenchGuard.total(crashed, prev), record))
+    // however fast the surviving queries ran, the crash adds its record
+    val faster = crashed.map { case (k, v) => k -> (if (v < 0) v else v / 2) }
+    assert(near(BenchGuard.total(faster, prev), (record - 0.91) / 2 + 0.91))
+    // every query failing reads the committed total, not 0
+    assert(near(BenchGuard.total(ok.map(_._1 -> -1.0), prev), record))
+    // a new query with no record and no successful run adds nothing
+    assert(near(BenchGuard.total(ok :+ ("new_query" -> -1.0), prev), record))
+  }
+
   test("no baseline -> no verdicts, empty ratios -> no median") {
     assert(BenchGuard.stealMedian(Nil).isEmpty)
     assert(BenchGuard.regressed(Seq("q1_agg" -> 9.9), Map.empty, Some(1.0)).isEmpty)
