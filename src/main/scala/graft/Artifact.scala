@@ -8,7 +8,8 @@ import scala.jdk.CollectionConverters._
   * at 100 TB a written table. Declared once in its owner object as
   * `val x = Artifact(group, name) { (s, d) => ... }`; the declaration
   * registers the entry, so warm-up walks the registry instead of a
-  * hand-kept list. Each entry owns a [[BoundedMemo]] of 8 live keys.
+  * hand-kept list. Each entry owns a [[BoundedMemo]] of 8 live keys,
+  * so concurrent callers of one key share a single build.
   */
 final class Artifact[V <: AnyRef](val group: String, val name: String)(
     build: (SparkSession, String) => V) {
@@ -39,16 +40,45 @@ object Artifact {
   /** Every registered entry, in registration order. */
   def all: Seq[Artifact[_ <: AnyRef]] = registered.asScala.toSeq
 
-  /** Builds one group's entries; the first failure propagates. */
+  /** Builds one group's entries concurrently (see [[build]]); once all
+    * have run, the first failure in registration order propagates. */
   def warm(group: String, s: SparkSession, d: String): Unit =
-    all.filter(_.group == group).foreach(_(s, d))
+    build(all.filter(_.group == group), s, d)
+      .collectFirst { case (_, Left(e)) => throw e }
 
-  /** Builds each entry in turn and times it. A failure is returned under
-    * the entry's key instead of thrown, and the later entries still
-    * build — at scale an out-of-memory build must name its artifact. */
+  /** Builds the entries concurrently and times each. A failure is
+    * returned under the entry's key instead of thrown, and the other
+    * entries still build — at scale an out-of-memory build must name its
+    * artifact. Results come back in `entries` order.
+    *
+    * Entries declare no dependencies: a build that reads another entry
+    * calls it, and the single-flight [[BoundedMemo]] makes it wait for a
+    * build already running instead of starting a second one, so any
+    * order and any overlap is safe. The pool is sized to the entries,
+    * capped at the session's `defaultParallelism` (each build is a chain
+    * of Spark jobs; more builds than task slots would only queue). Its
+    * threads are created per call, on the calling thread, so they
+    * inherit its Spark local properties (job group, scheduler pool, the
+    * tags that attribute jobs) and its active session. An entry's
+    * seconds include any wait on an entry it reads, so per-entry times
+    * overlap; the wall time of the whole call is the caller's to take. */
   def build(entries: Seq[Artifact[_ <: AnyRef]], s: SparkSession,
       d: String): Seq[(String, Either[Throwable, Double])] =
-    entries.map(a => timed(a.key)(a(s, d)))
+    if (entries.isEmpty) Nil
+    else {
+      val threads = math.min(entries.size,
+        math.max(1, s.sparkContext.defaultParallelism))
+      val n = new java.util.concurrent.atomic.AtomicInteger()
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(threads,
+        (r: Runnable) => {
+          val t = new Thread(r, s"graft-artifact-warm-${n.incrementAndGet()}")
+          t.setDaemon(true)
+          t
+        })
+      try entries.map(a => pool.submit(() => timed(a.key)(a(s, d))))
+        .map(_.get())
+      finally pool.shutdown()
+    }
 
   /** Runs one warm-up step and times it; a failure is returned under
     * `key` instead of thrown. */

@@ -19,7 +19,9 @@ import org.apache.spark.metrics.source.CodegenMetrics
   * are listed as `failed` (also on stdout when non-empty). The full
   * per-query map goes to `BENCH_FULL.json` in the working directory,
   * committed every round (see BASELINE.md "Bench artifact notes"), with
-  * each registered [[Artifact]]'s build seconds (`artifacts_sec`), the
+  * each registered [[Artifact]]'s build seconds (`artifacts_sec`; the
+  * entries build concurrently, so these overlap, and the warm's wall
+  * time is `artifacts_wall_sec`), the
   * warm-up steps that failed (`warm_failed`, also on stdout when
   * non-empty) and, per query, the classes Janino compiled during its
   * second call (`recompiled`, queries with 0 left out). A filtered run (`runMain graft.Bench <names>`) times the
@@ -81,8 +83,12 @@ object Bench {
     // with DISK_ONLY artifacts (the round-14 sf30 SPILL ENOSPC). Such a
     // run is a probe, never a record (see fullPath below).
     val warmTablesOnly = sys.env.get("GRAFT_BENCH_WARM").contains("tables")
+    // the entries build concurrently, so their seconds overlap: the
+    // warm's own wall time is recorded beside them
+    val artifacts0 = System.nanoTime()
     val artifacts =
       if (warmTablesOnly) Seq.empty else Artifact.warmAll(spark, sfDir)
+    val artifactsWallSec = (System.nanoTime() - artifacts0) / 1e9
     val warmed = sources ++ artifacts
     warmed.foreach {
       case (k, Right(sec)) => System.err.println(f"[bench] warm $k $sec%.3f s")
@@ -230,7 +236,8 @@ object Bench {
     def jmap(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
     val artifactsField = ""","artifacts_sec":""" +
-      jmap(artifacts.collect { case (k, Right(sec)) => (k, sec) })
+      jmap(artifacts.collect { case (k, Right(sec)) => (k, sec) }) +
+      s""","artifacts_wall_sec":${r3(artifactsWallSec)}"""
     val failedField = if (failed.isEmpty) "" else jlist("failed", failed)
     val recompiledField = results.collect { case (k, _, _, n) if n > 0 =>
       "\"" + k + "\":" + n }.mkString(""","recompiled":{""", ",", "}")

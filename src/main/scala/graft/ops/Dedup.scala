@@ -22,13 +22,16 @@ import graft.sources.Tables.t
   *     is bounded by shingle document frequency. At 100 TB, drop
   *     ultra-frequent shingles (doc-freq cap) before the self-join —
   *     the classic "stop-shingle" trick; not needed at test scale.
-  *   - MinHash/LSH: signatures are a groupBy-min over K = 84 universal
-  *     integer hash functions; banding (14 bands × 6 rows, see the
+  *   - MinHash/LSH: signatures are the mins of K = 84 universal integer
+  *     hash functions, folded per document by the
+  *     [[graft.functions.MinhashSig]] kernel (no shingle rows, no
+  *     shuffle of them); banding (14 bands × 6 rows, see the
   *     derivation at the Banding constants) turns candidate generation
   *     into an equi-join on (band, signature) that Catalyst plans as a
   *     plain shuffled hash join — the sub-quadratic path that survives
   *     100 TB. Candidates are then verified with exact Jaccard.
-  *   - SimHash: 32-bit signature via per-bit ±1 sums over shingle hashes;
+  *   - SimHash: 32-bit signature via per-bit ±1 sums over shingle hashes,
+  *     folded per document by the [[graft.functions.SimhashSig]] kernel;
   *     near-dup candidates via 4×8-bit band equality (Hamming ≤ 6 ⇒ at
   *     least one of 4 byte-bands equal by pigeonhole when ≤ 3... we use
   *     band-match as a recall-oriented prefilter and verify with exact
@@ -93,11 +96,19 @@ object Dedup {
       // whole shingle explode AND the first stage of every consumer on
       // one task (the codec-stage rule, Multimodal.pngMedia; the sf10
       // drive measured the warmup build single-threaded for minutes)
-      ckptSized(spark, d, t(spark, d, "documents")
-        .repartition(spark.sparkContext.defaultParallelism)
+      ckptSized(spark, d, spreadDocs(spark, d)
         .select(col("doc_id"),
           graft.functions.ShingleHashes(col("text"), 3)))
   }
+
+  /** `documents` spread over the task slots, the input of every
+    * per-document shingle kernel: the scan of a single-row-group file is
+    * ONE partition, which would put a whole corpus pass on one task (the
+    * codec-stage rule, Multimodal.pngMedia; the sf10 drive measured the
+    * shingle build single-threaded for minutes). A round-robin spread of
+    * document rows — not of the shingle rows they expand into. */
+  private def spreadDocs(s: SparkSession, d: String): DataFrame =
+    t(s, d, "documents").repartition(s.sparkContext.defaultParallelism)
 
   /** Bench's untimed warmup builds this module's artifacts (shingle
     * index, ranked sets, signatures, positional k-gram table,
@@ -527,38 +538,33 @@ object Dedup {
     * shingle STRING per k (K md5 calls per shingle → K integer mults).
     */
   val MinhashP = 4294967311L
-  private def mhA(k: Int): Long = 104729L * (k + 1) + 12345L
-  private def mhB(k: Int): Long = 7919L * (k + 1) + 271L
+  private[graft] def mhA(k: Int): Long = 104729L * (k + 1) + 12345L
+  private[graft] def mhB(k: Int): Long = 7919L * (k + 1) + 271L
   // int64-exactness guard for the comment above: s < 2^32 and
   // A_k < 2^31 ⇒ s·A_k + B_k < 2^63. Fails at class-init if K is ever
   // raised past the family's safe range (~20k hash functions).
   require(mhA(K - 1) < (1L << 31) && MinhashP > (1L << 32),
     s"minhash family overflows int64: mhA(${K - 1}) = ${mhA(K - 1)}")
-  private def mhCol(k: Int): Column =
-    (col("s") * mhA(k) + mhB(k)) % MinhashP
   private def mhSql(k: Int): String =
     s"(s * ${mhA(k)} + ${mhB(k)}) % $MinhashP"
 
-  /** (doc_id, band, sig) minhash band signatures from a shingle frame —
-    * the LSH index rows shared by `dedup_minhash_lsh` (self-collision
-    * pairs) and `dedup_incremental` (new-batch probe against the corpus
-    * index). One groupBy-min shuffle, then a Bands-way explode.
-    */
-  /** Per-doc K-column minhash signature frame (one groupBy-min shuffle). */
-  private def minhashSigs(sh: DataFrame): DataFrame = {
-    val mins = (0 until K).map(k => min(mhCol(k)).as(s"m$k"))
-    sh.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
-  }
+  /** Per-doc K-column minhash signature frame `(doc_id, m0..m{K-1})` of
+    * `docs`: one [[graft.functions.MinhashSig]] pass per document (the
+    * doc's distinct shingle hashes folded into K mins), no shingle rows
+    * and no shuffle of them. */
+  private[graft] def docSigs(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), graft.functions.MinhashSig(col("text"), 3,
+      (0 until K).map(mhA), (0 until K).map(mhB), MinhashP))
 
-  /** MEMOIZED corpus signature frame: at K = 84 the mins aggregation is
-    * the dominant cost of every minhash consumer, and the lsh /
-    * incremental / estimate queries each fan it into 2+ self-join
-    * branches that Catalyst will not share. At 100 TB this is the
-    * stored signature index a crawl pipeline maintains next to the
-    * shingle index — the same artifact contract as [[shingleDf]].
+  /** MEMOIZED corpus signature frame: the lsh / incremental / estimate
+    * queries each fan it into 2+ self-join branches that Catalyst will
+    * not share. At 100 TB this is the stored signature index a crawl
+    * pipeline maintains next to the shingle index — the same artifact
+    * contract as [[shingleDf]], built straight from `documents` (it does
+    * not wait for the shingle index).
     */
   private val corpusSigs = Artifact("dedup", "corpus_sigs") { (s, d) =>
-    ckptSized(s, d, minhashSigs(shingleDf(s, d)))
+    ckptSized(s, d, docSigs(spreadDocs(s, d)))
   }
 
   /** Band rows from an existing signature frame (Bands-way explode). */
@@ -572,6 +578,9 @@ object Dedup {
       .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
   }
 
+  /** (doc_id, band, sig) LSH index rows shared by `dedup_minhash_lsh`
+    * (self-collision pairs) and `dedup_incremental` (new-batch probe
+    * against the corpus index): the corpus signatures, exploded. */
   private def minhashBands(s: SparkSession, d: String): DataFrame =
     bandsFromSigs(corpusSigs(s, d))
 
@@ -595,29 +604,19 @@ object Dedup {
 
   // ---- SimHash --------------------------------------------------------
 
-  val SimBits = 32
+  val SimBits: Int = graft.functions.SimhashSig.Bits
 
-  /** 32-bit simhash column set: per-bit ±1 sums over shingle hashes. */
-  private def simhashDf(spark: SparkSession, d: String): DataFrame = {
-    val h = col("s")
-    val bitSums = (0 until SimBits).map(b =>
-      sum(when(shiftright(h, b).bitwiseAND(lit(1L)) === 1L, 1L)
-        .otherwise(-1L)).as(s"b$b"))
-    val sim = (0 until SimBits).map(b =>
-      when(col(s"b$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-      .reduce(_ + _)
-    shingleDf(spark, d)
-      .groupBy(col("doc_id"))
-      .agg(bitSums.head, bitSums.tail: _*)
-      .select(col("doc_id"), sim.as("simhash"))
-  }
+  /** `(doc_id, simhash)`: per-bit ±1 sums over each doc's distinct
+    * shingle hashes, one [[graft.functions.SimhashSig]] pass per doc. */
+  private def simhashDf(spark: SparkSession, d: String): DataFrame =
+    spreadDocs(spark, d)
+      .select(col("doc_id"), graft.functions.SimhashSig(col("text"), 3))
 
   /** SimHash near-dup pairs (Hamming ≤ 6) via the 4×8-bit byte-band
     * candidate join — the shared edge set for `dedup_simhash_pairs` and
     * `dedup_clusters`. Single-computation pattern: group each byte-band
     * bucket's postings from ONE signature frame and explode the pair
-    * slots, so the 32-bit-sum simhash aggregation runs once, not once per
-    * join side.
+    * slots, so the simhash kernel runs once, not once per join side.
     */
   private def simhashPairs(spark: SparkSession, d: String): DataFrame = {
     val sim = simhashDf(spark, d)
@@ -1163,7 +1162,8 @@ object Dedup {
         .withColumn("inter", interCount(col("si"), col("sj")))
         .select(col("i"), col("j"), (col("inter").cast(DoubleType) /
           (col("ni") + col("nj") - col("inter")).cast(DoubleType)).as("jac"))
-      val mh = minhashSigs(sh).localCheckpoint()
+      val mh = docSigs(t(s, d, "documents").filter(col("doc_id") < 100))
+        .localCheckpoint()
       val bandHit = (0 until Bands).map { bd =>
         (0 until Rows).map(r =>
           col(s"a.m${bd * Rows + r}") === col(s"b.m${bd * Rows + r}"))

@@ -102,6 +102,94 @@ class ArtifactSpec extends SparkSpec {
     assert(!registry.exists(_.group == "spec"))
   }
 
+  test("a concurrent warm builds each entry exactly once, overlapping") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    val builds = new java.util.concurrent.ConcurrentHashMap[String, AtomicInteger]()
+    def count(k: String): Unit =
+      builds.computeIfAbsent(k, _ => new AtomicInteger()).incrementAndGet()
+    // two entries that can only finish if they run at the same time
+    val together = new CountDownLatch(2)
+    val base = new Artifact[DataFrame]("spec", "base")((s, _) => {
+      count("base")
+      together.countDown()
+      assert(together.await(60, TimeUnit.SECONDS), "builds did not overlap")
+      s.range(4).toDF().localCheckpoint()
+    })
+    // every reader of `base` waits for the one running build
+    def reader(name: String) = new Artifact[DataFrame]("spec", name)((s, d) => {
+      count(name)
+      base(s, d).toDF("id")
+    })
+    val first = new Artifact[DataFrame]("spec", "first")((s, _) => {
+      count("first")
+      together.countDown()
+      assert(together.await(60, TimeUnit.SECONDS), "builds did not overlap")
+      s.range(2).toDF()
+    })
+    val entries = Seq(base, first, reader("r1"), reader("r2"), reader("r3"))
+    val out = Artifact.build(entries, spark, sf)
+    assert(out.map(_._1) === entries.map(_.key))
+    assert(out.collect { case (k, Left(e)) => s"$k: $e" }.isEmpty)
+    assert(builds.asScala.map { case (k, n) => k -> n.get }.toMap ===
+      Map("base" -> 1, "first" -> 1, "r1" -> 1, "r2" -> 1, "r3" -> 1))
+    assert(entries.forall(_.isBuilt(spark, sf)))
+  }
+
+  test("warm threads inherit the caller's Spark local properties") {
+    val tag = "graft.artifactSpec.inherit"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val entries = (1 to 3).map(i => new Artifact[DataFrame]("spec", s"p$i")(
+      (s, _) => {
+        seen.add(String.valueOf(s.sparkContext.getLocalProperty(tag)))
+        s.range(i).toDF()
+      }))
+    val sc = spark.sparkContext
+    sc.setLocalProperty(tag, "caller")
+    try assert(Artifact.build(entries, spark, sf).forall(_._2.isRight))
+    finally sc.setLocalProperty(tag, null)
+    assert(seen.asScala.toSeq === Seq("caller", "caller", "caller"))
+  }
+
+  test("BoundedMemo: a racing caller waits for the running build") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    val memo = new BoundedMemo[String, AnyRef](4)
+    val computes = new AtomicInteger()
+    val started = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val results = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]()
+    def call(): Unit = results.add(memo.getOrCompute("k") {
+      computes.incrementAndGet()
+      started.countDown()
+      assert(release.await(60, TimeUnit.SECONDS))
+      new Object
+    })
+    val a = new Thread(() => call())
+    a.start()
+    assert(started.await(60, TimeUnit.SECONDS))
+    val b = new Thread(() => call())
+    b.start()
+    // b is parked on the running build before it is released
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (b.getState != Thread.State.WAITING && System.nanoTime() < deadline)
+      Thread.sleep(5)
+    assert(b.getState === Thread.State.WAITING)
+    release.countDown()
+    a.join(); b.join()
+    assert(computes.get === 1)
+    assert(results.size === 2 && results.asScala.toSet.size === 1)
+    // a failed build is shared with its waiters and leaves no entry
+    val err = intercept[IllegalStateException](
+      memo.getOrCompute("bad")(throw new IllegalStateException("nope")))
+    assert(err.getMessage === "nope" && !memo.contains("bad"))
+    assert(memo.getOrCompute("bad")("ok") === "ok")
+    // a build asking for its own key fails instead of waiting on itself
+    intercept[IllegalStateException](
+      memo.getOrCompute("self")(memo.getOrCompute("self")("inner")))
+    assert(!memo.contains("self"))
+  }
+
   test("checkpoint stores in heap up to the caller's boundary and " +
       "DISK_ONLY past it") {
     def level(df: DataFrame): StorageLevel =

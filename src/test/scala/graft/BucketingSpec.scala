@@ -1,6 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import graft.sources.Tables
 
 /** The co-located-join path (SCALE.md): bucketed tables let repeated
   * joins on the bucket key skip the shuffle entirely — the storage-side
@@ -109,5 +113,112 @@ class BucketingSpec extends SparkSpec {
     // plain-layout twin (same invariant the driver checks by oracle)
     val plain = SparkEntry.queries("events_sessions")(spark, sf)
     assert(q.collect().toSeq === plain.collect().toSeq)
+  }
+
+  /** Spark jobs started by `body` on this thread. */
+  private def jobsDuring(body: => Unit): Int = {
+    val tag = "graft.bucketingSpec"
+    val tags = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag)))
+          .foreach(tags.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "body")
+      body
+      // listener events arrive in order: once the sentinel job is seen,
+      // every job the body ran is counted
+      sc.setLocalProperty(tag, "sentinel")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!tags.contains("sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(tags.contains("sentinel"), "listener never saw the sentinel")
+      tags.asScala.count(_ == "body")
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** A private copy of one testdata table, so its layout can be dropped
+    * and its input touched without disturbing the shared one. */
+  private def withCopiedTable(name: String)(body: String => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-bkt-")
+    val file = dir.resolve(s"$name.parquet")
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(s"$sf/$name.parquet"), file)
+    file.toFile.setWritable(true)
+    val tbl = Tables.bucketTable(dir.toString, name, "c_custkey", 8, Nil)
+    try body(dir.toString)
+    finally {
+      spark.sql(s"DROP TABLE IF EXISTS $tbl")
+      val loc = new org.apache.hadoop.fs.Path(
+        spark.conf.get("spark.sql.warehouse.dir") + "/" + tbl)
+      loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(loc, true)
+      java.nio.file.Files.delete(file)
+      java.nio.file.Files.delete(dir)
+    }
+  }
+
+  /** A new session with its plain table already loaded: resolving a
+    * parquet source runs its own footer-schema job, which is not a
+    * layout write. */
+  private def sessionWith(dir: String) = {
+    val s = spark.newSession()
+    Tables.t(s, dir, "customer")
+    s
+  }
+
+  private def layoutRows(s: org.apache.spark.sql.SparkSession,
+      dir: String): Seq[String] =
+    Tables.bucketed(s, dir, "customer", "c_custkey").collect()
+      .map(_.mkString("|")).toSeq.sorted
+
+  test("a new session reuses a stamped layout with no write job") {
+    withCopiedTable("customer") { dir =>
+      val first = sessionWith(dir)
+      assert(jobsDuring(Tables.bucketed(first, dir, "customer",
+        "c_custkey")) > 0, "the first call writes the layout")
+      val rows = layoutRows(first, dir)
+      assert(rows.size === Tables.t(spark, sf, "customer").count())
+      // same catalog, new session: the catalog table is reused
+      val second = sessionWith(dir)
+      assert(jobsDuring(Tables.bucketed(second, dir, "customer",
+        "c_custkey")) === 0)
+      assert(layoutRows(second, dir) === rows)
+      // a fresh catalog (as in a new JVM): the stamped files are
+      // registered again, still without a job, with their bucket spec
+      val tbl = Tables.bucketTable(dir, "customer", "c_custkey", 8, Nil)
+      spark.sql(s"DROP TABLE $tbl")
+      val third = sessionWith(dir)
+      assert(jobsDuring(Tables.bucketed(third, dir, "customer",
+        "c_custkey")) === 0)
+      assert(layoutRows(third, dir) === rows)
+      val plan = Tables.bucketed(third, dir, "customer", "c_custkey")
+        .groupBy(col("c_custkey")).count().queryExecution.executedPlan
+        .toString
+      assert(!plan.contains("Exchange hashpartitioning"), plan)
+    }
+  }
+
+  test("touching a bucketed layout's input forces a rewrite") {
+    withCopiedTable("customer") { dir =>
+      val rows = layoutRows(spark.newSession(), dir)
+      val f = new java.io.File(s"$dir/customer.parquet")
+      assert(f.setLastModified(f.lastModified() + 60000L))
+      val second = sessionWith(dir)
+      assert(jobsDuring(Tables.bucketed(second, dir, "customer",
+        "c_custkey")) > 0, "a changed input mtime must rewrite the layout")
+      assert(layoutRows(second, dir) === rows)
+      // and the rewrite is stamped again: the next session reuses it
+      val third = sessionWith(dir)
+      assert(jobsDuring(Tables.bucketed(third, dir, "customer",
+        "c_custkey")) === 0)
+    }
   }
 }

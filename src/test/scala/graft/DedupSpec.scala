@@ -53,6 +53,55 @@ class DedupSpec extends SparkSpec {
     assert(m("docs") > 0 && m("verify_mass") > 0, line)
   }
 
+  test("signature kernels equal the groupBy min/sum formulation") {
+    // the wide aggregates the per-document kernels replaced, kept here
+    // only as the reference: explode the distinct shingle hashes, then
+    // one groupBy(doc_id) of K mins and of 32 ±1 bit sums
+    val edge = spark.createDataFrame(Seq[(Long, String)](
+      -1L -> null,                  // null text
+      -2L -> "two tokens",          // fewer than 3 tokens
+      -3L -> "",                    // one empty token
+      -4L -> "x y z x y z x y z",   // every shingle repeated
+      -5L -> "a b c",               // exactly one shingle
+      -6L -> "p  q"))               // empty middle token
+      .toDF("doc_id", "text")
+    val docs = graft.sources.Tables.t(spark, sf, "documents")
+      .select(col("doc_id"), col("text")).union(edge)
+    val sh = docs.select(col("doc_id"),
+      graft.functions.ShingleHashes(col("text"), 3))
+    val mins = (0 until Dedup.K).map(k =>
+      min((col("s") * Dedup.mhA(k) + Dedup.mhB(k)) % Dedup.MinhashP)
+        .as(s"m$k"))
+    val oldSigs = sh.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
+    val newSigs = Dedup.docSigs(docs)
+    val bitSums = (0 until Dedup.SimBits).map(b =>
+      sum(when(shiftright(col("s"), b).bitwiseAND(lit(1L)) === 1L, 1L)
+        .otherwise(-1L)).as(s"b$b"))
+    val oldSim = sh.groupBy(col("doc_id"))
+      .agg(bitSums.head, bitSums.tail: _*)
+      .select(col("doc_id"), (0 until Dedup.SimBits).map(b =>
+        when(col(s"b$b") > 0, lit(1L << b)).otherwise(lit(0L)))
+        .reduce(_ + _).as("simhash"))
+    val newSim = docs.select(col("doc_id"),
+      graft.functions.SimhashSig(col("text"), 3))
+    assert(newSigs.columns.toSeq ===
+      "doc_id" +: (0 until Dedup.K).map(k => s"m$k"))
+    def rows(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Long]] =
+      df.collect().map(r => r.getLong(0) ->
+        (1 until r.length).map(r.getLong)).toMap
+    val (o, n) = (rows(oldSigs), rows(newSigs))
+    assert(n.size === docs.count() - 3, "one row per doc with >= 3 tokens")
+    assert(n === o)
+    assert(rows(newSim) === rows(oldSim))
+    // the edge cases: no row under 3 tokens or for null text; repeats
+    // fold to the distinct set (x y z / y z x / z x y)
+    assert(Seq(-1L, -2L, -3L).forall(d => !n.contains(d)))
+    assert(Seq(-4L, -5L, -6L).forall(n.contains))
+    val reps = sh.filter(col("doc_id") === -4L).count()
+    assert(reps === 3)
+    assert(n(-4L) === o(-4L))
+  }
+
   test("exact dedup is idempotent") {
     val once = graft.SparkEntry.queries("dedup_exact")(spark, sf)
     val kept = once.select(col("kept_doc_id"))
