@@ -2,6 +2,8 @@ package graft.api
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField,
+  StructType}
 import graft.geo.Geo
 import graft.ops.Wnv
 import graft.sources.Tables
@@ -72,15 +74,21 @@ class OptOutEtl(
 
   override def load(transformed: DataFrame): Long = {
     transformed.write.mode("overwrite").parquet(destination)
-    spark.read.parquet(destination).count()
+    loaded().count()
   }
+
+  /** The loaded points, read with their declared schema: no
+    * footer-schema job. */
+  private def loaded(): DataFrame =
+    spark.read.schema(OptOutEtl.pointsSchema).parquet(destination)
 
   /** Buffer 1500 ft + Erase (GSheetsETL_Lab2.py:112-134): zone points
     * minus opt-out buffers, as a distance anti-join on projected feet.
-    * `zones` carries (cx_ft, cy_ft) candidate points to keep.
+    * `zones` carries (cx_ft, cy_ft) candidate points to keep. Building
+    * the frame runs no Spark job.
     */
   def finalAnalysis(candidates: DataFrame): DataFrame = {
-    val pts = spark.read.parquet(destination)
+    val pts = loaded()
       .select(Geo.xFt(col("x")).as("ox"), Geo.yFt(col("y")).as("oy"))
     candidates.join(
       broadcast(pts),
@@ -88,4 +96,12 @@ class OptOutEtl(
         <= lit(Wnv.BufferFt * Wnv.BufferFt),
       "left_anti")
   }
+}
+
+object OptOutEtl {
+  /** Schema of the points [[OptOutEtl.transform]] emits and `load`
+    * writes (S4: x/y/Type). */
+  val pointsSchema: StructType = StructType(Seq(
+    StructField("x", DoubleType), StructField("y", DoubleType),
+    StructField("Type", StringType)))
 }

@@ -442,9 +442,7 @@ object EraseArcs {
     require(depth < 64,
       s"subdivide: depth cap hit (maxRad=$maxRad, t=$t) — " +
         "non-positive radius bound or degenerate vertices?")
-    val cx = t.map(_._1).sum / t.size
-    val cy = t.map(_._2).sum / t.size
-    val rad = t.map { case (x, y) => math.hypot(x - cx, y - cy) }.max
+    val (_, _, rad) = boundingCircle(t)
     if (rad <= maxRad || t.size != 3) Seq(t)
     else {
       def d2(a: (Double, Double), b: (Double, Double)) =
@@ -506,9 +504,7 @@ object EraseArcs {
           .zipWithIndex.map { case ((sgn, t), i) => (z, i, sgn, t) }
       }
     val bound = tcat.map { case (z, i, _, t) =>
-      val cx = t.map(_._1).sum / t.size
-      val cy = t.map(_._2).sum / t.size
-      val rad = t.map { case (x, y) => math.hypot(x - cx, y - cy) }.max
+      val (cx, cy, rad) = boundingCircle(t)
       (z, i, cx, cy, rad)
     }.toDF("zone_id", "tri_id", "bcx", "bcy", "brad")
     // triangle vertices ride task closures (bounded: zones × O((R/r)²)
@@ -856,6 +852,16 @@ object EraseArcs {
       : (Double, Double, Double, Double) =
     (p.map(_._1).min, p.map(_._2).min, p.map(_._1).max, p.map(_._2).max)
 
+  /** A circle enclosing a ring: the vertex centroid and the farthest
+    * vertex's distance from it — the candidate test of every
+    * zone/triangle-to-member assignment. */
+  private def boundingCircle(vs: Seq[(Double, Double)])
+      : (Double, Double, Double) = {
+    val cx = vs.map(_._1).sum / vs.size
+    val cy = vs.map(_._2).sum / vs.size
+    (cx, cy, vs.map { case (x, y) => math.hypot(x - cx, y - cy) }.max)
+  }
+
   /** EXACT area of (convex zone polygon − union of subtrahend simple
     * polygons) — see the family header above. Zone ring requirements
     * match [[erasedAreaPoly]] (convex, loud guards); subtrahends may
@@ -940,7 +946,8 @@ object EraseArcs {
     }
 
   // ---- POLYGON ZONES: RING OUTPUT ------------------------------------
-  // One kernel and one distributed plan emit the output rings of
+  // One kernel ([[polyZoneRings]]), run once per zone by one plan
+  // ([[polyZoneRingsPerZone]]), emits the output rings of
   // (polygon zone − ∪members) for every polygon-zone cell: a member is
   // a RING (a zone hole or a polygon subtrahend) or a DISK (a buffer).
   // A ring of the result alternates STRAIGHT pieces (outer edges CCW /
@@ -991,11 +998,11 @@ object EraseArcs {
     * convex half-plane interval algebra, valid with no convexity
     * assumption), then MERGE adjacent kept arcs. The merge makes the
     * output independent of the candidate set: a non-covering neighbor
-    * in a superset (the distributed plan's grid join, or a
-    * zone-assigned disk that misses this circle) adds either no
-    * crossing angles or only splits both of whose sides classify
-    * identically — so kernel and distributed plans emit the SAME
-    * maximal pieces, not merely the same union. `others` may be any
+    * in a superset (the kernel's bbox grid, or a zone-assigned disk
+    * that misses this circle) adds either no crossing angles or only
+    * splits both of whose sides classify identically — so any
+    * candidate superset emits the SAME maximal pieces, not merely the
+    * same union. `others` may be any
     * superset of the disks within 2r (a disk at ≥ 2r can cover no
     * point of this circle). Traversal is CW (`ccw = false` — the
     * region lies outside the disk), matching [[eraseRings]]'s buffer
@@ -1186,8 +1193,8 @@ object EraseArcs {
   /** One member of a polygon zone's erase set: a RING (`kind` "ring" —
     * a zone hole or a polygon subtrahend, canonical CCW `vertices`) or
     * a DISK (`kind` "disk" — center (ox, oy), radius `rad`, no
-    * vertices). In the distributed frame a ring's (ox, oy, rad) is the
-    * bounding circle of its bounding box (the zone-assignment test).
+    * vertices). In a member frame a ring's (ox, oy, rad) is a circle
+    * enclosing it (the zone-assignment test).
     */
   private[graft] case class Member(kind: String, ox: Double, oy: Double,
       rad: Double, vertices: Seq[(Double, Double)]) {
@@ -1214,8 +1221,8 @@ object EraseArcs {
     * every other member, CW ([[diskArcPieces]], the ring members in the
     * role of holes). `others` may be any superset of the members whose
     * bounding box meets m's: a member that misses m adds no cover and
-    * no crossing, so the kernel and the distributed plan emit the SAME
-    * pieces.
+    * no crossing, so the pieces do not depend on which superset the
+    * zone assignment and the bbox grid deliver.
     */
   private def memberPieces(outer: Seq[(Double, Double)], m: Member,
       others: Seq[Member]): Seq[BoundaryPiece] =
@@ -1275,75 +1282,85 @@ object EraseArcs {
     * endpoints (start/end of the CW traversal) plus center, radius,
     * and the CCW-parameter angle window in degrees.
     */
-  private def ringRow(z: Int, ri: Long, pi: Long, p: BoundaryPiece,
-      area: Double): (Int, Long, Long, String, Double, Double, Double,
-        Double, Option[Double], Option[Double], Option[Double],
-        Option[Double], Option[Double], Double) = p match {
+  private[graft] case class RingRow(ring_id: Long, piece_seq: Long,
+      kind: String, x1_ft: Double, y1_ft: Double, x2_ft: Double,
+      y2_ft: Double, cx_ft: Option[Double], cy_ft: Option[Double],
+      rho_ft: Option[Double], start_deg: Option[Double],
+      end_deg: Option[Double], ring_area_sqft: Double)
+
+  private def ringRow(ri: Long, pi: Long, p: BoundaryPiece,
+      area: Double): RingRow = p match {
     case lp: LinePiece =>
-      (z, ri, pi, lp.kind, lp.x1, lp.y1, lp.x2, lp.y2,
+      RingRow(ri, pi, lp.kind, lp.x1, lp.y1, lp.x2, lp.y2,
         None, None, None, None, None, area)
     case rp: RingPiece =>
       val (sx, sy) = rp.start; val (ex, ey) = rp.end
-      (z, ri, pi, "arc", sx, sy, ex, ey, Some(rp.cx), Some(rp.cy),
+      RingRow(ri, pi, "arc", sx, sy, ex, ey, Some(rp.cx), Some(rp.cy),
         Some(rp.rho), Some(rp.s * 180.0 / math.Pi),
         Some(rp.e * 180.0 / math.Pi), area)
   }
 
-  /** The ring plan returns a LAZY frame that re-reads its cached
-    * zone-assigned member frame only when the CALLER executes it, so
-    * it cannot unpersist before returning; a fresh cached copy per
-    * invocation would pile up across bench iterations. Swapping
-    * through a one-slot registry unpersists the PREVIOUS invocation's
-    * frame at entry, so steady-state residency is one frame. The
-    * unpersist comes FIRST: a repeated call builds the same plan, and
-    * `cache()` of a plan already cached is a no-op — unpersisting the
-    * previous frame after it would drop the new frame's cache too.
-    * Unpersisting a frame a stale caller still holds is safe (Spark
-    * recomputes lineage); blocking=false keeps entry non-blocking.
-    */
-  private val ringsPlanCache =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-  private def swapPlanCache(zf: DataFrame): Unit = {
-    val prev = ringsPlanCache.getAndSet(zf)
-    if (prev != null && (prev ne zf)) prev.unpersist(false)
-    zf.cache()
+  /** [[polyZoneRings]] of one zone group as its output rows, ring by
+    * ring, each ring's pieces in stitch order. */
+  private val zoneRingRows = udf { (outer: Seq[(Double, Double)],
+      holes: Seq[Seq[(Double, Double)]], rings: Seq[Seq[(Double, Double)]],
+      disks: Seq[(Double, Double)], r: Double) =>
+    polyZoneRings(outer, holes ++ rings, disks, r).zipWithIndex.flatMap {
+      case (ring, ri) =>
+        val area = ring.map(_.signedArea).sum
+        ring.zipWithIndex.map { case (p, pi) =>
+          ringRow(ri.toLong, pi.toLong, p, area)
+        }
+    }
   }
 
-  /** Columns of a member frame (see [[Member]]) plus its bounding box. */
-  private val memberCols =
-    Seq("kind", "ox", "oy", "rad", "vertices", "x0", "y0", "x1", "y1")
+  /** [[boundingCircle]] of a `vertices` column as a NOT NULL struct
+    * (_1, _2, _3) = (cx, cy, rad): a join on non-null columns infers no
+    * IS NOT NULL filters, which would copy the vertex expressions into
+    * the scans' filters. */
+  private val ringCircle =
+    udf((vs: Seq[(Double, Double)]) => boundingCircle(vs)).asNonNullable()
 
   /** Disk members: one per buffer center (`x_ft`, `y_ft`), radius `r`. */
   def diskMembers(buffers: DataFrame, r: Double): DataFrame =
     buffers.select(lit("disk").as("kind"), col("x_ft").as("ox"),
       col("y_ft").as("oy"), lit(r).as("rad"),
-      typedLit(Seq.empty[(Double, Double)]).as("vertices"),
-      (col("x_ft") - r).as("x0"), (col("y_ft") - r).as("y0"),
-      (col("x_ft") + r).as("x1"), (col("y_ft") + r).as("y1"))
+      typedLit(Seq.empty[(Double, Double)]).as("vertices"))
 
-  /** Ring members: one per distinct `vertices` ring, canonicalized
-    * first ([[canonicalRing]] — so re-wound or rotated copies of one
-    * polygon count once). */
-  def ringMembers(subs: DataFrame): DataFrame = {
+  /** Ring members of the ring plan: one per `vertices` ring, as given,
+    * with its [[boundingCircle]] as (ox, oy, rad). Re-wound, rotated or
+    * repeated copies of one polygon stay separate rows;
+    * [[polyZoneRings]] canonicalizes and deduplicates each zone's
+    * rings, so they still erase once. */
+  def ringMembers(subs: DataFrame): DataFrame =
+    subs.select(ringCircle(col("vertices")).as("c"), col("vertices"))
+      .select(lit("ring").as("kind"), col("c._1").as("ox"),
+        col("c._2").as("oy"), col("c._3").as("rad"), col("vertices"))
+
+  /** Ring members for the area plans: one per DISTINCT canonical ring
+    * ([[canonicalRing]]), deduplicated before any join — the neighbor
+    * self-join ([[neighborGroups]]) tells a member from its neighbors
+    * by its vertices, so two copies of one polygon would cover each
+    * other's edges. Columns: [[memberCols]], the bounding circle being
+    * the bbox's. */
+  private def distinctRingMembers(subs: DataFrame): DataFrame = {
     import subs.sparkSession.implicits._
-    ringFrame(subs.select(col("vertices")).as[Seq[(Double, Double)]]
-      .map(canonicalRing(_)).toDF("vertices").dropDuplicates("vertices"))
-  }
-
-  /** Member columns for a frame of canonical `vertices` rings (other
-    * leading columns kept): bbox, and its bounding circle as (ox, oy,
-    * rad). */
-  private def ringFrame(df: DataFrame): DataFrame = {
     val xs = transform(col("vertices"), v => v.getField("_1"))
     val ys = transform(col("vertices"), v => v.getField("_2"))
     val (x0, y0) = (array_min(xs), array_min(ys))
     val (x1, y1) = (array_max(xs), array_max(ys))
-    df.select(df.columns.filter(_ != "vertices").map(col) ++ Seq(
-      lit("ring").as("kind"), ((x0 + x1) / 2).as("ox"),
-      ((y0 + y1) / 2).as("oy"),
-      (sqrt(Geo.dist2(x0, y0, x1, y1)) / 2).as("rad"), col("vertices"),
-      x0.as("x0"), y0.as("y0"), x1.as("x1"), y1.as("y1")): _*)
+    subs.select(col("vertices")).as[Seq[(Double, Double)]]
+      .map(canonicalRing(_)).toDF("vertices").dropDuplicates("vertices")
+      .select(lit("ring").as("kind"), ((x0 + x1) / 2).as("ox"),
+        ((y0 + y1) / 2).as("oy"),
+        (sqrt(Geo.dist2(x0, y0, x1, y1)) / 2).as("rad"), col("vertices"),
+        x0.as("x0"), y0.as("y0"), x1.as("x1"), y1.as("y1"))
   }
+
+  /** Columns of an area-plan member frame (see [[Member]]) plus its
+    * bounding box. */
+  private val memberCols =
+    Seq("kind", "ox", "oy", "rad", "vertices", "x0", "y0", "x1", "y1")
 
   /** `members` assigned to every zone whose outer ring's bounding
     * circle meets the member's (ox, oy, rad) circle — an exact superset
@@ -1353,9 +1370,7 @@ object EraseArcs {
       : DataFrame = {
     import spark.implicits._
     val bound = zcat.map { case (z, vs) =>
-      val cx = vs.map(_._1).sum / vs.size
-      val cy = vs.map(_._2).sum / vs.size
-      val rad = vs.map { case (x, y) => math.hypot(x - cx, y - cy) }.max
+      val (cx, cy, rad) = boundingCircle(vs)
       (z, cx, cy, rad)
     }.toDF("zone_id", "bcx", "bcy", "brad")
     members.join(broadcast(bound),
@@ -1375,8 +1390,8 @@ object EraseArcs {
     * The grid cell is the largest member bbox extent (at least 1 ft),
     * so a member spans at most 2×2 cells; it is read with one small
     * agg, which also fills the caller's cache of `zf` once, before the
-    * plan's three readers of it run. Shared by the polygon
-    * subtrahend area plan and the ring plan.
+    * plan's readers of it run. Used by the polygon subtrahend area
+    * plan ([[eraseAreaPolySub]]).
     */
   private def neighborGroups(spark: SparkSession, zf: DataFrame)
       : org.apache.spark.sql.KeyValueGroupedDataset[
@@ -1412,94 +1427,67 @@ object EraseArcs {
   }
 
   /** OUTPUT RINGS per polygon zone (see [[polyZoneRings]]) — the
-    * distributed plan for every polygon-zone ring query. `zones` holds
-    * (zone_id, vertices[, holes]); `members` is a [[diskMembers]] or
-    * [[ringMembers]] frame. The zone catalog is collected (bounded —
-    * SCALE.md) and its rings ride task closures. Members are assigned
-    * to zones by bounding circle, the zones' holes join as ring
-    * members, and the frame is deduplicated per zone. The per-piece
-    * work distributes:
+    * distributed plan for every polygon-zone ring query: one action,
+    * one exchange. `zones` holds (zone_id, vertices[, holes]);
+    * `members` is a [[diskMembers]] frame (one radius) or a
+    * [[ringMembers]] frame.
     *
-    *   (a) outer-edge cover t-intervals stream from a flatMap over the
-    *       member frame (interval endpoints, never geometry, shuffle);
-    *   (b) each member's pieces come from the grid-cell neighbor
-    *       self-join ([[neighborGroups]]), bounded by local overlap
-    *       density — [[memberPieces]] makes them identical to the
-    *       kernel's under the grid's candidate superset;
+    *   - the zone catalog stays in the plan: a broadcast of each zone's
+    *     outer-ring bounding circle assigns members to every zone they
+    *     can touch (an exact superset), and one SEED row per zone
+    *     carries its outer ring and holes;
+    *   - seeds ∪ members take ONE range exchange on zone_id, and one
+    *     group per zone collects its outer ring, holes, ring members
+    *     and disk centers;
+    *   - the driver kernel [[polyZoneRings]] runs once per zone group
+    *     and its rows are exploded. The kernel canonicalizes and
+    *     deduplicates the members (a duplicated, re-wound or rotated
+    *     footprint erases once); a zone no member touches still emits
+    *     its full rings from its seed.
     *
-    * and only the STITCH is zone-serial: one `flatMapGroups` per zone
-    * (seeded from the catalog, so a zone no member touches still emits
-    * its full rings) chains the zone's pieces and emits ring rows from
-    * the executors. Rows: zone_id, ring_id, piece_seq, kind ("zone" /
-    * "sub" / "arc"), x1..y2, arc center/radius/degree window (NULL on
-    * line pieces), ring_area_sqft.
+    * The range partitioning satisfies the callers' final
+    * `orderBy(zone_id, ring_id, piece_seq)`, so that sort is local —
+    * no second exchange, and the range sampler reads seeds and
+    * members, never the kernel's output. Building the plan runs no
+    * Spark job and caches nothing (no zone-catalog collect, no
+    * cell-size agg, no cached member frame to unpersist later).
+    *
+    * Scale trade (SCALE.md): the stitch is zone-serial in any form —
+    * one task chains a zone's pieces — so per-zone memory and the last
+    * stage's parallelism (one task per zone) are unchanged from the
+    * earlier per-member piece plan. Given up: spreading ONE dense
+    * zone's piece computation over several tasks; the kernel's bbox
+    * grid ([[bboxIndex]]) keeps that work near-linear in the zone's
+    * members. Rows: zone_id, ring_id, piece_seq, kind ("zone" / "sub"
+    * / "arc"), x1..y2, arc center/radius/degree window (NULL on line
+    * pieces), ring_area_sqft.
     */
   def polyZoneRingsPerZone(spark: SparkSession, zones: DataFrame,
       members: DataFrame): DataFrame = {
-    import spark.implicits._
-    val zcat = zones.select(col("zone_id").cast("int"), col("vertices"),
-        if (zones.columns.contains("holes")) col("holes")
-        else typedLit(Seq.empty[Seq[(Double, Double)]]))
-      .as[(Int, Seq[(Double, Double)], Seq[Seq[(Double, Double)]])]
-      .collect().toSeq
-    val zOuter = zcat.map { case (z, vs, _) => z -> normalizeCcw(vs) }.toMap
-    val holes = ringFrame(zcat.flatMap { case (z, _, hs) =>
-      hs.map(h => (z, canonicalRing(h))) }.toDF("zone_id", "vertices"))
-    val zf = assignMembers(spark, zcat.map(c => (c._1, c._2)), members)
-      .unionByName(holes)
-      .dropDuplicates("zone_id", "ox", "oy", "vertices")
-    swapPlanCache(zf)
-    // rows per zone, tagged: 0 = outer-edge cover (edge, s, e);
-    // 1 = line piece (x1, y1, x2, y2); 2 = arc (cx, cy, rho, s, e);
-    // 3 = seed
-    val covers = zf.select(col("zone_id"),
-        struct(col("kind"), col("ox"), col("oy"), col("rad"),
-          col("vertices")))
-      .as[(Int, Member)].flatMap { case (z, m) =>
-        ringEdges(zOuter(z)).zipWithIndex.flatMap {
-          case (((ax, ay), (bx, by)), ei) =>
-            memberCover(ax, ay, bx, by, m)
-              .map { case (s, e) => (z, 0, ei, s, e, 0.0, 0.0, 0.0) }
-        }
-      }
-    val pieces = neighborGroups(spark, zf)
-      .flatMapGroups { (k: (Int, Member),
-          rows: Iterator[(Int, Member, Option[Member])]) =>
-        val z = k._1
-        memberPieces(zOuter(z), k._2, rows.flatMap(_._3).toSeq.distinct)
-          .map {
-            case p: LinePiece => (z, 1, 0, p.x1, p.y1, p.x2, p.y2, 0.0)
-            case p: RingPiece => (z, 2, 0, p.cx, p.cy, p.rho, p.s, p.e)
-          }
-      }
-    val seeds = zcat.map(c => (c._1, 3, 0, 0.0, 0.0, 0.0, 0.0, 0.0)).toDS()
-    covers.union(pieces).union(seeds)
-      .groupByKey(_._1)
-      .flatMapGroups { (z: Int, rowsIt: Iterator[(Int, Int, Int, Double,
-          Double, Double, Double, Double)]) =>
-        val rs = rowsIt.toSeq
-        val cover = rs.filter(_._2 == 0).groupBy(_._3).map {
-          case (ei, ivs) => ei -> mergeIntervals(ivs.map(r => (r._4, r._5)))
-        }
-        val zonePieces: Seq[BoundaryPiece] = ringEdges(zOuter(z))
-          .zipWithIndex.flatMap { case (((ax, ay), (bx, by)), ei) =>
-            zoneEdgePieces(ax, ay, bx, by, cover.getOrElse(ei, Nil))
-          }
-        val all = zonePieces ++ rs.collect {
-          case r if r._2 == 1 => LinePiece("sub", r._4, r._5, r._6, r._7)
-          case r if r._2 == 2 =>
-            RingPiece(ccw = false, r._4, r._5, r._6, r._7, r._8)
-        }
-        stitch(all, polyTol(all)).zipWithIndex.flatMap { case (ring, ri) =>
-          val area = ring.map(_.signedArea).sum
-          ring.zipWithIndex.map { case (p, pi) =>
-            ringRow(z, ri.toLong, pi.toLong, p, area)
-          }
-        }
-      }
-      .toDF("zone_id", "ring_id", "piece_seq", "kind",
-        "x1_ft", "y1_ft", "x2_ft", "y2_ft", "cx_ft", "cy_ft", "rho_ft",
-        "start_deg", "end_deg", "ring_area_sqft")
+    val zoneId = col("zone_id").cast("int").as("zone_id")
+    val bound = zones.select(zoneId, ringCircle(col("vertices")).as("b"))
+    val brad = col("b._3")
+    val assigned = members.join(broadcast(bound),
+        Geo.dist2(col("ox"), col("oy"), col("b._1"), col("b._2"))
+          < (brad + col("rad")) * (brad + col("rad")))
+      .select(col("zone_id"), col("kind"), col("ox"), col("oy"),
+        col("rad"), col("vertices"))
+    val seeds = zones.select(zoneId, col("vertices").as("outer"),
+      (if (zones.columns.contains("holes")) col("holes")
+       else typedLit(Seq.empty[Seq[(Double, Double)]])).as("holes"))
+    val isDisk = col("kind") === "disk" // NULL on seeds: in neither list
+    assigned.unionByName(seeds, allowMissingColumns = true)
+      .repartitionByRange(col("zone_id"))
+      .groupBy(col("zone_id"))
+      .agg(first(col("outer"), ignoreNulls = true).as("outer"),
+        first(col("holes"), ignoreNulls = true).as("holes"),
+        collect_list(when(!isDisk, col("vertices"))).as("rings"),
+        collect_list(when(isDisk,
+          struct(col("ox").as("_1"), col("oy").as("_2")))).as("disks"),
+        coalesce(max(when(isDisk, col("rad"))), lit(0.0)).as("r"))
+      .select(col("zone_id"), explode(zoneRingRows(col("outer"),
+        col("holes"), col("rings"), col("disks"), col("r"))).as("p"))
+      .select(col("zone_id"), col("p.*"))
   }
 
   /** Surviving area per GENERAL (concave, with holes) polygon zone
@@ -1547,15 +1535,13 @@ object EraseArcs {
           .zipWithIndex.map { case ((sgn, t), i) => (z, i, sgn, t) }
       }
     val bound = tcat.map { case (z, i, _, t) =>
-      val cx = t.map(_._1).sum / t.size
-      val cy = t.map(_._2).sum / t.size
-      val rad = t.map { case (x, y) => math.hypot(x - cx, y - cy) }.max
+      val (cx, cy, rad) = boundingCircle(t)
       (z, i, cx, cy, rad)
     }.toDF("zone_id", "tri_id", "bcx", "bcy", "brad")
     // triangle vertices ride task closures (bounded: zones × ~12 tris
     // of 3 vertices — the zEdgesMap convention)
     val tris = tcat.map { case (z, i, _, t) => (z, i) -> t }.toMap
-    val pairs = ringMembers(subs)
+    val pairs = distinctRingMembers(subs)
       .join(broadcast(bound),
         Geo.dist2(col("ox"), col("oy"), col("bcx"), col("bcy"))
           < (col("brad") + col("rad")) * (col("brad") + col("rad")))
@@ -1623,7 +1609,7 @@ object EraseArcs {
       .collect().toSeq
     // zone edges (bounded catalog) ride task closures
     val zEdgesMap = zcat.map { case (z, vs) => z -> convexZoneEdges(vs) }.toMap
-    val zf = assignMembers(spark, zcat, ringMembers(subs))
+    val zf = assignMembers(spark, zcat, distinctRingMembers(subs))
     zf.cache()
     // ---- (a) zone-edge coverage intervals, merged per (zone, edge) --
     val aEdge = zf.select(col("zone_id"), col("vertices"))

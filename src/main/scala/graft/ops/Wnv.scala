@@ -495,9 +495,7 @@ object Wnv {
           XF.r6(col("start_deg")).as("start_deg"),
           XF.r6(col("end_deg")).as("end_deg"),
           XF.r6(col("ring_area_sqft")).as("ring_area_sqft"))
-        // barrier before the global sort: the range sampler would
-        // otherwise re-run the per-zone ring stitcher (flatMapGroups)
-        .repartition(col("zone_id"))
+        // a local sort: the plan is already range-partitioned on zone_id
         .orderBy(col("zone_id"), col("ring_id"), col("piece_seq"))),
 
     // Output rings of (zone circle − buffer disks): arc pieces (zone
@@ -527,9 +525,7 @@ object Wnv {
         XF.r6(col("x2_ft")).as("x2_ft"),
         XF.r6(col("y2_ft")).as("y2_ft"),
         XF.r6(col("ring_area_sqft")).as("ring_area_sqft"))
-      // barrier before the global sort: the range sampler would
-      // otherwise re-run the per-zone ring stitcher (flatMapGroups)
-      .repartition(col("zone_id"))
+      // a local sort: the plan is already range-partitioned on zone_id
       .orderBy(col("zone_id"), col("ring_id"), col("piece_seq"))
 
   /** Diamond (4-vertex convex ring) form of the zone catalog: vertices

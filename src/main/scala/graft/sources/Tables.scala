@@ -36,6 +36,10 @@ object Tables {
     * The memo is a small LRU (a DataFrame pins its SparkSession, so an
     * unbounded map would keep every session that ever touched it alive
     * for the JVM lifetime); eviction only drops a resolved plan.
+    *
+    * A new session still resolves its own plan, but not its own schema:
+    * each table's footer schema is memoized JVM-wide ([[parquet]]), so
+    * only the first read of an input runs a schema job.
     */
   private val MaxMemo = 64
   private val loaded =
@@ -45,7 +49,7 @@ object Tables {
     loaded.getOrCompute((spark, dir, name)) {
       if (name == "events") {
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val raw = spark.read.parquet(s"$dir/events.parquet")
+        val raw = parquet(spark, s"$dir/events.parquet")
         // Schema-adaptive ts normalization — the testdata has shipped
         // both vintages: TIMESTAMP(NANOS) (physical int64, read as long
         // nanos via the legacy conf, truncated to µs like DuckDB does)
@@ -63,8 +67,43 @@ object Tables {
             raw.withColumn("ts",
               org.apache.spark.sql.functions.col("ts").cast(TimestampType))
         }
-      } else spark.read.parquet(s"$dir/$name.parquet")
+      } else parquet(spark, s"$dir/$name.parquet")
     }
+
+  /** Footer schemas of parquet inputs, JVM-wide, keyed on the path, its
+    * input fingerprint ([[inputStamp]] of the visible files) and the
+    * nanos-as-long conf that changes how `events.ts` reads. Values are
+    * schemas, not frames, so they pin no session. */
+  private val schemas =
+    new graft.BoundedMemo[(String, String, String), StructType](MaxMemo)
+
+  /** `spark.read.parquet(path)` with its schema DECLARED from the
+    * memo: a read whose input fingerprint was seen before in this JVM
+    * runs no footer-schema job. Touching the input changes the
+    * fingerprint, so its schema is read again. */
+  private def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val it = p.getFileSystem(conf).listFiles(p, true)
+    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .filterNot { f => val n = f.getPath.getName
+        n.startsWith("_") || n.startsWith(".") }
+      .map(_.getPath.toString).toSeq
+    val key = (path, inputStamp(conf, files),
+      spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"))
+    spark.read.schema(schemas.getOrCompute(key)(
+      spark.read.parquet(path).schema)).parquet(path)
+  }
+
+  /** Input fingerprint of a set of files: each one's name, size and
+    * mtime, one per line, in name order. */
+  private def inputStamp(conf: org.apache.hadoop.conf.Configuration,
+      files: Seq[String]): String =
+    files.sorted.map { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      val st = p.getFileSystem(conf).getFileStatus(p)
+      s"$f\t${st.getLen}\t${st.getModificationTime}"
+    }.mkString("\n")
 
   /** Bucketed + sorted persistence of a testdata table — the storage-side
     * shuffle eliminator (SCALE.md co-location rule): pay the partitioning
@@ -126,11 +165,8 @@ object Tables {
       val fs = loc.getFileSystem(conf)
       val stampPath = new org.apache.hadoop.fs.Path(loc, StampFile)
       val sorts = bucketCol +: sortCols
-      val stamp = (src.inputFiles.sorted.map { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        val st = p.getFileSystem(conf).getFileStatus(p)
-        s"$f\t${st.getLen}\t${st.getModificationTime}"
-      } ++ Seq(src.schema.toDDL, s"bucket $bucketCol",
+      val stamp = (inputStamp(conf, src.inputFiles.toSeq) +: Seq(
+        src.schema.toDDL, s"bucket $bucketCol",
         sorts.mkString("sort ", ",", ""), s"buckets $nBuckets"))
         .mkString("\n")
       val stamped = fs.exists(stampPath) && {

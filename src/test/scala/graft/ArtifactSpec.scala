@@ -1,8 +1,6 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
@@ -39,33 +37,10 @@ class ArtifactSpec extends SparkSpec {
     assert(registry.nonEmpty)
     val first = Artifact.warmAll(spark, sf)
     assert(first.collect { case (k, Left(e)) => s"$k: $e" }.isEmpty)
-    val tag = "graft.artifactSpec"
-    val tags = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(tag)))
-          .foreach(tags.add)
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(tag, "second")
-      val second = Artifact.warmAll(spark, sf)
-      assert(second.map(_._1) === first.map(_._1))
-      assert(second.forall(_._2.isRight))
-      // listener events arrive asynchronously and in order: once the
-      // sentinel job is seen, every job the second warm ran is counted
-      sc.setLocalProperty(tag, "sentinel")
-      spark.range(1).count()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!tags.contains("sentinel") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(tags.contains("sentinel"), "listener never saw the sentinel")
-      assert(tags.asScala.count(_ == "second") === 0)
-    } finally {
-      sc.setLocalProperty(tag, null)
-      sc.removeSparkListener(listener)
-    }
+    var second: Seq[(String, Either[Throwable, Double])] = Nil
+    assert(jobsDuring { second = Artifact.warmAll(spark, sf) } === 0)
+    assert(second.map(_._1) === first.map(_._1))
+    assert(second.forall(_._2.isRight))
   }
 
   test("each module's warm entry point builds exactly its own group") {

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
@@ -115,35 +112,6 @@ class BucketingSpec extends SparkSpec {
     assert(q.collect().toSeq === plain.collect().toSeq)
   }
 
-  /** Spark jobs started by `body` on this thread. */
-  private def jobsDuring(body: => Unit): Int = {
-    val tag = "graft.bucketingSpec"
-    val tags = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(tag)))
-          .foreach(tags.add)
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(tag, "body")
-      body
-      // listener events arrive in order: once the sentinel job is seen,
-      // every job the body ran is counted
-      sc.setLocalProperty(tag, "sentinel")
-      spark.range(1).count()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!tags.contains("sentinel") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(tags.contains("sentinel"), "listener never saw the sentinel")
-      tags.asScala.count(_ == "body")
-    } finally {
-      sc.setLocalProperty(tag, null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   /** A private copy of one testdata table, so its layout can be dropped
     * and its input touched without disturbing the shared one. */
   private def withCopiedTable(name: String)(body: String => Unit): Unit = {
@@ -165,9 +133,9 @@ class BucketingSpec extends SparkSpec {
     }
   }
 
-  /** A new session with its plain table already loaded: resolving a
-    * parquet source runs its own footer-schema job, which is not a
-    * layout write. */
+  /** A new session with its plain table already loaded: the first read
+    * of an input runs a footer-schema job, which is not a layout
+    * write. */
   private def sessionWith(dir: String) = {
     val s = spark.newSession()
     Tables.t(s, dir, "customer")

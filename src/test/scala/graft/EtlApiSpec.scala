@@ -34,6 +34,16 @@ class EtlApiSpec extends SparkSpec {
     assert(kept.toSeq === Seq(2))
   }
 
+  test("finalAnalysis builds with no Spark job (declared points schema)") {
+    val out = Files.createTempDirectory("etl_out4").toString + "/pts"
+    val etl = new OptOutEtl(spark, fixture, "/tmp", out)
+    etl.process()
+    import spark.implicits._
+    val cands = Seq((1, 0.0, 0.0)).toDF("id", "cx_ft", "cy_ft")
+    assert(jobsDuring(etl.finalAnalysis(cands)) === 0)
+    assert(spark.read.parquet(out).schema === OptOutEtl.pointsSchema)
+  }
+
   test("process() re-runs idempotently (overwrite semantics, P9)") {
     val out = Files.createTempDirectory("etl_out3").toString + "/pts"
     val etl = new OptOutEtl(spark, fixture, "/tmp", out)

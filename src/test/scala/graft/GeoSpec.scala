@@ -1105,6 +1105,67 @@ class GeoSpec extends SparkSpec {
     }
   }
 
+  test("polygon-zone rings, distributed: duplicated, re-wound or " +
+      "rotated footprints erase once") {
+    import graft.geo.EraseArcs
+    import spark.implicits._
+    val zones = Seq((7, Seq((0.0, 0.0), (4000.0, 0.0), (4000.0, 4000.0),
+      (0.0, 4000.0)))).toDF("zone_id", "vertices")
+    // one footprint across the zone's east edge, one strictly inside
+    val edge = Seq((3000.0, 1000.0), (5000.0, 1200.0), (4800.0, 3000.0),
+      (2900.0, 2800.0))
+    val inner = Seq((1000.0, 1000.0), (2000.0, 1200.0), (1500.0, 2100.0))
+    def rows(subs: Seq[Seq[(Double, Double)]]) =
+      EraseArcs.polyZoneRingsPerZone(spark, zones,
+          EraseArcs.ringMembers(subs.toDF("vertices")))
+        .orderBy("ring_id", "piece_seq").collect().toSeq
+    val once = rows(Seq(edge, inner))
+    val copies = rows(Seq(edge, edge.reverse, edge.drop(2) ++ edge.take(2),
+      inner, inner, inner.reverse.drop(1) ++ inner.reverse.take(1)))
+    assert(copies === once)
+    // the outer ring with a notch, and the inner footprint as a hole
+    val want = EraseArcs.polyZoneRings(zones.head().getSeq[
+      org.apache.spark.sql.Row](1).map(v => (v.getDouble(0), v.getDouble(1))),
+      Seq(edge, inner))
+    assert(want.size === 2)
+    assert(once.map(_.getLong(1)).distinct.size === want.size)
+    assert(once.size === want.map(_.size).sum)
+  }
+
+  test("polygon-zone rings, distributed: a zone no member touches " +
+      "emits its full rings") {
+    import graft.geo.EraseArcs
+    import spark.implicits._
+    val sq = Seq((0.0, 0.0), (4000.0, 0.0), (4000.0, 4000.0), (0.0, 4000.0))
+    val hole = Seq((1500.0, 1500.0), (2500.0, 1500.0), (2500.0, 2500.0),
+      (1500.0, 2500.0))
+    val far = sq.map { case (x, y) => (x + 1e5, y) }
+    val zones = Seq((1, sq, Seq(hole)), (2, far, Seq.empty[Seq[(Double,
+      Double)]])).toDF("zone_id", "vertices", "holes")
+    // one disk on zone 1's west edge; zone 2 is 10^5 ft away
+    val buffers = Seq((0.0, 2000.0)).toDF("x_ft", "y_ft")
+    def ringsOf(members: org.apache.spark.sql.DataFrame) =
+      EraseArcs.polyZoneRingsPerZone(spark, zones, members).collect()
+        .groupBy(_.getInt(0)).map { case (z, rs) =>
+          z -> rs.groupBy(_.getLong(1)).toSeq.sortBy(_._1)
+            .map { case (_, ps) => (ps.map(_.getString(3)).toSeq.sorted,
+              ps.head.getDouble(13)) }
+        }
+    def full(outer: Seq[(Double, Double)], holes: Seq[Seq[(Double, Double)]])
+        = EraseArcs.polyZoneRings(outer, holes).map(r =>
+          (r.map(_.asInstanceOf[EraseArcs.LinePiece].kind).sorted,
+            r.map(_.signedArea).sum))
+    val touched = ringsOf(EraseArcs.diskMembers(buffers, 500.0))
+    assert(touched.keySet === Set(1, 2))
+    assert(touched(1).flatMap(_._1).contains("arc"))
+    assert(touched(2) === full(far, Nil))
+    assert(touched(2) === Seq((Seq.fill(4)("zone"), 1.6e7)))
+    // no member at all: every zone is still emitted, holes included
+    val none = ringsOf(EraseArcs.diskMembers(buffers.limit(0), 500.0))
+    assert(none === Map(1 -> full(sq, Seq(hole)), 2 -> full(far, Nil)))
+    assert(none(1).map(_._2).sum === 1.6e7 - 1e6)
+  }
+
   test("mixed line+arc rings (disk subtrahends on polygon zones): " +
       "closure, orientation, conservation, determinism") {
     import graft.geo.EraseArcs

@@ -78,6 +78,28 @@ class SourcesSpec extends SparkSpec {
     assert(spark.read.parquet(dir).count() === orders.count())
   }
 
+  test("a new session's table read runs no footer-schema job") {
+    import graft.sources.Tables
+    val dir = Files.createTempDirectory("graft-tbl-")
+    val file = dir.resolve("nation.parquet")
+    Files.copy(java.nio.file.Paths.get(s"$sf/nation.parquet"), file)
+    try {
+      val first = Tables.t(spark.newSession(), dir.toString, "nation")
+      val second = spark.newSession()
+      assert(jobsDuring(Tables.t(second, dir.toString, "nation")) === 0)
+      val again = Tables.t(second, dir.toString, "nation")
+      assert(again.schema === first.schema)
+      assert(again.count() === Tables.t(spark, sf, "nation").count())
+      // a touched input is a new fingerprint: its schema is read again
+      assert(file.toFile.setLastModified(file.toFile.lastModified() + 60000L))
+      assert(jobsDuring(Tables.t(spark.newSession(), dir.toString,
+        "nation")) > 0)
+    } finally {
+      Files.delete(file)
+      Files.delete(dir)
+    }
+  }
+
   test("parquet v2 scan answers COUNT/MIN/MAX from footer statistics") {
     // the metadata-only aggregate: with aggregate pushdown on the v2
     // reader, a whole-table COUNT/MIN/MAX never deserializes a single

@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,4 +19,34 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   val spark: SparkSession = TestSpark.spark
   val sf: String = TestSpark.sf
+
+  /** Spark jobs started by `body`: on this thread, or on a thread that
+    * inherits its local properties (a concurrent warm's pool). */
+  def jobsDuring(body: => Unit): Int = {
+    val tag = "graft.sparkSpec"
+    val tags = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag)))
+          .foreach(tags.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "body")
+      body
+      // listener events arrive asynchronously and in order: once the
+      // sentinel job is seen, every job the body ran is counted
+      sc.setLocalProperty(tag, "sentinel")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!tags.contains("sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(tags.contains("sentinel"), "listener never saw the sentinel")
+      tags.asScala.count(_ == "body")
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+  }
 }
