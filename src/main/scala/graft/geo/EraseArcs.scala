@@ -1362,21 +1362,19 @@ object EraseArcs {
   private val memberCols =
     Seq("kind", "ox", "oy", "rad", "vertices", "x0", "y0", "x1", "y1")
 
-  /** `members` assigned to every zone whose outer ring's bounding
-    * circle meets the member's (ox, oy, rad) circle — an exact superset
-    * of the zones the member can touch. */
-  private def assignMembers(spark: SparkSession,
-      zcat: Seq[(Int, Seq[(Double, Double)])], members: DataFrame)
+  /** `members` assigned to every zone of `zones` (zone_id, vertices)
+    * whose outer ring's bounding circle meets the member's (ox, oy, rad)
+    * circle — an exact superset of the zones the member can touch. The
+    * zones' circles are broadcast; columns: zone_id, then `members`'. */
+  private def assignMembers(zones: DataFrame, members: DataFrame)
       : DataFrame = {
-    import spark.implicits._
-    val bound = zcat.map { case (z, vs) =>
-      val (cx, cy, rad) = boundingCircle(vs)
-      (z, cx, cy, rad)
-    }.toDF("zone_id", "bcx", "bcy", "brad")
+    val bound = zones.select(col("zone_id").cast("int").as("zone_id"),
+      ringCircle(col("vertices")).as("b"))
+    val brad = col("b._3")
     members.join(broadcast(bound),
-        Geo.dist2(col("ox"), col("oy"), col("bcx"), col("bcy"))
-          < (col("brad") + col("rad")) * (col("brad") + col("rad")))
-      .select(col("zone_id") +: memberCols.map(col): _*)
+        Geo.dist2(col("ox"), col("oy"), col("b._1"), col("b._2"))
+          < (brad + col("rad")) * (brad + col("rad")))
+      .select(col("zone_id") +: members.columns.map(col): _*)
   }
 
   /** The grid-cell self-join of a zone-assigned member frame, grouped
@@ -1464,19 +1462,13 @@ object EraseArcs {
     */
   def polyZoneRingsPerZone(spark: SparkSession, zones: DataFrame,
       members: DataFrame): DataFrame = {
-    val zoneId = col("zone_id").cast("int").as("zone_id")
-    val bound = zones.select(zoneId, ringCircle(col("vertices")).as("b"))
-    val brad = col("b._3")
-    val assigned = members.join(broadcast(bound),
-        Geo.dist2(col("ox"), col("oy"), col("b._1"), col("b._2"))
-          < (brad + col("rad")) * (brad + col("rad")))
-      .select(col("zone_id"), col("kind"), col("ox"), col("oy"),
-        col("rad"), col("vertices"))
-    val seeds = zones.select(zoneId, col("vertices").as("outer"),
+    val seeds = zones.select(col("zone_id").cast("int").as("zone_id"),
+      col("vertices").as("outer"),
       (if (zones.columns.contains("holes")) col("holes")
        else typedLit(Seq.empty[Seq[(Double, Double)]])).as("holes"))
     val isDisk = col("kind") === "disk" // NULL on seeds: in neither list
-    assigned.unionByName(seeds, allowMissingColumns = true)
+    assignMembers(zones, members)
+      .unionByName(seeds, allowMissingColumns = true)
       .repartitionByRange(col("zone_id"))
       .groupBy(col("zone_id"))
       .agg(first(col("outer"), ignoreNulls = true).as("outer"),
@@ -1609,7 +1601,8 @@ object EraseArcs {
       .collect().toSeq
     // zone edges (bounded catalog) ride task closures
     val zEdgesMap = zcat.map { case (z, vs) => z -> convexZoneEdges(vs) }.toMap
-    val zf = assignMembers(spark, zcat, distinctRingMembers(subs))
+    val zf = assignMembers(zcat.toDF("zone_id", "vertices"),
+      distinctRingMembers(subs))
     zf.cache()
     // ---- (a) zone-edge coverage intervals, merged per (zone, edge) --
     val aEdge = zf.select(col("zone_id"), col("vertices"))
