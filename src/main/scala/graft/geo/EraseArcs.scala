@@ -411,148 +411,6 @@ object EraseArcs {
     math.max(0.0, piece(outer) - holes.map(piece).sum)
   }
 
-  /** Surviving area per GENERAL polygon zone (see [[erasedAreaConcave]]):
-    * zones arrive as (zone_id, outer vertex ring, array of hole rings).
-    * Same broadcast-join candidate generation as [[eraseAreaPoly]]
-    * (touch predicate on the outer ring's bounding circle); zones with
-    * no candidate buffer keep the exact shoelace area (outer − holes).
-    */
-  def eraseAreaConcave(spark: SparkSession, zones: DataFrame,
-      buffers: DataFrame, bufferFt: Double): DataFrame = {
-    import spark.implicits._
-    val zcat = zones.select(col("zone_id").cast("int"),
-        col("vertices"), col("holes"))
-      .as[(Int, Seq[(Double, Double)], Seq[Seq[(Double, Double)]])]
-      .collect().toSeq
-    eraseAreaDiskTri(spark, zcat, buffers, bufferFt)
-  }
-
-  /** Longest-edge midpoint subdivision until the triangle's bounding
-    * radius (max vertex distance from the centroid) is ≤ maxRad.
-    * Areas add exactly (the midpoint split partitions the triangle),
-    * so any subdivision depth computes the same erased area — the knob
-    * only bounds how much of the zone one task's kernel call sees.
-    */
-  private[graft] def subdivide(t: Seq[(Double, Double)],
-      maxRad: Double, depth: Int = 0): Seq[Seq[(Double, Double)]] = {
-    // each split halves the longest edge, so 64 levels shrink any
-    // finite triangle below any positive maxRad; hitting the cap means
-    // a non-positive/denormal maxRad or NaN vertices — fail loudly
-    // instead of recursing to an exponential triangle count
-    require(depth < 64,
-      s"subdivide: depth cap hit (maxRad=$maxRad, t=$t) — " +
-        "non-positive radius bound or degenerate vertices?")
-    val (_, _, rad) = boundingCircle(t)
-    if (rad <= maxRad || t.size != 3) Seq(t)
-    else {
-      def d2(a: (Double, Double), b: (Double, Double)) =
-        (a._1 - b._1) * (a._1 - b._1) + (a._2 - b._2) * (a._2 - b._2)
-      val i = (0 until 3).maxBy(k => d2(t(k), t((k + 1) % 3)))
-      val a = t(i); val b = t((i + 1) % 3); val c = t((i + 2) % 3)
-      val m = ((a._1 + b._1) / 2, (a._2 + b._2) / 2)
-      subdivide(Seq(a, m, c), maxRad, depth + 1) ++
-        subdivide(Seq(m, b, c), maxRad, depth + 1)
-    }
-  }
-
-  /** Shared TRIANGLE-GRANULAR distributed plan for DISK subtrahends on
-    * polygon zones (the disk twin of [[eraseAreaConcaveSub]]'s plan):
-    * ear-clip each ring driver-side, SUBDIVIDE each triangle to a
-    * bounding radius ≤ 2·bufferFt, broadcast the triangle-bound
-    * catalog, and run the convex kernel per (zone, triangle) group
-    * with only the disks whose centers sit within brad + bufferFt of
-    * that triangle. Hole-ring triangles count negative (holes ⊆ outer,
-    * pairwise disjoint — the [[erasedAreaConcave]] identity).
-    *
-    * The subdivision is the scale lever: the per-group kernel is
-    * quadratic in its CANDIDATE count (every surviving arc is clipped
-    * against every overlapping neighbor), so a whole-zone group costs
-    * (zone's disks)² on ONE task — measured 83 s for the star catalog
-    * at sf10's opt-out density (70× its sf1 time; round-15 sweep).
-    * With triangle extents pinned at O(bufferFt), each group sees only
-    * the disks overlapping its neighborhood — work per group is
-    * (local density)², group count tracks zone area, and the job
-    * parallelizes across every core/executor. Same plan at 100 TB:
-    * the broadcast triangle catalog is |zones|·O((R/r)²) rows and the
-    * disk side streams.
-    *
-    * Float note: each far disk contributes NO term to a kernel sum
-    * (not a 0.0 term), so candidate pruning is value-exact; the
-    * per-group buffer list is SORTED so the arc-term summation order
-    * is deterministic under any partitioning. Association across
-    * triangles differs from the whole-zone kernel at the ulp level —
-    * inside GeoSpec's existing 1e-9-relative replay pins.
-    */
-  private def eraseAreaDiskTri(spark: SparkSession,
-      zcat: Seq[(Int, Seq[(Double, Double)], Seq[Seq[(Double, Double)]])],
-      buffers: DataFrame, bufferFt: Double): DataFrame = {
-    // maxRad = 2·bufferFt below: a non-positive radius would make
-    // subdivide recurse toward its depth cap on every triangle
-    require(bufferFt > 0, s"eraseAreaDiskTri: bufferFt=$bufferFt must be > 0")
-    import spark.implicits._
-    def shoelace(vs: Seq[(Double, Double)]): Double =
-      math.abs(vs.indices.map { i =>
-        val (x1, y1) = vs(i); val (x2, y2) = vs((i + 1) % vs.size)
-        x1 * y2 - x2 * y1
-      }.sum) / 2
-    val maxRad = 2.0 * bufferFt
-    val tcat: Seq[(Int, Int, Int, Seq[(Double, Double)])] =
-      zcat.flatMap { case (z, vs, hs) =>
-        (triangulate(vs).flatMap(subdivide(_, maxRad)).map(t => (1, t)) ++
-          hs.flatMap(h => triangulate(h).flatMap(subdivide(_, maxRad))
-            .map(t => (-1, t))))
-          .zipWithIndex.map { case ((sgn, t), i) => (z, i, sgn, t) }
-      }
-    val bound = tcat.map { case (z, i, _, t) =>
-      val (cx, cy, rad) = boundingCircle(t)
-      (z, i, cx, cy, rad)
-    }.toDF("zone_id", "tri_id", "bcx", "bcy", "brad")
-    // triangle vertices ride task closures (bounded: zones × O((R/r)²)
-    // triangles of 3 vertices — the zEdgesMap convention)
-    val tris = tcat.map { case (z, i, _, t) => (z, i) -> t }.toMap
-    val pairs = buffers.select(col("x_ft"), col("y_ft"))
-      .join(broadcast(bound),
-        Geo.dist2(col("x_ft"), col("y_ft"), col("bcx"), col("bcy"))
-          < (col("brad") + bufferFt) * (col("brad") + bufferFt))
-      .select(col("zone_id").cast("int"), col("tri_id").cast("int"),
-        col("x_ft"), col("y_ft"))
-      .as[(Int, Int, Double, Double)]
-    val touched = pairs.groupByKey(r => (r._1, r._2))
-      .mapGroups { (k: (Int, Int), rows: Iterator[(Int, Int, Double, Double)]) =>
-        (k._1, k._2,
-          erasedAreaPoly(tris(k), rows.map(r => (r._3, r._4)).toSeq.sorted,
-            bufferFt))
-      }
-      .collect() // bounded: zones × triangles, areas only
-      .map(r => (r._1, r._2) -> r._3).toMap
-    val byZone = tcat.groupBy(_._1)
-    val all = zcat.sortBy(_._1).map { case (z, _, _) =>
-      val s = byZone(z).map { case (_, i, sgn, t) =>
-        sgn * touched.getOrElse((z, i), shoelace(t))
-      }.sum
-      (z, math.max(0.0, s))
-    }
-    all.toDF("zone_id", "area_sqft")
-  }
-
-  /** Surviving area per POLYGON zone in square feet (see
-    * [[erasedAreaPoly]]): zones arrive as vertex rings
-    * (zone_id, vertex ring as array of (x_ft, y_ft) structs).
-    * Distributed via the shared triangle-granular plan
-    * ([[eraseAreaDiskTri]]); triangles with no candidate disk keep the
-    * exact shoelace area.
-    */
-  def eraseAreaPoly(spark: SparkSession, zones: DataFrame,
-      buffers: DataFrame, bufferFt: Double): DataFrame = {
-    import spark.implicits._
-    val zcat = zones.select(col("zone_id").cast("int"),
-        col("vertices")) // array<struct<x:double,y:double>>
-      .as[(Int, Seq[(Double, Double)])]
-      .collect().toSeq
-      .map { case (z, vs) => (z, vs, Seq.empty[Seq[(Double, Double)]]) }
-    eraseAreaDiskTri(spark, zcat, buffers, bufferFt)
-  }
-
   // ---- GENERAL POLYGON SUBTRAHEND (round 12) -------------------------
   // arcpy Erase accepts ARBITRARY erase features, not only buffer
   // disks (the reference's only actual use is the 1500 ft buffer,
@@ -632,9 +490,9 @@ object EraseArcs {
       }
     }.reverse
 
-  /** CCW-normalize a subtrahend ring (loud guard on degenerate rings) —
-    * one code path for the kernel and the distributed wrapper so their
-    * per-piece arithmetic is identical. */
+  /** CCW-normalize a ring (loud guard on degenerate rings) — one code
+    * path for the area kernels and the piece kernel
+    * ([[polyZonePieces]]). */
   private def normalizeCcw(ring: Seq[(Double, Double)]): Seq[(Double, Double)] = {
     require(ring.size >= 3, "subtrahend needs >= 3 vertices")
     val sl = ring.indices.map { i =>
@@ -662,7 +520,7 @@ object EraseArcs {
   }
 
   /** CCW-normalized vertices + edges of a CONVEX zone ring (loud
-    * guards), shared by the kernel and the distributed wrapper. */
+    * guards) for [[erasedAreaPolySub]]. */
   private def convexZoneEdges(verticesIn: Seq[(Double, Double)])
       : IndexedSeq[((Double, Double), (Double, Double))] = {
     require(verticesIn.size >= 3, "polygon needs >= 3 vertices")
@@ -737,7 +595,7 @@ object EraseArcs {
     zoneEdgePieces(ax, ay, bx, by, covered).map(_.signedArea).sum
 
   /** The (b) term for ONE CCW subtrahend ring `p` against a convex
-    * zone, for the area kernel and plan: its edge pieces inside the
+    * zone, for the area kernel: its edge pieces inside the
     * zone and outside every OTHER subtrahend (the `others` rings, any
     * exact superset of the actual coverers — non-coverers contribute
     * empty interval lists), traversed reversed.
@@ -1237,27 +1095,25 @@ object EraseArcs {
       : IndexedSeq[((Double, Double), (Double, Double))] =
     ring.indices.map(i => (ring(i), ring((i + 1) % ring.size)))
 
-  /** OUTPUT RINGS of (general simple zone polygon − ∪ ring members −
-    * ∪ disks of radius `r`) — the feature class arcpy's Erase emits
-    * (GSheetsETL_Lab2.py:133) on polygon zones. The zone's holes are
-    * passed as ring members: R = outer ∖ ∪members, so holes and
+  /** Directed BOUNDARY PIECES of (general simple zone polygon − ∪ ring
+    * members − ∪ disks of radius `r`), unstitched. The zone's holes
+    * are passed as ring members: R = outer ∖ ∪members, so holes and
     * polygon subtrahends are the same thing to the boundary algebra (a
     * subtrahend overlapping a hole is resolved by the mutual
     * member-vs-member clipping); a convex zone is a zone with no
     * holes. Pieces: (a) outer edges CCW minus every member's cover;
     * (b) each ring member's edges inside the outer ring and outside
-    * every other member, reversed; (c) each disk's arcs, CW; then
-    * [[stitch]]. Rings are canonicalized and deduplicated, disks
-    * deduplicated and sorted (identical members would erase each
-    * other's boundary). Caller contract: simple rings in general
-    * position, holes inside the outer ring; tangency fails loudly in
-    * the stitcher. GeoSpec pins closure, orientation, Σ ring signed
-    * areas against the INDEPENDENT area kernels, determinism, and the
-    * distributed replay.
+    * every other member, reversed; (c) each disk's arcs, CW. Rings are
+    * canonicalized and deduplicated, disks deduplicated and sorted
+    * (identical members would erase each other's boundary). The
+    * region's area is Σ signedArea over these pieces (Green's
+    * theorem): the same integral the stitched rings sum, but with no
+    * stitch, so it cannot fail on tangencies. Caller contract: simple
+    * rings in general position, holes inside the outer ring.
     */
-  private[graft] def polyZoneRings(outerIn: Seq[(Double, Double)],
+  private[graft] def polyZonePieces(outerIn: Seq[(Double, Double)],
       rings: Seq[Seq[(Double, Double)]], disks: Seq[(Double, Double)] = Nil,
-      r: Double = 0.0): Seq[Seq[BoundaryPiece]] = {
+      r: Double = 0.0): Seq[BoundaryPiece] = {
     require(outerIn.size >= 3, "polygon needs >= 3 vertices")
     val outer = normalizeCcw(outerIn)
     val members = (rings.map(canonicalRing).distinct
@@ -1269,11 +1125,24 @@ object EraseArcs {
       zoneEdgePieces(ax, ay, bx, by, mergeIntervals(near(ax, ay, bx, by)
         .flatMap(k => memberCover(ax, ay, bx, by, members(k)))))
     }
-    val pieces = zonePieces ++ members.indices.flatMap { k =>
+    zonePieces ++ members.indices.flatMap { k =>
       val (x0, y0, x1, y1) = members(k).box
       memberPieces(outer, members(k),
         near(x0, y0, x1, y1).filter(_ != k).map(members))
     }
+  }
+
+  /** OUTPUT RINGS of the same region — the feature class arcpy's Erase
+    * emits (GSheetsETL_Lab2.py:133) on polygon zones: the
+    * [[polyZonePieces]] chained by [[stitch]]; tangency fails loudly in
+    * the stitcher. GeoSpec pins closure, orientation, Σ ring signed
+    * areas against the INDEPENDENT area kernels, determinism, and the
+    * distributed replay.
+    */
+  private[graft] def polyZoneRings(outerIn: Seq[(Double, Double)],
+      rings: Seq[Seq[(Double, Double)]], disks: Seq[(Double, Double)] = Nil,
+      r: Double = 0.0): Seq[Seq[BoundaryPiece]] = {
+    val pieces = polyZonePieces(outerIn, rings, disks, r)
     stitch(pieces, polyTol(pieces))
   }
 
@@ -1314,6 +1183,16 @@ object EraseArcs {
     }
   }
 
+  /** Surviving area of one zone group: Σ signed area of its
+    * [[polyZonePieces]], floored at 0 (a fully erased zone has no
+    * pieces and reads 0). */
+  private val zoneArea = udf { (outer: Seq[(Double, Double)],
+      holes: Seq[Seq[(Double, Double)]], rings: Seq[Seq[(Double, Double)]],
+      disks: Seq[(Double, Double)], r: Double) =>
+    math.max(0.0,
+      polyZonePieces(outer, holes ++ rings, disks, r).map(_.signedArea).sum)
+  }
+
   /** [[boundingCircle]] of a `vertices` column as a NOT NULL struct
     * (_1, _2, _3) = (cx, cy, rad): a join on non-null columns infers no
     * IS NOT NULL filters, which would copy the vertex expressions into
@@ -1327,40 +1206,15 @@ object EraseArcs {
       col("y_ft").as("oy"), lit(r).as("rad"),
       typedLit(Seq.empty[(Double, Double)]).as("vertices"))
 
-  /** Ring members of the ring plan: one per `vertices` ring, as given,
-    * with its [[boundingCircle]] as (ox, oy, rad). Re-wound, rotated or
+  /** Ring members: one per `vertices` ring, as given, with its
+    * [[boundingCircle]] as (ox, oy, rad). Re-wound, rotated or
     * repeated copies of one polygon stay separate rows;
-    * [[polyZoneRings]] canonicalizes and deduplicates each zone's
+    * [[polyZonePieces]] canonicalizes and deduplicates each zone's
     * rings, so they still erase once. */
   def ringMembers(subs: DataFrame): DataFrame =
     subs.select(ringCircle(col("vertices")).as("c"), col("vertices"))
       .select(lit("ring").as("kind"), col("c._1").as("ox"),
         col("c._2").as("oy"), col("c._3").as("rad"), col("vertices"))
-
-  /** Ring members for the area plans: one per DISTINCT canonical ring
-    * ([[canonicalRing]]), deduplicated before any join — the neighbor
-    * self-join ([[neighborGroups]]) tells a member from its neighbors
-    * by its vertices, so two copies of one polygon would cover each
-    * other's edges. Columns: [[memberCols]], the bounding circle being
-    * the bbox's. */
-  private def distinctRingMembers(subs: DataFrame): DataFrame = {
-    import subs.sparkSession.implicits._
-    val xs = transform(col("vertices"), v => v.getField("_1"))
-    val ys = transform(col("vertices"), v => v.getField("_2"))
-    val (x0, y0) = (array_min(xs), array_min(ys))
-    val (x1, y1) = (array_max(xs), array_max(ys))
-    subs.select(col("vertices")).as[Seq[(Double, Double)]]
-      .map(canonicalRing(_)).toDF("vertices").dropDuplicates("vertices")
-      .select(lit("ring").as("kind"), ((x0 + x1) / 2).as("ox"),
-        ((y0 + y1) / 2).as("oy"),
-        (sqrt(Geo.dist2(x0, y0, x1, y1)) / 2).as("rad"), col("vertices"),
-        x0.as("x0"), y0.as("y0"), x1.as("x1"), y1.as("y1"))
-  }
-
-  /** Columns of an area-plan member frame (see [[Member]]) plus its
-    * bounding box. */
-  private val memberCols =
-    Seq("kind", "ox", "oy", "rad", "vertices", "x0", "y0", "x1", "y1")
 
   /** `members` assigned to every zone of `zones` (zone_id, vertices)
     * whose outer ring's bounding circle meets the member's (ox, oy, rad)
@@ -1377,56 +1231,9 @@ object EraseArcs {
       .select(col("zone_id") +: members.columns.map(col): _*)
   }
 
-  /** The grid-cell self-join of a zone-assigned member frame, grouped
-    * per (zone, member): each group carries the member's
-    * bbox-overlapping NEIGHBORS (the cell explode can deliver a
-    * neighbor once per shared cell — consumers take `distinct`;
-    * left_outer keeps neighbor-free members). Self-pair exclusion and
-    * grouping key on the member ITSELF (ring vertices / disk center) —
-    * exact, no hash-collision failure mode. A pair must also pass the
-    * bounding-circle test (for two disks: centers closer than r + r').
-    * The grid cell is the largest member bbox extent (at least 1 ft),
-    * so a member spans at most 2×2 cells; it is read with one small
-    * agg, which also fills the caller's cache of `zf` once, before the
-    * plan's readers of it run. Used by the polygon subtrahend area
-    * plan ([[eraseAreaPolySub]]).
-    */
-  private def neighborGroups(spark: SparkSession, zf: DataFrame)
-      : org.apache.spark.sql.KeyValueGroupedDataset[
-        (Int, Member), (Int, Member, Option[Member])] = {
-    import spark.implicits._
-    val cell = math.max(1.0, Option(zf
-      .agg(max(greatest(col("x1") - col("x0"), col("y1") - col("y0"))))
-      .head().get(0)).map(_.asInstanceOf[Double]).getOrElse(1.0))
-    def withCells(df: DataFrame): DataFrame = df
-      .withColumn("cx", explode(sequence(
-        floor(col("x0") / cell), floor(col("x1") / cell))))
-      .withColumn("cy", explode(sequence(
-        floor(col("y0") / cell), floor(col("y1") / cell))))
-    val right = withCells(zf).select(
-      (("zone_id" +: memberCols) ++ Seq("cx", "cy"))
-        .map(c => col(c).as("r" + c)): _*)
-    def member(p: String) = struct(
-      Seq("kind", "ox", "oy", "rad", "vertices").map(c => col(p + c).as(c)): _*)
-    withCells(zf).join(right,
-        col("zone_id") === col("rzone_id") && col("cx") === col("rcx") &&
-          col("cy") === col("rcy") &&
-          !(col("vertices") === col("rvertices") &&
-            col("ox") === col("rox") && col("oy") === col("roy")) &&
-          col("rx0") <= col("x1") && col("x0") <= col("rx1") &&
-          col("ry0") <= col("y1") && col("y0") <= col("ry1") &&
-          Geo.dist2(col("ox"), col("oy"), col("rox"), col("roy"))
-            < (col("rad") + col("rrad")) * (col("rad") + col("rrad")),
-        "left_outer")
-      .select(col("zone_id"), member(""),
-        when(col("rzone_id").isNotNull, member("r")))
-      .as[(Int, Member, Option[Member])]
-      .groupByKey(r => (r._1, r._2))
-  }
-
-  /** OUTPUT RINGS per polygon zone (see [[polyZoneRings]]) — the
-    * distributed plan for every polygon-zone ring query: one action,
-    * one exchange. `zones` holds (zone_id, vertices[, holes]);
+  /** One group per polygon zone — the step both polygon-zone plans
+    * ([[polyZoneRingsPerZone]], [[polyZoneAreaPerZone]]) read: one
+    * action, one exchange. `zones` holds (zone_id, vertices[, holes]);
     * `members` is a [[diskMembers]] frame (one radius) or a
     * [[ringMembers]] frame.
     *
@@ -1436,32 +1243,21 @@ object EraseArcs {
     *     carries its outer ring and holes;
     *   - seeds ∪ members take ONE range exchange on zone_id, and one
     *     group per zone collects its outer ring, holes, ring members
-    *     and disk centers;
-    *   - the driver kernel [[polyZoneRings]] runs once per zone group
-    *     and its rows are exploded. The kernel canonicalizes and
-    *     deduplicates the members (a duplicated, re-wound or rotated
-    *     footprint erases once); a zone no member touches still emits
-    *     its full rings from its seed.
+    *     and disk centers — so a zone no member touches still has its
+    *     group.
     *
-    * The range partitioning satisfies the callers' final
-    * `orderBy(zone_id, ring_id, piece_seq)`, so that sort is local —
-    * no second exchange, and the range sampler reads seeds and
-    * members, never the kernel's output. Building the plan runs no
-    * Spark job and caches nothing (no zone-catalog collect, no
-    * cell-size agg, no cached member frame to unpersist later).
+    * The range partitioning satisfies the callers' final sort on
+    * zone_id, so that sort is local — no second exchange, and the
+    * range sampler reads seeds and members, never a kernel's output.
+    * Building the plan runs no Spark job and caches nothing.
     *
-    * Scale trade (SCALE.md): the stitch is zone-serial in any form —
-    * one task chains a zone's pieces — so per-zone memory and the last
-    * stage's parallelism (one task per zone) are unchanged from the
-    * earlier per-member piece plan. Given up: spreading ONE dense
-    * zone's piece computation over several tasks; the kernel's bbox
-    * grid ([[bboxIndex]]) keeps that work near-linear in the zone's
-    * members. Rows: zone_id, ring_id, piece_seq, kind ("zone" / "sub"
-    * / "arc"), x1..y2, arc center/radius/degree window (NULL on line
-    * pieces), ring_area_sqft.
+    * Scale trade (SCALE.md): one task runs a zone's kernel, so the last
+    * stage's parallelism is one task per zone. Given up: spreading ONE
+    * dense zone's piece computation over several tasks; the kernel's
+    * bbox grid ([[bboxIndex]]) keeps that work near-linear in the
+    * zone's members.
     */
-  def polyZoneRingsPerZone(spark: SparkSession, zones: DataFrame,
-      members: DataFrame): DataFrame = {
+  private def zoneGroups(zones: DataFrame, members: DataFrame): DataFrame = {
     val seeds = zones.select(col("zone_id").cast("int").as("zone_id"),
       col("vertices").as("outer"),
       (if (zones.columns.contains("holes")) col("holes")
@@ -1477,184 +1273,35 @@ object EraseArcs {
         collect_list(when(isDisk,
           struct(col("ox").as("_1"), col("oy").as("_2")))).as("disks"),
         coalesce(max(when(isDisk, col("rad"))), lit(0.0)).as("r"))
-      .select(col("zone_id"), explode(zoneRingRows(col("outer"),
-        col("holes"), col("rings"), col("disks"), col("r"))).as("p"))
+  }
+
+  /** The kernel arguments of a [[zoneGroups]] row. */
+  private val groupArgs =
+    Seq("outer", "holes", "rings", "disks", "r").map(col)
+
+  /** OUTPUT RINGS per polygon zone (see [[polyZoneRings]]): the kernel
+    * runs once per [[zoneGroups]] group and its rows are exploded; a
+    * zone no member touches emits its full rings from its seed. The
+    * stitch is zone-serial in any form — one task chains a zone's
+    * pieces. Rows: zone_id, ring_id, piece_seq, kind ("zone" / "sub" /
+    * "arc"), x1..y2, arc center/radius/degree window (NULL on line
+    * pieces), ring_area_sqft.
+    */
+  def polyZoneRingsPerZone(spark: SparkSession, zones: DataFrame,
+      members: DataFrame): DataFrame =
+    zoneGroups(zones, members)
+      .select(col("zone_id"), explode(zoneRingRows(groupArgs: _*)).as("p"))
       .select(col("zone_id"), col("p.*"))
-  }
 
-  /** Surviving area per GENERAL (concave, with holes) polygon zone
-    * under POLYGON subtrahends — the DISTRIBUTED plan, closing the
-    * last Erase input-domain cell ({concave zones} × {polygon erase
-    * features}; arcpy's Erase accepts any feature-class pair,
-    * reference GSheetsETL_Lab2.py:133). Distribution is at TRIANGLE
-    * granularity, finer than [[eraseAreaConcave]]'s per-zone groups:
-    * ear-clip each zone's outer and hole rings driver-side (the zone
-    * catalog is cluster-constant — SCALE.md), broadcast the triangle
-    * bounding circles, assign canonical deduped footprints to the
-    * triangles they can touch, and evaluate the CONVEX kernel
-    * ([[erasedAreaPolySub]]) independently per (zone, triangle) group
-    * — so a zone whose footprint over-coverage would serialize one
-    * task (the r12 sf10 lesson on the convex per-zone plan, 262 s)
-    * splits across its ~12 triangles, each group bounded by the
-    * TRIANGLE's local footprint density. Per-triangle areas are a
-    * bounded catalog (zones × triangles rows — never footprints), so
-    * the driver combine Σ sign·tri (outer +, holes −, floor 0) is the
-    * same collect class as the zone catalog itself. Exactness: the
-    * triangles PARTITION each ring ([[triangulate]]), areas add; a
-    * footprint outside a triangle's candidate circle contributes
-    * exactly 0.0 to it, so candidate pruning is lossless up to float
-    * re-association (GeoSpec pins the distributed == replay parity).
+  /** Surviving area per polygon zone, one (zone_id, area_sqft) row per
+    * zone of `zones`: Σ signed area of the [[polyZonePieces]] of each
+    * [[zoneGroups]] group, floored at 0. A fully erased zone reads 0; a
+    * zone no member touches keeps its exact area (outer minus holes).
     */
-  def eraseAreaConcaveSub(spark: SparkSession, zones: DataFrame,
-      subs: DataFrame): DataFrame = {
-    import spark.implicits._
-    def shoelace(vs: Seq[(Double, Double)]): Double =
-      math.abs(vs.indices.map { i =>
-        val (x1, y1) = vs(i); val (x2, y2) = vs((i + 1) % vs.size)
-        x1 * y2 - x2 * y1
-      }.sum) / 2
-    val zcat = zones.select(col("zone_id").cast("int"),
-        col("vertices"), col("holes"))
-      .as[(Int, Seq[(Double, Double)], Seq[Seq[(Double, Double)]])]
-      .collect().toSeq
-    // triangle catalog: (zone, tri_id, sign, vertices) — outer-ring
-    // triangles count +, hole-ring triangles count − (holes ⊆ outer
-    // and pairwise disjoint: the erasedAreaConcaveSub identity)
-    val tcat: Seq[(Int, Int, Int, Seq[(Double, Double)])] =
-      zcat.flatMap { case (z, vs, hs) =>
-        (triangulate(vs).map(t => (1, t)) ++
-          hs.flatMap(h => triangulate(h).map(t => (-1, t))))
-          .zipWithIndex.map { case ((sgn, t), i) => (z, i, sgn, t) }
-      }
-    val bound = tcat.map { case (z, i, _, t) =>
-      val (cx, cy, rad) = boundingCircle(t)
-      (z, i, cx, cy, rad)
-    }.toDF("zone_id", "tri_id", "bcx", "bcy", "brad")
-    // triangle vertices ride task closures (bounded: zones × ~12 tris
-    // of 3 vertices — the zEdgesMap convention)
-    val tris = tcat.map { case (z, i, _, t) => (z, i) -> t }.toMap
-    val pairs = distinctRingMembers(subs)
-      .join(broadcast(bound),
-        Geo.dist2(col("ox"), col("oy"), col("bcx"), col("bcy"))
-          < (col("brad") + col("rad")) * (col("brad") + col("rad")))
-      .select(col("zone_id").cast("int"), col("tri_id").cast("int"),
-        col("vertices"))
-      .as[(Int, Int, Seq[(Double, Double)])]
-    val touched = pairs.groupByKey(r => (r._1, r._2))
-      .mapGroups { (k: (Int, Int),
-          rows: Iterator[(Int, Int, Seq[(Double, Double)])]) =>
-        (k._1, k._2, erasedAreaPolySub(tris(k), rows.map(_._3).toSeq))
-      }
-      .collect() // bounded: zones × triangles, areas only
-      .map(r => (r._1, r._2) -> r._3).toMap
-    val byZone = tcat.groupBy(_._1)
-    val all = zcat.sortBy(_._1).map { case (z, _, _) =>
-      val s = byZone(z).map { case (_, i, sgn, t) =>
-        sgn * touched.getOrElse((z, i), shoelace(t))
-      }.sum
-      (z, math.max(0.0, s))
-    }
-    all.toDF("zone_id", "area_sqft")
-  }
-
-  /** Surviving area per CONVEX polygon zone under POLYGON subtrahends
-    * (see [[erasedAreaPolySub]]) — the DISTRIBUTED plan. A first cut
-    * ran the whole JVM kernel per zone inside `mapGroups`; at sf10 the
-    * generator's opt-out density gives ~30× footprint over-coverage
-    * per zone and that single task serialized ~10⁴ footprints' pairwise
-    * interval work (measured 262 s). The area decomposes exactly into
-    * per-piece terms, so the plan distributes them:
-    *
-    *   (a) per (zone, zone-edge): covered t-intervals are produced by a
-    *       flatMap over the zone-assigned footprint frame (one row per
-    *       footprint), merged per edge in a 4-groups-per-zone
-    *       mapGroups — interval endpoints, never rings, shuffle here;
-    *   (b) per (zone, footprint): the footprint's reversed-Green
-    *       contribution needs only its bbox-overlapping NEIGHBORS — the
-    *       grid-cell self-join ([[neighborGroups]]) bounds the group to
-    *       local overlap density, and every (zone, footprint) group
-    *       computes independently across the cluster.
-    *
-    * A footprint covering part of another's edge inside the zone has
-    * interior points in the zone, so it is in the zone's touch set —
-    * the zone-local self-join sees every true coverer (non-coverers in
-    * the bbox superset contribute empty interval lists; the merged
-    * result is identical to the kernel's). Per-piece arithmetic is the
-    * kernel's own ([[subContribution]]/[[zoneEdgeGreen]], shared code);
-    * only float summation ORDER across footprints differs, and GeoSpec
-    * pins the wrapper against a driver-side kernel replay at 1e-9
-    * relative. Canonical duplicate rings are dropped before the join
-    * (duplicates erase once — same load-bearing distinct as the
-    * kernel). Zones with no candidate footprint keep the exact
-    * shoelace area.
-    */
-  def eraseAreaPolySub(spark: SparkSession, zones: DataFrame,
-      subs: DataFrame): DataFrame = {
-    import spark.implicits._
-    def shoelace(vs: Seq[(Double, Double)]): Double =
-      math.abs(vs.indices.map { i =>
-        val (x1, y1) = vs(i); val (x2, y2) = vs((i + 1) % vs.size)
-        x1 * y2 - x2 * y1
-      }.sum) / 2
-    val zcat = zones.select(col("zone_id").cast("int"), col("vertices"))
-      .as[(Int, Seq[(Double, Double)])]
-      .collect().toSeq
-    // zone edges (bounded catalog) ride task closures
-    val zEdgesMap = zcat.map { case (z, vs) => z -> convexZoneEdges(vs) }.toMap
-    val zf = assignMembers(zcat.toDF("zone_id", "vertices"),
-      distinctRingMembers(subs))
-    zf.cache()
-    // ---- (a) zone-edge coverage intervals, merged per (zone, edge) --
-    val aEdge = zf.select(col("zone_id"), col("vertices"))
-      .as[(Int, Seq[(Double, Double)])]
-      .flatMap { case (z, ring) =>
-        zEdgesMap(z).zipWithIndex.flatMap {
-          case (((ax, ay), (bx, by)), ei) =>
-            segInPolyIntervals(ax, ay, bx, by, ring)
-              .map { case (s, e) => (z, ei, s, e) }
-        }
-      }
-      .groupByKey(r => (r._1, r._2))
-      .mapGroups { (key: (Int, Int), rows: Iterator[(Int, Int, Double, Double)]) =>
-        val (z, ei) = key
-        val ((ax, ay), (bx, by)) = zEdgesMap(z)(ei)
-        (z, ei, zoneEdgeGreen(ax, ay, bx, by,
-          mergeIntervals(rows.map(r => (r._3, r._4)).toSeq)))
-      }
-      .collect() // bounded: zones × edges
-    // keyed on the zones with ANY candidate footprint (a zone whose
-    // footprints are strictly interior yields no (a) intervals but
-    // still has (b) holes); untouched edges keep their full Green term
-    val touchedZones = zf.select(col("zone_id")).distinct()
-      .as[Int].collect()
-    val aEdgeGot = aEdge.map(r => (r._1, r._2) -> r._3).toMap
-    val aByZone = touchedZones.map { z =>
-      z -> zEdgesMap(z).zipWithIndex.map { case (((ax, ay), (bx, by)), ei) =>
-        aEdgeGot.getOrElse((z, ei), zoneEdgeGreen(ax, ay, bx, by, Nil))
-      }.sum
-    }.toMap
-    // ---- (b) per-footprint contributions via a grid-cell self-join --
-    val bRows = neighborGroups(spark, zf)
-      .mapGroups { (key: (Int, Member),
-          rows: Iterator[(Int, Member, Option[Member])]) =>
-        val neighbors = rows.flatMap(_._3).map(_.vertices).toSeq.distinct
-        (key._1, subContribution(zEdgesMap(key._1), key._2.vertices,
-          _ => neighbors))
-      }
-      .groupByKey(_._1)
-      .mapGroups((z: Int, rows: Iterator[(Int, Double)]) =>
-        (z, rows.map(_._2).sum))
-      .collect().toMap
-    zf.unpersist()
-    val all = zcat.sortBy(_._1).map { case (z, vs) =>
-      aByZone.get(z) match {
-        case Some(aPart) =>
-          (z, math.max(0.0, aPart + bRows.getOrElse(z, 0.0)))
-        case None => (z, shoelace(vs))
-      }
-    }
-    all.toDF("zone_id", "area_sqft")
-  }
+  def polyZoneAreaPerZone(spark: SparkSession, zones: DataFrame,
+      members: DataFrame): DataFrame =
+    zoneGroups(zones, members)
+      .select(col("zone_id"), zoneArea(groupArgs: _*).as("area_sqft"))
 
   /** One directed boundary piece of an erased-zone output ring
     * (coordinates RELATIVE to the zone center): a circular arc of the

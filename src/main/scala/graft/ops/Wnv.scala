@@ -412,9 +412,12 @@ object Wnv {
     // erase features). None has a DuckDB twin: the arc terms are
     // transcendental, and the clipping/stitching algorithms have no SQL
     // form. GeoSpec/GeoPropertySpec pin the kernels (hand cases, grid
-    // sampling, winding invariance, n-gon convergence, conservation
-    // between independent kernels, the distributed == driver replay)
-    // and perfbench/reference.json pins the outputs. Floats are r6.
+    // sampling, winding invariance, n-gon convergence, Σ ring area ==
+    // the independent area kernels) and each distributed area against
+    // a driver replay of an independent area kernel;
+    // perfbench/reference.json pins the outputs. The polygon-zone area
+    // and ring queries sum and stitch the same pieces, so their
+    // agreement checks only the stitch. Floats are r6.
 
     // Surviving boundary arcs of each zone circle, degrees.
     "wnv_erase_arcs" -> ((s: SparkSession, d: String) => {
@@ -430,17 +433,11 @@ object Wnv {
 
     // Surviving area of each diamond zone under the buffer disks.
     "wnv_erase_poly" -> ((s: SparkSession, d: String) =>
-      graft.geo.EraseArcs.eraseAreaPoly(s, polygonZones(s, d),
-          optOut(s, d).select(col("x_ft"), col("y_ft")), BufferFt)
-        .select(col("zone_id"), XF.r6(col("area_sqft")).as("area_sqft"))
-        .orderBy(col("zone_id"))),
+      zoneAreas(s, polygonZones(s, d), diskMembers(s, d))),
 
     // Surviving area of each diamond zone under the parcel footprints.
     "wnv_erase_poly_sub" -> ((s: SparkSession, d: String) =>
-      graft.geo.EraseArcs.eraseAreaPolySub(s, polygonZones(s, d),
-          parcelFootprints(s, d))
-        .select(col("zone_id"), XF.r6(col("area_sqft")).as("area_sqft"))
-        .orderBy(col("zone_id"))),
+      zoneAreas(s, polygonZones(s, d), footprintMembers(s, d))),
 
     // SELECTION semantics of the same polygon-subtrahend erase —
     // oracle-checked (rational rotation, see erasePolySubSelection).
@@ -454,37 +451,28 @@ object Wnv {
     // edges reversed).
     "wnv_erase_poly_sub_rings" -> ((s: SparkSession, d: String) =>
       lineRings(graft.geo.EraseArcs.polyZoneRingsPerZone(s,
-        polygonZones(s, d),
-        graft.geo.EraseArcs.ringMembers(parcelFootprints(s, d))))),
+        polygonZones(s, d), footprintMembers(s, d)))),
 
     // Surviving area of each star-with-hole zone under the buffer disks.
     "wnv_erase_concave" -> ((s: SparkSession, d: String) =>
-      graft.geo.EraseArcs.eraseAreaConcave(s, starZones(s, d),
-          optOut(s, d).select(col("x_ft"), col("y_ft")), BufferFt)
-        .select(col("zone_id"), XF.r6(col("area_sqft")).as("area_sqft"))
-        .orderBy(col("zone_id"))),
+      zoneAreas(s, starZones(s, d), diskMembers(s, d))),
 
     // Surviving area of each star-with-hole zone under the parcel
     // footprints.
     "wnv_erase_concave_sub" -> ((s: SparkSession, d: String) =>
-      graft.geo.EraseArcs.eraseAreaConcaveSub(s, starZones(s, d),
-          parcelFootprints(s, d))
-        .select(col("zone_id"), XF.r6(col("area_sqft")).as("area_sqft"))
-        .orderBy(col("zone_id"))),
+      zoneAreas(s, starZones(s, d), footprintMembers(s, d))),
 
     // Output rings of (star − hole − parcel footprints): the zone's
     // hole is one more ring member, so its edges appear reversed.
     "wnv_erase_concave_sub_rings" -> ((s: SparkSession, d: String) =>
       lineRings(graft.geo.EraseArcs.polyZoneRingsPerZone(s,
-        starZones(s, d),
-        graft.geo.EraseArcs.ringMembers(parcelFootprints(s, d))))),
+        starZones(s, d), footprintMembers(s, d)))),
 
     // Output rings of (star − hole − buffer disks) — the reference's
     // literal Erase shape: rings alternate straight pieces and CW arcs.
     "wnv_erase_poly_disk_rings" -> ((s: SparkSession, d: String) =>
       graft.geo.EraseArcs.polyZoneRingsPerZone(s, starZones(s, d),
-          graft.geo.EraseArcs.diskMembers(
-            optOut(s, d).select(col("x_ft"), col("y_ft")), BufferFt))
+          diskMembers(s, d))
         .select(col("zone_id"), col("ring_id"), col("piece_seq"),
           col("kind"), XF.r6(col("x1_ft")).as("x1_ft"),
           XF.r6(col("y1_ft")).as("y1_ft"),
@@ -516,6 +504,23 @@ object Wnv {
         .orderBy(col("zone_id"), col("ring_id"), col("piece_seq")))
   )
 
+  /** The opt-out buffer disks as erase members. */
+  private def diskMembers(s: SparkSession, d: String): DataFrame =
+    graft.geo.EraseArcs.diskMembers(
+      optOut(s, d).select(col("x_ft"), col("y_ft")), BufferFt)
+
+  /** The parcel footprints as erase members. */
+  private def footprintMembers(s: SparkSession, d: String): DataFrame =
+    graft.geo.EraseArcs.ringMembers(parcelFootprints(s, d))
+
+  /** Surviving area per polygon zone, r6, ordered by zone — a local
+    * sort: the plan is already range-partitioned on zone_id. */
+  private def zoneAreas(s: SparkSession, zones: DataFrame,
+      members: DataFrame): DataFrame =
+    graft.geo.EraseArcs.polyZoneAreaPerZone(s, zones, members)
+      .select(col("zone_id"), XF.r6(col("area_sqft")).as("area_sqft"))
+      .orderBy(col("zone_id"))
+
   /** The 9 columns of a line-only ring query (no arc columns), r6,
     * ordered by zone, ring and piece. */
   private def lineRings(rings: DataFrame): DataFrame =
@@ -528,17 +533,12 @@ object Wnv {
       // a local sort: the plan is already range-partitioned on zone_id
       .orderBy(col("zone_id"), col("ring_id"), col("piece_seq"))
 
-  /** Diamond (4-vertex convex ring) form of the zone catalog: vertices
-    * at (cx±R, cy), (cx, cy±R) — rational coordinates, inscribed in
-    * the circular zone. The polygon-Erase input
-    * ([[graft.geo.EraseArcs.eraseAreaPoly]]).
-    */
   /** Concave star-with-hole form of the zone catalog: an 8-vertex
     * 4-point star (axis tips at ±R, diagonal inner vertices at ±0.35R
     * — concave at every inner vertex) and ONE square hole of
     * half-width 0.15R at the center (inside the star's 0.474R
     * inradius). Rational coordinates throughout. The general-polygon
-    * Erase input ([[graft.geo.EraseArcs.eraseAreaConcave]]).
+    * Erase input ([[graft.geo.EraseArcs.polyZoneAreaPerZone]]).
     */
   def starZones(spark: SparkSession, dir: String): DataFrame = {
     def v(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column) =
@@ -622,6 +622,11 @@ object Wnv {
       .drop("gx", "gy")
   }
 
+  /** Diamond (4-vertex convex ring) form of the zone catalog: vertices
+    * at (cx±R, cy), (cx, cy±R) — rational coordinates, inscribed in
+    * the circular zone. The convex polygon-Erase input
+    * ([[graft.geo.EraseArcs.polyZoneAreaPerZone]]).
+    */
   def polygonZones(spark: SparkSession, dir: String): DataFrame =
     zones(spark, dir).select(col("zone_id"),
       array(

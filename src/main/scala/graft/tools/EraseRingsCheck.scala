@@ -8,21 +8,29 @@ import graft.ops.Wnv
 /** Correctness check of the polygon-zone erase outputs in a
   * `graft.Verify` dump, at any scale:
   *
+  *   - each area query: the distributed areas vs a driver-side replay
+  *     of an independent area kernel on each zone's candidates —
+  *     `wnv_erase_poly` / `wnv_erase_concave`: `erasedAreaPoly` /
+  *     `erasedAreaConcave` on the zone's candidate disks;
+  *     `wnv_erase_poly_sub` / `wnv_erase_concave_sub`:
+  *     `erasedAreaPolySub` / `erasedAreaConcaveSub` on its candidate
+  *     footprints;
   *   - each ring query: `piece_seq` dense per (zone, ring); every ring
   *     endpoint-closed (each piece ends where the next starts, last →
   *     first) within the r6 output quantum; Σ ring signed areas per
   *     zone == its paired area query (`poly_sub_rings` ↔ `poly_sub`,
   *     `concave_sub_rings` ↔ `concave_sub`, `poly_disk_rings` ↔
-  *     `concave`) — rings and areas come from independent kernels;
-  *   - `wnv_erase_poly_sub` / `wnv_erase_concave_sub`: the distributed
-  *     areas vs a driver-side replay of `erasedAreaPolySub` /
-  *     `erasedAreaConcaveSub` on each zone's candidate footprints.
+  *     `concave`). Rings and areas sum the same boundary pieces, so
+  *     this checks the stitch; the replays above check the geometry.
   *
   * Usage: runMain graft.tools.EraseRingsCheck <sfDir> <verifyOutDir>
   * Prints one JSON line per query; exits 1 on any failure.
   */
 object EraseRingsCheck {
   private type Ring = Seq[(Double, Double)]
+  /** A candidate member: (ox, oy, vertices) — a disk's center, or a
+    * footprint's bounding-circle center and its ring. */
+  private type Cand = (Double, Double, Ring)
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -35,13 +43,25 @@ object EraseRingsCheck {
         .map(r => r.getInt(0) -> r.getDouble(1)).toMap
     val diamonds = zoneCat(spark, Wnv.polygonZones(spark, sfDir))
     val stars = zoneCat(spark, Wnv.starZones(spark, sfDir))
+    val r = Wnv.BufferFt
+    val disks = EraseArcs.diskMembers(
+      Wnv.optOut(spark, sfDir).select(col("x_ft"), col("y_ft")), r)
+    val subs = EraseArcs.ringMembers(Wnv.parcelFootprints(spark, sfDir))
+    def centers(ms: Seq[Cand]) = ms.map(m => (m._1, m._2))
+    def footprints(ms: Seq[Cand]) = ms.map(_._3)
     val results = Seq(
-      replay("wnv_erase_poly_sub", areas("wnv_erase_poly_sub"),
-        diamonds, nearSubs(spark, sfDir, diamonds))(
-        (vs, _, near) => EraseArcs.erasedAreaPolySub(vs, near)),
-      replay("wnv_erase_concave_sub", areas("wnv_erase_concave_sub"),
-        stars, nearSubs(spark, sfDir, stars))(
-        EraseArcs.erasedAreaConcaveSub),
+      replay("wnv_erase_poly", areas("wnv_erase_poly"), diamonds,
+        near(spark, diamonds, disks))(
+        (vs, _, ms) => EraseArcs.erasedAreaPoly(vs, centers(ms), r)),
+      replay("wnv_erase_concave", areas("wnv_erase_concave"), stars,
+        near(spark, stars, disks))(
+        (vs, hs, ms) => EraseArcs.erasedAreaConcave(vs, hs, centers(ms), r)),
+      replay("wnv_erase_poly_sub", areas("wnv_erase_poly_sub"), diamonds,
+        near(spark, diamonds, subs))(
+        (vs, _, ms) => EraseArcs.erasedAreaPolySub(vs, footprints(ms))),
+      replay("wnv_erase_concave_sub", areas("wnv_erase_concave_sub"), stars,
+        near(spark, stars, subs))(
+        (vs, hs, ms) => EraseArcs.erasedAreaConcaveSub(vs, hs, footprints(ms))),
       rings("wnv_erase_poly_sub_rings", read("wnv_erase_poly_sub_rings"),
         areas("wnv_erase_poly_sub")),
       rings("wnv_erase_concave_sub_rings",
@@ -66,30 +86,32 @@ object EraseRingsCheck {
       .as[(Int, Ring, Seq[Ring])].collect().toSeq
   }
 
-  /** Footprints per zone under the plans' bounding-circle candidate
-    * rule, assigned distributed: only zone-local rings reach the
-    * driver. */
-  private def nearSubs(spark: SparkSession, sfDir: String,
-      zs: Seq[(Int, Ring, Seq[Ring])]): Map[Int, Seq[Ring]] = {
+  /** Members per zone as (ox, oy, vertices), under the plans'
+    * bounding-circle candidate rule, assigned distributed: only
+    * zone-local members reach the driver. */
+  private def near(spark: SparkSession, zs: Seq[(Int, Ring, Seq[Ring])],
+      members: DataFrame): Map[Int, Seq[Cand]] = {
     import spark.implicits._
     val bound = zs.map { case (z, vs, _) =>
       val cx = vs.map(_._1).sum / vs.size
       val cy = vs.map(_._2).sum / vs.size
       (z, cx, cy, vs.map { case (x, y) => math.hypot(x - cx, y - cy) }.max)
     }.toDF("z", "bcx", "bcy", "brad")
-    EraseArcs.ringMembers(Wnv.parcelFootprints(spark, sfDir))
-      .join(broadcast(bound),
+    members.join(broadcast(bound),
         Geo.dist2(col("ox"), col("oy"), col("bcx"), col("bcy"))
           < (col("brad") + col("rad")) * (col("brad") + col("rad")))
-      .select(col("z"), col("vertices")).as[(Int, Ring)]
-      .collect().groupBy(_._1).map { case (z, rs) => z -> rs.map(_._2).toSeq }
+      .select(col("z"), col("ox"), col("oy"), col("vertices"))
+      .as[(Int, Double, Double, Ring)].collect()
+      .groupBy(_._1).map { case (z, ms) =>
+        z -> ms.map(m => (m._2, m._3, m._4)).toSeq
+      }
   }
 
   /** Distributed area per zone == the driver kernel's replay, within
     * 1e-9 relative + the r6 output quantum. */
   private def replay(q: String, got: Map[Int, Double],
-      zs: Seq[(Int, Ring, Seq[Ring])], near: Map[Int, Seq[Ring]])(
-      kernel: (Ring, Seq[Ring], Seq[Ring]) => Double)
+      zs: Seq[(Int, Ring, Seq[Ring])], near: Map[Int, Seq[Cand]])(
+      kernel: (Ring, Seq[Ring], Seq[Cand]) => Double)
       : (String, Boolean, Long, String) = {
     val bad = zs.flatMap { case (z, vs, hs) =>
       val want = kernel(vs, hs, near.getOrElse(z, Nil))

@@ -394,7 +394,8 @@ class GeoSpec extends SparkSpec {
     val buffers = graft.ops.Wnv.optOut(spark, sf)
       .select(col("x_ft"), col("y_ft"))
     val r = graft.ops.Wnv.BufferFt
-    val got = EraseArcs.eraseAreaPoly(spark, zones, buffers, r)
+    val got = EraseArcs.polyZoneAreaPerZone(spark, zones,
+        EraseArcs.diskMembers(buffers, r))
       .collect().map(row => row.getInt(0) -> row.getDouble(1)).toMap
     val zs = zones.select(col("zone_id").cast("int"), col("vertices"))
       .collect().map { w =>
@@ -565,7 +566,8 @@ class GeoSpec extends SparkSpec {
     val buffers = graft.ops.Wnv.optOut(spark, sf)
       .select(col("x_ft"), col("y_ft"))
     val r = graft.ops.Wnv.BufferFt
-    val got = EraseArcs.eraseAreaConcave(spark, zones, buffers, r)
+    val got = EraseArcs.polyZoneAreaPerZone(spark, zones,
+        EraseArcs.diskMembers(buffers, r))
       .collect().map(row => row.getInt(0) -> row.getDouble(1)).toMap
     def ring(rows: Seq[org.apache.spark.sql.Row]): Seq[(Double, Double)] =
       rows.map(v => (v.getDouble(0), v.getDouble(1)))
@@ -656,11 +658,13 @@ class GeoSpec extends SparkSpec {
       assert(math.abs(got - want) < 1e-6,
         s"kernel: duplicate variant not canonicalized (got $got, want $want)")
     }
-    // distributed path: same canonicalization before dropDuplicates
+    // distributed path: the per-zone kernel canonicalizes and
+    // deduplicates the zone's rings
     import spark.implicits._
     val zones = Seq((1, square)).toDF("zone_id", "vertices")
     val subs = Seq(base, rotated, rewound).toDF("vertices")
-    val got = EraseArcs.eraseAreaPolySub(spark, zones, subs)
+    val got = EraseArcs.polyZoneAreaPerZone(spark, zones,
+        EraseArcs.ringMembers(subs))
       .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
     assert(math.abs(got(1) - want) < 1e-6,
       s"distributed: duplicate variants not canonicalized (got ${got(1)})")
@@ -758,7 +762,8 @@ class GeoSpec extends SparkSpec {
     import graft.geo.EraseArcs
     val zones = graft.ops.Wnv.polygonZones(spark, sf)
     val subs = graft.ops.Wnv.parcelFootprints(spark, sf)
-    val got = EraseArcs.eraseAreaPolySub(spark, zones, subs)
+    val got = EraseArcs.polyZoneAreaPerZone(spark, zones,
+        EraseArcs.ringMembers(subs))
       .collect().map(row => row.getInt(0) -> row.getDouble(1)).toMap
     def ring(rows: Seq[org.apache.spark.sql.Row]): Seq[(Double, Double)] =
       rows.map(v => (v.getDouble(0), v.getDouble(1)))
@@ -794,7 +799,8 @@ class GeoSpec extends SparkSpec {
     import graft.geo.EraseArcs
     val zones = graft.ops.Wnv.starZones(spark, sf)
     val subs = graft.ops.Wnv.parcelFootprints(spark, sf)
-    val got = EraseArcs.eraseAreaConcaveSub(spark, zones, subs)
+    val got = EraseArcs.polyZoneAreaPerZone(spark, zones,
+        EraseArcs.ringMembers(subs))
       .collect().map(row => row.getInt(0) -> row.getDouble(1)).toMap
     def ring(rows: Seq[org.apache.spark.sql.Row]): Seq[(Double, Double)] =
       rows.map(v => (v.getDouble(0), v.getDouble(1)))
@@ -829,6 +835,29 @@ class GeoSpec extends SparkSpec {
       assert(got(z) <= ringArea(vs) - hs.map(ringArea).sum + 1e-6)
       assert(got(z) >= -1e-12)
     }
+  }
+
+  test("polygon-zone area: a wholly covered zone reads 0, the others " +
+      "keep their exact area") {
+    import graft.geo.EraseArcs
+    import spark.implicits._
+    def sq(cx: Double, cy: Double, hw: Double) = Seq(
+      (cx - hw, cy - hw), (cx + hw, cy - hw),
+      (cx + hw, cy + hw), (cx - hw, cy + hw))
+    val zones = Seq(
+      (1, sq(0, 0, 1000), Seq(sq(0, 0, 150))),
+      (2, sq(20000, 0, 1000), Seq(sq(20000, 0, 150))),
+      (3, sq(40000, 0, 1000), Seq.empty[Seq[(Double, Double)]]))
+      .toDF("zone_id", "vertices", "holes")
+    // one footprint covers zone 1 (and its hole) entirely
+    val subs = Seq(sq(0, 0, 1500)).toDF("vertices")
+    val got = EraseArcs.polyZoneAreaPerZone(spark, zones,
+        EraseArcs.ringMembers(subs))
+      .collect().map(row => row.getInt(0) -> row.getDouble(1)).toMap
+    assert(got.keySet === Set(1, 2, 3))
+    assert(got(1) === 0.0)
+    assert(math.abs(got(2) - (4e6 - 300.0 * 300.0)) < 1e-6, s"zone 2 ${got(2)}")
+    assert(math.abs(got(3) - 4e6) < 1e-6, s"zone 3 ${got(3)}")
   }
 
   test("concave-zone rings: closure, orientation, conservation vs the " +
