@@ -261,9 +261,11 @@ object Bench {
     // own file — a downstream assembler that only globs BENCH_PART_*
     // or BENCH_FULL* can no longer mix probe timings into committed
     // baselines even if it ignores the "warm" provenance field
-    // (r14 ADVICE #2).
+    // (r14 ADVICE #2). The probe file is gitignored scratch, named
+    // apart from the committed probe records (BENCH_PROBE_sf10.json,
+    // BENCH_PROBE_sf30-heaps.json), which are copied explicitly.
     val fullPath =
-      if (warmTablesOnly) s"BENCH_PROBE_$sfBase.json"
+      if (warmTablesOnly) s"BENCH_PROBE_RUN_$sfBase.json"
       else if (only.nonEmpty) s"BENCH_PART_$sfBase.json" else baselineFile
     val wrote = {
       try {

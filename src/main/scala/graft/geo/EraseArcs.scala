@@ -1,6 +1,6 @@
 package graft.geo
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** TRUE-GEOMETRY slice of the reference's Erase
@@ -9,10 +9,10 @@ import org.apache.spark.sql.functions._
   * spray-zone polygons and hands the resulting geometry to the map.
   * The oracle-checked queries implement Erase's SELECTION semantics
   * (which points survive — `wnv_erase_selection`); this module adds
-  * the GEOMETRIC boundary: for each zone circle, the exact arcs of its
-  * boundary that survive erasure by the buffer disks, via closed-form
-  * circle-circle intersection — no polygon library, no tessellation
-  * error on the arc endpoints beyond IEEE rounding.
+  * the GEOMETRY: the surviving boundary arcs, output rings and areas
+  * of circle, convex and concave zones erased by buffer disks or by
+  * polygon subtrahends, in closed form — no polygon library, no
+  * tessellation error beyond IEEE rounding.
   *
   * Math (law of cosines): a buffer disk (center o, radius r) covers
   * the points p of the zone circle (center c, radius R) with |p−o|<r;
@@ -21,23 +21,18 @@ import org.apache.spark.sql.functions._
   * atan2(o−c). d ≥ R+r covers nothing; d ≤ r−R covers the whole
   * boundary; d ≤ R−r (buffer strictly interior) covers nothing.
   *
-  * Scale shape: zones are a bounded catalog (25 rows; ~10⁵ nationwide
-  * — SCALE.md), so they BROADCAST against the corpus-sized buffer
-  * frame; one filtered join emits only (zone, intersecting-buffer)
-  * pairs, and the per-zone angular-interval merge runs in
-  * `mapGroups` over a frame bounded by zones × local buffer density —
-  * never corpus-sized state. Transcendentals (atan2/acos) keep this
-  * OUT of the hash-compared oracle surface by the same rule as
-  * [[Lcc]]; GeoSpec pins the geometry against hand-built cases and
+  * Scale shape: every erase query is one plan on one shared step
+  * ([[zoneGroups]]). Zones are a bounded catalog (25 rows; ~10⁵
+  * nationwide — SCALE.md), so their bounding circles BROADCAST against
+  * the corpus-sized member frame; one range exchange on zone_id brings
+  * each zone's seed row and its candidate members to one task, and a
+  * per-zone kernel UDF runs on the group — no driver-side collect or
+  * assembly, never corpus-sized state. Transcendentals (atan2/acos)
+  * keep this OUT of the hash-compared oracle surface by the same rule
+  * as [[Lcc]]; GeoSpec pins the geometry against hand-built cases and
   * the 360°-conservation property.
   */
 object EraseArcs {
-
-  /** One surviving boundary arc of a zone circle, angles in RADIANS
-    * counter-clockwise from +x in [0, 2π); `start == 0 && end == 2π`
-    * encodes an untouched full circle.
-    */
-  case class Arc(zone_id: Int, start: Double, end: Double, len: Double)
 
   /** Merge-and-complement of covered angular intervals on one circle.
     * `covered` holds (center bearing θ0 ∈ (−π, π], half-width α ≤ π)
@@ -1216,35 +1211,39 @@ object EraseArcs {
       .select(lit("ring").as("kind"), col("c._1").as("ox"),
         col("c._2").as("oy"), col("c._3").as("rad"), col("vertices"))
 
-  /** `members` assigned to every zone of `zones` (zone_id, vertices)
-    * whose outer ring's bounding circle meets the member's (ox, oy, rad)
-    * circle — an exact superset of the zones the member can touch. The
-    * zones' circles are broadcast; columns: zone_id, then `members`'. */
+  /** `members` assigned to every zone of `zones` whose bounding circle
+    * `b` meets the member's (ox, oy, rad) circle — an exact superset of
+    * the zones the member can touch. The zones' circles are broadcast;
+    * columns: zone_id, then `members`'. */
   private def assignMembers(zones: DataFrame, members: DataFrame)
       : DataFrame = {
-    val bound = zones.select(col("zone_id").cast("int").as("zone_id"),
-      ringCircle(col("vertices")).as("b"))
     val brad = col("b._3")
-    members.join(broadcast(bound),
+    members.join(broadcast(zones.select(col("zone_id"), col("b"))),
         Geo.dist2(col("ox"), col("oy"), col("b._1"), col("b._2"))
           < (brad + col("rad")) * (brad + col("rad")))
       .select(col("zone_id") +: members.columns.map(col): _*)
   }
 
-  /** One group per polygon zone — the step both polygon-zone plans
-    * ([[polyZoneRingsPerZone]], [[polyZoneAreaPerZone]]) read: one
-    * action, one exchange. `zones` holds (zone_id, vertices[, holes]);
-    * `members` is a [[diskMembers]] frame (one radius) or a
-    * [[ringMembers]] frame.
+  /** One group per zone — the step every erase plan reads, polygon
+    * zones ([[polyZoneRingsPerZone]], [[polyZoneAreaPerZone]]) and
+    * circle zones ([[circleZoneArcsPerZone]],
+    * [[circleZoneRingsPerZone]]) alike: one action, one exchange.
+    * `zones` holds an int zone_id, a NOT NULL bounding circle `b`
+    * (_1, _2, _3) = (cx, cy, rad) and the zone's own shape columns (a
+    * polygon's `outer` and `holes`, a circle's `cx_ft`, `cy_ft` and
+    * `radius_ft`); `members` is a [[diskMembers]] frame (one radius) or
+    * a [[ringMembers]] frame.
     *
-    *   - the zone catalog stays in the plan: a broadcast of each zone's
-    *     outer-ring bounding circle assigns members to every zone they
-    *     can touch (an exact superset), and one SEED row per zone
-    *     carries its outer ring and holes;
+    *   - the zone catalog stays in the plan: a broadcast of the zones'
+    *     circles assigns members to every zone they can touch (an exact
+    *     superset; for a circle zone, exactly the disks whose centre
+    *     lies within R + r of its own), and one SEED row per zone
+    *     carries its shape columns;
     *   - seeds ∪ members take ONE range exchange on zone_id, and one
-    *     group per zone collects its outer ring, holes, ring members
-    *     and disk centers — so a zone no member touches still has its
-    *     group.
+    *     group per zone passes each shape column through and collects
+    *     its ring members (`rings`), disk centers (`disks`) and disk
+    *     radius (`r`, 0 without disks) — so a zone no member touches
+    *     still has its group.
     *
     * The range partitioning satisfies the callers' final sort on
     * zone_id, so that sort is local — no second exchange, and the
@@ -1253,29 +1252,36 @@ object EraseArcs {
     *
     * Scale trade (SCALE.md): one task runs a zone's kernel, so the last
     * stage's parallelism is one task per zone. Given up: spreading ONE
-    * dense zone's piece computation over several tasks; the kernel's
-    * bbox grid ([[bboxIndex]]) keeps that work near-linear in the
-    * zone's members.
+    * dense zone's piece computation over several tasks; the kernels'
+    * grids ([[bboxIndex]], [[boundaryDecomp]]'s cell grid) keep that
+    * work near-linear in the zone's members.
     */
   private def zoneGroups(zones: DataFrame, members: DataFrame): DataFrame = {
-    val seeds = zones.select(col("zone_id").cast("int").as("zone_id"),
-      col("vertices").as("outer"),
-      (if (zones.columns.contains("holes")) col("holes")
-       else typedLit(Seq.empty[Seq[(Double, Double)]])).as("holes"))
+    val shape = zones.columns.filterNot(Set("zone_id", "b"))
+      .map(c => first(col(c), ignoreNulls = true).as(c)).toSeq
     val isDisk = col("kind") === "disk" // NULL on seeds: in neither list
     assignMembers(zones, members)
-      .unionByName(seeds, allowMissingColumns = true)
+      .unionByName(zones.drop("b"), allowMissingColumns = true)
       .repartitionByRange(col("zone_id"))
       .groupBy(col("zone_id"))
-      .agg(first(col("outer"), ignoreNulls = true).as("outer"),
-        first(col("holes"), ignoreNulls = true).as("holes"),
+      .agg(shape.head, shape.tail ++ Seq(
         collect_list(when(!isDisk, col("vertices"))).as("rings"),
         collect_list(when(isDisk,
           struct(col("ox").as("_1"), col("oy").as("_2")))).as("disks"),
-        coalesce(max(when(isDisk, col("rad"))), lit(0.0)).as("r"))
+        coalesce(max(when(isDisk, col("rad"))), lit(0.0)).as("r")): _*)
   }
 
-  /** The kernel arguments of a [[zoneGroups]] row. */
+  /** [[zoneGroups]] of polygon zones (zone_id, vertices[, holes]),
+    * bounded by the outer ring's [[ringCircle]]. */
+  private def polyZoneGroups(zones: DataFrame, members: DataFrame)
+      : DataFrame =
+    zoneGroups(zones.select(col("zone_id").cast("int").as("zone_id"),
+      ringCircle(col("vertices")).as("b"), col("vertices").as("outer"),
+      (if (zones.columns.contains("holes")) col("holes")
+       else typedLit(Seq.empty[Seq[(Double, Double)]])).as("holes")),
+      members)
+
+  /** The kernel arguments of a [[polyZoneGroups]] row. */
   private val groupArgs =
     Seq("outer", "holes", "rings", "disks", "r").map(col)
 
@@ -1287,9 +1293,9 @@ object EraseArcs {
     * "arc"), x1..y2, arc center/radius/degree window (NULL on line
     * pieces), ring_area_sqft.
     */
-  def polyZoneRingsPerZone(spark: SparkSession, zones: DataFrame,
-      members: DataFrame): DataFrame =
-    zoneGroups(zones, members)
+  def polyZoneRingsPerZone(zones: DataFrame, members: DataFrame)
+      : DataFrame =
+    polyZoneGroups(zones, members)
       .select(col("zone_id"), explode(zoneRingRows(groupArgs: _*)).as("p"))
       .select(col("zone_id"), col("p.*"))
 
@@ -1298,9 +1304,9 @@ object EraseArcs {
     * [[zoneGroups]] group, floored at 0. A fully erased zone reads 0; a
     * zone no member touches keeps its exact area (outer minus holes).
     */
-  def polyZoneAreaPerZone(spark: SparkSession, zones: DataFrame,
-      members: DataFrame): DataFrame =
-    zoneGroups(zones, members)
+  def polyZoneAreaPerZone(zones: DataFrame, members: DataFrame)
+      : DataFrame =
+    polyZoneGroups(zones, members)
       .select(col("zone_id"), zoneArea(groupArgs: _*).as("area_sqft"))
 
   /** One directed boundary piece of an erased-zone output ring
@@ -1350,105 +1356,78 @@ object EraseArcs {
     stitch(pieces, 1e-6 * (bigR + r))
   }
 
-  /** Output rings per zone (see [[eraseRings]]): one row per ring
-    * piece with absolute coordinates, degree angles, traversal
-    * direction, and the ring's signed area. Same broadcast-join
-    * candidate generation and zone-catalog-bounded driver assembly as
-    * [[eraseArcs]]; zones with no candidate buffer emit their full
-    * circle as a one-piece CCW ring. Transcendental (atan2/acos) —
-    * rows-only in the driver check by the same declared rule as
-    * `wnv_erase_arcs`; GeoSpec pins closure, orientation, and
-    * area-of-rings == [[erasedArea]].
-    */
-  def eraseRingsPerZone(spark: SparkSession, zones: DataFrame,
-      buffers: DataFrame, bufferFt: Double): DataFrame = {
-    import spark.implicits._
-    val zcat = zones.select(col("zone_id").cast("int"),
-        col("cx_ft"), col("cy_ft"), col("radius_ft"))
-      .as[(Int, Double, Double, Double)].collect().toSeq.sortBy(_._1)
-    val pairs = buffers.select(col("x_ft"), col("y_ft"))
-      .join(broadcast(zones.select(col("zone_id"), col("cx_ft"),
-        col("cy_ft"), col("radius_ft"))),
-        Geo.dist2(col("x_ft"), col("y_ft"), col("cx_ft"), col("cy_ft"))
-          < (col("radius_ft") + bufferFt) * (col("radius_ft") + bufferFt))
-      .select(col("zone_id").cast("int"),
-        (col("x_ft") - col("cx_ft")).as("dx"),
-        (col("y_ft") - col("cy_ft")).as("dy"), col("radius_ft"))
-      .as[(Int, Double, Double, Double)]
-    val touched = pairs.groupByKey(_._1).mapGroups { (zid, rows) =>
-      val rs = rows.toSeq
-      zid -> eraseRings(rs.head._4, rs.map(t => (t._2, t._3)), bufferFt)
-    }.collect().toMap
-    val tau = 2 * math.Pi
-    val out = zcat.flatMap { case (z, zcx, zcy, zr) =>
-      val rings = touched.getOrElse(z,
-        Seq(Seq(RingPiece(ccw = true, 0.0, 0.0, zr, 0.0, tau))))
-      rings.zipWithIndex.flatMap { case (ring, ri) =>
-        val area = ring.map(_.signedArea).sum
-        ring.zipWithIndex.map { case (p, pi) =>
-          (z, ri.toLong, pi.toLong,
-            if (p.ccw) "zone" else "hole", p.ccw,
-            p.cx + zcx, p.cy + zcy, p.rho,
-            p.s * 180.0 / math.Pi, p.e * 180.0 / math.Pi, area)
-        }
-      }
-    }
-    out.toDF("zone_id", "ring_id", "piece_seq", "kind", "ccw",
-      "cx_ft", "cy_ft", "rho_ft", "start_deg", "end_deg",
-      "ring_area_sqft")
+  /** [[zoneGroups]] of circle zones (zone_id, cx_ft, cy_ft,
+    * radius_ft): a circle is its own bounding circle. */
+  private def circleZoneGroups(zones: DataFrame, members: DataFrame)
+      : DataFrame =
+    zoneGroups(zones.select(col("zone_id").cast("int").as("zone_id"),
+      struct(col("cx_ft").as("_1"), col("cy_ft").as("_2"),
+        col("radius_ft").as("_3")).as("b"),
+      col("cx_ft"), col("cy_ft"), col("radius_ft")), members)
+
+  /** The kernel arguments of a [[circleZoneGroups]] row. */
+  private val circleArgs =
+    Seq("cx_ft", "cy_ft", "radius_ft", "disks", "r").map(col)
+
+  /** A group's disk centers relative to its zone center — the frame
+    * of [[boundaryDecomp]]. */
+  private def centered(cx: Double, cy: Double,
+      disks: Seq[(Double, Double)]): Seq[(Double, Double)] =
+    disks.map { case (x, y) => (x - cx, y - cy) }
+
+  /** The surviving zone arcs of one circle group ([[boundaryDecomp]]
+    * part (a)), as (start, end) radians. */
+  private val circleArcs = udf { (cx: Double, cy: Double, bigR: Double,
+      disks: Seq[(Double, Double)], r: Double) =>
+    boundaryDecomp(bigR, centered(cx, cy, disks), r)._1
   }
 
-  /** Surviving boundary arcs per zone after erasing `buffers`.
-    *
-    * @param zones   zone catalog: zone_id, cx_ft, cy_ft, radius_ft
-    *                (bounded — broadcast side)
-    * @param buffers buffer centers: x_ft, y_ft (corpus side)
-    * @param bufferFt buffer radius (the reference's 1500 ft)
-    */
-  def eraseArcs(spark: SparkSession, zones: DataFrame, buffers: DataFrame,
-      bufferFt: Double): Dataset[Arc] = {
-    import spark.implicits._
-    val pairs = buffers.select(col("x_ft"), col("y_ft"))
-      .join(broadcast(zones.select(col("zone_id"), col("cx_ft"),
-        col("cy_ft"), col("radius_ft"))),
-        // only buffers that can touch the boundary: |R−r| < d < R+r.
-        // d² bounds avoid any sqrt in the join predicate.
-        Geo.dist2(col("x_ft"), col("y_ft"), col("cx_ft"), col("cy_ft"))
-          < (col("radius_ft") + bufferFt) * (col("radius_ft") + bufferFt))
-    val zoneIds = zones.select(col("zone_id").cast("int")).as[Int].collect()
-    val coveredByZone = pairs.select(col("zone_id").cast("int"),
-        col("x_ft"), col("y_ft"), col("cx_ft"), col("cy_ft"),
-        col("radius_ft"))
-      .as[(Int, Double, Double, Double, Double, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (zid, rows) =>
-        val covered = rows.flatMap { case (_, ox, oy, cx, cy, bigR) =>
-          val dx = ox - cx; val dy = oy - cy
-          val d = math.sqrt(dx * dx + dy * dy)
-          val r = bufferFt
-          if (d >= bigR + r) None                      // no touch
-          else if (d <= r - bigR) Some((0.0, math.Pi)) // full cover
-          else if (d <= bigR - r) None                 // strictly interior
-          else {
-            val cosA = (d * d + bigR * bigR - r * r) / (2 * d * bigR)
-            Some((math.atan2(dy, dx),
-              math.acos(math.max(-1.0, math.min(1.0, cosA)))))
-          }
-        }.toSeq
-        zid -> survivingIntervals(covered)
-      }
-    // the result is zone-catalog-bounded (≤ |zones| rows of ≤ a few
-    // arcs), so it assembles driver-side in ONE job — the same bounded
-    // collect the S7 presentation sink performs; zones with no
-    // intersecting buffer never reach mapGroups and survive whole
-    val tau = 2 * math.Pi
-    val perZone = coveredByZone.collect().toMap
-    val all = zoneIds.toSeq.sorted.flatMap { z =>
-      perZone.get(z) match {
-        case None => Seq(Arc(z, 0.0, tau, tau))
-        case Some(arcs) => arcs.map { case (s, e) => Arc(z, s, e, e - s) }
-      }
+  /** One output row of the circle-zone ring frame: an arc piece with
+    * its absolute center, radius, CCW-parameter window in degrees,
+    * traversal direction, and its ring's signed area. */
+  private[graft] case class CircleRingRow(ring_id: Long, piece_seq: Long,
+      kind: String, ccw: Boolean, cx_ft: Double, cy_ft: Double,
+      rho_ft: Double, start_deg: Double, end_deg: Double,
+      ring_area_sqft: Double)
+
+  /** [[eraseRings]] of one circle group as its output rows, ring by
+    * ring, each ring's pieces in stitch order. */
+  private val circleRingRows = udf { (cx: Double, cy: Double,
+      bigR: Double, disks: Seq[(Double, Double)], r: Double) =>
+    eraseRings(bigR, centered(cx, cy, disks), r).zipWithIndex.flatMap {
+      case (ring, ri) =>
+        val area = ring.map(_.signedArea).sum
+        ring.zipWithIndex.map { case (p, pi) =>
+          CircleRingRow(ri.toLong, pi.toLong, if (p.ccw) "zone" else "hole",
+            p.ccw, p.cx + cx, p.cy + cy, p.rho, p.s * 180.0 / math.Pi,
+            p.e * 180.0 / math.Pi, area)
+        }
     }
-    spark.createDataset(all).orderBy("zone_id", "start")
   }
+
+  /** Surviving boundary arcs per circle zone after erasing the disk
+    * `members` ([[diskMembers]]): rows zone_id, start, end, len, angles
+    * in RADIANS counter-clockwise from +x in [0, 2π). An untouched zone
+    * reads one arc from 0 to 2π; a zone whose whole boundary is erased
+    * has no row.
+    */
+  def circleZoneArcsPerZone(zones: DataFrame, members: DataFrame)
+      : DataFrame =
+    circleZoneGroups(zones, members)
+      .select(col("zone_id"), explode(circleArcs(circleArgs: _*)).as("p"))
+      .select(col("zone_id"), col("p._1").as("start"), col("p._2").as("end"),
+        (col("p._2") - col("p._1")).as("len"))
+
+  /** OUTPUT RINGS per circle zone (see [[eraseRings]]) after erasing
+    * the disk `members`: one row per ring piece — zone_id, ring_id,
+    * piece_seq, kind ("zone" for the CCW zone arcs, "hole" for the CW
+    * buffer arcs), ccw, absolute center, radius, degree window, and the
+    * ring's signed area. An untouched zone emits its full circle as a
+    * one-piece CCW ring.
+    */
+  def circleZoneRingsPerZone(zones: DataFrame, members: DataFrame)
+      : DataFrame =
+    circleZoneGroups(zones, members)
+      .select(col("zone_id"), explode(circleRingRows(circleArgs: _*)).as("p"))
+      .select(col("zone_id"), col("p.*"))
 }

@@ -420,24 +420,23 @@ object Wnv {
     // agreement checks only the stitch. Floats are r6.
 
     // Surviving boundary arcs of each zone circle, degrees.
-    "wnv_erase_arcs" -> ((s: SparkSession, d: String) => {
-      graft.geo.EraseArcs.eraseArcs(s, zones(s, d),
-          optOut(s, d).select(col("x_ft"), col("y_ft")), BufferFt)
-        .toDF()
+    "wnv_erase_arcs" -> ((s: SparkSession, d: String) =>
+      graft.geo.EraseArcs.circleZoneArcsPerZone(zones(s, d),
+          diskMembers(s, d))
         .select(col("zone_id"),
           XF.r6(col("start") * 180.0 / math.Pi).as("start_deg"),
           XF.r6(col("end") * 180.0 / math.Pi).as("end_deg"),
           XF.r6(col("len") * 180.0 / math.Pi).as("arc_deg"))
-        .orderBy(col("zone_id"), col("start_deg"))
-    }),
+        // a local sort: the plan is already range-partitioned on zone_id
+        .orderBy(col("zone_id"), col("start_deg"))),
 
     // Surviving area of each diamond zone under the buffer disks.
     "wnv_erase_poly" -> ((s: SparkSession, d: String) =>
-      zoneAreas(s, polygonZones(s, d), diskMembers(s, d))),
+      zoneAreas(polygonZones(s, d), diskMembers(s, d))),
 
     // Surviving area of each diamond zone under the parcel footprints.
     "wnv_erase_poly_sub" -> ((s: SparkSession, d: String) =>
-      zoneAreas(s, polygonZones(s, d), footprintMembers(s, d))),
+      zoneAreas(polygonZones(s, d), footprintMembers(s, d))),
 
     // SELECTION semantics of the same polygon-subtrahend erase —
     // oracle-checked (rational rotation, see erasePolySubSelection).
@@ -450,28 +449,28 @@ object Wnv {
     // ordered rings of directed segments (zone edges CCW / footprint
     // edges reversed).
     "wnv_erase_poly_sub_rings" -> ((s: SparkSession, d: String) =>
-      lineRings(graft.geo.EraseArcs.polyZoneRingsPerZone(s,
+      lineRings(graft.geo.EraseArcs.polyZoneRingsPerZone(
         polygonZones(s, d), footprintMembers(s, d)))),
 
     // Surviving area of each star-with-hole zone under the buffer disks.
     "wnv_erase_concave" -> ((s: SparkSession, d: String) =>
-      zoneAreas(s, starZones(s, d), diskMembers(s, d))),
+      zoneAreas(starZones(s, d), diskMembers(s, d))),
 
     // Surviving area of each star-with-hole zone under the parcel
     // footprints.
     "wnv_erase_concave_sub" -> ((s: SparkSession, d: String) =>
-      zoneAreas(s, starZones(s, d), footprintMembers(s, d))),
+      zoneAreas(starZones(s, d), footprintMembers(s, d))),
 
     // Output rings of (star − hole − parcel footprints): the zone's
     // hole is one more ring member, so its edges appear reversed.
     "wnv_erase_concave_sub_rings" -> ((s: SparkSession, d: String) =>
-      lineRings(graft.geo.EraseArcs.polyZoneRingsPerZone(s,
+      lineRings(graft.geo.EraseArcs.polyZoneRingsPerZone(
         starZones(s, d), footprintMembers(s, d)))),
 
     // Output rings of (star − hole − buffer disks) — the reference's
     // literal Erase shape: rings alternate straight pieces and CW arcs.
     "wnv_erase_poly_disk_rings" -> ((s: SparkSession, d: String) =>
-      graft.geo.EraseArcs.polyZoneRingsPerZone(s, starZones(s, d),
+      graft.geo.EraseArcs.polyZoneRingsPerZone(starZones(s, d),
           diskMembers(s, d))
         .select(col("zone_id"), col("ring_id"), col("piece_seq"),
           col("kind"), XF.r6(col("x1_ft")).as("x1_ft"),
@@ -489,8 +488,8 @@ object Wnv {
     // Output rings of (zone circle − buffer disks): arc pieces (zone
     // arcs CCW / buffer arcs CW).
     "wnv_erase_rings" -> ((s: SparkSession, d: String) =>
-      graft.geo.EraseArcs.eraseRingsPerZone(s, zones(s, d),
-          optOut(s, d).select(col("x_ft"), col("y_ft")), BufferFt)
+      graft.geo.EraseArcs.circleZoneRingsPerZone(zones(s, d),
+          diskMembers(s, d))
         .select(col("zone_id"), col("ring_id"), col("piece_seq"),
           col("kind"), col("ccw"), XF.r6(col("cx_ft")).as("cx_ft"),
           XF.r6(col("cy_ft")).as("cy_ft"),
@@ -498,9 +497,7 @@ object Wnv {
           XF.r6(col("start_deg")).as("start_deg"),
           XF.r6(col("end_deg")).as("end_deg"),
           XF.r6(col("ring_area_sqft")).as("ring_area_sqft"))
-        // barrier before the global sort: the range sampler would
-        // otherwise re-run the per-zone ring stitcher (mapGroups)
-        .repartition(col("zone_id"))
+        // a local sort: the plan is already range-partitioned on zone_id
         .orderBy(col("zone_id"), col("ring_id"), col("piece_seq")))
   )
 
@@ -515,9 +512,8 @@ object Wnv {
 
   /** Surviving area per polygon zone, r6, ordered by zone — a local
     * sort: the plan is already range-partitioned on zone_id. */
-  private def zoneAreas(s: SparkSession, zones: DataFrame,
-      members: DataFrame): DataFrame =
-    graft.geo.EraseArcs.polyZoneAreaPerZone(s, zones, members)
+  private def zoneAreas(zones: DataFrame, members: DataFrame): DataFrame =
+    graft.geo.EraseArcs.polyZoneAreaPerZone(zones, members)
       .select(col("zone_id"), XF.r6(col("area_sqft")).as("area_sqft"))
       .orderBy(col("zone_id"))
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.geo.{EraseArcs, Geo}
 import graft.ops.Wnv
 
-/** Correctness check of the polygon-zone erase outputs in a
+/** Correctness check of the nine erase-geometry outputs in a
   * `graft.Verify` dump, at any scale:
   *
   *   - each area query: the distributed areas vs a driver-side replay
@@ -22,6 +22,13 @@ import graft.ops.Wnv
   *     `concave_sub_rings` ↔ `concave_sub`, `poly_disk_rings` ↔
   *     `concave`). Rings and areas sum the same boundary pieces, so
   *     this checks the stitch; the replays above check the geometry.
+  *     The circle-zone `wnv_erase_rings` has no area query: its Σ ring
+  *     area per zone is checked against a driver replay of
+  *     `erasedArea` on the zone's candidate disks, and its arc
+  *     endpoints are computed from center, radius, angle window and
+  *     traversal direction;
+  *   - `wnv_erase_arcs`: each zone's arcs == the `zone` pieces of
+  *     `wnv_erase_rings`.
   *
   * Usage: runMain graft.tools.EraseRingsCheck <sfDir> <verifyOutDir>
   * Prints one JSON line per query; exits 1 on any failure.
@@ -31,43 +38,62 @@ object EraseRingsCheck {
   /** A candidate member: (ox, oy, vertices) — a disk's center, or a
     * footprint's bounding-circle center and its ring. */
   private type Cand = (Double, Double, Ring)
+  /** One ring piece of a dump: zone, ring, seq, start point, end
+    * point, ring area, and the endpoints' r6 rounding slack. */
+  private type Piece =
+    (Int, Long, Long, (Double, Double), (Double, Double), Double, Double)
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val spark = graft.GraftSession.build(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     spark.sparkContext.setLogLevel("ERROR")
+    import spark.implicits._
     def read(q: String): DataFrame = spark.read.parquet(s"$outDir/$q")
     def areas(q: String): Map[Int, Double] =
       read(q).select(col("zone_id"), col("area_sqft")).collect()
         .map(r => r.getInt(0) -> r.getDouble(1)).toMap
     val diamonds = zoneCat(spark, Wnv.polygonZones(spark, sfDir))
     val stars = zoneCat(spark, Wnv.starZones(spark, sfDir))
+    val circles = Wnv.zones(spark, sfDir).select(col("zone_id").cast("int"),
+        col("cx_ft"), col("cy_ft"), col("radius_ft"))
+      .as[(Int, Double, Double, Double)].collect().toSeq
     val r = Wnv.BufferFt
     val disks = EraseArcs.diskMembers(
       Wnv.optOut(spark, sfDir).select(col("x_ft"), col("y_ft")), r)
     val subs = EraseArcs.ringMembers(Wnv.parcelFootprints(spark, sfDir))
     def centers(ms: Seq[Cand]) = ms.map(m => (m._1, m._2))
     def footprints(ms: Seq[Cand]) = ms.map(_._3)
+    val circleNear = near(spark, circles, disks)
+    val circleAreas = circles.map { case (z, cx, cy, bigR) =>
+      z -> EraseArcs.erasedArea(bigR, centers(circleNear.getOrElse(z, Nil))
+        .map { case (x, y) => (x - cx, y - cy) }, r)
+    }.toMap
     val results = Seq(
       replay("wnv_erase_poly", areas("wnv_erase_poly"), diamonds,
-        near(spark, diamonds, disks))(
+        near(spark, bounds(diamonds), disks))(
         (vs, _, ms) => EraseArcs.erasedAreaPoly(vs, centers(ms), r)),
       replay("wnv_erase_concave", areas("wnv_erase_concave"), stars,
-        near(spark, stars, disks))(
+        near(spark, bounds(stars), disks))(
         (vs, hs, ms) => EraseArcs.erasedAreaConcave(vs, hs, centers(ms), r)),
       replay("wnv_erase_poly_sub", areas("wnv_erase_poly_sub"), diamonds,
-        near(spark, diamonds, subs))(
+        near(spark, bounds(diamonds), subs))(
         (vs, _, ms) => EraseArcs.erasedAreaPolySub(vs, footprints(ms))),
       replay("wnv_erase_concave_sub", areas("wnv_erase_concave_sub"), stars,
-        near(spark, stars, subs))(
+        near(spark, bounds(stars), subs))(
         (vs, hs, ms) => EraseArcs.erasedAreaConcaveSub(vs, hs, footprints(ms))),
-      rings("wnv_erase_poly_sub_rings", read("wnv_erase_poly_sub_rings"),
+      rings("wnv_erase_poly_sub_rings",
+        linePieces(read("wnv_erase_poly_sub_rings")),
         areas("wnv_erase_poly_sub")),
       rings("wnv_erase_concave_sub_rings",
-        read("wnv_erase_concave_sub_rings"), areas("wnv_erase_concave_sub")),
-      rings("wnv_erase_poly_disk_rings", read("wnv_erase_poly_disk_rings"),
-        areas("wnv_erase_concave")))
+        linePieces(read("wnv_erase_concave_sub_rings")),
+        areas("wnv_erase_concave_sub")),
+      rings("wnv_erase_poly_disk_rings",
+        linePieces(read("wnv_erase_poly_disk_rings")),
+        areas("wnv_erase_concave")),
+      rings("wnv_erase_rings", arcPieces(read("wnv_erase_rings")),
+        circleAreas),
+      arcs(read("wnv_erase_arcs"), read("wnv_erase_rings")))
     results.foreach { case (q, ok, rows, note) =>
       println(s"""{"query": "$q", "status": "${if (ok) "ok" else "fail"}", """ +
         s""""rows": $rows, "note": "${note.replace("\"", "'")}"}""")
@@ -86,18 +112,24 @@ object EraseRingsCheck {
       .as[(Int, Ring, Seq[Ring])].collect().toSeq
   }
 
-  /** Members per zone as (ox, oy, vertices), under the plans'
-    * bounding-circle candidate rule, assigned distributed: only
-    * zone-local members reach the driver. */
-  private def near(spark: SparkSession, zs: Seq[(Int, Ring, Seq[Ring])],
-      members: DataFrame): Map[Int, Seq[Cand]] = {
-    import spark.implicits._
-    val bound = zs.map { case (z, vs, _) =>
+  /** (zone_id, cx, cy, rad): each polygon zone's outer-ring bounding
+    * circle, as the plans compute it. */
+  private def bounds(zs: Seq[(Int, Ring, Seq[Ring])])
+      : Seq[(Int, Double, Double, Double)] =
+    zs.map { case (z, vs, _) =>
       val cx = vs.map(_._1).sum / vs.size
       val cy = vs.map(_._2).sum / vs.size
       (z, cx, cy, vs.map { case (x, y) => math.hypot(x - cx, y - cy) }.max)
-    }.toDF("z", "bcx", "bcy", "brad")
-    members.join(broadcast(bound),
+    }
+
+  /** Members per zone as (ox, oy, vertices), under the plans'
+    * bounding-circle candidate rule, assigned distributed: only
+    * zone-local members reach the driver. */
+  private def near(spark: SparkSession,
+      bound: Seq[(Int, Double, Double, Double)],
+      members: DataFrame): Map[Int, Seq[Cand]] = {
+    import spark.implicits._
+    members.join(broadcast(bound.toDF("z", "bcx", "bcy", "brad")),
         Geo.dist2(col("ox"), col("oy"), col("bcx"), col("bcy"))
           < (col("brad") + col("rad")) * (col("brad") + col("rad")))
       .select(col("z"), col("ox"), col("oy"), col("vertices"))
@@ -125,25 +157,50 @@ object EraseRingsCheck {
       else bad.take(3).mkString("; "))
   }
 
-  /** Density, closure and conservation of one ring query's rows. */
-  private def rings(q: String, df: DataFrame, areas: Map[Int, Double])
-      : (String, Boolean, Long, String) = {
-    val rows = df.select(col("zone_id"), col("ring_id"), col("piece_seq"),
+  /** The pieces of a line-piece ring query: endpoints as dumped, each
+    * coordinate r6-rounded on its own. */
+  private def linePieces(df: DataFrame): Seq[Piece] =
+    df.select(col("zone_id"), col("ring_id"), col("piece_seq"),
         col("x1_ft"), col("y1_ft"), col("x2_ft"), col("y2_ft"),
-        col("ring_area_sqft")).collect()
+        col("ring_area_sqft")).collect().toSeq
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
         (r.getDouble(3), r.getDouble(4)), (r.getDouble(5), r.getDouble(6)),
-        r.getDouble(7)))
+        r.getDouble(7), 1e-6))
+
+  /** The pieces of the circle-zone ring query: traversal endpoints from
+    * the r6 center, radius and degree window (a CCW piece runs start →
+    * end, a CW piece end → start); the slack adds the angle quantum's
+    * reach along the arc. */
+  private def arcPieces(df: DataFrame): Seq[Piece] =
+    df.select(col("zone_id"), col("ring_id"), col("piece_seq"), col("ccw"),
+        col("cx_ft"), col("cy_ft"), col("rho_ft"), col("start_deg"),
+        col("end_deg"), col("ring_area_sqft")).collect().toSeq
+      .map { r =>
+        val (cx, cy, rho) = (r.getDouble(4), r.getDouble(5), r.getDouble(6))
+        def at(deg: Double) = (cx + rho * math.cos(math.toRadians(deg)),
+          cy + rho * math.sin(math.toRadians(deg)))
+        val (s, e) = (at(r.getDouble(7)), at(r.getDouble(8)))
+        val (from, to) = if (r.getBoolean(3)) (s, e) else (e, s)
+        (r.getInt(0), r.getLong(1), r.getLong(2), from, to, r.getDouble(9),
+          1e-6 + rho * math.toRadians(1e-6))
+      }
+
+  /** Density, closure and conservation of one ring query's pieces
+    * against per-zone areas. */
+  private def rings(q: String, rows: Seq[Piece], areas: Map[Int, Double])
+      : (String, Boolean, Long, String) = {
     val byRing = rows.groupBy(r => (r._1, r._2))
     val seqBad = byRing.collect { case (k, rs)
-      if rs.map(_._3).sorted.toSeq != (0L until rs.size.toLong) => s"seq $k" }
-    // endpoints are r6-rounded independently: two quanta of slack
+      if rs.map(_._3).sorted != (0L until rs.size.toLong) => s"seq $k" }
+    // endpoints are r6-rounded independently: one slack per side
     val openBad = byRing.collect { case (k, rs) if {
         val ord = rs.sortBy(_._3)
         ord.indices.exists { i =>
           val (ex, ey) = ord(i)._5
-          val (sx, sy) = ord((i + 1) % ord.size)._4
-          math.abs(ex - sx) > 2e-6 || math.abs(ey - sy) > 2e-6
+          val next = ord((i + 1) % ord.size)
+          val (sx, sy) = next._4
+          val tol = ord(i)._7 + next._7
+          math.abs(ex - sx) > tol || math.abs(ey - sy) > tol
         }
       } => s"open $k" }
     val ringArea = byRing.map { case (k, rs) => k -> rs.head._6 }
@@ -161,8 +218,28 @@ object EraseRingsCheck {
     val ok = bad.isEmpty && emptyOk
     (q, ok, rows.length.toLong,
       if (ok) s"${ringArea.size} rings: piece_seq dense, endpoint-closed, " +
-        "sum of ring areas == paired area query per zone"
+        "sum of ring areas == the zone's area per zone"
       else if (!emptyOk) "no rings but nonzero areas"
+      else bad.take(3).mkString("; "))
+  }
+
+  /** Each zone's surviving arcs == the `zone` pieces of its rings. */
+  private def arcs(arcDf: DataFrame, ringDf: DataFrame)
+      : (String, Boolean, Long, String) = {
+    def perZone(df: DataFrame): Map[Int, Seq[(Double, Double)]] =
+      df.select(col("zone_id"), col("start_deg"), col("end_deg")).collect()
+        .groupBy(_.getInt(0)).map { case (z, rs) =>
+          z -> rs.map(r => (r.getDouble(1), r.getDouble(2))).toSeq.sorted
+        }
+    val got = perZone(arcDf)
+    val want = perZone(ringDf.filter(col("kind") === "zone"))
+    val bad = (got.keySet ++ want.keySet).toSeq.sorted.collect {
+      case z if got.get(z) != want.get(z) =>
+        s"zone $z: arcs ${got.get(z)} vs ring zone pieces ${want.get(z)}"
+    }
+    ("wnv_erase_arcs", bad.isEmpty, got.values.map(_.size).sum.toLong,
+      if (bad.isEmpty) s"${got.size} zones: arcs == zone pieces of " +
+        "wnv_erase_rings"
       else bad.take(3).mkString("; "))
   }
 }

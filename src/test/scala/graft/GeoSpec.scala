@@ -70,9 +70,9 @@ class GeoSpec extends SparkSpec {
     val zones = Seq((1, 0.0, 0.0, 1000.0)).toDF(
       "zone_id", "cx_ft", "cy_ft", "radius_ft")
     def arcsFor(bufs: (Double, Double)*): Seq[(Double, Double)] =
-      EraseArcs.eraseArcs(spark, zones,
-          bufs.toDF("x_ft", "y_ft"), bufferFt = 300.0)
-        .collect().map(a => (a.start, a.end)).toSeq
+      EraseArcs.circleZoneArcsPerZone(zones,
+          EraseArcs.diskMembers(bufs.toDF("x_ft", "y_ft"), 300.0))
+        .select("start", "end").as[(Double, Double)].collect().toSeq
     // no buffers → the whole circle survives
     assert(arcsFor() === Seq((0.0, tau)))
     // buffer far away → untouched
@@ -93,8 +93,8 @@ class GeoSpec extends SparkSpec {
     val two = arcsFor((1000.0, 0.0), (px, py))
     assert(two.length === 1, two)
     // a huge buffer swallowing the whole boundary → nothing survives
-    assert(EraseArcs.eraseArcs(spark, zones,
-        Seq((0.0, 0.0)).toDF("x_ft", "y_ft"), bufferFt = 2500.0)
+    assert(EraseArcs.circleZoneArcsPerZone(zones,
+        EraseArcs.diskMembers(Seq((0.0, 0.0)).toDF("x_ft", "y_ft"), 2500.0))
       .collect().isEmpty)
   }
 
@@ -146,12 +146,16 @@ class GeoSpec extends SparkSpec {
   }
 
   test("erase arcs: covered + surviving is 360 degrees on real frames") {
+    import spark.implicits._
     import graft.geo.EraseArcs
     val zones = graft.ops.Wnv.zones(spark, sf)
     val buffers = graft.ops.Wnv.optOut(spark, sf)
       .select(col("x_ft"), col("y_ft"))
-    val arcs = EraseArcs.eraseArcs(spark, zones, buffers,
-      graft.ops.Wnv.BufferFt).collect()
+    case class Arc(zone_id: Int, start: Double, end: Double, len: Double)
+    val arcs = EraseArcs.circleZoneArcsPerZone(zones,
+        EraseArcs.diskMembers(buffers, graft.ops.Wnv.BufferFt))
+      .as[(Int, Double, Double, Double)].collect()
+      .map { case (z, s, e, l) => Arc(z, s, e, l) }
     assert(arcs.nonEmpty)
     // per zone: surviving total ∈ [0, 2π], arcs disjoint and ordered
     arcs.groupBy(_.zone_id).foreach { case (z, as) =>
@@ -236,7 +240,8 @@ class GeoSpec extends SparkSpec {
     val buffers = graft.ops.Wnv.optOut(spark, sf)
       .select(col("x_ft"), col("y_ft"))
     val r = graft.ops.Wnv.BufferFt
-    val got = EraseArcs.eraseRingsPerZone(spark, zones, buffers, r)
+    val got = EraseArcs.circleZoneRingsPerZone(zones,
+        EraseArcs.diskMembers(buffers, r))
       .collect()
       .map(w => (w.getInt(0), w.getLong(1), w.getLong(2)) ->
         (w.getString(3), w.getBoolean(4), w.getDouble(5), w.getDouble(6),
@@ -394,7 +399,7 @@ class GeoSpec extends SparkSpec {
     val buffers = graft.ops.Wnv.optOut(spark, sf)
       .select(col("x_ft"), col("y_ft"))
     val r = graft.ops.Wnv.BufferFt
-    val got = EraseArcs.polyZoneAreaPerZone(spark, zones,
+    val got = EraseArcs.polyZoneAreaPerZone(zones,
         EraseArcs.diskMembers(buffers, r))
       .collect().map(row => row.getInt(0) -> row.getDouble(1)).toMap
     val zs = zones.select(col("zone_id").cast("int"), col("vertices"))
@@ -566,7 +571,7 @@ class GeoSpec extends SparkSpec {
     val buffers = graft.ops.Wnv.optOut(spark, sf)
       .select(col("x_ft"), col("y_ft"))
     val r = graft.ops.Wnv.BufferFt
-    val got = EraseArcs.polyZoneAreaPerZone(spark, zones,
+    val got = EraseArcs.polyZoneAreaPerZone(zones,
         EraseArcs.diskMembers(buffers, r))
       .collect().map(row => row.getInt(0) -> row.getDouble(1)).toMap
     def ring(rows: Seq[org.apache.spark.sql.Row]): Seq[(Double, Double)] =
@@ -663,7 +668,7 @@ class GeoSpec extends SparkSpec {
     import spark.implicits._
     val zones = Seq((1, square)).toDF("zone_id", "vertices")
     val subs = Seq(base, rotated, rewound).toDF("vertices")
-    val got = EraseArcs.polyZoneAreaPerZone(spark, zones,
+    val got = EraseArcs.polyZoneAreaPerZone(zones,
         EraseArcs.ringMembers(subs))
       .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
     assert(math.abs(got(1) - want) < 1e-6,
@@ -762,7 +767,7 @@ class GeoSpec extends SparkSpec {
     import graft.geo.EraseArcs
     val zones = graft.ops.Wnv.polygonZones(spark, sf)
     val subs = graft.ops.Wnv.parcelFootprints(spark, sf)
-    val got = EraseArcs.polyZoneAreaPerZone(spark, zones,
+    val got = EraseArcs.polyZoneAreaPerZone(zones,
         EraseArcs.ringMembers(subs))
       .collect().map(row => row.getInt(0) -> row.getDouble(1)).toMap
     def ring(rows: Seq[org.apache.spark.sql.Row]): Seq[(Double, Double)] =
@@ -799,7 +804,7 @@ class GeoSpec extends SparkSpec {
     import graft.geo.EraseArcs
     val zones = graft.ops.Wnv.starZones(spark, sf)
     val subs = graft.ops.Wnv.parcelFootprints(spark, sf)
-    val got = EraseArcs.polyZoneAreaPerZone(spark, zones,
+    val got = EraseArcs.polyZoneAreaPerZone(zones,
         EraseArcs.ringMembers(subs))
       .collect().map(row => row.getInt(0) -> row.getDouble(1)).toMap
     def ring(rows: Seq[org.apache.spark.sql.Row]): Seq[(Double, Double)] =
@@ -851,7 +856,7 @@ class GeoSpec extends SparkSpec {
       .toDF("zone_id", "vertices", "holes")
     // one footprint covers zone 1 (and its hole) entirely
     val subs = Seq(sq(0, 0, 1500)).toDF("vertices")
-    val got = EraseArcs.polyZoneAreaPerZone(spark, zones,
+    val got = EraseArcs.polyZoneAreaPerZone(zones,
         EraseArcs.ringMembers(subs))
       .collect().map(row => row.getInt(0) -> row.getDouble(1)).toMap
     assert(got.keySet === Set(1, 2, 3))
@@ -937,7 +942,7 @@ class GeoSpec extends SparkSpec {
     import graft.geo.EraseArcs
     val zones = graft.ops.Wnv.starZones(spark, sf)
     val subs = graft.ops.Wnv.parcelFootprints(spark, sf)
-    val got = EraseArcs.polyZoneRingsPerZone(spark, zones,
+    val got = EraseArcs.polyZoneRingsPerZone(zones,
         EraseArcs.ringMembers(subs))
       .collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getString(3),
@@ -1086,7 +1091,7 @@ class GeoSpec extends SparkSpec {
     import graft.geo.EraseArcs
     val zones = graft.ops.Wnv.polygonZones(spark, sf)
     val subs = graft.ops.Wnv.parcelFootprints(spark, sf)
-    val got = EraseArcs.polyZoneRingsPerZone(spark, zones,
+    val got = EraseArcs.polyZoneRingsPerZone(zones,
         EraseArcs.ringMembers(subs))
       .collect()
       .map(w => (w.getInt(0), w.getLong(1), w.getLong(2)) ->
@@ -1145,7 +1150,7 @@ class GeoSpec extends SparkSpec {
       (2900.0, 2800.0))
     val inner = Seq((1000.0, 1000.0), (2000.0, 1200.0), (1500.0, 2100.0))
     def rows(subs: Seq[Seq[(Double, Double)]]) =
-      EraseArcs.polyZoneRingsPerZone(spark, zones,
+      EraseArcs.polyZoneRingsPerZone(zones,
           EraseArcs.ringMembers(subs.toDF("vertices")))
         .orderBy("ring_id", "piece_seq").collect().toSeq
     val once = rows(Seq(edge, inner))
@@ -1174,7 +1179,7 @@ class GeoSpec extends SparkSpec {
     // one disk on zone 1's west edge; zone 2 is 10^5 ft away
     val buffers = Seq((0.0, 2000.0)).toDF("x_ft", "y_ft")
     def ringsOf(members: org.apache.spark.sql.DataFrame) =
-      EraseArcs.polyZoneRingsPerZone(spark, zones, members).collect()
+      EraseArcs.polyZoneRingsPerZone(zones, members).collect()
         .groupBy(_.getInt(0)).map { case (z, rs) =>
           z -> rs.groupBy(_.getLong(1)).toSeq.sortBy(_._1)
             .map { case (_, ps) => (ps.map(_.getString(3)).toSeq.sorted,
@@ -1309,7 +1314,7 @@ class GeoSpec extends SparkSpec {
     val buffers = graft.ops.Wnv.optOut(spark, sf)
       .select(col("x_ft"), col("y_ft"))
     val r = graft.ops.Wnv.BufferFt
-    val got = EraseArcs.polyZoneRingsPerZone(spark, zones,
+    val got = EraseArcs.polyZoneRingsPerZone(zones,
         EraseArcs.diskMembers(buffers, r))
       .collect()
       .map(w => (w.getInt(0), w.getLong(1), w.getLong(2)) ->

@@ -339,9 +339,10 @@ class PlanShapeSpec extends SparkSpec {
     "curate_domain_caps" -> 3, "stream_span_probe" -> 4,
     // zero-shuffle by design: the only exchange is the output sort
     "text_dup_ngram_mass" -> 2,
-    // the polygon-zone plans (rings and areas share one grouping step):
-    // seeds ∪ members take one range exchange on zone_id, which the
-    // output sort reuses — measured 1; +1 headroom
+    // the erase plans (circle and polygon zones, arcs, rings and areas
+    // share one grouping step): seeds ∪ members take one range exchange
+    // on zone_id, which the output sort reuses — measured 1; +1 headroom
+    "wnv_erase_arcs" -> 2, "wnv_erase_rings" -> 2,
     "wnv_erase_poly" -> 2, "wnv_erase_poly_sub" -> 2,
     "wnv_erase_concave" -> 2, "wnv_erase_concave_sub" -> 2,
     "wnv_erase_poly_sub_rings" -> 2, "wnv_erase_concave_sub_rings" -> 2,
@@ -356,13 +357,14 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
-  // A polygon-zone ring or area query is one action: building it runs
-  // no Spark job (the zone catalog is a broadcast in the plan, not a
-  // collect) and caches nothing. A ring query's explain string (every
+  // An erase query (arcs, rings or areas) is one action: building it
+  // runs no Spark job (the zone catalog is a broadcast in the plan, not
+  // a collect) and caches nothing. A ring query's explain string (every
   // plan phase) was at the cap, from typed encoders' serializer
   // expressions and IS NOT NULL filters inferred over inlined vertex
   // expressions; measured 22–27K chars now, pinned below half the cap.
-  Seq("wnv_erase_poly_sub_rings", "wnv_erase_concave_sub_rings",
+  Seq("wnv_erase_arcs", "wnv_erase_rings",
+      "wnv_erase_poly_sub_rings", "wnv_erase_concave_sub_rings",
       "wnv_erase_poly_disk_rings", "wnv_erase_poly", "wnv_erase_poly_sub",
       "wnv_erase_concave", "wnv_erase_concave_sub").foreach { q =>
     test(s"$q: building the plan runs no Spark job") {
