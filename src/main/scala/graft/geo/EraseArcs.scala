@@ -29,8 +29,9 @@ import org.apache.spark.sql.functions._
   * per-zone kernel UDF runs on the group — no driver-side collect or
   * assembly, never corpus-sized state. Transcendentals (atan2/acos)
   * keep this OUT of the hash-compared oracle surface by the same rule
-  * as [[Lcc]]; GeoSpec pins the geometry against hand-built cases and
-  * the 360°-conservation property.
+  * as [[Lcc]]; GeoSpec and GeoPropertySpec pin the geometry against
+  * hand-built cases and against [[SlabArea]], an area reference that
+  * shares no code with this module.
   */
 object EraseArcs {
 
@@ -49,13 +50,7 @@ object EraseArcs {
       val e = s + 2 * a
       if (e <= tau) Seq((s, e)) else Seq((s, tau), (0.0, e - tau))
     }.sortBy(_._1)
-    // merge overlapping covered intervals
-    val merged = flat.foldLeft(List.empty[(Double, Double)]) {
-      case (acc, (s, e)) => acc match {
-        case (ps, pe) :: tail if s <= pe => (ps, math.max(pe, e)) :: tail
-        case _ => (s, e) :: acc
-      }
-    }.reverse
+    val merged = mergeIntervals(flat)
     // complement within [0, 2π)
     if (merged.isEmpty) Seq((0.0, tau))
     else {
@@ -68,26 +63,9 @@ object EraseArcs {
     }
   }
 
-  /** EXACT area of (zone disk − union of buffer disks) via Green's
-    * theorem over the region's arc boundary — the closed form of the
-    * quantity the reference's final report wants (how much ground the
-    * spray zone actually covers after opt-outs). Pure JVM on one
-    * zone's geometry (buffer centers RELATIVE to the zone center);
-    * unit- and grid-sampling-tested in GeoSpec without Spark.
-    *
-    * Boundary decomposition: the region's boundary is (a) the zone
-    * circle's arcs not inside any buffer, traversed CCW, and (b) for
-    * each buffer, the arcs of its circle inside the zone and outside
-    * every other buffer, traversed CW (hole side). For an arc of a
-    * circle centered (cx,cy) radius ρ over [θa,θb] CCW, ½∮(x dy − y dx)
-    * = ½[ρ²Δθ + cx·ρ(sin θb − sin θa) − cy·ρ(cos θb − cos θa)]; CW
-    * pieces contribute the negation. Exact-duplicate buffer centers
-    * are deduplicated first (identical circles would erase each
-    * other's boundary).
-    */
   /** Green's-theorem contribution of a CCW arc of the circle centered
     * (cx,cy), radius ρ, over [a,b]: ½[ρ²Δθ + cx·ρ(sin b − sin a) −
-    * cy·ρ(cos b − cos a)]. Shared by the circle and polygon kernels.
+    * cy·ρ(cos b − cos a)]: a [[RingPiece]]'s term.
     */
   private def arcContrib(cx: Double, cy: Double, rho: Double,
       a: Double, b: Double): Double =
@@ -99,7 +77,7 @@ object EraseArcs {
     math.acos(math.max(-1.0, math.min(1.0, x)))
 
   /** Boundary decomposition of (zone disk − union of buffer disks),
-    * shared by [[erasedArea]] and [[eraseRings]]: the zone circle's
+    * shared by [[circleZoneArcsPerZone]] and [[eraseRings]]: the zone circle's
     * surviving CCW intervals, plus — per buffer — the intervals of its
     * circle that lie ON the region boundary (inside the zone, outside
     * every other buffer; traversed CW by consumers). Buffers are
@@ -130,13 +108,9 @@ object EraseArcs {
     // (b) per buffer: pieces inside the zone, outside other buffers.
     // Only buffers with center distance < 2r can cover each other's
     // circles, so neighbor lookup goes through a uniform grid of cell
-    // size 2r (candidates = the 3×3 cell neighborhood) instead of the
-    // all-pairs scan — the buffer-buffer grid join the area kernel's
-    // scale note names, done in-process: per-buffer work tracks LOCAL
-    // density, not the zone's total buffer count (the sf10 drive
-    // measured the all-pairs form at 31× the sf1 line). Candidate
-    // order is index-ascending; interval VALUES are order-independent
-    // (survivingIntervals sorts), so the output is unchanged.
+    // size 2r (candidates = the 3×3 cell neighborhood): per-buffer work
+    // tracks local density, not the zone's buffer count. Interval
+    // values do not depend on candidate order (survivingIntervals sorts).
     val cell = 2 * r
     def cellOf(x: Double, y: Double): (Long, Long) =
       (math.floor(x / cell).toLong, math.floor(y / cell).toLong)
@@ -178,255 +152,6 @@ object EraseArcs {
     (zoneArcs, bufferArcs)
   }
 
-  private[graft] def erasedArea(bigR: Double,
-      buffersIn: Seq[(Double, Double)], r: Double): Double = {
-    val (zoneArcs, bufferArcs) = boundaryDecomp(bigR, buffersIn, r)
-    val zonePart = zoneArcs
-      .map { case (s, e) => arcContrib(0.0, 0.0, bigR, s, e) }.sum
-    val bufferPart = bufferArcs.map { case ((ox, oy), arcs) =>
-      arcs.map { case (s, e) => arcContrib(ox, oy, r, s, e) }.sum
-    }.sum
-    // hole pieces are CW: subtract their CCW-form contributions
-    math.max(0.0, zonePart - bufferPart)
-  }
-
-  /** CONVEX-POLYGON generalization of [[erasedArea]] — the last
-    * reference-geometry scope item (arcpy Erase on polygon zones,
-    * reference GSheetsETL_Lab2.py:133) for convex vertex rings: EXACT
-    * area of (convex polygon − union of buffer disks), same
-    * Green's-theorem boundary decomposition:
-    *
-    *   (a) straight-edge pieces outside every disk, traversed CCW —
-    *       per edge, each disk covers ONE parametric t-interval from
-    *       the line-circle quadratic ‖A + t·AB − o‖² < r²; a 1-D
-    *       interval merge + complement yields the survivors, and a
-    *       segment P₁→P₂ contributes ½(x₁y₂ − x₂y₁);
-    *   (b) per disk, the arcs of its circle inside the polygon and
-    *       outside every other disk, traversed CW (hole side) — the
-    *       circle's OUTSIDE-the-polygon set is, per edge half-plane,
-    *       one angular interval centered on the outward normal's
-    *       bearing with half-width acos(−proj/r) (proj = signed
-    *       center distance): the SAME angular-interval merge
-    *       ([[survivingIntervals]]) as the circle-circle case.
-    *
-    * Vertices may wind either way (the shoelace sign normalizes to
-    * CCW). Pure JVM on one zone's geometry; unit- and grid-sampling-
-    * tested in GeoSpec without Spark, and cross-checked against the
-    * circle kernel via a fine regular polygon.
-    */
-  private[graft] def erasedAreaPoly(verticesIn: Seq[(Double, Double)],
-      buffersIn: Seq[(Double, Double)], r: Double): Double = {
-    require(verticesIn.size >= 3, "polygon needs >= 3 vertices")
-    val shoelace = verticesIn.indices.map { i =>
-      val (x1, y1) = verticesIn(i)
-      val (x2, y2) = verticesIn((i + 1) % verticesIn.size)
-      x1 * y2 - x2 * y1
-    }.sum
-    val vertices = if (shoelace >= 0) verticesIn else verticesIn.reverse
-    // CONVEXITY is a hard precondition of this kernel: the per-edge
-    // half-plane decomposition of a disk's outside-the-polygon set is
-    // only valid when the polygon is the intersection of its edge
-    // half-planes. A concave ring would return a silently-wrong area —
-    // fail loudly instead (concave/holed rings go through
-    // [[erasedAreaConcave]], which triangulates and sums this kernel).
-    vertices.indices.foreach { i =>
-      val (ax, ay) = vertices(i)
-      val (bx, by) = vertices((i + 1) % vertices.size)
-      val (cx2, cy2) = vertices((i + 2) % vertices.size)
-      val cross = (bx - ax) * (cy2 - by) - (by - ay) * (cx2 - bx)
-      require(cross >= -1e-9 * math.abs(shoelace),
-        s"erasedAreaPoly: concave vertex at ($bx,$by) — " +
-          "use erasedAreaConcave for non-convex rings")
-    }
-    val edges = vertices.indices.map { i =>
-      (vertices(i), vertices((i + 1) % vertices.size))
-    }
-    val buffers = buffersIn.distinct
-    // (a) surviving straight-edge pieces, CCW
-    val edgePart = edges.map { case ((ax, ay), (bx, by)) =>
-      val dx = bx - ax; val dy = by - ay
-      val len2 = dx * dx + dy * dy
-      // a zero-length edge (repeated vertex) would 0-divide the
-      // quadratic roots into NaN intervals and silently corrupt the
-      // area — fail loudly instead (same discipline as the circle
-      // kernel's loud guards)
-      require(len2 > 0,
-        s"erasedAreaPoly: degenerate zero-length edge at ($ax,$ay)")
-      val covered = buffers.flatMap { case (ox, oy) =>
-        val fx = ax - ox; val fy = ay - oy
-        val bq = fx * dx + fy * dy
-        val cq = fx * fx + fy * fy - r * r
-        val disc = bq * bq - len2 * cq
-        if (disc <= 0) None
-        else {
-          val sq = math.sqrt(disc)
-          val s = math.max(0.0, (-bq - sq) / len2)
-          val e = math.min(1.0, (-bq + sq) / len2)
-          if (s < e) Some((s, e)) else None
-        }
-      }.sortBy(_._1)
-      val merged = covered.foldLeft(List.empty[(Double, Double)]) {
-        case (acc, (s, e)) => acc match {
-          case (ps, pe) :: tl if s <= pe => (ps, math.max(pe, e)) :: tl
-          case _ => (s, e) :: acc
-        }
-      }.reverse
-      val bounds =
-        0.0 +: merged.flatMap { case (s, e) => Seq(s, e) } :+ 1.0
-      bounds.grouped(2).collect { case Seq(s, e) if e > s =>
-        val x1 = ax + s * dx; val y1 = ay + s * dy
-        val x2 = ax + e * dx; val y2 = ay + e * dy
-        0.5 * (x1 * y2 - x2 * y1)
-      }.sum
-    }.sum
-    // (b) per-disk hole arcs, CW (subtracted)
-    val bufferPart = buffers.zipWithIndex.map { case ((ox, oy), i) =>
-      var disjoint = false // circle fully outside one half-plane ⇒ disk ∩ polygon = ∅
-      val outside = edges.flatMap { case ((ax, ay), (bx, by)) =>
-        val nx = by - ay; val ny = -(bx - ax) // outward normal (CCW ring)
-        val nn = math.hypot(nx, ny)
-        val proj = (nx * (ox - ax) + ny * (oy - ay)) / nn
-        val ce = -proj / r
-        if (ce >= 1) None // circle never outside this edge
-        else if (ce <= -1) { disjoint = true; None }
-        else Some((math.atan2(ny, nx), clampAcos(ce)))
-      }
-      if (disjoint) 0.0
-      else {
-        val others = buffers.zipWithIndex.filter(_._2 != i).map(_._1)
-          .flatMap { case (qx, qy) =>
-            val dij = math.hypot(qx - ox, qy - oy)
-            if (dij >= 2 * r || dij == 0.0) None
-            else Some((math.atan2(qy - oy, qx - ox),
-              clampAcos(dij / (2 * r))))
-          }
-        survivingIntervals(outside ++ others)
-          .map { case (s, e) => arcContrib(ox, oy, r, s, e) }.sum
-      }
-    }.sum
-    math.max(0.0, edgePart - bufferPart)
-  }
-
-  /** Ear-clipping triangulation of a SIMPLE polygon (concave allowed,
-    * no self-intersections, no holes): returns triangles that PARTITION
-    * the ring — disjoint interiors, union = polygon — so any additive
-    * measure (area, erased area) sums exactly over them. O(n²) scan
-    * per clip, fine for zone rings (≤ tens of vertices; the zone
-    * catalog is cluster-constant — SCALE.md). Input winding is
-    * normalized to CCW; consecutive duplicate vertices are dropped;
-    * collinear vertices are clipped as degenerate (zero-area) ears.
-    * Fails loudly on rings it cannot clip (self-intersecting input).
-    */
-  private[graft] def triangulate(ringIn: Seq[(Double, Double)])
-      : Seq[Seq[(Double, Double)]] = {
-    // drop consecutive duplicates (incl. a closing vertex == first)
-    val dedup0 = ringIn.foldLeft(Vector.empty[(Double, Double)]) {
-      (acc, v) => if (acc.nonEmpty && acc.last == v) acc else acc :+ v
-    }
-    val dedup = if (dedup0.size > 1 && dedup0.head == dedup0.last)
-      dedup0.dropRight(1) else dedup0
-    require(dedup.size >= 3, "triangulate: polygon needs >= 3 vertices")
-    val shoelace = dedup.indices.map { i =>
-      val (x1, y1) = dedup(i); val (x2, y2) = dedup((i + 1) % dedup.size)
-      x1 * y2 - x2 * y1
-    }.sum
-    val eps = 1e-12 * math.max(1.0, math.abs(shoelace))
-    var ring = if (shoelace >= 0) dedup else dedup.reverse
-    val out = Vector.newBuilder[Seq[(Double, Double)]]
-    def cross(a: (Double, Double), b: (Double, Double),
-        c: (Double, Double)): Double =
-      (b._1 - a._1) * (c._2 - b._2) - (b._2 - a._2) * (c._1 - b._1)
-    // inside-OR-ON the triangle: a REFLEX vertex lying exactly on the
-    // candidate diagonal (the L-shape corner case) makes the ear
-    // invalid on one side even though it is not strictly interior —
-    // the inclusive test blocks it. Rejecting a borderline-valid ear
-    // is safe (another ear exists by the two-ears theorem; the loud
-    // require below catches genuinely unclippable = self-intersecting
-    // input).
-    def inTriIncl(p: (Double, Double), a: (Double, Double),
-        b: (Double, Double), c: (Double, Double)): Boolean =
-      cross(a, b, p) >= -eps && cross(b, c, p) >= -eps &&
-        cross(c, a, p) >= -eps
-    while (ring.size > 3) {
-      val n = ring.size
-      val reflex = (0 until n).filter { i =>
-        cross(ring((i + n - 1) % n), ring(i), ring((i + 1) % n)) < -eps
-      }.map(ring).toSet
-      val ear = (0 until n).find { i =>
-        val a = ring((i + n - 1) % n); val b = ring(i)
-        val c = ring((i + 1) % n)
-        val cr = cross(a, b, c)
-        if (cr < -eps) false // reflex vertex — never an ear
-        else if (cr <= eps) true // collinear: zero-area ear, clip free
-        else reflex.forall { p =>
-          (p == a) || (p == b) || (p == c) || !inTriIncl(p, a, b, c)
-        }
-      }
-      require(ear.isDefined,
-        "triangulate: no ear found — ring is self-intersecting")
-      val i = ear.get; val n2 = ring.size
-      val tri = Seq(ring((i + n2 - 1) % n2), ring(i), ring((i + 1) % n2))
-      // skip zero-area slivers (collinear clips) — they contribute
-      // nothing and would trip erasedAreaPoly's zero-length-edge guard
-      if (math.abs(cross(tri(0), tri(1), tri(2))) > eps) out += tri
-      ring = ring.patch(i, Nil, 1)
-    }
-    out += ring.toSeq
-    out.result()
-  }
-
-  /** GENERAL-POLYGON Erase area — concave rings and holes (the full
-    * input domain of arcpy's Erase on polygon zones, reference
-    * GSheetsETL_Lab2.py:133): EXACT area of
-    * ((outer − ∪holes) − union of buffer disks).
-    *
-    * Reduction, not new geometry: ear-clip the outer ring (and each
-    * hole ring) into triangles ([[triangulate]] — a PARTITION, so
-    * areas add exactly), evaluate the CONVEX kernel
-    * ([[erasedAreaPoly]]) per triangle (every triangle is convex),
-    * and combine:
-    *
-    *   area(P∖U) = Σᵢ area(Tᵢ∖U)                 (outer triangles)
-    *   area((P∖H)∖U) = area(P∖U) − Σⱼ area(Hⱼ∖U)  (holes ⊆ P, disjoint)
-    *
-    * — the second identity because (P∖U) ∩ Hⱼ = Hⱼ∖U for holes inside
-    * the outer ring. A disk crossing several triangles contributes
-    * each triangle's portion independently; internal edges carry no
-    * double-count because each term is an AREA, not a contour piece.
-    *
-    * Preconditions (caller contract, same loud-failure discipline as
-    * the convex kernel): simple rings, holes pairwise disjoint and
-    * inside the outer ring.
-    */
-  private[graft] def erasedAreaConcave(outer: Seq[(Double, Double)],
-      holes: Seq[Seq[(Double, Double)]],
-      buffers: Seq[(Double, Double)], r: Double): Double = {
-    def piece(ring: Seq[(Double, Double)]): Double =
-      triangulate(ring).map(t => erasedAreaPoly(t, buffers, r)).sum
-    math.max(0.0, piece(outer) - holes.map(piece).sum)
-  }
-
-  // ---- GENERAL POLYGON SUBTRAHEND (round 12) -------------------------
-  // arcpy Erase accepts ARBITRARY erase features, not only buffer
-  // disks (the reference's only actual use is the 1500 ft buffer,
-  // GSheetsETL_Lab2.py:129-133); this family completes the operator's
-  // general contract: zone polygon − union of SUBTRAHEND POLYGONS.
-  // Same Green's-theorem boundary decomposition as the disk kernels,
-  // with the angular-interval machinery replaced by parametric
-  // t-intervals on straight edges ("edge clipping"):
-  //   (a) zone edges CCW, minus the t-intervals covered by any
-  //       subtrahend (segment-in-polygon: crossing params + midpoint
-  //       point-in-polygon per sub-interval);
-  //   (b) each subtrahend's edges clipped to the convex zone and to
-  //       the OUTSIDE of every other subtrahend, traversed REVERSED
-  //       (the kept region lies right of the subtrahend's CCW edge).
-  // All intersection points are rational in the vertex coordinates —
-  // no transcendentals — but the clipping algorithm itself has no SQL
-  // form, so the query keeps the erase family's declared no-oracle
-  // rule with GeoSpec pinning hand cases, rectangle algebra,
-  // inclusion-exclusion, winding invariance, grid sampling, and
-  // convergence to the circle kernel on a fine n-gon subtrahend.
-
   /** Ray-cast point-in-polygon (strict interior for generic points;
     * boundary points are resolved arbitrarily — callers only test
     * interval MIDPOINTS, which are off-boundary in general position).
@@ -448,8 +173,7 @@ object EraseArcs {
   /** Merged t-intervals of segment A→B lying inside simple polygon
     * `poly` (winding-agnostic): crossing parameters against every
     * polygon edge split [0,1]; each sub-interval is classified by its
-    * midpoint. Degenerate polygon edges fail loudly (same discipline
-    * as the convex kernel).
+    * midpoint. Degenerate polygon edges fail loudly.
     */
   private def segInPolyIntervals(ax: Double, ay: Double, bx: Double,
       by: Double, poly: Seq[(Double, Double)]): Seq[(Double, Double)] = {
@@ -460,7 +184,7 @@ object EraseArcs {
       val (ex, ey) = poly((i + 1) % poly.size)
       val fx = ex - cx; val fy = ey - cy
       require(fx != 0.0 || fy != 0.0,
-        s"erasedAreaPolySub: degenerate subtrahend edge at ($cx,$cy)")
+        s"polyZonePieces: degenerate member edge at ($cx,$cy)")
       val denom = dx * fy - dy * fx
       if (denom != 0.0) {
         val t = ((cx - ax) * fy - (cy - ay) * fx) / denom
@@ -475,7 +199,7 @@ object EraseArcs {
     }.toSeq
   }
 
-  /** 1-D interval merge (inputs clamped to [0,1], sorted by start). */
+  /** Merge of overlapping 1-D intervals, sorted by start. */
   private def mergeIntervals(
       in: Seq[(Double, Double)]): List[(Double, Double)] =
     in.sortBy(_._1).foldLeft(List.empty[(Double, Double)]) {
@@ -485,9 +209,7 @@ object EraseArcs {
       }
     }.reverse
 
-  /** CCW-normalize a ring (loud guard on degenerate rings) — one code
-    * path for the area kernels and the piece kernel
-    * ([[polyZonePieces]]). */
+  /** CCW-normalize a ring (loud guard on degenerate rings). */
   private def normalizeCcw(ring: Seq[(Double, Double)]): Seq[(Double, Double)] = {
     require(ring.size >= 3, "subtrahend needs >= 3 vertices")
     val sl = ring.indices.map { i =>
@@ -500,10 +222,9 @@ object EraseArcs {
   /** Canonical form of a ring for duplicate detection: CCW winding,
     * rotated to start at the lexicographically smallest vertex. Two
     * rings listing the same polygon through a rotated vertex order or
-    * opposite winding canonicalize identically (r12 ADVICE: plain
-    * representation `distinct` missed those, and two same-polygon
-    * rings would then each see the other covering all their edges —
-    * the union boundary silently vanished instead of erasing once).
+    * opposite winding canonicalize identically: two same-polygon rings
+    * would otherwise each see the other covering all their edges, and
+    * the union boundary would vanish instead of erasing once.
     * Rings that differ in vertex SET (e.g. an inserted collinear
     * vertex) remain distinct representations — out of scope, same as
     * the general-position contract. Geometry is unchanged. */
@@ -512,31 +233,6 @@ object EraseArcs {
     val ring = normalizeCcw(ringIn)
     val i = ring.indices.minBy(ring(_))
     ring.drop(i) ++ ring.take(i)
-  }
-
-  /** CCW-normalized vertices + edges of a CONVEX zone ring (loud
-    * guards) for [[erasedAreaPolySub]]. */
-  private def convexZoneEdges(verticesIn: Seq[(Double, Double)])
-      : IndexedSeq[((Double, Double), (Double, Double))] = {
-    require(verticesIn.size >= 3, "polygon needs >= 3 vertices")
-    val shoelace = verticesIn.indices.map { i =>
-      val (x1, y1) = verticesIn(i)
-      val (x2, y2) = verticesIn((i + 1) % verticesIn.size)
-      x1 * y2 - x2 * y1
-    }.sum
-    val vertices = if (shoelace >= 0) verticesIn else verticesIn.reverse
-    vertices.indices.foreach { i =>
-      val (ax, ay) = vertices(i)
-      val (bx, by) = vertices((i + 1) % vertices.size)
-      val (cx2, cy2) = vertices((i + 2) % vertices.size)
-      val cross = (bx - ax) * (cy2 - by) - (by - ay) * (cx2 - bx)
-      require(cross >= -1e-9 * math.abs(shoelace),
-        s"erasedAreaPolySub: concave vertex at ($bx,$by) — " +
-          "use erasedAreaConcaveSub for non-convex zones")
-    }
-    vertices.indices.map { i =>
-      (vertices(i), vertices((i + 1) % vertices.size))
-    }.toIndexedSeq
   }
 
   /** Common face of the two boundary-piece vocabularies ([[LinePiece]]
@@ -557,9 +253,7 @@ object EraseArcs {
     * KEPT region on the left — zone-edge pieces run along the zone's
     * CCW ring; subtrahend-edge pieces run REVERSED (the hole side).
     * The linear analogue of [[RingPiece]]; `signedArea` is the
-    * segment's Green's-theorem term along the traversal direction, so
-    * Σ signedArea over all of a zone's pieces == [[erasedAreaPolySub]]
-    * term-for-term (the area kernel sums exactly these).
+    * segment's Green's-theorem term along the traversal direction.
     */
   private[graft] case class LinePiece(kind: String, x1: Double, y1: Double,
       x2: Double, y2: Double) extends BoundaryPiece {
@@ -569,94 +263,26 @@ object EraseArcs {
   }
 
   /** Surviving pieces of one zone edge traversed CCW minus its covered
-    * intervals (MERGED, sorted) — the boundary (a) term piecewise;
-    * [[zoneEdgeGreen]] is their signed-area sum (identical terms,
-    * identical order, so the area and ring paths agree bitwise). */
+    * intervals (MERGED, sorted). */
   private def zoneEdgePieces(ax: Double, ay: Double, bx: Double, by: Double,
       covered: List[(Double, Double)]): Seq[LinePiece] = {
     val dx = bx - ax; val dy = by - ay
     require(dx != 0.0 || dy != 0.0,
-      s"erasedAreaPolySub: degenerate zero-length edge at ($ax,$ay)")
+      s"polyZonePieces: degenerate zero-length edge at ($ax,$ay)")
     val bounds = 0.0 +: covered.flatMap { case (s, e) => Seq(s, e) } :+ 1.0
     bounds.grouped(2).collect { case Seq(s, e) if e > s =>
       LinePiece("zone", ax + s * dx, ay + s * dy, ax + e * dx, ay + e * dy)
     }.toSeq
   }
 
-  /** Green's contribution of one zone edge traversed CCW minus its
-    * covered intervals (MERGED, sorted). */
-  private def zoneEdgeGreen(ax: Double, ay: Double, bx: Double, by: Double,
-      covered: List[(Double, Double)]): Double =
-    zoneEdgePieces(ax, ay, bx, by, covered).map(_.signedArea).sum
-
-  /** The (b) term for ONE CCW subtrahend ring `p` against a convex
-    * zone, for the area kernel: its edge pieces inside the
-    * zone and outside every OTHER subtrahend (the `others` rings, any
-    * exact superset of the actual coverers — non-coverers contribute
-    * empty interval lists), traversed reversed.
-    */
-  private def subEdgePieces(
-      zEdges: IndexedSeq[((Double, Double), (Double, Double))],
-      p: Seq[(Double, Double)],
-      others: Int => Seq[Seq[(Double, Double)]]): Seq[LinePiece] =
-    p.indices.flatMap { i =>
-      val (cx, cy) = p(i)
-      val (ex, ey) = p((i + 1) % p.size)
-      val dx = ex - cx; val dy = ey - cy
-      require(dx != 0.0 || dy != 0.0,
-        s"erasedAreaPolySub: degenerate subtrahend edge at ($cx,$cy)")
-      // parametric clip of C→E to the convex CCW zone (inside = left
-      // of every zone edge)
-      var t0 = 0.0; var t1 = 1.0
-      zEdges.foreach { case ((zax, zay), (zbx, zby)) =>
-        val nx = zbx - zax; val ny = zby - zay
-        val f0 = nx * (cy - zay) - ny * (cx - zax)
-        val fd = nx * dy - ny * dx
-        if (fd == 0.0) { if (f0 < 0.0) { t0 = 1.0; t1 = 0.0 } }
-        else {
-          val tc = -f0 / fd
-          if (fd > 0.0) t0 = math.max(t0, tc)
-          else t1 = math.min(t1, tc)
-        }
-      }
-      if (t0 >= t1) Nil
-      else {
-        val coveredByOthers = mergeIntervals(
-          others(i).flatMap(o => segInPolyIntervals(cx, cy, ex, ey, o)))
-        // survivors of [t0, t1] minus coveredByOthers, each traversed
-        // e → s (kept side left — the hole side of the subtrahend)
-        var cur = t0
-        val acc = Seq.newBuilder[LinePiece]
-        def reversedPiece(s: Double, e: Double): LinePiece =
-          LinePiece("sub", cx + e * dx, cy + e * dy,
-            cx + s * dx, cy + s * dy)
-        coveredByOthers.foreach { case (s, e) =>
-          if (e > cur && s < t1) {
-            if (s > cur) acc += reversedPiece(cur, math.min(s, t1))
-            cur = math.max(cur, math.min(e, t1))
-          }
-        }
-        if (cur < t1) acc += reversedPiece(cur, t1)
-        acc.result()
-      }
-    }
-
-  private def subContribution(
-      zEdges: IndexedSeq[((Double, Double), (Double, Double))],
-      p: Seq[(Double, Double)],
-      others: Int => Seq[Seq[(Double, Double)]]): Double =
-    subEdgePieces(zEdges, p, others).map(_.signedArea).sum
-
   /** Bbox-grid candidate lookup — the spatial prune for the pairwise
     * terms, shared by the area and ring kernels. A member whose
     * bounding box misses a query box cannot cover any part of it, so
     * bucket the boxes on a grid (cell = the largest box extent) and
-    * probe only the cells a query box touches. Without this the
-    * member-vs-member term is quadratic in the LOCAL member count —
-    * measured 17 s at sf1 (~700 footprints/zone) and unusable at sf10;
-    * physically near-disjoint parcels prune to O(1) candidates per
-    * edge. Returns the sorted indices whose box may intersect the box
-    * spanned by two corners (an exact superset of the coverers).
+    * probe only the cells a query box touches, so the member-vs-member
+    * term is not quadratic in the local member count. Returns the
+    * sorted indices whose box may intersect the box spanned by two
+    * corners (an exact superset of the coverers).
     */
   private def bboxIndex(boxes: IndexedSeq[(Double, Double, Double, Double)])
       : (Double, Double, Double, Double) => Seq[Int] = {
@@ -704,61 +330,6 @@ object EraseArcs {
   private def ringBox(p: Seq[(Double, Double)])
       : (Double, Double, Double, Double) =
     (p.map(_._1).min, p.map(_._2).min, p.map(_._1).max, p.map(_._2).max)
-
-  /** A circle enclosing a ring: the vertex centroid and the farthest
-    * vertex's distance from it — the candidate test of every
-    * zone/triangle-to-member assignment. */
-  private def boundingCircle(vs: Seq[(Double, Double)])
-      : (Double, Double, Double) = {
-    val cx = vs.map(_._1).sum / vs.size
-    val cy = vs.map(_._2).sum / vs.size
-    (cx, cy, vs.map { case (x, y) => math.hypot(x - cx, y - cy) }.max)
-  }
-
-  /** EXACT area of (convex zone polygon − union of subtrahend simple
-    * polygons) — see the family header above. Zone ring requirements
-    * match [[erasedAreaPoly]] (convex, loud guards); subtrahends may
-    * be any simple rings in either winding and in general position
-    * (no exactly-shared boundary segments between subtrahends).
-    * Canonicalization (CCW + rotation-normalized) + distinct is
-    * load-bearing: two same-polygon rings would otherwise each see the
-    * other covering all their edges and the union boundary would
-    * vanish.
-    */
-  private[graft] def erasedAreaPolySub(verticesIn: Seq[(Double, Double)],
-      subsIn: Seq[Seq[(Double, Double)]]): Double = {
-    val zEdges = convexZoneEdges(verticesIn)
-    val subs = subsIn.map(canonicalRing).distinct.toIndexedSeq
-    val candidatesNear = bboxIndex(subs.map(ringBox))
-    // (a) zone-edge pieces outside every subtrahend, CCW
-    val edgePart = zEdges.map { case ((ax, ay), (bx, by)) =>
-      zoneEdgeGreen(ax, ay, bx, by,
-        mergeIntervals(candidatesNear(ax, ay, bx, by)
-          .flatMap(k => segInPolyIntervals(ax, ay, bx, by, subs(k)))))
-    }.sum
-    // (b) subtrahend-edge pieces inside the zone and outside every
-    // other subtrahend, traversed REVERSED (kept region on the left)
-    val subPart = subs.zipWithIndex.map { case (p, k) =>
-      subContribution(zEdges, p, { i =>
-        val (cx, cy) = p(i)
-        val (ex, ey) = p((i + 1) % p.size)
-        candidatesNear(cx, cy, ex, ey).filter(_ != k).map(subs)
-      })
-    }.sum
-    math.max(0.0, edgePart + subPart)
-  }
-
-  /** GENERAL zone rings with polygon subtrahends: ear-clip the outer
-    * and hole rings and sum the convex kernel per triangle — the same
-    * additive-measure reduction as [[erasedAreaConcave]].
-    */
-  private[graft] def erasedAreaConcaveSub(outer: Seq[(Double, Double)],
-      holes: Seq[Seq[(Double, Double)]],
-      subs: Seq[Seq[(Double, Double)]]): Double = {
-    def piece(ring: Seq[(Double, Double)]): Double =
-      triangulate(ring).map(t => erasedAreaPolySub(t, subs)).sum
-    math.max(0.0, piece(outer) - holes.map(piece).sum)
-  }
 
   /** Edge pieces of ONE ring member `p` (CCW) against a GENERAL simple
     * outer ring: the pieces of p's edges inside the outer ring and
@@ -829,17 +400,6 @@ object EraseArcs {
     }
   }
 
-  /** Merged-input form of the disk cover of one segment: the clamped
-    * t-interval in [0,1], or None — the same quadratic
-    * [[erasedAreaPoly]]'s edge term integrates. */
-  private def segDiskCover(ax: Double, ay: Double, dx: Double, dy: Double,
-      len2: Double, ox: Double, oy: Double, r: Double)
-      : Option[(Double, Double)] =
-    segDiskRoots(ax, ay, dx, dy, len2, ox, oy, r).flatMap { case (t1, t2) =>
-      val s = math.max(0.0, t1); val e = math.min(1.0, t2)
-      if (s < e) Some((s, e)) else None
-    }
-
   /** The arc pieces of ONE disk circle (center (ox,oy), radius r) on
     * the boundary of (outer − holes − disks): partition the circle at
     * every crossing angle (vs outer/hole edges — the shared quadratic
@@ -873,7 +433,7 @@ object EraseArcs {
         val dx = bx - ax; val dy = by - ay
         val len2 = dx * dx + dy * dy
         require(len2 > 0,
-          s"erasePolyDisk: degenerate zero-length edge at ($ax,$ay)")
+          s"polyZonePieces: degenerate zero-length edge at ($ax,$ay)")
         segDiskRoots(ax, ay, dx, dy, len2, ox, oy, r).toSeq
           .flatMap { case (t1, t2) => Seq(t1, t2) }
           .filter(t => t > 0.0 && t < 1.0)
@@ -1037,12 +597,6 @@ object EraseArcs {
     rings.sortBy(ring => key(ring.head))(ord)
   }
 
-  /** Stitch tolerance for polygon zones: 1e-9 × the coordinate scale
-    * of the pieces (state-plane feet reach ~10⁶–10⁷). */
-  private def polyTol(pieces: Seq[BoundaryPiece]): Double =
-    1e-9 * pieces.iterator.flatMap(p => Iterator(p.start._1.abs,
-      p.start._2.abs, p.end._1.abs, p.end._2.abs)).foldLeft(1.0)(math.max)
-
   /** One member of a polygon zone's erase set: a RING (`kind` "ring" —
     * a zone hole or a polygon subtrahend, canonical CCW `vertices`) or
     * a DISK (`kind` "disk" — center (ox, oy), radius `rad`, no
@@ -1064,8 +618,9 @@ object EraseArcs {
       m: Member): Seq[(Double, Double)] =
     if (m.isDisk) {
       val dx = bx - ax; val dy = by - ay
-      segDiskCover(ax, ay, dx, dy, dx * dx + dy * dy, m.ox, m.oy, m.rad)
-        .toSeq
+      segDiskRoots(ax, ay, dx, dy, dx * dx + dy * dy, m.ox, m.oy, m.rad).toSeq
+        .map { case (t1, t2) => (math.max(0.0, t1), math.min(1.0, t2)) }
+        .filter { case (s, e) => s < e }
     } else segInPolyIntervals(ax, ay, bx, by, m.vertices)
 
   /** The boundary pieces member `m` contributes: a ring's edges inside
@@ -1085,10 +640,6 @@ object EraseArcs {
       diskArcPieces(outer, rings.map(_.vertices), m.ox, m.oy, m.rad,
         disks.map(d => (d.ox, d.oy)))
     }
-
-  private def ringEdges(ring: Seq[(Double, Double)])
-      : IndexedSeq[((Double, Double), (Double, Double))] =
-    ring.indices.map(i => (ring(i), ring((i + 1) % ring.size)))
 
   /** Directed BOUNDARY PIECES of (general simple zone polygon − ∪ ring
     * members − ∪ disks of radius `r`), unstitched. The zone's holes
@@ -1116,7 +667,8 @@ object EraseArcs {
       disks.distinct.sorted.map { case (x, y) => Member("disk", x, y, r, Nil) })
       .toIndexedSeq
     val near = bboxIndex(members.map(_.box))
-    val zonePieces = ringEdges(outer).flatMap { case ((ax, ay), (bx, by)) =>
+    val zonePieces = outer.indices.flatMap { i =>
+      val (ax, ay) = outer(i); val (bx, by) = outer((i + 1) % outer.size)
       zoneEdgePieces(ax, ay, bx, by, mergeIntervals(near(ax, ay, bx, by)
         .flatMap(k => memberCover(ax, ay, bx, by, members(k)))))
     }
@@ -1131,14 +683,17 @@ object EraseArcs {
     * emits (GSheetsETL_Lab2.py:133) on polygon zones: the
     * [[polyZonePieces]] chained by [[stitch]]; tangency fails loudly in
     * the stitcher. GeoSpec pins closure, orientation, Σ ring signed
-    * areas against the INDEPENDENT area kernels, determinism, and the
-    * distributed replay.
+    * areas against [[SlabArea]], determinism, and the distributed
+    * replay.
     */
   private[graft] def polyZoneRings(outerIn: Seq[(Double, Double)],
       rings: Seq[Seq[(Double, Double)]], disks: Seq[(Double, Double)] = Nil,
       r: Double = 0.0): Seq[Seq[BoundaryPiece]] = {
     val pieces = polyZonePieces(outerIn, rings, disks, r)
-    stitch(pieces, polyTol(pieces))
+    // tolerance: 1e-9 × the pieces' coordinate scale (state-plane feet
+    // reach ~10⁶–10⁷)
+    stitch(pieces, 1e-9 * pieces.iterator.flatMap(p => Iterator(p.start._1.abs,
+      p.start._2.abs, p.end._1.abs, p.end._2.abs)).foldLeft(1.0)(math.max))
   }
 
   /** One output row of the polygon-zone ring frame: line pieces carry
@@ -1178,22 +733,32 @@ object EraseArcs {
     }
   }
 
-  /** Surviving area of one zone group: Σ signed area of its
-    * [[polyZonePieces]], floored at 0 (a fully erased zone has no
-    * pieces and reads 0). */
-  private val zoneArea = udf { (outer: Seq[(Double, Double)],
+  /** Surviving area of one polygon zone (outer ring, ring members —
+    * holes and polygon subtrahends —, disks of radius `r`): Σ signed
+    * area of its [[polyZonePieces]], floored at 0 (a fully erased zone
+    * has no pieces and reads 0). */
+  private[graft] def zoneArea(outer: Seq[(Double, Double)],
+      rings: Seq[Seq[(Double, Double)]], disks: Seq[(Double, Double)] = Nil,
+      r: Double = 0.0): Double =
+    math.max(0.0, polyZonePieces(outer, rings, disks, r).map(_.signedArea).sum)
+
+  /** [[zoneArea]] of one zone group. */
+  private val groupArea = udf { (outer: Seq[(Double, Double)],
       holes: Seq[Seq[(Double, Double)]], rings: Seq[Seq[(Double, Double)]],
       disks: Seq[(Double, Double)], r: Double) =>
-    math.max(0.0,
-      polyZonePieces(outer, holes ++ rings, disks, r).map(_.signedArea).sum)
+    zoneArea(outer, holes ++ rings, disks, r)
   }
 
-  /** [[boundingCircle]] of a `vertices` column as a NOT NULL struct
+  /** A circle enclosing a `vertices` ring — the vertex centroid and the
+    * farthest vertex's distance from it — as a NOT NULL struct
     * (_1, _2, _3) = (cx, cy, rad): a join on non-null columns infers no
     * IS NOT NULL filters, which would copy the vertex expressions into
     * the scans' filters. */
-  private val ringCircle =
-    udf((vs: Seq[(Double, Double)]) => boundingCircle(vs)).asNonNullable()
+  private val ringCircle = udf { (vs: Seq[(Double, Double)]) =>
+    val cx = vs.map(_._1).sum / vs.size
+    val cy = vs.map(_._2).sum / vs.size
+    (cx, cy, vs.map { case (x, y) => math.hypot(x - cx, y - cy) }.max)
+  }.asNonNullable()
 
   /** Disk members: one per buffer center (`x_ft`, `y_ft`), radius `r`. */
   def diskMembers(buffers: DataFrame, r: Double): DataFrame =
@@ -1202,7 +767,7 @@ object EraseArcs {
       typedLit(Seq.empty[(Double, Double)]).as("vertices"))
 
   /** Ring members: one per `vertices` ring, as given, with its
-    * [[boundingCircle]] as (ox, oy, rad). Re-wound, rotated or
+    * [[ringCircle]] as (ox, oy, rad). Re-wound, rotated or
     * repeated copies of one polygon stay separate rows;
     * [[polyZonePieces]] canonicalizes and deduplicates each zone's
     * rings, so they still erase once. */
@@ -1307,7 +872,7 @@ object EraseArcs {
   def polyZoneAreaPerZone(zones: DataFrame, members: DataFrame)
       : DataFrame =
     polyZoneGroups(zones, members)
-      .select(col("zone_id"), zoneArea(groupArgs: _*).as("area_sqft"))
+      .select(col("zone_id"), groupArea(groupArgs: _*).as("area_sqft"))
 
   /** One directed boundary piece of an erased-zone output ring
     * (coordinates RELATIVE to the zone center): a circular arc of the
@@ -1332,8 +897,8 @@ object EraseArcs {
 
   /** OUTPUT RINGS of (zone disk − union of buffer disks) — the feature
     * class arcpy's Erase actually emits (reference GSheetsETL_Lab2
-    * .py:133), stitched from the same boundary pieces the area kernel
-    * integrates ([[boundaryDecomp]]): each connected boundary loop
+    * .py:133), stitched from the boundary pieces of
+    * [[boundaryDecomp]]: each connected boundary loop
     * alternates zone arcs (CCW) and buffer hole arcs (CW) joined at
     * circle-circle intersection points; a full untouched circle (zone
     * or strictly-interior buffer) closes alone. [[stitch]] chains them
@@ -1341,7 +906,7 @@ object EraseArcs {
     * rounding — the same point computed through two trig paths).
     * Orientation falls out of construction: loops enclosing surviving
     * area run CCW (signed area > 0), hole loops run CW (< 0), and
-    * Σ signed areas == [[erasedArea]] (same arcContrib terms).
+    * Σ signed areas is the region's area.
     */
   private[graft] def eraseRings(bigR: Double,
       buffersIn: Seq[(Double, Double)], r: Double)

@@ -67,22 +67,18 @@ object Wnv {
        |FROM customer
        |WHERE ${Geo.geocodeHitSql(addrSql)}""".stripMargin
 
-  /** The reference's E3 slice (extract → transform → load,
-    * Lab2ETL.py:104-106) over an actual header-CSV extract: read with the
-    * declared opt-out schema, P1 concat enrichment (faithful to the
-    * reference's double-append of city/state, Lab2ETL.py:69), mock
-    * geocode with miss-drop, constant Type tag — emitting the exact
-    * 3-column `x,y,Type` schema the reference writes (Lab2ETL.py:64,78).
+  /** The reference's E3 slice (extract → transform, Lab2ETL.py:104-106)
+    * over an actual header-CSV extract: [[graft.api.OptOutEtl]]'s
+    * `extract` and `transform` — read with the declared opt-out schema,
+    * P1 concat enrichment (faithful to the reference's double-append of
+    * city/state, Lab2ETL.py:69), mock geocode with miss-drop, constant
+    * Type tag — emitting the exact 3-column `x,y,Type` schema the
+    * reference writes (Lab2ETL.py:64,78). Nothing is loaded, so the ETL
+    * gets no local dir or destination.
     */
   def csvPipeline(spark: SparkSession, csvPath: String): DataFrame = {
-    val addr = concat(col("Street Address"), lit(" Boulder CO"))
-    graft.sources.Tables.csv(spark, csvPath, graft.sources.Tables.optOutSchema)
-      .select(addr.as("addr"))
-      .filter(Geo.geocodeHit(col("addr")))
-      .select(
-        Geo.geocodeLon(col("addr")).as("x"),
-        Geo.geocodeLat(col("addr")).as("y"),
-        lit("Residential").as("Type"))
+    val etl = new graft.api.OptOutEtl(spark, csvPath, "", "")
+    etl.transform(etl.extract())
   }
 
   /** S5 + J1 + P8 over an address table with the reference's exact

@@ -32,7 +32,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType, ShortType, ByteType}
   *   - idempotent: the rewritten join carries bucket attributes with a
   *     reserved name prefix, which the eligibility check refuses.
   */
-object BandJoinRule extends Rule[LogicalPlan] {
+object BandJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 
   private val BktPrefix = "__graft_band_bkt"
 
@@ -50,11 +50,6 @@ object BandJoinRule extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case j @ Join(_, _, Inner, Some(cond), _) if eligible(j, cond) =>
       rewrite(j).getOrElse(j)
-  }
-
-  private def splitAnd(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => splitAnd(l) ++ splitAnd(r)
-    case other => Seq(other)
   }
 
   private def integral(e: Expression): Boolean = e.dataType match {
@@ -88,7 +83,7 @@ object BandJoinRule extends Rule[LogicalPlan] {
 
   private def eligible(j: Join, cond: Expression): Boolean = {
     if (cond.references.exists(_.name.startsWith(BktPrefix))) return false
-    val conjuncts = splitAnd(cond)
+    val conjuncts = splitConjunctivePredicates(cond)
     def crossSide(l: Expression, r: Expression): Boolean =
       (l.references.subsetOf(j.left.outputSet) &&
         r.references.subsetOf(j.right.outputSet)) ||
@@ -106,7 +101,7 @@ object BandJoinRule extends Rule[LogicalPlan] {
   }
 
   private def rewrite(j: Join): Option[LogicalPlan] = {
-    val conjuncts = splitAnd(j.condition.get)
+    val conjuncts = splitConjunctivePredicates(j.condition.get)
     val band = conjuncts.collectFirst {
       case p @ BandPredicate(x, y, w)
           if (x.references.subsetOf(j.left.outputSet) &&

@@ -63,7 +63,7 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType,
   *   - every involved expression and the build plan deterministic;
   *   - idempotent via the reserved aggregate-alias name prefix.
   */
-object BoundAntiJoinRule extends Rule[LogicalPlan] {
+object BoundAntiJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 
   private val KeyPrefix = "__graft_bound"
 
@@ -100,11 +100,6 @@ object BoundAntiJoinRule extends Rule[LogicalPlan] {
     case _ => false
   }
 
-  private def splitAnd(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => splitAnd(l) ++ splitAnd(r)
-    case other => Seq(other)
-  }
-
   /** The normalized bound: `rightExpr CMP leftExpr` with CMP one of
     * {<, <=, >, >=}; `useMax` selects the aggregate whose comparison
     * against the bound is equivalent to the existential.
@@ -128,7 +123,7 @@ object BoundAntiJoinRule extends Rule[LogicalPlan] {
     def setBound(b: Bound): Boolean =
       if (bound.isDefined) false else { bound = Some(b); true }
 
-    for (c <- splitAnd(cond)) {
+    for (c <- splitConjunctivePredicates(cond)) {
       val ok = c match {
         case EqualTo(l, r) if leftOnly(l) && rightOnly(r) =>
           equi += ((l, r)); nEqui += 1; true

@@ -34,7 +34,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   *   - fires only when NO cross-side equality conjunct exists;
   *   - idempotent via the reserved cell-attribute name prefix.
   */
-object DistJoinRule extends Rule[LogicalPlan] {
+object DistJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 
   private val CellPrefix = "__graft_dist_cell"
 
@@ -51,11 +51,6 @@ object DistJoinRule extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case j @ Join(_, _, Inner, Some(cond), _) if eligible(j, cond) =>
       rewrite(j).getOrElse(j)
-  }
-
-  private def splitAnd(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => splitAnd(l) ++ splitAnd(r)
-    case other => Seq(other)
   }
 
   /** `(x1−x2)·(x1−x2) + (y1−y2)·(y1−y2) <= r2` (both multiply operands
@@ -112,7 +107,7 @@ object DistJoinRule extends Rule[LogicalPlan] {
 
   private def eligible(j: Join, cond: Expression): Boolean = {
     if (cond.references.exists(_.name.startsWith(CellPrefix))) return false
-    val conjuncts = splitAnd(cond)
+    val conjuncts = splitConjunctivePredicates(cond)
     def crossSide(l: Expression, r: Expression): Boolean =
       (l.references.subsetOf(j.left.outputSet) &&
         r.references.subsetOf(j.right.outputSet)) ||
@@ -130,7 +125,7 @@ object DistJoinRule extends Rule[LogicalPlan] {
   }
 
   private def rewrite(j: Join): Option[LogicalPlan] = {
-    val conjuncts = splitAnd(j.condition.get)
+    val conjuncts = splitConjunctivePredicates(j.condition.get)
     val dist = conjuncts.collectFirst {
       case p @ DistPredicate(ax, bx, ay, by, r2)
           if crossPair(j, ax, bx, ay, by) => (p, ax, bx, ay, by, r2)

@@ -2,19 +2,18 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.geo.{EraseArcs, Geo}
+import graft.geo.{Geo, SlabArea}
 import graft.ops.Wnv
 
 /** Correctness check of the nine erase-geometry outputs in a
   * `graft.Verify` dump, at any scale:
   *
-  *   - each area query: the distributed areas vs a driver-side replay
-  *     of an independent area kernel on each zone's candidates —
-  *     `wnv_erase_poly` / `wnv_erase_concave`: `erasedAreaPoly` /
-  *     `erasedAreaConcave` on the zone's candidate disks;
-  *     `wnv_erase_poly_sub` / `wnv_erase_concave_sub`:
-  *     `erasedAreaPolySub` / `erasedAreaConcaveSub` on its candidate
-  *     footprints;
+  *   - each area query: the distributed areas vs a local
+  *     [[SlabArea]] of each zone (diamond or star-with-hole) minus its
+  *     candidate disks (`wnv_erase_poly` / `wnv_erase_concave`) or its
+  *     candidate footprints (`wnv_erase_poly_sub` /
+  *     `wnv_erase_concave_sub`), within 1e-9 relative + the r6 output
+  *     quantum;
   *   - each ring query: `piece_seq` dense per (zone, ring); every ring
   *     endpoint-closed (each piece ends where the next starts, last →
   *     first) within the r6 output quantum; Σ ring signed areas per
@@ -23,15 +22,23 @@ import graft.ops.Wnv
   *     `concave`). Rings and areas sum the same boundary pieces, so
   *     this checks the stitch; the replays above check the geometry.
   *     The circle-zone `wnv_erase_rings` has no area query: its Σ ring
-  *     area per zone is checked against a driver replay of
-  *     `erasedArea` on the zone's candidate disks, and its arc
-  *     endpoints are computed from center, radius, angle window and
-  *     traversal direction;
+  *     area per zone is checked against [[SlabArea]] of the zone circle
+  *     minus its candidate disks, and its arc endpoints are computed
+  *     from center, radius, angle window and traversal direction;
   *   - `wnv_erase_arcs`: each zone's arcs == the `zone` pieces of
   *     `wnv_erase_rings`.
   *
+  * Every [[SlabArea]] value is computed at 64 and at 128 nodes per
+  * slab; a step above 1e-12 relative fails the query, since a
+  * reference that has not converged checks nothing.
+  *
   * Usage: runMain graft.tools.EraseRingsCheck <sfDir> <verifyOutDir>
-  * Prints one JSON line per query; exits 1 on any failure.
+  * Prints one JSON line per query — status, rows, `max_abs_err` and
+  * `max_rel_err` (the largest absolute and relative error of a checked
+  * value; dumped floats are r6, so absolute errors up to 5e-7 are
+  * output rounding) and `node_step` (the largest relative 64- vs
+  * 128-node step of its reference, null where none is used); exits 1
+  * on any failure.
   */
 object EraseRingsCheck {
   private type Ring = Seq[(Double, Double)]
@@ -42,6 +49,12 @@ object EraseRingsCheck {
     * point, ring area, and the endpoints' r6 rounding slack. */
   private type Piece =
     (Int, Long, Long, (Double, Double), (Double, Double), Double, Double)
+  /** Per query: name, ok, rows, (max absolute, max relative) error,
+    * reference node step, note. */
+  private type Result =
+    (String, Boolean, Long, (Double, Double), Option[Double], String)
+  /** Per zone: the reference area and its 64- vs 128-node step. */
+  private type Ref = Map[Int, (Double, Double)]
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -59,47 +72,75 @@ object EraseRingsCheck {
         col("cx_ft"), col("cy_ft"), col("radius_ft"))
       .as[(Int, Double, Double, Double)].collect().toSeq
     val r = Wnv.BufferFt
-    val disks = EraseArcs.diskMembers(
-      Wnv.optOut(spark, sfDir).select(col("x_ft"), col("y_ft")), r)
-    val subs = EraseArcs.ringMembers(Wnv.parcelFootprints(spark, sfDir))
-    def centers(ms: Seq[Cand]) = ms.map(m => (m._1, m._2))
-    def footprints(ms: Seq[Cand]) = ms.map(_._3)
-    val circleNear = near(spark, circles, disks)
-    val circleAreas = circles.map { case (z, cx, cy, bigR) =>
-      z -> EraseArcs.erasedArea(bigR, centers(circleNear.getOrElse(z, Nil))
-        .map { case (x, y) => (x - cx, y - cy) }, r)
-    }.toMap
+    // members as (ox, oy, rad, vertices): a circle enclosing the member
+    // and its ring (none for a disk)
+    val disks = Wnv.optOut(spark, sfDir).select(col("x_ft").as("ox"),
+      col("y_ft").as("oy"), lit(r).as("rad"),
+      typedLit(Seq.empty[(Double, Double)]).as("vertices"))
+    val fx = transform(col("vertices"), _.getField("_1"))
+    val fy = transform(col("vertices"), _.getField("_2"))
+    val subs = Wnv.parcelFootprints(spark, sfDir).select(
+      ((array_min(fx) + array_max(fx)) / 2).as("ox"),
+      ((array_min(fy) + array_max(fy)) / 2).as("oy"),
+      (hypot(array_max(fx) - array_min(fx), array_max(fy) - array_min(fy))
+        / 2).as("rad"),
+      col("vertices"))
+    /** [[SlabArea]] per zone of `zs`, each minus its candidates (a
+      * member with no vertices is a disk). */
+    def reference(zs: Seq[(Int, SlabArea.Zone)], near: Map[Int, Seq[Cand]])
+        : Ref =
+      zs.map { case (z, zone) =>
+        val ms = near.getOrElse(z, Nil)
+        def at(nodes: Int) = SlabArea.area(zone,
+          subs = ms.collect { case (_, _, vs) if vs.nonEmpty => vs },
+          disks = ms.collect { case (x, y, vs) if vs.isEmpty => (x, y) },
+          r = r, nodes = nodes)
+        val a = at(64)
+        z -> (a, math.abs(at(128) - a) / math.max(1.0, a))
+      }.toMap
+    def polygons(zs: Seq[(Int, Ring, Seq[Ring])]) =
+      zs.map { case (z, vs, hs) => z -> SlabArea.Polygon(vs, hs) }
+    val circleRef = reference(
+      circles.map { case (z, cx, cy, bigR) =>
+        z -> SlabArea.Circle(cx, cy, bigR) },
+      near(spark, circles, disks))
     val results = Seq(
-      replay("wnv_erase_poly", areas("wnv_erase_poly"), diamonds,
-        near(spark, bounds(diamonds), disks))(
-        (vs, _, ms) => EraseArcs.erasedAreaPoly(vs, centers(ms), r)),
-      replay("wnv_erase_concave", areas("wnv_erase_concave"), stars,
-        near(spark, bounds(stars), disks))(
-        (vs, hs, ms) => EraseArcs.erasedAreaConcave(vs, hs, centers(ms), r)),
-      replay("wnv_erase_poly_sub", areas("wnv_erase_poly_sub"), diamonds,
-        near(spark, bounds(diamonds), subs))(
-        (vs, _, ms) => EraseArcs.erasedAreaPolySub(vs, footprints(ms))),
-      replay("wnv_erase_concave_sub", areas("wnv_erase_concave_sub"), stars,
-        near(spark, bounds(stars), subs))(
-        (vs, hs, ms) => EraseArcs.erasedAreaConcaveSub(vs, hs, footprints(ms))),
+      replay("wnv_erase_poly", areas("wnv_erase_poly"), reference(
+        polygons(diamonds), near(spark, bounds(diamonds), disks))),
+      replay("wnv_erase_concave", areas("wnv_erase_concave"), reference(
+        polygons(stars), near(spark, bounds(stars), disks))),
+      replay("wnv_erase_poly_sub", areas("wnv_erase_poly_sub"), reference(
+        polygons(diamonds), near(spark, bounds(diamonds), subs))),
+      replay("wnv_erase_concave_sub", areas("wnv_erase_concave_sub"),
+        reference(polygons(stars), near(spark, bounds(stars), subs))),
       rings("wnv_erase_poly_sub_rings",
         linePieces(read("wnv_erase_poly_sub_rings")),
-        areas("wnv_erase_poly_sub")),
+        areas("wnv_erase_poly_sub"), None),
       rings("wnv_erase_concave_sub_rings",
         linePieces(read("wnv_erase_concave_sub_rings")),
-        areas("wnv_erase_concave_sub")),
+        areas("wnv_erase_concave_sub"), None),
       rings("wnv_erase_poly_disk_rings",
         linePieces(read("wnv_erase_poly_disk_rings")),
-        areas("wnv_erase_concave")),
+        areas("wnv_erase_concave"), None),
       rings("wnv_erase_rings", arcPieces(read("wnv_erase_rings")),
-        circleAreas),
+        circleRef.map { case (z, (a, _)) => z -> a },
+        Some(circleRef.values.map(_._2).max)),
       arcs(read("wnv_erase_arcs"), read("wnv_erase_rings")))
-    results.foreach { case (q, ok, rows, note) =>
+    results.foreach { case (q, ok, rows, (abs, rel), step, note) =>
       println(s"""{"query": "$q", "status": "${if (ok) "ok" else "fail"}", """ +
-        s""""rows": $rows, "note": "${note.replace("\"", "'")}"}""")
+        s""""rows": $rows, "max_abs_err": $abs, "max_rel_err": $rel, """ +
+        s""""node_step": ${step.getOrElse("null")}, """ +
+        s""""note": "${note.replace("\"", "'")}"}""")
     }
     spark.stop()
     if (!results.forall(_._2)) sys.exit(1)
+  }
+
+  /** (max absolute, max relative) error over (got, want) pairs. */
+  private def errors(pairs: Iterable[(Double, Double)]): (Double, Double) = {
+    val abs = pairs.map { case (g, w) => math.abs(g - w) }
+    val rel = pairs.map { case (g, w) => math.abs(g - w) / math.max(1.0, w) }
+    ((abs ++ Seq(0.0)).max, (rel ++ Seq(0.0)).max)
   }
 
   /** (zone_id, outer ring, holes) of a zone catalog. */
@@ -112,8 +153,8 @@ object EraseRingsCheck {
       .as[(Int, Ring, Seq[Ring])].collect().toSeq
   }
 
-  /** (zone_id, cx, cy, rad): each polygon zone's outer-ring bounding
-    * circle, as the plans compute it. */
+  /** (zone_id, cx, cy, rad): a circle enclosing each polygon zone's
+    * outer ring. */
   private def bounds(zs: Seq[(Int, Ring, Seq[Ring])])
       : Seq[(Int, Double, Double, Double)] =
     zs.map { case (z, vs, _) =>
@@ -122,9 +163,10 @@ object EraseRingsCheck {
       (z, cx, cy, vs.map { case (x, y) => math.hypot(x - cx, y - cy) }.max)
     }
 
-  /** Members per zone as (ox, oy, vertices), under the plans'
-    * bounding-circle candidate rule, assigned distributed: only
-    * zone-local members reach the driver. */
+  /** Members per zone as (ox, oy, vertices): those whose enclosing
+    * circle meets the zone's bounding circle, a superset of the members
+    * that touch the zone. Assigned distributed: only zone-local members
+    * are collected. */
   private def near(spark: SparkSession,
       bound: Seq[(Int, Double, Double, Double)],
       members: DataFrame): Map[Int, Seq[Cand]] = {
@@ -139,21 +181,20 @@ object EraseRingsCheck {
       }
   }
 
-  /** Distributed area per zone == the driver kernel's replay, within
-    * 1e-9 relative + the r6 output quantum. */
-  private def replay(q: String, got: Map[Int, Double],
-      zs: Seq[(Int, Ring, Seq[Ring])], near: Map[Int, Seq[Cand]])(
-      kernel: (Ring, Seq[Ring], Seq[Cand]) => Double)
-      : (String, Boolean, Long, String) = {
-    val bad = zs.flatMap { case (z, vs, hs) =>
-      val want = kernel(vs, hs, near.getOrElse(z, Nil))
+  /** Distributed area per zone == the reference, within 1e-9 relative
+    * + the r6 output quantum. */
+  private def replay(q: String, got: Map[Int, Double], ref: Ref): Result = {
+    val bad = ref.toSeq.sortBy(_._1).flatMap { case (z, (want, _)) =>
       val g = got.getOrElse(z, Double.NaN)
       if (math.abs(g - want) <= 1e-9 * math.max(1.0, want) + 1e-5) None
       else Some(s"zone $z: got $g want $want")
     }
-    val ok = bad.isEmpty && got.keySet == zs.map(_._1).toSet
-    (q, ok, got.size.toLong,
-      if (ok) s"distributed == driver kernel replay on ${zs.size} zones"
+    val step = ref.values.map(_._2).max
+    val ok = bad.isEmpty && got.keySet == ref.keySet && step <= 1e-12
+    (q, ok, got.size.toLong, errors(ref.map { case (z, (want, _)) =>
+        (got.getOrElse(z, Double.NaN), want) }), Some(step),
+      if (ok) s"distributed == SlabArea on ${ref.size} zones"
+      else if (bad.isEmpty) s"SlabArea 64- vs 128-node step $step"
       else bad.take(3).mkString("; "))
   }
 
@@ -186,9 +227,10 @@ object EraseRingsCheck {
       }
 
   /** Density, closure and conservation of one ring query's pieces
-    * against per-zone areas. */
-  private def rings(q: String, rows: Seq[Piece], areas: Map[Int, Double])
-      : (String, Boolean, Long, String) = {
+    * against per-zone areas (with `step`, the node step of a
+    * [[SlabArea]] reference). */
+  private def rings(q: String, rows: Seq[Piece], areas: Map[Int, Double],
+      step: Option[Double]): Result = {
     val byRing = rows.groupBy(r => (r._1, r._2))
     val seqBad = byRing.collect { case (k, rs)
       if rs.map(_._3).sorted != (0L until rs.size.toLong) => s"seq $k" }
@@ -215,17 +257,18 @@ object EraseRingsCheck {
     // zero rings is the true answer only when every zone is erased
     val emptyOk = rows.nonEmpty || areas.values.forall(_ == 0.0)
     val bad = (consBad ++ seqBad ++ openBad).toSeq
-    val ok = bad.isEmpty && emptyOk
+    val ok = bad.isEmpty && emptyOk && step.forall(_ <= 1e-12)
     (q, ok, rows.length.toLong,
+      errors(areas.map { case (z, a) => (sums.getOrElse(z, 0.0), a) }), step,
       if (ok) s"${ringArea.size} rings: piece_seq dense, endpoint-closed, " +
         "sum of ring areas == the zone's area per zone"
       else if (!emptyOk) "no rings but nonzero areas"
+      else if (bad.isEmpty) s"SlabArea 64- vs 128-node step ${step.get}"
       else bad.take(3).mkString("; "))
   }
 
   /** Each zone's surviving arcs == the `zone` pieces of its rings. */
-  private def arcs(arcDf: DataFrame, ringDf: DataFrame)
-      : (String, Boolean, Long, String) = {
+  private def arcs(arcDf: DataFrame, ringDf: DataFrame): Result = {
     def perZone(df: DataFrame): Map[Int, Seq[(Double, Double)]] =
       df.select(col("zone_id"), col("start_deg"), col("end_deg")).collect()
         .groupBy(_.getInt(0)).map { case (z, rs) =>
@@ -238,6 +281,7 @@ object EraseRingsCheck {
         s"zone $z: arcs ${got.get(z)} vs ring zone pieces ${want.get(z)}"
     }
     ("wnv_erase_arcs", bad.isEmpty, got.values.map(_.size).sum.toLong,
+      if (bad.isEmpty) (0.0, 0.0) else (Double.NaN, Double.NaN), None,
       if (bad.isEmpty) s"${got.size} zones: arcs == zone pieces of " +
         "wnv_erase_rings"
       else bad.take(3).mkString("; "))

@@ -3,13 +3,14 @@ package graft
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.rng.Seed
 
-import graft.geo.EraseArcs
+import graft.geo.{EraseArcs, SlabArea}
 
-/** Property-based tests (ScalaCheck, fixed seed) for the round-12
-  * polygon-subtrahend erase kernel: GeoSpec pins hand cases and two
-  * deterministic pseudo-random configurations; these pin the ALGEBRA
-  * over arbitrary generated configurations — the invariants that hold
-  * for every input, independent of any reference value:
+/** Property-based tests (ScalaCheck, fixed seed) for the production
+  * per-zone erase area ([[EraseArcs.zoneArea]]) under polygon
+  * subtrahends: GeoSpec pins hand cases and two deterministic
+  * pseudo-random configurations; these pin the ALGEBRA over arbitrary
+  * generated configurations — the invariants that hold for every
+  * input, independent of any reference value:
   *
   *   - bounds: 0 ≤ area(Z ∖ U) ≤ area(Z);
   *   - monotonicity: adding a subtrahend never increases the area;
@@ -67,7 +68,7 @@ class GeoPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     check("invariants")(Prop.forAll(genZone, genSubs(1300.0)) { (z, subs) =>
       val zoneArea = ringArea(z)
       val areas = subs.inits.toList.reverse // [], [s0], [s0,s1], ...
-        .map(ss => EraseArcs.erasedAreaPolySub(z, ss))
+        .map(ss => EraseArcs.zoneArea(z, ss))
       val bounded = areas.forall(a => a >= 0.0 && a <= zoneArea + 1e-6)
       val monotone = areas.sliding(2).forall {
         case Seq(prev, next) => next <= prev + 1e-6
@@ -76,11 +77,11 @@ class GeoPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
       val full = areas.last
       val dup = subs match {
         case s :: _ =>
-          math.abs(EraseArcs.erasedAreaPolySub(z, subs :+ s) - full) <= 1e-6
+          math.abs(EraseArcs.zoneArea(z, subs :+ s) - full) <= 1e-6
         case Nil => true
       }
       val perm = math.abs(
-        EraseArcs.erasedAreaPolySub(z, subs.reverse) - full) <= 1e-6
+        EraseArcs.zoneArea(z, subs.reverse) - full) <= 1e-6
       bounded && monotone && dup && perm
     })
   }
@@ -107,7 +108,7 @@ class GeoPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     } yield subs
     check("disjoint-additivity")(Prop.forAll(genCase) { subs =>
       val want = ringArea(z.toSeq) - subs.map(ringArea).sum
-      val got = EraseArcs.erasedAreaPolySub(z, subs)
+      val got = EraseArcs.zoneArea(z, subs)
       math.abs(got - want) <= 1e-6 * math.max(1.0, want)
     })
   }
@@ -120,7 +121,7 @@ class GeoPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
       .withInitialSeed(Seed(0x5EEDL))
     val res = SCTest.check(p, Prop.forAll(genZone, genSubs(900.0)) {
       (z, subs) =>
-        val got = EraseArcs.erasedAreaPolySub(z, subs)
+        val got = EraseArcs.zoneArea(z, subs)
         def insideConvex(poly: Seq[(Double, Double)], x: Double, y: Double) = {
           // winding-agnostic convex test: all cross products same sign
           val cs = poly.indices.map { i =>
@@ -162,7 +163,7 @@ class GeoPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     // endpoint matching. The stitcher's documented contract (arcpy
     // resolves tangency via cluster tolerance; this engine does NOT —
     // it must throw): either IllegalArgumentException, or closed rings
-    // whose Σ signed areas equals the area kernel.
+    // whose Σ signed areas equals the slab reference.
     val grid = 8; val pitch = 250.0; val hw = 125.0
     def cellSq(i: Int, j: Int): Seq[(Double, Double)] = {
       val cx = -1000.0 + pitch * i + hw
@@ -196,7 +197,7 @@ class GeoPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
             }
           }
           val sum = rings.flatten.map(_.signedArea).sum
-          val want = EraseArcs.erasedAreaPolySub(zone, subs)
+          val want = SlabArea.area(SlabArea.Polygon(zone), subs)
           closed && math.abs(sum - want) <= math.max(tol, 1e-9 * want)
       }
     })
@@ -213,7 +214,7 @@ class GeoPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
     // ON the zone boundary crosses it through a vertex-free exact
     // midpoint. Contract as for the line stitcher: either
     // IllegalArgumentException, or closed rings whose Σ signed areas
-    // equals the INDEPENDENT area kernel.
+    // equals the slab reference.
     val zone = Seq((-1000.0, -1000.0), (1000.0, -1000.0),
       (1000.0, 1000.0), (-1000.0, 1000.0))
     val r = 250.0
@@ -240,7 +241,8 @@ class GeoPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
             }
           }
           val sum = rings.flatten.map(_.signedArea).sum
-          val want = EraseArcs.erasedAreaPoly(zone, disks, r)
+          val want = SlabArea.area(SlabArea.Polygon(zone), disks = disks,
+            r = r)
           closed && math.abs(sum - want) <= 1e-6 * math.max(1.0, want)
         } match {
         case scala.util.Failure(e) =>

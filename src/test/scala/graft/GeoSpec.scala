@@ -1,9 +1,23 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.geo.{Geo, Lcc}
+import graft.geo.{Geo, Lcc, SlabArea}
 
 class GeoSpec extends SparkSpec {
+
+  private type Ring = Seq[(Double, Double)]
+
+  /** [[SlabArea]] of a polygon zone: the reference the erase kernels
+    * are checked against. */
+  private def slab(outer: Ring, holes: Seq[Ring] = Nil, subs: Seq[Ring] = Nil,
+      disks: Seq[(Double, Double)] = Nil, r: Double = 0.0): Double =
+    SlabArea.area(SlabArea.Polygon(outer, holes), subs, disks, r)
+
+  /** [[SlabArea]] of a circle zone of radius `bigR` centred at the
+    * origin, minus disks of radius `r`. */
+  private def slabCircle(bigR: Double, disks: Seq[(Double, Double)],
+      r: Double): Double =
+    SlabArea.area(SlabArea.Circle(0.0, 0.0, bigR), disks = disks, r = r)
 
   test("Lcc forward projects the EPSG:2876 origin to the false origin") {
     // At (lat0=39°20'N, lon0=105°30'W) easting/northing equal the false
@@ -99,10 +113,9 @@ class GeoSpec extends SparkSpec {
   }
 
   test("erased area: closed form matches hand cases and grid sampling") {
-    import graft.geo.EraseArcs
+    // the closed forms check the slab reference itself
     val R = 1000.0; val r = 300.0
-    def area(bufs: (Double, Double)*): Double =
-      EraseArcs.erasedArea(R, bufs, r)
+    def area(bufs: (Double, Double)*): Double = slabCircle(R, bufs, r)
     val full = math.Pi * R * R
     // no buffers / far buffer → full disk
     assert(math.abs(area() - full) < 1e-6)
@@ -113,7 +126,7 @@ class GeoSpec extends SparkSpec {
     assert(math.abs(area((100.0, 50.0), (100.0, 50.0)) -
       (full - math.Pi * r * r)) < 1e-6)
     // zone swallowed by a huge buffer → empty region
-    assert(EraseArcs.erasedArea(R, Seq((0.0, 0.0)), 2500.0) === 0.0)
+    assert(slabCircle(R, Seq((0.0, 0.0)), 2500.0) === 0.0)
     // straddling buffer → full − exact lens area
     val d = 1000.0
     def lens(rr: Double, dd: Double): Double =
@@ -128,7 +141,7 @@ class GeoSpec extends SparkSpec {
       val rad = 150.0 + (i * 173) % 1100
       (rad * math.cos(a), rad * math.sin(a))
     }
-    val got = EraseArcs.erasedArea(R, bufs, r)
+    val got = slabCircle(R, bufs, r)
     val n = 600
     var in = 0; var tot = 0
     for (ix <- -n to n; iy <- -n to n) {
@@ -142,7 +155,7 @@ class GeoSpec extends SparkSpec {
     }
     val sampled = full * in / tot
     assert(math.abs(got - sampled) / full < 2e-3,
-      s"green $got vs grid $sampled")
+      s"slab $got vs grid $sampled")
   }
 
   test("erase arcs: covered + surviving is 360 degrees on real frames") {
@@ -195,11 +208,11 @@ class GeoSpec extends SparkSpec {
         if (ring.exists(_.ccw)) assert(area > 0, s"outer ring CW: $ring")
         else assert(area < 0, s"hole ring CCW: $ring")
       }
-      // area conservation: Σ ring signed areas == erasedArea
+      // area conservation: Σ ring signed areas == the slab reference
       val sum = rings.flatten.map(_.signedArea).sum
-      val want = EraseArcs.erasedArea(R, bufs, r)
+      val want = slabCircle(R, bufs, r)
       assert(math.abs(sum - want) <= 1e-6 * math.max(1.0, want),
-        s"rings $sum vs erasedArea $want")
+        s"rings $sum vs SlabArea $want")
       rings
     }
     // untouched zone: one full-circle CCW ring of area πR²
@@ -283,31 +296,8 @@ class GeoSpec extends SparkSpec {
 
   test("polygon erase: hand cases, winding invariance, grid sampling") {
     import graft.geo.EraseArcs
-    val r = 300.0
     val square = Seq((-1000.0, -1000.0), (1000.0, -1000.0),
       (1000.0, 1000.0), (-1000.0, 1000.0))
-    def area(bufs: (Double, Double)*): Double =
-      EraseArcs.erasedAreaPoly(square, bufs, r)
-    val full = 4e6
-    assert(math.abs(area() - full) < 1e-6)
-    assert(math.abs(area((9000.0, 0.0)) - full) < 1e-6) // disjoint disk
-    // interior hole → full − πr²
-    assert(math.abs(area((0.0, 0.0)) - (full - math.Pi * r * r)) < 1e-6)
-    // duplicate centers erase once, not twice
-    assert(math.abs(area((100.0, 50.0), (100.0, 50.0)) -
-      (full - math.Pi * r * r)) < 1e-6)
-    // winding invariance: CW input normalizes
-    assert(math.abs(EraseArcs.erasedAreaPoly(square.reverse,
-      Seq((0.0, 0.0)), r) - (full - math.Pi * r * r)) < 1e-6)
-    // center ON an edge → exactly half the disk erased
-    assert(math.abs(area((1000.0, 0.0)) -
-      (full - math.Pi * r * r / 2)) < 1e-6)
-    // polygon swallowed by a huge disk → empty region
-    assert(EraseArcs.erasedAreaPoly(
-      Seq((-100.0, -100.0), (100.0, -100.0), (100.0, 100.0),
-        (-100.0, 100.0)), Seq((0.0, 0.0)), 500.0) === 0.0)
-    // pseudo-random configuration over an irregular convex pentagon
-    // vs grid sampling (the same 0.2% gate as the circle kernel)
     val pent = Seq((-900.0, -700.0), (800.0, -1000.0), (1100.0, 200.0),
       (200.0, 1000.0), (-1000.0, 500.0))
     val bufs = (1 to 12).map { i =>
@@ -315,38 +305,64 @@ class GeoSpec extends SparkSpec {
       val rad = 150.0 + (i * 173) % 1000
       (rad * math.cos(a), rad * math.sin(a))
     }
-    val got = EraseArcs.erasedAreaPoly(pent, bufs, r)
-    // half-plane point-in-polygon for the sampler (pent is CCW)
-    def inside(x: Double, y: Double): Boolean =
-      pent.indices.forall { i =>
-        val (ax, ay) = pent(i); val (bx, by) = pent((i + 1) % pent.size)
-        (bx - ax) * (y - ay) - (by - ay) * (x - ax) >= 0
+    // the production per-zone area and the slab reference, same cases
+    Seq[(Ring, Seq[(Double, Double)], Double) => Double](
+        (z, ds, r) => EraseArcs.zoneArea(z, Nil, ds, r),
+        (z, ds, r) => slab(z, disks = ds, r = r)).foreach { kernel =>
+      val r = 300.0
+      def area(bufs: (Double, Double)*): Double = kernel(square, bufs, r)
+      val full = 4e6
+      assert(math.abs(area() - full) < 1e-6)
+      assert(math.abs(area((9000.0, 0.0)) - full) < 1e-6) // disjoint disk
+      // interior hole → full − πr²
+      assert(math.abs(area((0.0, 0.0)) - (full - math.Pi * r * r)) < 1e-6)
+      // duplicate centers erase once, not twice
+      assert(math.abs(area((100.0, 50.0), (100.0, 50.0)) -
+        (full - math.Pi * r * r)) < 1e-6)
+      // winding invariance: CW input normalizes
+      assert(math.abs(kernel(square.reverse, Seq((0.0, 0.0)), r) -
+        (full - math.Pi * r * r)) < 1e-6)
+      // center ON an edge → exactly half the disk erased
+      assert(math.abs(area((1000.0, 0.0)) -
+        (full - math.Pi * r * r / 2)) < 1e-6)
+      // polygon swallowed by a huge disk → empty region
+      assert(kernel(Seq((-100.0, -100.0), (100.0, -100.0), (100.0, 100.0),
+        (-100.0, 100.0)), Seq((0.0, 0.0)), 500.0) === 0.0)
+      // pseudo-random configuration over an irregular convex pentagon
+      // vs grid sampling (the same 0.2% gate as the circle case)
+      val got = kernel(pent, bufs, r)
+      // half-plane point-in-polygon for the sampler (pent is CCW)
+      def inside(x: Double, y: Double): Boolean =
+        pent.indices.forall { i =>
+          val (ax, ay) = pent(i); val (bx, by) = pent((i + 1) % pent.size)
+          (bx - ax) * (y - ay) - (by - ay) * (x - ax) >= 0
+        }
+      val n = 600
+      var in = 0; var tot = 0
+      for (ix <- -n to n; iy <- -n to n) {
+        val x = ix * 1100.0 / n; val y = iy * 1100.0 / n
+        if (inside(x, y)) {
+          tot += 1
+          val hit = bufs.exists { case (bx, by) =>
+            (x - bx) * (x - bx) + (y - by) * (y - by) < r * r }
+          if (!hit) in += 1
+        }
       }
-    val n = 600
-    var in = 0; var tot = 0
-    for (ix <- -n to n; iy <- -n to n) {
-      val x = ix * 1100.0 / n; val y = iy * 1100.0 / n
-      if (inside(x, y)) {
-        tot += 1
-        val hit = bufs.exists { case (bx, by) =>
-          (x - bx) * (x - bx) + (y - by) * (y - by) < r * r }
-        if (!hit) in += 1
-      }
+      val pentArea = math.abs(pent.indices.map { i =>
+        val (x1, y1) = pent(i); val (x2, y2) = pent((i + 1) % pent.size)
+        x1 * y2 - x2 * y1
+      }.sum) / 2
+      val sampled = pentArea * in / tot
+      assert(math.abs(got - sampled) / pentArea < 2e-3,
+        s"area $got vs grid $sampled")
     }
-    val pentArea = math.abs(pent.indices.map { i =>
-      val (x1, y1) = pent(i); val (x2, y2) = pent((i + 1) % pent.size)
-      x1 * y2 - x2 * y1
-    }.sum) / 2
-    val sampled = pentArea * in / tot
-    assert(math.abs(got - sampled) / pentArea < 2e-3,
-      s"green $got vs grid $sampled")
   }
 
   test("polygon erase: a repeated vertex fails loudly, not as NaN area") {
     import graft.geo.EraseArcs
     val bad = Seq((0.0, 0.0), (0.0, 0.0), (1000.0, 0.0), (500.0, 800.0))
     val e = intercept[IllegalArgumentException] {
-      EraseArcs.erasedAreaPoly(bad, Seq((100.0, 100.0)), 300.0)
+      EraseArcs.zoneArea(bad, Nil, Seq((100.0, 100.0)), 300.0)
     }
     assert(e.getMessage.contains("degenerate"))
   }
@@ -363,15 +379,15 @@ class GeoSpec extends SparkSpec {
       val a = 2 * math.Pi * k / 512
       (R * math.cos(a), R * math.sin(a))
     }
-    val got = EraseArcs.erasedAreaPoly(ngon, bufs, r)
-    val want = EraseArcs.erasedArea(R, bufs, r)
+    val got = EraseArcs.zoneArea(ngon, Nil, bufs, r)
+    val want = slabCircle(R, bufs, r)
     // the inscribed 512-gon underestimates the disk by ~R²π³/(3·512²)
     // relative ≈ 2e-5 — well inside the 1e-3 gate
     assert(math.abs(got - want) / want < 1e-3, s"ngon $got vs circle $want")
   }
 
-  /** Exact surviving area of each circle zone (driver kernel on the
-    * buffers within R + r of its center). */
+  /** Surviving area of each circle zone ([[SlabArea]] on the buffers
+    * within R + r of its center). */
   private def circleAreas(bs: Seq[(Double, Double)], r: Double)
       : Map[Int, Double] =
     graft.ops.Wnv.zones(spark, sf).select(col("zone_id").cast("int"),
@@ -382,7 +398,7 @@ class GeoSpec extends SparkSpec {
             if (x - cx) * (x - cx) + (y - cy) * (y - cy) < (rr + r) * (rr + r) =>
           (x - cx, y - cy)
         }
-        w.getInt(0) -> graft.geo.EraseArcs.erasedArea(rr, near, r)
+        w.getInt(0) -> slabCircle(rr, near, r)
       }.toMap
 
   /** Rings of line pieces only (the polygon-subtrahend cells). */
@@ -415,12 +431,7 @@ class GeoSpec extends SparkSpec {
       val rad = vs.map { case (x, y) => math.hypot(x - cx, y - cy) }.max
       val near = bs.toSeq.filter { case (x, y) =>
         (x - cx) * (x - cx) + (y - cy) * (y - cy) < (rad + r) * (rad + r) }
-      val want =
-        if (near.isEmpty) math.abs(vs.indices.map { i =>
-          val (x1, y1) = vs(i); val (x2, y2) = vs((i + 1) % vs.size)
-          x1 * y2 - x2 * y1
-        }.sum) / 2
-        else EraseArcs.erasedAreaPoly(vs, near, r)
+      val want = slab(vs, disks = near, r = r)
       assert(math.abs(got(z) - want) <= 1e-9 * math.max(1.0, want),
         s"zone $z: spark ${got(z)} vs replay $want")
     }
@@ -456,66 +467,39 @@ class GeoSpec extends SparkSpec {
     c
   }
 
-  test("triangulation partitions concave rings: areas conserve") {
-    import graft.geo.EraseArcs
-    val lshape = Seq((0.0, 0.0), (2000.0, 0.0), (2000.0, 1000.0),
-      (1000.0, 1000.0), (1000.0, 2000.0), (0.0, 2000.0))
-    Seq(star, lshape, star.reverse,
-        // convex rings triangulate too
-        Seq((-900.0, -700.0), (800.0, -1000.0), (1100.0, 200.0),
-          (200.0, 1000.0), (-1000.0, 500.0)),
-        // a closing duplicate vertex and a collinear vertex are handled
-        Seq((0.0, 0.0), (1000.0, 0.0), (2000.0, 0.0), (2000.0, 2000.0),
-          (0.0, 2000.0), (0.0, 0.0))).foreach { ring =>
-      val tris = EraseArcs.triangulate(ring)
-      assert(tris.forall(_.size == 3))
-      val sum = tris.map(ringArea).sum
-      val want = ringArea(ring.distinct)
-      assert(math.abs(sum - want) <= 1e-9 * want,
-        s"triangulated $sum vs shoelace $want for $ring")
-    }
-  }
-
   test("concave erase: hand cases, hole algebra, winding invariance") {
     import graft.geo.EraseArcs
-    val r = 300.0
-    // the convex kernel REJECTS concave rings loudly
-    val e = intercept[IllegalArgumentException] {
-      EraseArcs.erasedAreaPoly(star, Seq((0.0, 500.0)), r)
-    }
-    assert(e.getMessage.contains("concave"))
-    // concave == convex kernel on convex input
     val square = Seq((-1000.0, -1000.0), (1000.0, -1000.0),
       (1000.0, 1000.0), (-1000.0, 1000.0))
-    Seq(Seq((0.0, 0.0)), Seq((900.0, 200.0), (-300.0, 700.0)))
-      .foreach { bufs =>
-        assert(math.abs(
-          EraseArcs.erasedAreaConcave(square, Nil, bufs, r) -
-            EraseArcs.erasedAreaPoly(square, bufs, r)) < 1e-6)
-      }
-    // L-shape minus a disk wholly inside one arm
     val lshape = Seq((0.0, 0.0), (2000.0, 0.0), (2000.0, 1000.0),
       (1000.0, 1000.0), (1000.0, 2000.0), (0.0, 2000.0))
-    assert(math.abs(
-      EraseArcs.erasedAreaConcave(lshape, Nil, Seq((500.0, 500.0)), r) -
+    // the production per-zone area and the slab reference, same cases
+    Seq[(Ring, Seq[Ring], Seq[(Double, Double)], Double) => Double](
+        (z, hs, ds, r) => EraseArcs.zoneArea(z, hs, ds, r),
+        (z, hs, ds, r) => slab(z, hs, disks = ds, r = r)).foreach { area =>
+      val r = 300.0
+      // the two agree on convex input
+      Seq(Seq((0.0, 0.0)), Seq((900.0, 200.0), (-300.0, 700.0)))
+        .foreach { bufs =>
+          assert(math.abs(area(square, Nil, bufs, r) -
+            slab(square, disks = bufs, r = r)) < 1e-6)
+        }
+      // L-shape minus a disk wholly inside one arm
+      assert(math.abs(area(lshape, Nil, Seq((500.0, 500.0)), r) -
         (3e6 - math.Pi * r * r)) < 1e-6)
-    // no buffers: outer − hole exactly
-    assert(math.abs(
-      EraseArcs.erasedAreaConcave(star, Seq(holeSq), Nil, r) -
+      // no buffers: outer − hole exactly
+      assert(math.abs(area(star, Seq(holeSq), Nil, r) -
         (ringArea(star) - ringArea(holeSq))) < 1e-9 * ringArea(star))
-    // a disk strictly inside the hole erases NOTHING: the outer loss
-    // and the hole loss cancel exactly (disk ⊆ hole ⊆ outer)
-    val tiny = 100.0
-    assert(math.abs(
-      EraseArcs.erasedAreaConcave(star, Seq(holeSq),
-        Seq((0.0, 0.0)), tiny) -
+      // a disk strictly inside the hole erases NOTHING: the outer loss
+      // and the hole loss cancel exactly (disk ⊆ hole ⊆ outer)
+      val tiny = 100.0
+      assert(math.abs(area(star, Seq(holeSq), Seq((0.0, 0.0)), tiny) -
         (ringArea(star) - ringArea(holeSq))) < 1e-6)
-    // winding invariance: both rings reversed
-    assert(math.abs(
-      EraseArcs.erasedAreaConcave(star.reverse, Seq(holeSq.reverse),
-        Seq((600.0, 0.0)), r) -
-      EraseArcs.erasedAreaConcave(star, Seq(holeSq),
-        Seq((600.0, 0.0)), r)) < 1e-6)
+      // winding invariance: both rings reversed
+      assert(math.abs(
+        area(star.reverse, Seq(holeSq.reverse), Seq((600.0, 0.0)), r) -
+        area(star, Seq(holeSq), Seq((600.0, 0.0)), r)) < 1e-6)
+    }
   }
 
   test("concave erase: grid sampling on the star-with-hole") {
@@ -526,7 +510,7 @@ class GeoSpec extends SparkSpec {
       val rad = 100.0 + (i * 173) % 900
       (rad * math.cos(a), rad * math.sin(a))
     }
-    val got = EraseArcs.erasedAreaConcave(star, Seq(holeSq), bufs, r)
+    val got = EraseArcs.zoneArea(star, Seq(holeSq), bufs, r)
     val n = 600
     var in = 0; var tot = 0
     for (ix <- -n to n; iy <- -n to n) {
@@ -540,8 +524,10 @@ class GeoSpec extends SparkSpec {
     }
     val regionArea = ringArea(star) - ringArea(holeSq)
     val sampled = regionArea * in / tot
-    assert(math.abs(got - sampled) / regionArea < 2e-3,
-      s"green $got vs grid $sampled")
+    Seq(got, slab(star, Seq(holeSq), disks = bufs, r = r)).foreach { a =>
+      assert(math.abs(a - sampled) / regionArea < 2e-3,
+        s"area $a vs grid $sampled")
+    }
   }
 
   test("concave erase: fine n-gon annulus converges to circle-kernel difference") {
@@ -557,10 +543,9 @@ class GeoSpec extends SparkSpec {
         val a = 2 * math.Pi * j / k
         (rad * math.cos(a), rad * math.sin(a))
       }
-    val got = EraseArcs.erasedAreaConcave(
+    val got = EraseArcs.zoneArea(
       ngon(R, 512), Seq(ngon(rHole, 256)), bufs, r)
-    val want = EraseArcs.erasedArea(R, bufs, r) -
-      EraseArcs.erasedArea(rHole, bufs, r)
+    val want = slabCircle(R, bufs, r) - slabCircle(rHole, bufs, r)
     assert(math.abs(got - want) / want < 1e-3,
       s"annulus $got vs circle difference $want")
   }
@@ -591,9 +576,7 @@ class GeoSpec extends SparkSpec {
       val rad = vs.map { case (x, y) => math.hypot(x - cx, y - cy) }.max
       val near = bs.toSeq.filter { case (x, y) =>
         (x - cx) * (x - cx) + (y - cy) * (y - cy) < (rad + r) * (rad + r) }
-      val want =
-        if (near.isEmpty) ringArea(vs) - hs.map(ringArea).sum
-        else EraseArcs.erasedAreaConcave(vs, hs, near, r)
+      val want = slab(vs, hs, disks = near, r = r)
       assert(math.abs(got(z) - want) <= 1e-9 * math.max(1.0, want),
         s"zone $z: spark ${got(z)} vs replay $want")
     }
@@ -614,33 +597,36 @@ class GeoSpec extends SparkSpec {
     def sq(cx: Double, cy: Double, hw: Double) = Seq(
       (cx - hw, cy - hw), (cx + hw, cy - hw),
       (cx + hw, cy + hw), (cx - hw, cy + hw))
-    def area(subs: Seq[(Double, Double)]*): Double =
-      EraseArcs.erasedAreaPolySub(square, subs)
-    val full = 4e6
-    assert(math.abs(area() - full) < 1e-6)
-    // disjoint subtrahend leaves the zone whole
-    assert(math.abs(area(sq(9000, 0, 300)) - full) < 1e-6)
-    // centered interior square: a² − b² exactly
-    assert(math.abs(area(sq(0, 0, 300)) - (full - 600.0 * 600.0)) < 1e-6)
-    // duplicate subtrahends erase once (union semantics)
-    assert(math.abs(area(sq(0, 0, 300), sq(0, 0, 300)) -
-      (full - 600.0 * 600.0)) < 1e-6)
-    // corner overlap: only the intersecting rectangle is erased
-    assert(math.abs(area(sq(1000, 1000, 400)) -
-      (full - 400.0 * 400.0)) < 1e-6)
-    // two OVERLAPPING interior squares: inclusion-exclusion
-    val a1 = sq(0, 0, 300); val a2 = sq(200, 0, 300)
-    val inter = 400.0 * 600.0
-    assert(math.abs(area(a1, a2) -
-      (full - (360000.0 + 360000.0 - inter))) < 1e-6)
-    // subtrahend covering the zone entirely -> empty
-    assert(area(sq(0, 0, 5000)) === 0.0)
-    // winding invariance: CW subtrahend input normalizes
-    assert(math.abs(EraseArcs.erasedAreaPolySub(square,
-      Seq(sq(0, 0, 300).reverse)) - (full - 600.0 * 600.0)) < 1e-6)
-    // subtrahend poking OUT of the zone: only the inside part erases
-    assert(math.abs(area(sq(1000, 0, 300)) -
-      (full - 300.0 * 600.0)) < 1e-6)
+    // the production per-zone area and the slab reference, same cases
+    Seq[Seq[Ring] => Double](subs => EraseArcs.zoneArea(square, subs),
+        subs => slab(square, subs = subs)).foreach { kernel =>
+      def area(subs: Seq[(Double, Double)]*): Double = kernel(subs)
+      val full = 4e6
+      assert(math.abs(area() - full) < 1e-6)
+      // disjoint subtrahend leaves the zone whole
+      assert(math.abs(area(sq(9000, 0, 300)) - full) < 1e-6)
+      // centered interior square: a² − b² exactly
+      assert(math.abs(area(sq(0, 0, 300)) - (full - 600.0 * 600.0)) < 1e-6)
+      // duplicate subtrahends erase once (union semantics)
+      assert(math.abs(area(sq(0, 0, 300), sq(0, 0, 300)) -
+        (full - 600.0 * 600.0)) < 1e-6)
+      // corner overlap: only the intersecting rectangle is erased
+      assert(math.abs(area(sq(1000, 1000, 400)) -
+        (full - 400.0 * 400.0)) < 1e-6)
+      // two OVERLAPPING interior squares: inclusion-exclusion
+      val a1 = sq(0, 0, 300); val a2 = sq(200, 0, 300)
+      val inter = 400.0 * 600.0
+      assert(math.abs(area(a1, a2) -
+        (full - (360000.0 + 360000.0 - inter))) < 1e-6)
+      // subtrahend covering the zone entirely -> empty
+      assert(area(sq(0, 0, 5000)) === 0.0)
+      // winding invariance: CW subtrahend input normalizes
+      assert(math.abs(area(sq(0, 0, 300).reverse) -
+        (full - 600.0 * 600.0)) < 1e-6)
+      // subtrahend poking OUT of the zone: only the inside part erases
+      assert(math.abs(area(sq(1000, 0, 300)) -
+        (full - 300.0 * 600.0)) < 1e-6)
+    }
   }
 
   test("polygon-subtrahend erase: rotated / re-wound duplicates erase once") {
@@ -659,9 +645,10 @@ class GeoSpec extends SparkSpec {
     val rotRewound = rotated.reverse
     val want = 4e6 - 600.0 * 600.0
     for (dup <- Seq(rotated, rewound, rotRewound)) {
-      val got = EraseArcs.erasedAreaPolySub(square, Seq(base, dup))
+      val got = EraseArcs.zoneArea(square, Seq(base, dup))
       assert(math.abs(got - want) < 1e-6,
         s"kernel: duplicate variant not canonicalized (got $got, want $want)")
+      assert(math.abs(slab(square, subs = Seq(base, dup)) - want) < 1e-6)
     }
     // distributed path: the per-zone kernel canonicalizes and
     // deduplicates the zone's rings
@@ -696,7 +683,7 @@ class GeoSpec extends SparkSpec {
           (cx + hw * math.cos(b), cy + hw * math.sin(b))
         }
     }
-    val got = EraseArcs.erasedAreaPolySub(pent, subs)
+    val got = EraseArcs.zoneArea(pent, subs)
     def insideConvex(p: Seq[(Double, Double)], x: Double, y: Double) =
       p.indices.forall { i =>
         val (ax, ay) = p(i); val (bx, by) = p((i + 1) % p.size)
@@ -713,8 +700,10 @@ class GeoSpec extends SparkSpec {
     }
     val pentArea = ringArea(pent)
     val sampled = pentArea * in / tot
-    assert(math.abs(got - sampled) / pentArea < 2e-3,
-      s"green $got vs grid $sampled")
+    Seq(got, slab(pent, subs = subs)).foreach { a =>
+      assert(math.abs(a - sampled) / pentArea < 2e-3,
+        s"area $a vs grid $sampled")
+    }
   }
 
   test("polygon-subtrahend erase: fine n-gon subtrahend converges to the disk kernel") {
@@ -729,8 +718,8 @@ class GeoSpec extends SparkSpec {
         (cx + r * math.cos(a), cy + r * math.sin(a))
       }
     }
-    val got = EraseArcs.erasedAreaPolySub(square, subs)
-    val want = EraseArcs.erasedAreaPoly(square, centers, r)
+    val got = EraseArcs.zoneArea(square, subs)
+    val want = slab(square, disks = centers, r = r)
     assert(math.abs(got - want) / want < 1e-3, s"ngon $got vs disk $want")
   }
 
@@ -744,23 +733,26 @@ class GeoSpec extends SparkSpec {
       (cx + hw, cy + hw), (cx - hw, cy + hw))
     val ellArea = 3000.0 * 1000.0 + 1500.0 * 1000.0
     // interior square in the lower arm
-    val got = EraseArcs.erasedAreaConcaveSub(ell, Nil, Seq(sq(2200, 500, 200)))
+    val got = EraseArcs.zoneArea(ell, Seq(sq(2200, 500, 200)))
     assert(math.abs(got - (ellArea - 400.0 * 400.0)) < 1e-6)
     // square straddling the concave notch: only the in-zone half erases
-    val got2 = EraseArcs.erasedAreaConcaveSub(ell, Nil, Seq(sq(1500, 1500, 200)))
+    val got2 = EraseArcs.zoneArea(ell, Seq(sq(1500, 1500, 200)))
     assert(math.abs(got2 - (ellArea - 200.0 * 400.0)) < 1e-6)
     // hole algebra: a hole and a subtrahend in disjoint regions
     val hole = sq(500, 500, 150)
-    val got3 = EraseArcs.erasedAreaConcaveSub(ell, Seq(hole),
-      Seq(sq(2200, 500, 200)))
+    val got3 = EraseArcs.zoneArea(ell, Seq(hole, sq(2200, 500, 200)))
     assert(math.abs(got3 - (ellArea - 300.0 * 300.0 - 400.0 * 400.0)) < 1e-6)
-    // convex agreement: the reduction equals the direct kernel
+    // the slab reference on the same cases
+    assert(math.abs(slab(ell, subs = Seq(sq(2200, 500, 200))) - got) < 1e-6)
+    assert(math.abs(slab(ell, subs = Seq(sq(1500, 1500, 200))) - got2) < 1e-6)
+    assert(math.abs(slab(ell, Seq(hole), Seq(sq(2200, 500, 200))) - got3)
+      < 1e-6)
+    // convex agreement: the production area equals the slab reference
     val square = Seq((-1000.0, -1000.0), (1000.0, -1000.0),
       (1000.0, 1000.0), (-1000.0, 1000.0))
     val subs = Seq(sq(100, 50, 300), sq(-300, 200, 250))
     assert(math.abs(
-      EraseArcs.erasedAreaConcaveSub(square, Nil, subs) -
-        EraseArcs.erasedAreaPolySub(square, subs)) < 1e-6)
+      EraseArcs.zoneArea(square, subs) - slab(square, subs = subs)) < 1e-6)
   }
 
   test("polygon-subtrahend erase: the distributed path equals a driver-side replay") {
@@ -789,9 +781,7 @@ class GeoSpec extends SparkSpec {
           s.map(_._2).max - s.map(_._2).min) / 2
         (sx - cx) * (sx - cx) + (sy - cy) * (sy - cy) < (rad + sr) * (rad + sr)
       }.toSeq
-      val want =
-        if (near.isEmpty) ringArea(vs)
-        else EraseArcs.erasedAreaPolySub(vs, near)
+      val want = slab(vs, subs = near)
       assert(math.abs(got(z) - want) <= 1e-9 * math.max(1.0, want),
         s"zone $z: spark ${got(z)} vs replay $want")
       // monotone: polygon-subtrahend area never exceeds the full zone
@@ -831,9 +821,7 @@ class GeoSpec extends SparkSpec {
           s0.map(_._2).max - s0.map(_._2).min) / 2
         (sx - cx) * (sx - cx) + (sy - cy) * (sy - cy) < (rad + sr) * (rad + sr)
       }.toSeq
-      val want =
-        if (near.isEmpty) ringArea(vs) - hs.map(ringArea).sum
-        else EraseArcs.erasedAreaConcaveSub(vs, hs, near)
+      val want = slab(vs, hs, near)
       assert(math.abs(got(z) - want) <= 1e-9 * math.max(1.0, want),
         s"zone $z: spark ${got(z)} vs replay $want")
       // monotone: surviving area never exceeds the un-erased region
@@ -891,12 +879,11 @@ class GeoSpec extends SparkSpec {
           assert(area > 0, s"outer ring CW: $ring")
         else assert(area < 0, s"hole ring CCW: $ring")
       }
-      // conservation against the INDEPENDENT method: ear-clip
-      // triangulation × the convex area kernel
+      // conservation against the slab reference
       val sum = rings.flatten.map(_.signedArea).sum
-      val want = EraseArcs.erasedAreaConcaveSub(outer, holes, subs)
+      val want = slab(outer, holes, subs)
       assert(math.abs(sum - want) <= 1e-9 * math.max(1.0, want),
-        s"rings $sum vs erasedAreaConcaveSub $want")
+        s"rings $sum vs SlabArea $want")
       // determinism under member order and winding
       val again = EraseArcs.polyZoneRings(outer,
         holes.map(_.reverse) ++ subs.reverse.map(_.reverse))
@@ -989,7 +976,7 @@ class GeoSpec extends SparkSpec {
       }
       // Σ ring signed areas == the distributed AREA plan's value
       val sums = byZone(z).groupBy(_._2).map(_._2.head._9).sum
-      val area = EraseArcs.erasedAreaConcaveSub(vs, hs, near)
+      val area = slab(vs, hs, near)
       assert(math.abs(sums - area) <= 1e-9 * math.max(1.0, area),
         s"zone $z rings $sums vs area $area")
     }
@@ -1025,12 +1012,11 @@ class GeoSpec extends SparkSpec {
           assert(area > 0, s"outer ring CW: $ring")
         else assert(area < 0, s"hole ring CCW: $ring")
       }
-      // area conservation: Σ ring signed areas == erasedAreaPolySub
-      // (identical Green terms, re-associated only)
+      // area conservation: Σ ring signed areas == the slab reference
       val sum = rings.flatten.map(_.signedArea).sum
-      val want = EraseArcs.erasedAreaPolySub(zone, subs)
+      val want = slab(zone, subs = subs)
       assert(math.abs(sum - want) <= 1e-9 * math.max(1.0, want),
-        s"rings $sum vs erasedAreaPolySub $want")
+        s"rings $sum vs SlabArea $want")
       rings
     }
     // untouched zone: ONE CCW ring of the 4 full edges
@@ -1226,13 +1212,11 @@ class GeoSpec extends SparkSpec {
         if (hasZone) assert(area > 0, s"outer ring CW: $ring")
         else assert(area < 0, s"hole ring CCW: $ring")
       }
-      // conservation against the INDEPENDENT area kernels (half-plane
-      // interval algebra / ear-clip triangulation — no shared terms
-      // with the crossing-angle midpoint classification)
+      // conservation against the slab reference
       val sum = rings.flatten.map(_.signedArea).sum
-      val want = EraseArcs.erasedAreaConcave(outer, holes, disks, r)
+      val want = slab(outer, holes, disks = disks, r = r)
       assert(math.abs(sum - want) <= 1e-9 * math.max(1.0, want),
-        s"rings $sum vs erasedAreaConcave $want")
+        s"rings $sum vs SlabArea $want")
       // determinism under disk order
       val again = EraseArcs.polyZoneRings(outer, holes,
         disks.reverse, r)
@@ -1294,7 +1278,7 @@ class GeoSpec extends SparkSpec {
       Seq((700.0, 100.0), (-300.0, 500.0), (50.0, -600.0),
         (1100.0, 300.0)), 280.0)
     // circle-zone convergence: a fine n-gon zone's mixed rings
-    // conserve toward the pure circle kernel ([[eraseRings]] family)
+    // conserve toward the circle zone's area
     val ngon = (0 until 512).map { k =>
       val a = 2 * math.Pi * k / 512
       (1000.0 * math.cos(a), 1000.0 * math.sin(a))
@@ -1302,9 +1286,9 @@ class GeoSpec extends SparkSpec {
     val disks = Seq((800.0, 150.0), (-200.0, 400.0), (-900.0, -500.0))
     val got = EraseArcs.polyZoneRings(ngon, Nil, disks, 300.0)
       .flatten.map(_.signedArea).sum
-    val want = EraseArcs.erasedArea(1000.0, disks, 300.0)
+    val want = slabCircle(1000.0, disks, 300.0)
     assert(math.abs(got - want) / want < 1e-3,
-      s"ngon rings $got vs circle kernel $want")
+      s"ngon rings $got vs circle zone $want")
   }
 
   test("mixed line+arc rings: the distributed path equals a " +
@@ -1365,11 +1349,11 @@ class GeoSpec extends SparkSpec {
         assert(math.abs(ga - area) <= 1e-9 * math.max(1.0, area.abs),
           s"$k ring area $ga vs $area")
       }
-      // Σ ring signed areas == the INDEPENDENT triangulation kernel
+      // Σ ring signed areas == the slab reference
       val sums = wantRows.groupBy(_._1._2).map(_._2.head._2._6).sum
-      val areaK = EraseArcs.erasedAreaConcave(vs, hs, near, r)
+      val areaK = slab(vs, hs, disks = near, r = r)
       assert(math.abs(sums - areaK) <= 1e-9 * math.max(1.0, areaK),
-        s"zone $z rings $sums vs concave kernel $areaK")
+        s"zone $z rings $sums vs SlabArea $areaK")
     }
   }
 }
