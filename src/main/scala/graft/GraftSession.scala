@@ -87,6 +87,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   *
   * The generated-code cache is sized to the engine's working set
   * ([[CodegenCacheEntries]]), so a class compiles once per JVM.
+  *
+  * `file:` paths go through [[graft.sources.NioLocalFileSystem]], which
+  * sets permissions with `java.nio` rather than a forked `chmod` per
+  * written file. Hadoop caches filesystems JVM-wide by scheme, not by
+  * configuration, so this holds only if no `file:` filesystem was
+  * created in the JVM before the first session it builds; a session
+  * built after one (or a driver-supplied session) keeps the stock
+  * `LocalFileSystem`, with the same results.
   */
 object GraftSession {
 
@@ -123,6 +131,8 @@ object GraftSession {
       .config("spark.sql.maxPlanStringLength", "100000")
       .config("spark.sql.codegen.cache.maxEntries",
         CodegenCacheEntries.toString)
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.sources.NioLocalFileSystem].getName)
       .getOrCreate()
     // post-subquery-rewrite tier: EXISTS predicates only become the
     // semi/anti joins BoundAntiJoinRule matches in Catalyst's final

@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField,
   StructType}
@@ -72,9 +72,15 @@ class OptOutEtl(
         lit("Residential").as("Type"))
   }
 
+  /** Writes the points and returns the rows written, counted by the
+    * write itself (an observed metric on the written frame), so the
+    * load is one job with no read-back. A failed write throws before
+    * the count is awaited. */
   override def load(transformed: DataFrame): Long = {
-    transformed.write.mode("overwrite").parquet(destination)
-    loaded().count()
+    val written = Observation()
+    transformed.observe(written, count(lit(1)).as("rows"))
+      .write.mode("overwrite").parquet(destination)
+    written.get("rows").asInstanceOf[Long]
   }
 
   /** The loaded points, read with their declared schema: no

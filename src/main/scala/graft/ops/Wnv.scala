@@ -39,18 +39,20 @@ object Wnv {
   /** Geocoded customer points (the opt-out-address analogue on testdata):
     * concat enrichment → deterministic geocode → miss-drop → constant tag
     * → planar feet projection. One lazy plan, no stage materialization
-    * (the reference writes a CSV between each step).
+    * (the reference writes a CSV between each step). `carry` names
+    * further `customer` columns to keep after `c_custkey`.
     */
-  def points(spark: SparkSession, dir: String): DataFrame = {
+  def points(spark: SparkSession, dir: String,
+      carry: Seq[String] = Nil): DataFrame = {
     val addr = concat(col("c_name"), lit(" Boulder CO"))
+    val kept = col("c_custkey") +: carry.map(col)
     t(spark, dir, "customer")
-      .select(col("c_custkey"), addr.as("addr"))
+      .select(kept :+ addr.as("addr"): _*)
       .filter(Geo.geocodeHit(col("addr")))
-      .select(
-        col("c_custkey"),
+      .select(kept ++ Seq(
         Geo.geocodeLon(col("addr")).as("lon"),
         Geo.geocodeLat(col("addr")).as("lat"),
-        lit("Residential").as("addr_type"))
+        lit("Residential").as("addr_type")): _*)
       .withColumn("x_ft", Geo.xFt(col("lon")))
       .withColumn("y_ft", Geo.yFt(col("lat")))
   }
@@ -134,14 +136,17 @@ object Wnv {
   private def inZoneSql(px: String, py: String): String =
     s"${Geo.dist2Sql(px, py, "z.cx_ft", "z.cy_ft")} <= z.radius_ft * z.radius_ft"
 
-  /** J1: spatial inner join (KEEP_COMMON) + per-address Join_Count. */
-  def spatialJoinCount(spark: SparkSession, dir: String): DataFrame =
-    points(spark, dir)
+  /** J1: spatial inner join (KEEP_COMMON) + per-address Join_Count,
+    * keeping the `carry` columns of [[points]] (which c_custkey, the
+    * customer key, determines). */
+  def spatialJoinCount(spark: SparkSession, dir: String,
+      carry: Seq[String] = Nil): DataFrame =
+    points(spark, dir, carry)
       .join(
         broadcast(zones(spark, dir).filter(col("high_risk"))),
         inZone(col("x_ft"), col("y_ft")),
         "inner")
-      .groupBy(col("c_custkey"))
+      .groupBy((col("c_custkey") +: carry.map(col)): _*)
       .agg(count(lit(1)).as("join_count"))
 
   /** J2 as a pure frame transform: in-risk points minus 1500-ft opt-out
@@ -315,8 +320,10 @@ object Wnv {
         .orderBy(col("c_custkey"))
     }),
 
+    // the catalog has one row per nation, 25 at every scale: it sorts
+    // in one partition, with no exchange
     "wnv_zones" -> ((s: SparkSession, d: String) =>
-      zones(s, d).orderBy(col("zone_id"))),
+      zones(s, d).coalesce(1).orderBy(col("zone_id"))),
 
     "wnv_spatial_join_count" -> ((s: SparkSession, d: String) =>
       spatialJoinCount(s, d).orderBy(col("c_custkey"))),
@@ -327,9 +334,11 @@ object Wnv {
         .orderBy(col("c_custkey"))),
 
     "wnv_target_report" -> ((s: SparkSession, d: String) =>
-      // P8 definition query Join_Count = 1, then the S5 report projection.
-      spatialJoinCount(s, d).filter(col("join_count") === 1)
-        .join(t(s, d, "customer"), Seq("c_custkey"))
+      // J1's Join_Count with the report fields carried through, then P8
+      // definition query Join_Count = 1 and the S5 report projection: no
+      // second customer scan and join.
+      spatialJoinCount(s, d, Seq("c_name", "c_mktsegment"))
+        .filter(col("join_count") === 1)
         .select(col("c_custkey"), col("c_name").as("fulladdr"),
           col("c_mktsegment").as("segment"))
         .orderBy(col("c_custkey"))),

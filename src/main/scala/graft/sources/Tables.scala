@@ -37,9 +37,8 @@ object Tables {
     * unbounded map would keep every session that ever touched it alive
     * for the JVM lifetime); eviction only drops a resolved plan.
     *
-    * A new session still resolves its own plan, but not its own schema:
-    * each table's footer schema is memoized JVM-wide ([[parquet]]), so
-    * only the first read of an input runs a schema job.
+    * A new session resolves its own plan, but its schema comes from a
+    * footer read on the driver ([[parquet]]), so no read runs a job.
     */
   private val MaxMemo = 64
   private val loaded =
@@ -70,29 +69,28 @@ object Tables {
       } else parquet(spark, s"$dir/$name.parquet")
     }
 
-  /** Footer schemas of parquet inputs, JVM-wide, keyed on the path, its
-    * input fingerprint ([[inputStamp]] of the visible files) and the
-    * nanos-as-long conf that changes how `events.ts` reads. Values are
-    * schemas, not frames, so they pin no session. */
-  private val schemas =
-    new graft.BoundedMemo[(String, String, String), StructType](MaxMemo)
-
-  /** `spark.read.parquet(path)` with its schema DECLARED from the
-    * memo: a read whose input fingerprint was seen before in this JVM
-    * runs no footer-schema job. Touching the input changes the
-    * fingerprint, so its schema is read again. */
+  /** `spark.read.parquet(path)` with its schema DECLARED from a footer
+    * read on the driver, so the read runs no footer-schema job. The
+    * footer is the one Spark's own inference reads: `_common_metadata`,
+    * else `_metadata`, else the first data file; a nested (partitioned)
+    * directory is left to that inference. The listing uses `listStatus`:
+    * a located status (`listFiles`) reads each file's permission, which
+    * without the native Hadoop library forks `ls -ld`. */
   private def parquet(spark: SparkSession, path: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val it = p.getFileSystem(conf).listFiles(p, true)
-    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-      .filterNot { f => val n = f.getPath.getName
-        n.startsWith("_") || n.startsWith(".") }
-      .map(_.getPath.toString).toSeq
-    val key = (path, inputStamp(conf, files),
-      spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"))
-    spark.read.schema(schemas.getOrCompute(key)(
-      spark.read.parquet(path).schema)).parquet(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val st = fs.getFileStatus(p)
+    val files =
+      if (st.isDirectory) fs.listStatus(p).toSeq.filter(_.isFile)
+        .sortBy(_.getPath.getName)
+      else Seq(st)
+    def named(n: String) = files.find(_.getPath.getName == n)
+    val footer = named("_common_metadata").orElse(named("_metadata"))
+      .orElse(files.find { f => val n = f.getPath.getName
+        !n.startsWith("_") && !n.startsWith(".") })
+    footer.flatMap(f => org.apache.spark.sql.execution.datasources.parquet
+        .footerBridge.schema(spark, Seq(f)))
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
   }
 
   /** Input fingerprint of a set of files: each one's name, size and

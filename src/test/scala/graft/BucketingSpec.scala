@@ -133,9 +133,9 @@ class BucketingSpec extends SparkSpec {
     }
   }
 
-  /** A new session with its plain table already loaded: the first read
-    * of an input runs a footer-schema job, which is not a layout
-    * write. */
+  /** A new session with its plain table already loaded, so that what
+    * a test counts around `bucketed` is the layout's own work (the
+    * table read itself runs no job). */
   private def sessionWith(dir: String) = {
     val s = spark.newSession()
     Tables.t(s, dir, "customer")

@@ -44,6 +44,26 @@ class EtlApiSpec extends SparkSpec {
     assert(spark.read.parquet(out).schema === OptOutEtl.pointsSchema)
   }
 
+  test("load returns the rows its own write counted, in one job") {
+    val out = Files.createTempDirectory("etl_out5").toString + "/pts"
+    val etl = new OptOutEtl(spark, fixture, "/tmp", out)
+    var n = -1L
+    assert(jobsDuring { n = etl.load(etl.transform(etl.extract())) } === 1)
+    assert(n === spark.read.parquet(out).count())
+  }
+
+  test("a failed load throws instead of waiting on its count") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    // a destination under a regular file cannot be created
+    val blocker = Files.createTempFile("etl_blocker", "")
+    val etl = new OptOutEtl(spark, fixture, "/tmp", s"$blocker/pts")
+    val load = Future(etl.process())
+    Await.ready(load, 2.minutes)
+    assert(load.value.get.isFailure)
+  }
+
   test("process() re-runs idempotently (overwrite semantics, P9)") {
     val out = Files.createTempDirectory("etl_out3").toString + "/pts"
     val etl = new OptOutEtl(spark, fixture, "/tmp", out)

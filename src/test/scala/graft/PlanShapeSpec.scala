@@ -445,6 +445,40 @@ class PlanShapeSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
+  private object aqe
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+  private def exchanges(name: String) = {
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
+      ShuffleExchangeLike}
+    val p = SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan
+    (aqe.collect(p) { case e: ShuffleExchangeLike => e },
+      aqe.collect(p) { case b: BroadcastExchangeLike => b }, p)
+  }
+
+  test("wnv_zones sorts its 25-row catalog with no shuffle exchange") {
+    val (shuffles, _, p) = exchanges("wnv_zones")
+    assert(shuffles.isEmpty, p.toString.take(1500))
+  }
+
+  test("wnv_target_report: no customer re-join, the zone broadcast only") {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference,
+      SortOrder}
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning,
+      RangePartitioning}
+    val (shuffles, broadcasts, p) = exchanges("wnv_target_report")
+    // the per-address count and the output order: one exchange each
+    assert(shuffles.map(_.outputPartitioning).collect {
+      case h: HashPartitioning => h.expressions.head
+    }.collect { case a: AttributeReference => a.name } === Seq("c_custkey"),
+      p.toString.take(3000))
+    assert(shuffles.map(_.outputPartitioning).collect {
+      case RangePartitioning(Seq(SortOrder(a: AttributeReference, _, _, _)), _) =>
+        a.name
+    } === Seq("c_custkey"), p.toString.take(3000))
+    assert(shuffles.size === 2, p.toString.take(3000))
+    assert(broadcasts.size === 1, p.toString.take(3000))
+  }
+
   test("text_pii_scrub is map-only: no exchange before the sort") {
     val p = plan("text_pii_scrub")
     // exactly the top-k/sort exchange, nothing from the scrub itself

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 /** Source/sink formats beyond the primary parquet+CSV pair, and the
@@ -83,21 +84,51 @@ class SourcesSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-tbl-")
     val file = dir.resolve("nation.parquet")
     Files.copy(java.nio.file.Paths.get(s"$sf/nation.parquet"), file)
-    try {
-      val first = Tables.t(spark.newSession(), dir.toString, "nation")
-      val second = spark.newSession()
-      assert(jobsDuring(Tables.t(second, dir.toString, "nation")) === 0)
-      val again = Tables.t(second, dir.toString, "nation")
-      assert(again.schema === first.schema)
-      assert(again.count() === Tables.t(spark, sf, "nation").count())
-      // a touched input is a new fingerprint: its schema is read again
-      assert(file.toFile.setLastModified(file.toFile.lastModified() + 60000L))
-      assert(jobsDuring(Tables.t(spark.newSession(), dir.toString,
-        "nation")) > 0)
-    } finally {
-      Files.delete(file)
-      Files.delete(dir)
+    def read(): org.apache.spark.sql.DataFrame = {
+      var df: org.apache.spark.sql.DataFrame = null
+      assert(jobsDuring {
+        df = Tables.t(spark.newSession(), dir.toString, "nation")
+      } === 0)
+      df
     }
+    val wider = dir.resolve("wider")
+    try {
+      val first = read()
+      assert(first.schema === spark.read.parquet(file.toString).schema)
+      assert(first.count() === Tables.t(spark, sf, "nation").count())
+      // a touched input is read again, still with no job
+      assert(file.toFile.setLastModified(file.toFile.lastModified() + 60000L))
+      assert(read().schema === first.schema)
+      // an input rewritten with an added column reads with the new schema
+      first.withColumn("n_extra", lit(1)).coalesce(1).write
+        .parquet(wider.toString)
+      val part = Files.list(wider).iterator.asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      Files.copy(part, file, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      val again = read()
+      assert(again.columns.toSeq === first.columns.toSeq :+ "n_extra")
+      assert(again.schema === spark.read.parquet(file.toString).schema)
+    } finally {
+      Files.walk(dir).iterator.asScala.toSeq.reverse.foreach(Files.delete)
+    }
+  }
+
+  test("a declared footer schema equals the inferred one on every table") {
+    import graft.sources.Tables
+    // events is left out: its loader rewrites ts after the read
+    Tables.names.filterNot(_ == "events").foreach { n =>
+      assert(Tables.t(spark.newSession(), sf, n).schema ===
+        spark.read.parquet(s"$sf/$n.parquet").schema, n)
+    }
+    // a table written by Spark: a directory of part files
+    val dir = Files.createTempDirectory("graft-tbl-dir-").toString
+    orders.repartition(2).write.parquet(s"$dir/orders.parquet")
+    var back: org.apache.spark.sql.DataFrame = null
+    assert(jobsDuring {
+      back = Tables.t(spark.newSession(), dir, "orders")
+    } === 0)
+    assert(back.schema === spark.read.parquet(s"$dir/orders.parquet").schema)
+    assert(back.count() === orders.count())
   }
 
   test("parquet v2 scan answers COUNT/MIN/MAX from footer statistics") {
