@@ -49,19 +49,30 @@ object EraseArcs {
       val s = ((t0 - a) % tau + tau) % tau
       val e = s + 2 * a
       if (e <= tau) Seq((s, e)) else Seq((s, tau), (0.0, e - tau))
-    }.sortBy(_._1)
-    val merged = mergeIntervals(flat)
-    // complement within [0, 2π)
-    if (merged.isEmpty) Seq((0.0, tau))
-    else {
-      val gaps = merged.sliding(2).collect {
-        case Seq((_, e1), (s2, _)) if s2 > e1 => (e1, s2)
-      }.toSeq
-      val head = if (merged.head._1 > 0) Seq((0.0, merged.head._1)) else Nil
-      val tail = if (merged.last._2 < tau) Seq((merged.last._2, tau)) else Nil
-      head ++ gaps ++ tail
     }
+    subtract(Seq((0.0, tau)), mergeIntervals(flat))
   }
+
+  /** `keep` minus `covered`: the step every surviving erase piece comes
+    * from (zone arcs, zone edges, member edges, disk arcs). Both are
+    * sorted by start, and `covered` does not overlap itself
+    * ([[mergeIntervals]] output). Pure comparisons, so every endpoint
+    * is an input endpoint, bit for bit.
+    */
+  private[geo] def subtract(keep: Seq[(Double, Double)],
+      covered: Seq[(Double, Double)]): Seq[(Double, Double)] =
+    keep.flatMap { case (s0, e0) =>
+      var cur = s0
+      val acc = Seq.newBuilder[(Double, Double)]
+      covered.iterator.takeWhile(_._1 < e0).foreach { case (s, e) =>
+        if (e > cur) {
+          if (s > cur) acc += ((cur, s))
+          cur = math.max(cur, math.min(e, e0))
+        }
+      }
+      if (cur < e0) acc += ((cur, e0))
+      acc.result()
+    }
 
   /** Green's-theorem contribution of a CCW arc of the circle centered
     * (cx,cy), radius ρ, over [a,b]: ½[ρ²Δθ + cx·ρ(sin b − sin a) −
@@ -75,6 +86,16 @@ object EraseArcs {
 
   private def clampAcos(x: Double): Double =
     math.acos(math.max(-1.0, math.min(1.0, x)))
+
+  /** The window of circle (o, r) that another disk of the same radius,
+    * centred q, covers: (bearing of q from o, half-width acos(d/2r)),
+    * or None when the disks lie 2r or more apart or coincide. */
+  private def diskWindow(ox: Double, oy: Double, qx: Double, qy: Double,
+      r: Double): Option[(Double, Double)] = {
+    val d = math.hypot(qx - ox, qy - oy)
+    if (d >= 2 * r || d == 0.0) None
+    else Some((math.atan2(qy - oy, qx - ox), clampAcos(d / (2 * r))))
+  }
 
   /** Boundary decomposition of (zone disk − union of buffer disks),
     * shared by [[circleZoneArcsPerZone]] and [[eraseRings]]: the zone circle's
@@ -90,9 +111,6 @@ object EraseArcs {
       buffersIn: Seq[(Double, Double)], r: Double)
       : (Seq[(Double, Double)],
          Seq[((Double, Double), Seq[(Double, Double)])]) = {
-    // IndexedSeq: the grid below addresses buffers BY INDEX, and a
-    // List-backed input would turn each lookup into an O(B) walk —
-    // quietly restoring the quadratic this grid exists to remove
     val buffers = buffersIn.distinct.sorted
       .filter { case (x, y) => math.hypot(x, y) < bigR + r }.toIndexedSeq
     // (a) surviving zone arcs, CCW around the origin
@@ -106,16 +124,11 @@ object EraseArcs {
     }
     val zoneArcs = survivingIntervals(zoneCovered)
     // (b) per buffer: pieces inside the zone, outside other buffers.
-    // Only buffers with center distance < 2r can cover each other's
-    // circles, so neighbor lookup goes through a uniform grid of cell
-    // size 2r (candidates = the 3×3 cell neighborhood): per-buffer work
-    // tracks local density, not the zone's buffer count. Interval
-    // values do not depend on candidate order (survivingIntervals sorts).
-    val cell = 2 * r
-    def cellOf(x: Double, y: Double): (Long, Long) =
-      (math.floor(x / cell).toLong, math.floor(y / cell).toLong)
-    val grid: Map[(Long, Long), Seq[Int]] =
-      buffers.indices.groupBy(i => cellOf(buffers(i)._1, buffers(i)._2))
+    // Only buffers within 2r can cover each other's circles, and their
+    // boxes overlap, so [[bboxIndex]] delivers a sorted superset of them:
+    // per-buffer work tracks local density, not the zone's buffer count
+    def box(x: Double, y: Double) = (x - r, y - r, x + r, y + r)
+    val near = bboxIndex(buffers.map { case (x, y) => box(x, y) })
     val bufferArcs = buffers.zipWithIndex.map { case ((ox, oy), i) =>
       val d = math.hypot(ox, oy)
       // interval of THIS buffer circle lying inside the zone disk
@@ -129,19 +142,10 @@ object EraseArcs {
         case None => Seq.empty[(Double, Double)]
         case Some((inB, inA)) =>
           // covered-by-others on this circle + the outside-zone band
-          val (ci, cj) = cellOf(ox, oy)
-          val near = (for {
-            dx <- -1L to 1L; dy <- -1L to 1L
-            j <- grid.getOrElse((ci + dx, cj + dy), Seq.empty)
-            if j != i
-          } yield j).sorted
-          val others = near.map(buffers).flatMap { case (px, py) =>
-              val dij = math.hypot(px - ox, py - oy)
-              if (dij >= 2 * r) None
-              else if (dij == 0.0) None // deduped above; safety
-              else Some((math.atan2(py - oy, px - ox),
-                clampAcos(dij / (2 * r))))
-            }
+          val (x0, y0, x1, y1) = box(ox, oy)
+          val others = near(x0, y0, x1, y1).filter(_ != i).flatMap { j =>
+            diskWindow(ox, oy, buffers(j)._1, buffers(j)._2, r)
+          }
           val outsideZone =
             if (inA >= math.Pi) Nil // fully inside: no outside band
             else Seq((inB + math.Pi, math.Pi - inA))
@@ -269,20 +273,19 @@ object EraseArcs {
     val dx = bx - ax; val dy = by - ay
     require(dx != 0.0 || dy != 0.0,
       s"polyZonePieces: degenerate zero-length edge at ($ax,$ay)")
-    val bounds = 0.0 +: covered.flatMap { case (s, e) => Seq(s, e) } :+ 1.0
-    bounds.grouped(2).collect { case Seq(s, e) if e > s =>
+    subtract(Seq((0.0, 1.0)), covered).map { case (s, e) =>
       LinePiece("zone", ax + s * dx, ay + s * dy, ax + e * dx, ay + e * dy)
-    }.toSeq
+    }
   }
 
   /** Bbox-grid candidate lookup — the spatial prune for the pairwise
-    * terms, shared by the area and ring kernels. A member whose
-    * bounding box misses a query box cannot cover any part of it, so
-    * bucket the boxes on a grid (cell = the largest box extent) and
-    * probe only the cells a query box touches, so the member-vs-member
-    * term is not quadratic in the local member count. Returns the
-    * sorted indices whose box may intersect the box spanned by two
-    * corners (an exact superset of the coverers).
+    * terms, shared by every kernel (polygon and circle zones). A
+    * member whose bounding box misses a query box cannot cover any part
+    * of it, so bucket the boxes on a grid (cell = the largest box
+    * extent) and probe only the cells a query box touches, so the
+    * member-vs-member term is not quadratic in the local member count.
+    * Returns the sorted indices whose box may intersect the box spanned
+    * by two corners (an exact superset of the coverers).
     */
   private def bboxIndex(boxes: IndexedSeq[(Double, Double, Double, Double)])
       : (Double, Double, Double, Double) => Seq[Int] = {
@@ -351,21 +354,9 @@ object EraseArcs {
       val inOuter = segInPolyIntervals(cx, cy, ex, ey, outer)
       val covered = mergeIntervals(
         others.flatMap(o => memberCover(cx, cy, ex, ey, o)))
-      def reversedPiece(s: Double, e: Double): LinePiece =
-        LinePiece("sub", cx + e * dx, cy + e * dy,
-          cx + s * dx, cy + s * dy)
       // survivors: inOuter minus covered, each traversed e → s
-      inOuter.flatMap { case (s0, e0) =>
-        var cur = s0
-        val acc = Seq.newBuilder[LinePiece]
-        covered.foreach { case (s, e) =>
-          if (e > cur && s < e0) {
-            if (s > cur) acc += reversedPiece(cur, math.min(s, e0))
-            cur = math.max(cur, math.min(e, e0))
-          }
-        }
-        if (cur < e0) acc += reversedPiece(cur, e0)
-        acc.result()
+      subtract(inOuter, covered).map { case (s, e) =>
+        LinePiece("sub", cx + e * dx, cy + e * dy, cx + s * dx, cy + s * dy)
       }
     }
 
@@ -401,32 +392,31 @@ object EraseArcs {
   }
 
   /** The arc pieces of ONE disk circle (center (ox,oy), radius r) on
-    * the boundary of (outer − holes − disks): partition the circle at
-    * every crossing angle (vs outer/hole edges — the shared quadratic
-    * roots mapped through atan2 of the SAME intersection point the
-    * line pieces end at, so stitch endpoints agree to IEEE rounding —
-    * and vs other disk circles, bearing ± acos(d/2r)), classify each
-    * sub-arc by its MIDPOINT (inside outer, outside every hole,
-    * outside every other disk — the general-polygon analogue of the
-    * convex half-plane interval algebra, valid with no convexity
-    * assumption), then MERGE adjacent kept arcs. The merge makes the
-    * output independent of the candidate set: a non-covering neighbor
-    * in a superset (the kernel's bbox grid, or a zone-assigned disk
-    * that misses this circle) adds either no crossing angles or only
-    * splits both of whose sides classify identically — so any
-    * candidate superset emits the SAME maximal pieces, not merely the
-    * same union. `others` may be any
-    * superset of the disks within 2r (a disk at ≥ 2r can cover no
-    * point of this circle). Traversal is CW (`ccw = false` — the
-    * region lies outside the disk), matching [[eraseRings]]'s buffer
-    * arcs.
+    * the boundary of (outer − holes − disks), as angle windows in
+    * [0, 2π):
+    *   - the arcs inside the outer ring and outside every hole: the
+    *     circle is cut at its ring crossings (the shared quadratic roots
+    *     mapped through atan2 of the SAME intersection point the line
+    *     pieces end at, so stitch endpoints agree to IEEE rounding) and
+    *     each sub-arc is classified by its MIDPOINT, with no convexity
+    *     assumption; a circle no ring crosses is classified by
+    *     containment;
+    *   - minus the merged windows the other disks cover ([[diskWindow]],
+    *     [[subtract]]): a sort and merge of k neighbour windows,
+    *     O(k log k), with no per-sub-arc neighbour scan.
+    * Adjacent kept arcs merge, so any superset of the disks within 2r
+    * (the kernel's bbox grid, or a zone-assigned disk that misses this
+    * circle) emits the SAME maximal pieces; the piece running through
+    * angle 0 is emitted whole, as [s, e + 2π). Traversal is CW
+    * (`ccw = false` — the region lies outside the disk), matching
+    * [[eraseRings]]'s buffer arcs.
     */
   private def diskArcPieces(outer: Seq[(Double, Double)],
       holes: Seq[Seq[(Double, Double)]], ox: Double, oy: Double,
       r: Double, others: Seq[(Double, Double)]): Seq[RingPiece] = {
     val tau = 2 * math.Pi
-    val ringsAll = outer +: holes
-    val segAngles = ringsAll.flatMap { ring =>
+    def norm(a: Double): Double = ((a % tau) + tau) % tau
+    val ringAngles = (outer +: holes).flatMap { ring =>
       ring.indices.flatMap { i =>
         val (ax, ay) = ring(i)
         val (bx, by) = ring((i + 1) % ring.size)
@@ -437,83 +427,63 @@ object EraseArcs {
         segDiskRoots(ax, ay, dx, dy, len2, ox, oy, r).toSeq
           .flatMap { case (t1, t2) => Seq(t1, t2) }
           .filter(t => t > 0.0 && t < 1.0)
-          .map(t => math.atan2(ay + t * dy - oy, ax + t * dx - ox))
+          .map(t => norm(math.atan2(ay + t * dy - oy, ax + t * dx - ox)))
       }
-    }
-    val diskAngles = others.flatMap { case (qx, qy) =>
-      val dij = math.hypot(qx - ox, qy - oy)
-      if (dij >= 2 * r || dij == 0.0) Nil
-      else {
-        val th = math.atan2(qy - oy, qx - ox)
-        val al = clampAcos(dij / (2 * r))
-        Seq(th - al, th + al)
-      }
-    }
-    val angles = (segAngles ++ diskAngles)
-      .map(a => ((a % tau) + tau) % tau).distinct.sorted.toIndexedSeq
-    def keepAt(a: Double): Boolean = {
-      val px = ox + r * math.cos(a); val py = oy + r * math.sin(a)
-      pointInPoly(px, py, outer) &&
-        !holes.exists(h => pointInPoly(px, py, h)) &&
-        !others.exists { case (qx, qy) =>
-          math.hypot(px - qx, py - qy) < r }
-    }
-    val n = angles.size
-    if (n == 0) {
-      // No crossings: the circle lies entirely on one side of every
-      // boundary component — classify by CONTAINMENT, not a sampled
-      // circle point (a sample can land exactly ON a tangent boundary,
-      // where ray-cast resolution is arbitrary; the adversarial
-      // tangency property caught exactly that with an internally-
-      // tangent disk). With equal radii another disk cannot contain
-      // this circle without crossing it (only an exact duplicate
-      // could, and duplicates are deduped), so other disks never cover
-      // a crossing-free circle; a hole entirely INSIDE the disk leaves
-      // the circle untouched, while a disk inside a hole is erased
-      // from the region.
-      val outerInDisk = outer.forall { case (x, y) =>
-        math.hypot(x - ox, y - oy) < r }
-      val inHole = holes.exists { h =>
-        h.exists { case (x, y) => math.hypot(x - ox, y - oy) >= r } &&
-          pointInPoly(ox, oy, h)
-      }
-      if (!outerInDisk && pointInPoly(ox, oy, outer) && !inHole)
-        Seq(RingPiece(ccw = false, ox, oy, r, 0.0, tau))
-      else Nil
-    } else {
-      // arc i spans [ext(i), ext(i+1)) in unwrapped angle space
-      val ext = (angles ++ angles.map(_ + tau)) :+ (angles.head + 2 * tau)
-      val kept = (0 until n).map { i =>
-        keepAt(((ext(i) + ext(i + 1)) / 2) % tau)
-      }
-      if (kept.forall(identity))
-        // crossing points exist but cover nothing (grazing candidates)
-        Seq(RingPiece(ccw = false, ox, oy, r, 0.0, tau))
-      else if (!kept.exists(identity)) Nil
-      else {
-        // cyclic merge of consecutive kept arcs, starting after a
-        // non-kept arc so no run is split by the array seam
-        val start = kept.indexOf(false)
-        val merged = Vector.newBuilder[(Double, Double)]
-        var run: Option[(Double, Double)] = None
-        (0 until n).foreach { j =>
-          val i = start + 1 + j
-          if (kept(i % n)) {
-            run = run match {
-              case None => Some((ext(i), ext(i + 1)))
-              case Some((s, _)) => Some((s, ext(i + 1)))
-            }
-          } else {
-            run.foreach(merged += _); run = None
-          }
+    }.distinct.sorted
+    val kept =
+      if (ringAngles.isEmpty) {
+        // No ring crossings: the circle lies entirely on one side of
+        // every ring — classify by CONTAINMENT, not a sampled circle
+        // point (a sample can land exactly ON a tangent boundary, where
+        // ray-cast resolution is arbitrary; the adversarial tangency
+        // property caught exactly that with an internally-tangent
+        // disk). A hole entirely INSIDE the disk leaves the circle
+        // untouched, while a disk inside a hole is erased from the
+        // region.
+        val outerInDisk = outer.forall { case (x, y) =>
+          math.hypot(x - ox, y - oy) < r }
+        val inHole = holes.exists { h =>
+          h.exists { case (x, y) => math.hypot(x - ox, y - oy) >= r } &&
+            pointInPoly(ox, oy, h)
         }
-        run.foreach(merged += _)
-        merged.result()
-          .map { case (s, e) => if (s >= tau) (s - tau, e - tau) else (s, e) }
-          .sortBy(_._1)
-          .map { case (s, e) => RingPiece(ccw = false, ox, oy, r, s, e) }
+        if (!outerInDisk && pointInPoly(ox, oy, outer) && !inHole)
+          Seq((0.0, tau))
+        else Nil
+      } else {
+        // sub-arc i spans [ext(i), ext(i + 1)); the last runs through 0
+        val ext = ringAngles :+ (ringAngles.head + tau)
+        val last = ringAngles.size - 1
+        mergeIntervals(ringAngles.indices.flatMap { i =>
+          val a = ((ext(i) + ext(i + 1)) / 2) % tau
+          val px = ox + r * math.cos(a); val py = oy + r * math.sin(a)
+          if (!pointInPoly(px, py, outer) ||
+              holes.exists(h => pointInPoly(px, py, h))) Nil
+          else if (i < last) Seq((ext(i), ext(i + 1)))
+          else Seq((ext(i), tau), (0.0, ringAngles.head))
+        }.filter { case (s, e) => e > s })
       }
+    // a window is narrower than π, so s == e never occurs
+    val windows = others.flatMap { case (qx, qy) =>
+      diskWindow(ox, oy, qx, qy, r).map { case (th, al) =>
+        (norm(th - al), norm(th + al)) }
     }
+    val pieces = subtract(kept, mergeIntervals(windows.flatMap {
+      case (s, e) => if (s < e) Seq((s, e)) else Seq((s, tau), (0.0, e))
+    }))
+    val (body, seam) =
+      if (pieces.size > 1 && pieces.head._1 == 0.0 && pieces.last._2 == tau)
+        (pieces.tail.init, Seq((pieces.last._1, pieces.head._2 + tau)))
+      else (pieces, Nil)
+    // the piece starting at the smallest crossing angle is computed
+    // through unwrapped space, as (x + 2π) − 2π at both ends: the pinned
+    // erase outputs carry that rounding (dropping it moves end angles by
+    // 1 ulp and flips an r6 area)
+    val first = (ringAngles.iterator ++ windows.iterator.flatMap {
+      case (s, e) => Iterator(s, e) }).foldLeft(tau)(math.min)
+    (body.map { case (s, e) =>
+      if (s == first) (s + tau - tau, e + tau - tau) else (s, e)
+    } ++ seam).sortBy(_._1)
+      .map { case (s, e) => RingPiece(ccw = false, ox, oy, r, s, e) }
   }
 
   /** Stitch directed boundary pieces (straight [[LinePiece]]s and
@@ -818,8 +788,8 @@ object EraseArcs {
     * Scale trade (SCALE.md): one task runs a zone's kernel, so the last
     * stage's parallelism is one task per zone. Given up: spreading ONE
     * dense zone's piece computation over several tasks; the kernels'
-    * grids ([[bboxIndex]], [[boundaryDecomp]]'s cell grid) keep that
-    * work near-linear in the zone's members.
+    * one grid ([[bboxIndex]]) and each disk's sort and merge of its
+    * neighbour windows keep that work near-linear in the zone's members.
     */
   private def zoneGroups(zones: DataFrame, members: DataFrame): DataFrame = {
     val shape = zones.columns.filterNot(Set("zone_id", "b"))

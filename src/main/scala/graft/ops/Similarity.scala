@@ -131,17 +131,12 @@ object Similarity {
     * corpus-proportional codebook (every 100th vector, K = n/100) made
     * the encode artifact quadratic — N×M×K = n²/25 rows, and the sf10
     * drive measured the per-dim encode join at ~26B intermediate rows
-    * before it was killed. One driver-side count per corpus, memoized
-    * like the artifact itself; the oracle computes the identical
+    * before it was killed. Derived from the memoized corpus count
+    * [[nEmb]]; the oracle computes the identical
     * GREATEST(1, (n + 255) // 256) from the same table.
     */
-  private val cstepMemo =
-    new graft.BoundedMemo[(SparkSession, String), java.lang.Long](8)
-
   private def pqCstep(s: SparkSession, d: String): Long =
-    cstepMemo.getOrCompute((s, d)) {
-      math.max(1L, (qEmb(s, d).count() + 255L) / 256L)
-    }
+    math.max(1L, (nEmb(s, d) + 255L) / 256L)
 
   private val pqCstepSql: String =
     "(SELECT GREATEST(1, (COUNT(*) + 255) // 256) FROM qn)"

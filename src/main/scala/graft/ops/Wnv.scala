@@ -188,16 +188,20 @@ object Wnv {
     eraseSelectionFrom(points(spark, dir), zones(spark, dir),
       optOut(spark, dir))
 
-  /** Flagship tail: per-zone target counts over an erase-selection
-    * frame — shared by `wnv_pipeline_e2e`/`wnv_symbology` and the live
-    * path's e2e test.
-    */
-  def zoneTargetCounts(sel: DataFrame, zn: DataFrame): DataFrame =
+  /** Per-zone target counts (zone_id, n_targets) over an
+    * erase-selection frame, unsorted: the core of `wnv_pipeline_e2e`,
+    * `wnv_symbology` and `wnv_map_export`. */
+  private def zoneCounts(sel: DataFrame, zn: DataFrame): DataFrame =
     sel.join(broadcast(zn.filter(col("high_risk"))),
         inZone(col("x_ft"), col("y_ft")), "inner")
       .groupBy(col("zone_id"))
       .agg(count(lit(1)).as("n_targets"))
-      .orderBy(col("zone_id"))
+
+  /** Flagship tail: [[zoneCounts]] by zone_id — `wnv_pipeline_e2e` and
+    * the live path's e2e test.
+    */
+  def zoneTargetCounts(sel: DataFrame, zn: DataFrame): DataFrame =
+    zoneCounts(sel, zn).orderBy(col("zone_id"))
 
   // ------------------------------------------------------------------
   // driver-contract query surface
@@ -371,12 +375,8 @@ object Wnv {
     // graduated renderer computes), so any front end can draw the map
     // the reference styles by hand. Pure projection over the e2e counts.
     "wnv_symbology" -> ((s: SparkSession, d: String) => {
-      val sel = eraseSelection(s, d)
-      val counts = sel.join(broadcast(zones(s, d).filter(col("high_risk"))),
-          inZone(col("x_ft"), col("y_ft")), "inner")
-        .groupBy(col("zone_id"))
-        .agg(count(lit(1)).as("n_targets"))
-      counts.select(col("zone_id"), col("n_targets"),
+      zoneCounts(eraseSelection(s, d), zones(s, d))
+        .select(col("zone_id"), col("n_targets"),
           lit("#FF0000").as("fill"), lit("#000000").as("outline"),
           lit(0.5).as("opacity"),
           // bounded global window BY DESIGN: the frame is the zone
@@ -397,11 +397,7 @@ object Wnv {
     // [[exportSummaryReport]]; the subtitle is a PARAMETER where the
     // reference blocks on interactive input() (Lab3ETL.py:118).
     "wnv_map_export" -> ((s: SparkSession, d: String) => {
-      val sel = eraseSelection(s, d)
-      sel.join(broadcast(zones(s, d).filter(col("high_risk"))),
-          inZone(col("x_ft"), col("y_ft")), "inner")
-        .groupBy(col("zone_id"))
-        .agg(count(lit(1)).as("n_targets"))
+      zoneCounts(eraseSelection(s, d), zones(s, d))
         .select(col("zone_id"),
           concat(lit("Zone "), col("zone_id").cast(StringType),
             lit(": "), col("n_targets").cast(StringType),
@@ -662,6 +658,28 @@ object Wnv {
   private val px = "p.x_ft"
   private val py = "p.y_ft"
 
+  /** `wnv_erase_selection` over the `pts` and `z` CTEs: the points in
+    * a high-risk zone outside every opt-out buffer. */
+  private val selSql: String =
+    s"""SELECT p.c_custkey, p.x_ft, p.y_ft
+       |FROM pts p
+       |WHERE EXISTS (SELECT 1 FROM z WHERE z.high_risk AND ${inZoneSql(px, py)})
+       |  AND NOT EXISTS (
+       |    SELECT 1 FROM pts o
+       |    WHERE o.c_custkey % 10 = 0
+       |      AND ${Geo.dist2Sql(px, py, "o.x_ft", "o.y_ft")}
+       |          <= CAST(2250000 AS DOUBLE))""".stripMargin
+
+  /** The CTEs of [[zoneCounts]]: pts, z, the erase selection `sel` and
+    * the per-zone target `counts`. */
+  private val countsSql: String =
+    s"""WITH pts AS ($pointsSql), z AS ($zonesSql),
+       |sel AS ($selSql),
+       |counts AS (
+       |  SELECT z.zone_id, COUNT(*) AS n_targets
+       |  FROM sel p JOIN z ON z.high_risk AND ${inZoneSql(px, py)}
+       |  GROUP BY z.zone_id)""".stripMargin
+
   val oracles: Seq[(String, String)] = Seq(
     "wnv_csv_extract" -> {
       val a = """("Street Address" || ' Boulder CO')"""
@@ -741,14 +759,7 @@ object Wnv {
 
     "wnv_erase_selection" ->
       s"""WITH pts AS ($pointsSql), z AS ($zonesSql)
-         |SELECT p.c_custkey, p.x_ft, p.y_ft
-         |FROM pts p
-         |WHERE EXISTS (SELECT 1 FROM z WHERE z.high_risk AND ${inZoneSql(px, py)})
-         |  AND NOT EXISTS (
-         |    SELECT 1 FROM pts o
-         |    WHERE o.c_custkey % 10 = 0
-         |      AND ${Geo.dist2Sql(px, py, "o.x_ft", "o.y_ft")}
-         |          <= CAST(2250000 AS DOUBLE))
+         |$selSql
          |ORDER BY p.c_custkey""".stripMargin,
 
     // rotated-L1 membership with the RATIONAL 3-4-5 rotation: both
@@ -793,36 +804,11 @@ object Wnv {
          |ORDER BY z.zone_id""".stripMargin,
 
     "wnv_pipeline_e2e" ->
-      s"""WITH pts AS ($pointsSql), z AS ($zonesSql),
-         |sel AS (
-         |  SELECT p.c_custkey, p.x_ft, p.y_ft
-         |  FROM pts p
-         |  WHERE EXISTS (SELECT 1 FROM z WHERE z.high_risk AND ${inZoneSql(px, py)})
-         |    AND NOT EXISTS (
-         |      SELECT 1 FROM pts o
-         |      WHERE o.c_custkey % 10 = 0
-         |        AND ${Geo.dist2Sql(px, py, "o.x_ft", "o.y_ft")}
-         |            <= CAST(2250000 AS DOUBLE)))
-         |SELECT z.zone_id, COUNT(*) AS n_targets
-         |FROM sel p JOIN z ON z.high_risk AND ${inZoneSql(px, py)}
-         |GROUP BY z.zone_id
-         |ORDER BY z.zone_id""".stripMargin,
+      s"""$countsSql
+         |SELECT zone_id, n_targets FROM counts ORDER BY zone_id""".stripMargin,
 
     "wnv_symbology" ->
-      s"""WITH pts AS ($pointsSql), z AS ($zonesSql),
-         |sel AS (
-         |  SELECT p.c_custkey, p.x_ft, p.y_ft
-         |  FROM pts p
-         |  WHERE EXISTS (SELECT 1 FROM z WHERE z.high_risk AND ${inZoneSql(px, py)})
-         |    AND NOT EXISTS (
-         |      SELECT 1 FROM pts o
-         |      WHERE o.c_custkey % 10 = 0
-         |        AND ${Geo.dist2Sql(px, py, "o.x_ft", "o.y_ft")}
-         |            <= CAST(2250000 AS DOUBLE))),
-         |counts AS (
-         |  SELECT z.zone_id, COUNT(*) AS n_targets
-         |  FROM sel p JOIN z ON z.high_risk AND ${inZoneSql(px, py)}
-         |  GROUP BY z.zone_id)
+      s"""$countsSql
          |SELECT zone_id, n_targets,
          |  '#FF0000' AS fill, '#000000' AS outline,
          |  CAST(0.5 AS DOUBLE) AS opacity,
@@ -831,20 +817,7 @@ object Wnv {
          |FROM counts ORDER BY zone_id""".stripMargin,
 
     "wnv_map_export" ->
-      s"""WITH pts AS ($pointsSql), z AS ($zonesSql),
-         |sel AS (
-         |  SELECT p.c_custkey, p.x_ft, p.y_ft
-         |  FROM pts p
-         |  WHERE EXISTS (SELECT 1 FROM z WHERE z.high_risk AND ${inZoneSql(px, py)})
-         |    AND NOT EXISTS (
-         |      SELECT 1 FROM pts o
-         |      WHERE o.c_custkey % 10 = 0
-         |        AND ${Geo.dist2Sql(px, py, "o.x_ft", "o.y_ft")}
-         |            <= CAST(2250000 AS DOUBLE))),
-         |counts AS (
-         |  SELECT z.zone_id, COUNT(*) AS n_targets
-         |  FROM sel p JOIN z ON z.high_risk AND ${inZoneSql(px, py)}
-         |  GROUP BY z.zone_id)
+      s"""$countsSql
          |SELECT zone_id,
          |  'Zone ' || CAST(zone_id AS VARCHAR) || ': ' ||
          |  CAST(n_targets AS VARCHAR) || ' target addresses' AS line

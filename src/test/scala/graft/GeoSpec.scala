@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.locationtech.jts.algorithm.Orientation
+import org.locationtech.jts.geom.{Coordinate, GeometryFactory}
 import graft.geo.{Geo, Lcc, SlabArea}
 
 class GeoSpec extends SparkSpec {
@@ -408,6 +410,23 @@ class GeoSpec extends SparkSpec {
       case lp: graft.geo.EraseArcs.LinePiece => lp
       case p => fail(s"arc piece in a polygon-subtrahend ring: $p")
     })
+
+  /** Each line-only ring's signed area equals ± the JTS area of its
+    * vertex chain within 1e-9 relative, + exactly when JTS reads the
+    * chain as CCW. */
+  private def assertRingAreasMatchJts(
+      rings: Seq[Seq[graft.geo.EraseArcs.LinePiece]]): Unit = {
+    val gf = new GeometryFactory()
+    rings.foreach { ring =>
+      val chain = (ring.map(_.start) :+ ring.head.start)
+        .map { case (x, y) => new Coordinate(x, y) }.toArray
+      val jts = gf.createPolygon(chain).getArea
+      val want = if (Orientation.isCCW(chain)) jts else -jts
+      val got = ring.map(_.signedArea).sum
+      assert(math.abs(got - want) <= 1e-9 * jts,
+        s"ring area $got vs JTS $want: $ring")
+    }
+  }
 
   test("polygon erase: the distributed path equals a driver-side replay") {
     import graft.geo.EraseArcs
@@ -879,6 +898,7 @@ class GeoSpec extends SparkSpec {
           assert(area > 0, s"outer ring CW: $ring")
         else assert(area < 0, s"hole ring CCW: $ring")
       }
+      assertRingAreasMatchJts(rings)
       // conservation against the slab reference
       val sum = rings.flatten.map(_.signedArea).sum
       val want = slab(outer, holes, subs)
@@ -1012,6 +1032,7 @@ class GeoSpec extends SparkSpec {
           assert(area > 0, s"outer ring CW: $ring")
         else assert(area < 0, s"hole ring CCW: $ring")
       }
+      assertRingAreasMatchJts(rings)
       // area conservation: Σ ring signed areas == the slab reference
       val sum = rings.flatten.map(_.signedArea).sum
       val want = slab(zone, subs = subs)
@@ -1289,6 +1310,68 @@ class GeoSpec extends SparkSpec {
     val want = slabCircle(1000.0, disks, 300.0)
     assert(math.abs(got - want) / want < 1e-3,
       s"ngon rings $got vs circle zone $want")
+  }
+
+  test("disk arcs: a lattice-covered zone is empty, an arc through " +
+      "angle 0 is one piece, and a fixed-seed case keeps its bits") {
+    import graft.geo.EraseArcs
+    val r = 1500.0
+    val tau = 2 * math.Pi
+    def arcs(outer: Seq[(Double, Double)], holes: Seq[Seq[(Double, Double)]],
+        disks: Seq[(Double, Double)]): Seq[EraseArcs.RingPiece] =
+      EraseArcs.polyZonePieces(outer, holes, disks, r).collect {
+        case rp: EraseArcs.RingPiece => rp
+      }
+    // covered by construction: every point of the plane lies within
+    // 0.95r·√2/2 < r of a lattice centre, so nothing survives
+    val rect = Seq((0.0, 0.0), (6000.0, 0.0), (6000.0, 4000.0),
+      (0.0, 4000.0))
+    val lattice = for (i <- -2 to 7; j <- -2 to 5)
+      yield (i * 0.95 * r, j * 0.95 * r)
+    assert(EraseArcs.polyZonePieces(rect, Nil, lattice, r).isEmpty)
+    assert(EraseArcs.zoneArea(rect, Nil, lattice, r) === 0.0)
+    // a kept arc through angle 0 is ONE piece [s, e + 2π), whether a
+    // neighbour window (bearing π) or a ring crossing (the left edge)
+    // bounds it
+    val square = Seq((-3000.0, -3000.0), (3000.0, -3000.0),
+      (3000.0, 3000.0), (-3000.0, 3000.0))
+    val byWindow = arcs(square, Nil, Seq((0.0, 0.0), (-1000.0, 0.0)))
+      .filter(_.cx == 0.0)
+    assert(byWindow.size === 1)
+    assert(byWindow.head.s < tau && byWindow.head.e > tau)
+    assert(math.abs(byWindow.head.e - byWindow.head.s -
+      (tau - 2 * math.acos(1.0 / 3))) < 1e-12)
+    val byRing = arcs(square, Nil, Seq((-2500.0, 0.0)))
+    assert(byRing.size === 1)
+    assert(byRing.head.s < tau && byRing.head.e > tau)
+    assert(math.abs(byRing.head.e - byRing.head.s -
+      2 * math.acos(-1.0 / 3)) < 1e-12)
+    assert(math.abs(byRing.head.start._1 + 3000.0) < 1e-9 &&
+      math.abs(byRing.head.end._1 + 3000.0) < 1e-9)
+    // golden, fixed seed: the star-with-hole zone at state-plane
+    // coordinates under six disks. The arc angles and the area are
+    // pinned bit for bit, so the piece starting at the smallest crossing
+    // angle keeps its (x + 2π) − 2π rounding
+    val (cx, cy, bigR) = (3050000.0, 1250000.0, 6000.0)
+    val star = Seq((cx + bigR, cy), (cx + bigR * 0.35, cy + bigR * 0.35),
+      (cx, cy + bigR), (cx - bigR * 0.35, cy + bigR * 0.35), (cx - bigR, cy),
+      (cx - bigR * 0.35, cy - bigR * 0.35), (cx, cy - bigR),
+      (cx + bigR * 0.35, cy - bigR * 0.35))
+    val hole = Seq((cx + bigR * 0.15, cy + bigR * 0.15),
+      (cx - bigR * 0.15, cy + bigR * 0.15),
+      (cx - bigR * 0.15, cy - bigR * 0.15),
+      (cx + bigR * 0.15, cy - bigR * 0.15))
+    val rng = new scala.util.Random(7)
+    val disks = Seq.fill(6)((cx + (rng.nextDouble() * 2 - 1) * bigR,
+      cy + (rng.nextDouble() * 2 - 1) * bigR))
+    def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+    assert(arcs(star, Seq(hole), disks).map(p => (bits(p.s), bits(p.e))) ===
+      Seq((0x4013dbd0749f3c4dL, 0x401a748eab9be861L),
+        (0x4001f99e76a9c080L, 0x4012e78d4d911df4L),
+        (0x3fdb8797ba545a50L, 0x401058879a2adfdcL),
+        (0x400f8201acdd7048L, 0x4013dcae6393289cL)))
+    assert(bits(EraseArcs.zoneArea(star, Seq(hole), disks, r)) ===
+      0x4182b4d776fa0c00L)
   }
 
   test("mixed line+arc rings: the distributed path equals a " +
