@@ -1322,8 +1322,9 @@ class GeoSpec extends SparkSpec {
       EraseArcs.polyZonePieces(outer, holes, disks, r).collect {
         case rp: EraseArcs.RingPiece => rp
       }
-    // covered by construction: every point of the plane lies within
-    // 0.95r·√2/2 < r of a lattice centre, so nothing survives
+    // covered by construction: the lattice spans the zone with a
+    // margin, and every point it spans lies within 0.95r·√2/2 < r of a
+    // centre, so nothing survives
     val rect = Seq((0.0, 0.0), (6000.0, 0.0), (6000.0, 4000.0),
       (0.0, 4000.0))
     val lattice = for (i <- -2 to 7; j <- -2 to 5)
