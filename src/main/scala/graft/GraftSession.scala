@@ -139,7 +139,7 @@ object GraftSession {
     // RewriteSubquery batch, so this rule must ride
     // experimental.extraOptimizations (the "User Provided Optimizers"
     // batch, after it) — injectOptimizerRule would run too early.
-    graft.plans.BoundAntiJoinRule.register(s)
+    graft.plans.register(s, graft.plans.BoundAntiJoinRule)
     s.sparkContext.setLogLevel("WARN")
     // Silence WindowExec's generic "No Partition Defined" WARN (round-9
     // verdict item): every single-partition window in this repo is a

@@ -61,16 +61,12 @@ class OptOutEtl(
   override def extract(): DataFrame =
     Tables.csv(spark, remote, Tables.optOutSchema)
 
-  /** P1 concat → P2 geocode → P4 miss-drop → P6 tag → S4 x/y/Type. */
-  override def transform(raw: DataFrame): DataFrame = {
-    val addr = concat(col("Street Address"), lit(" Boulder CO"))
-    raw.select(addr.as("addr"))
-      .filter(Geo.geocodeHit(col("addr")))
-      .select(
-        Geo.geocodeLon(col("addr")).as("x"),
-        Geo.geocodeLat(col("addr")).as("y"),
+  /** P1 concat → P2 geocode → P4 miss-drop ([[Geo.geocode]]) → P6 tag →
+    * S4 x/y/Type. */
+  override def transform(raw: DataFrame): DataFrame =
+    Geo.geocode(raw, col("Street Address"), Nil)
+      .select(col("lon").as("x"), col("lat").as("y"),
         lit("Residential").as("Type"))
-  }
 
   /** Writes the points and returns the rows written, counted by the
     * write itself (an observed metric on the written frame), so the
@@ -89,19 +85,13 @@ class OptOutEtl(
     spark.read.schema(OptOutEtl.pointsSchema).parquet(destination)
 
   /** Buffer 1500 ft + Erase (GSheetsETL_Lab2.py:112-134): zone points
-    * minus opt-out buffers, as a distance anti-join on projected feet.
-    * `zones` carries (cx_ft, cy_ft) candidate points to keep. Building
-    * the frame runs no Spark job.
+    * minus opt-out buffers, the [[Wnv.eraseBuffers]] anti-join on
+    * projected feet. `candidates` carries (cx_ft, cy_ft) points to keep.
+    * Building the frame runs no Spark job.
     */
-  def finalAnalysis(candidates: DataFrame): DataFrame = {
-    val pts = loaded()
-      .select(Geo.xFt(col("x")).as("ox"), Geo.yFt(col("y")).as("oy"))
-    candidates.join(
-      broadcast(pts),
-      Geo.dist2(col("cx_ft"), col("cy_ft"), col("ox"), col("oy"))
-        <= lit(Wnv.BufferFt * Wnv.BufferFt),
-      "left_anti")
-  }
+  def finalAnalysis(candidates: DataFrame): DataFrame =
+    Wnv.eraseBuffers(candidates, col("cx_ft"), col("cy_ft"), broadcast(
+      loaded().select(Geo.xFt(col("x")).as("ox"), Geo.yFt(col("y")).as("oy"))))
 }
 
 object OptOutEtl {

@@ -31,8 +31,11 @@ object XF {
     * 8 hex chars of md5 starting at 1-based `off`, parsed base-16.
     * DuckDB twin: [[h32Sql]].
     */
-  def h32(c: Column, off: Int = 1): Column =
-    conv(substring(md5(c), off, 8), 16, 10).cast(LongType)
+  def h32(c: Column, off: Int = 1): Column = h32Hex(md5(c), off)
+
+  /** [[h32]] of an md5 hex digest already computed. */
+  def h32Hex(digest: Column, off: Int): Column =
+    conv(substring(digest, off, 8), 16, 10).cast(LongType)
 
   def h32Sql(e: String, off: Int = 1): String =
     s"CAST(('0x' || substr(md5($e), $off, 8)) AS BIGINT)"

@@ -1,6 +1,6 @@
 package graft.geo
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.XF
@@ -36,20 +36,36 @@ object Geo {
   val FtPerDegX = 280000.0
   val FtPerDegY = 364000.0
 
-  // ---- mock geocoder (P2) --------------------------------------------
-  /** 5% deterministic miss, mirroring the 1-of-6 empty result in the
-    * reference trace (Nonewnv.log:10).
+  // ---- mock geocoder (P1 + P2 + P4) -----------------------------------
+  /** The geocode step: `frame`'s `keep` columns with the `lon`/`lat` of
+    * `street` + " Boulder CO" (the P1 enrichment, Lab2ETL.py:69),
+    * geocode misses dropped (P4) — a 5% deterministic miss, mirroring
+    * the 1-of-6 empty result in the reference trace (Nonewnv.log:10).
+    *
+    * The miss test and both coordinates are slices of one md5 digest,
+    * bound once per row by a one-element generator: Catalyst would inline a projected digest
+    * into the miss filter and into the `isnotnull` filters it infers
+    * from a later join on the coordinates, while no filter on a
+    * generator's output moves below it.
     */
-  def geocodeHit(addr: Column): Column = XF.h32(addr, 1) % 20 =!= 0
-  def geocodeHitSql(e: String): String = s"(${XF.h32Sql(e, 1)} % 20) <> 0"
+  def geocode(frame: DataFrame, street: Column, keep: Seq[String])
+      : DataFrame = {
+    def h32(off: Int) = XF.h32Hex(col("digest"), off)
+    val addr = concat(street, lit(" Boulder CO"))
+    frame.select(keep.map(col) :+ explode(array(md5(addr))).as("digest"): _*)
+      .filter(h32(1) % 20 =!= 0)
+      .select(keep.map(col) ++ Seq(
+        (lit(Lon0) + (h32(9) % 100000).cast(DoubleType) / lit(200000.0))
+          .as("lon"),
+        (lit(Lat0) + (h32(17) % 100000).cast(DoubleType) / lit(333333.0))
+          .as("lat")): _*)
+  }
 
-  def geocodeLon(addr: Column): Column =
-    lit(Lon0) + (XF.h32(addr, 9) % 100000).cast(DoubleType) / lit(200000.0)
+  /** DuckDB twins of [[geocode]]'s miss test and coordinates over the
+    * address expression `e`. */
+  def geocodeHitSql(e: String): String = s"(${XF.h32Sql(e, 1)} % 20) <> 0"
   def geocodeLonSql(e: String): String =
     s"(CAST(-105.5 AS DOUBLE) + CAST(${XF.h32Sql(e, 9)} % 100000 AS DOUBLE) / CAST(200000 AS DOUBLE))"
-
-  def geocodeLat(addr: Column): Column =
-    lit(Lat0) + (XF.h32(addr, 17) % 100000).cast(DoubleType) / lit(333333.0)
   def geocodeLatSql(e: String): String =
     s"(CAST(39.9 AS DOUBLE) + CAST(${XF.h32Sql(e, 17)} % 100000 AS BIGINT) / CAST(333333 AS DOUBLE))"
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.XF
@@ -729,9 +729,11 @@ object Dedup {
     * "Connected Components in MapReduce and Beyond"); measured 40 → 17
     * rounds on sf0.1's diameter-39 chain components. Convergence is the
     * monotone label-sum fixpoint; the loop FAILS rather than return
-    * non-converged labels at the iteration cap. Remaining wall time is
-    * round-count × fixed job latency — scheduler cost that amortizes on
-    * a real cluster where each round moves real data.
+    * non-converged labels at the iteration cap. The label sum is an
+    * observed metric of the round's own checkpoint job, so a round is
+    * one action. Remaining wall time is round-count × fixed job
+    * latency — scheduler cost that amortizes on a real cluster where
+    * each round moves real data.
     *
     * Every round ends in an eager `localCheckpoint`, NOT `persist`: the
     * frame feeds the next round twice (the propagation join and the
@@ -751,9 +753,11 @@ object Dedup {
     * joins it from every downstream pass.
     */
   private val clusterLabels =
-    Artifact("dedup", "cluster_labels")(computeClusterLabels)
+    Artifact("dedup", "cluster_labels")((s, d) => propagateLabels(s, d)._1)
 
-  private def computeClusterLabels(s: SparkSession, d: String): DataFrame = {
+  /** The `cluster_labels` build: the label frame and its round count. */
+  private[graft] def propagateLabels(s: SparkSession, d: String)
+      : (DataFrame, Int) = {
     val pairs = simhashPairs(s, d)
     // hash-partition the (static) edge set by the join key BEFORE the
     // checkpoint: localCheckpoint preserves outputPartitioning, so every
@@ -762,13 +766,15 @@ object Dedup {
       .union(pairs.select(col("j").as("src"), col("i").as("dst")))
       .repartition(col("src"))
       .localCheckpoint()
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node")).localCheckpoint()
-    def lblSum(df: DataFrame): Long = {
-      val r = df.agg(sum(col("lbl"))).head
-      if (r.isNullAt(0)) 0L else r.getLong(0)
+    /** `df` checkpointed, with its label sum observed by the checkpoint
+      * job itself. */
+    def checkpointed(df: DataFrame): (DataFrame, Long) = {
+      val lblSum = Observation()
+      val cp = df.observe(lblSum, sum(col("lbl")).as("s")).localCheckpoint()
+      (cp, Option(lblSum.get("s")).fold(0L)(_.asInstanceOf[Long]))
     }
-    var before = lblSum(labels)
+    var (labels, before) = checkpointed(edges.select(col("src").as("node"))
+      .distinct().withColumn("lbl", col("node")))
     var converged = before == 0L
     var iters = 0
     val maxIters = 50
@@ -781,12 +787,10 @@ object Dedup {
       // pointer jump (left join + coalesce only as belt-and-suspenders
       // against a label not present as a node, which the invariant rules
       // out): both sides are the same tiny post-agg frame.
-      val next = mins.join(
+      val (next, after) = checkpointed(mins.join(
           mins.select(col("node").as("lbl"), col("lbl").as("jump")),
           Seq("lbl"), "left")
-        .select(col("node"), coalesce(col("jump"), col("lbl")).as("lbl"))
-        .localCheckpoint()
-      val after = lblSum(next)
+        .select(col("node"), coalesce(col("jump"), col("lbl")).as("lbl")))
       labels = next
       converged = after == before
       before = after
@@ -796,7 +800,8 @@ object Dedup {
       s"dedup_clusters: label propagation did not converge in $maxIters " +
         "iterations (component diameter exceeds cap)")
     System.err.println(s"[graft] dedup_clusters converged in $iters rounds")
-    labels.select(col("node").as("doc_id"), col("lbl").as("cluster_id"))
+    (labels.select(col("node").as("doc_id"), col("lbl").as("cluster_id")),
+      iters)
   }
 
   /** Stage-by-stage wall timing of the two prefix-filtered whales

@@ -283,7 +283,7 @@ object Events {
     // equi-join automatically; EventsSpec asserts no CartesianProduct /
     // BroadcastNestedLoopJoin survives in the physical plan.
     "events_range_join_auto" -> ((s: SparkSession, d: String) => {
-      graft.plans.BandJoinRule.register(s)
+      graft.plans.register(s, graft.plans.BandJoinRule)
       val bandUs = 30L * 60 * 1000000
       val ev = t(s, d, "events")
       val clicks = ev.filter(col("event_type") === "click")

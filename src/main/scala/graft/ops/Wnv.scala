@@ -12,10 +12,10 @@ import graft.sources.Tables.t
   *
   * Mapping of reference stages → operators here (file:line into
   * /root/reference):
-  *   - P1 concat enrichment (Lab2ETL.py:69)              → `addr` column
-  *   - P2 geocode (Lab2ETL.py:22-45)                     → [[Geo]] mock
+  *   - P1 concat enrichment (Lab2ETL.py:69)              → [[Geo.geocode]]
+  *   - P2 geocode (Lab2ETL.py:22-45)                     → [[Geo.geocode]] mock
   *   - P3 clean/cast/drop (Lab2ETL.py:76-80)             → wnv_clean_cast
-  *   - P4 null filter (Lab2ETL.py:74)                    → geocodeHit filter
+  *   - P4 null filter (Lab2ETL.py:74)                    → [[Geo.geocode]] miss-drop
   *   - P6 constant Type tag (Lab2ETL.py:78)              → lit("Residential")
   *   - S4 XY→point load (Lab2ETL.py:83-94)               → x/y columns
   *   - J3 Buffer 1500ft (GSheetsETL_Lab2.py:129)         → implicit radius
@@ -27,10 +27,11 @@ import graft.sources.Tables.t
   *
   * Scale design: the zone side is a tiny dimension (25 rows; it stays tiny
   * even at 100 TB of facts) → broadcast theta join. The opt-out buffer side
-  * grows with the data → the Erase anti-join is a grid-cell equi-join
-  * (cell = buffer radius; each buffer is exploded to its 3×3 covering
-  * cells) so Catalyst plans a hash anti-join on (gx, gy) with the exact
-  * distance predicate as a residual filter — no O(N·M) theta join.
+  * grows with the data → the Erase is a plain distance anti-join that
+  * [[graft.plans.DistJoinRule]] rewrites to a grid-cell equi-join (cell =
+  * the radius; each buffer is exploded to its 3×3 covering cells), so
+  * Catalyst plans a hash anti-join on the cell with the exact predicate
+  * as a residual filter — no O(N·M) theta join.
   */
 object Wnv {
 
@@ -43,19 +44,12 @@ object Wnv {
     * further `customer` columns to keep after `c_custkey`.
     */
   def points(spark: SparkSession, dir: String,
-      carry: Seq[String] = Nil): DataFrame = {
-    val addr = concat(col("c_name"), lit(" Boulder CO"))
-    val kept = col("c_custkey") +: carry.map(col)
-    t(spark, dir, "customer")
-      .select(kept :+ addr.as("addr"): _*)
-      .filter(Geo.geocodeHit(col("addr")))
-      .select(kept ++ Seq(
-        Geo.geocodeLon(col("addr")).as("lon"),
-        Geo.geocodeLat(col("addr")).as("lat"),
-        lit("Residential").as("addr_type")): _*)
+      carry: Seq[String] = Nil): DataFrame =
+    Geo.geocode(t(spark, dir, "customer"), col("c_name"),
+        "c_custkey" +: carry)
+      .withColumn("addr_type", lit("Residential"))
       .withColumn("x_ft", Geo.xFt(col("lon")))
       .withColumn("y_ft", Geo.yFt(col("lat")))
-  }
 
   /** SQL twin of [[points]] as a WITH-clause body (DuckDB dialect). */
   private val addrSql = "(c_name || ' Boulder CO')"
@@ -95,12 +89,10 @@ object Wnv {
   def targetAddressReport(addresses: DataFrame, zones: DataFrame): DataFrame = {
     val reportCols = Seq("FULLADDR", "ADDRNUM", "UNITID", "PREDIR",
       "STREETNAME", "STREETSUFF", "POSTDIR")
-    addresses
+    val pts = addresses
       .withColumn("x_ft", Geo.xFt(col("x")))
       .withColumn("y_ft", Geo.yFt(col("y")))
-      .join(broadcast(zones), inZone(col("x_ft"), col("y_ft")), "inner")
-      .groupBy(reportCols.map(col): _*)
-      .agg(count(lit(1)).as("join_count"))
+    zoneJoinCount(pts, zones, reportCols, "join_count")
       .filter(col("join_count") === 1)
       .select(reportCols.map(col): _*)
   }
@@ -136,52 +128,62 @@ object Wnv {
   private def inZoneSql(px: String, py: String): String =
     s"${Geo.dist2Sql(px, py, "z.cx_ft", "z.cy_ft")} <= z.radius_ft * z.radius_ft"
 
+  private def highRisk(zn: DataFrame): DataFrame = zn.filter(col("high_risk"))
+
+  /** J1 core: each `pts` row (x_ft/y_ft) spatial-joined to the `zn`
+    * zones that contain it (KEEP_COMMON, a broadcast theta join against
+    * the tiny catalog), counted per `keys` as `name`. */
+  private def zoneJoinCount(pts: DataFrame, zn: DataFrame, keys: Seq[String],
+      name: String): DataFrame =
+    pts.join(broadcast(zn), inZone(col("x_ft"), col("y_ft")))
+      .groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as(name))
+
   /** J1: spatial inner join (KEEP_COMMON) + per-address Join_Count,
     * keeping the `carry` columns of [[points]] (which c_custkey, the
     * customer key, determines). */
   def spatialJoinCount(spark: SparkSession, dir: String,
       carry: Seq[String] = Nil): DataFrame =
-    points(spark, dir, carry)
-      .join(
-        broadcast(zones(spark, dir).filter(col("high_risk"))),
-        inZone(col("x_ft"), col("y_ft")),
-        "inner")
-      .groupBy((col("c_custkey") +: carry.map(col)): _*)
-      .agg(count(lit(1)).as("join_count"))
+    zoneJoinCount(points(spark, dir, carry), highRisk(zones(spark, dir)),
+      "c_custkey" +: carry, "join_count")
+
+  /** The points of `pts` inside some high-risk zone of `zn`. */
+  private def inRisk(pts: DataFrame, zn: DataFrame): DataFrame =
+    pts.join(broadcast(highRisk(zn)), inZone(col("x_ft"), col("y_ft")),
+      "left_semi")
+
+  /** J2 Erase: the rows of `kept` with no `members` row (ox/oy) that
+    * satisfies `within`, a plain theta anti-join whose
+    * `Geo.dist2(…) <= r²` conjunct [[graft.plans.DistJoinRule]] grids. */
+  private def erase(kept: DataFrame, members: DataFrame,
+      within: Column): DataFrame = {
+    graft.plans.register(kept.sparkSession, graft.plans.DistJoinRule)
+    kept.join(members, within, "left_anti")
+  }
+
+  /** Buffer 1500 ft + Erase (GSheetsETL_Lab2.py:112-134): the rows of
+    * `kept` whose point (x, y) lies outside every 1500-ft buffer of the
+    * (ox, oy) points of `buffers`. */
+  def eraseBuffers(kept: DataFrame, x: Column, y: Column,
+      buffers: DataFrame): DataFrame =
+    erase(kept, buffers, Geo.dist2(x, y, col("ox"), col("oy"))
+      <= lit(BufferFt * BufferFt))
 
   /** J2 as a pure frame transform: in-risk points minus 1500-ft opt-out
-    * buffers, planned as a grid-cell hash anti-join (see header). This
-    * is the ONE downstream DAG every acquisition path feeds — the
-    * fixture/mock path ([[eraseSelection]], the oracle-checked surface)
-    * and the live HTTP path (downloadSheet + geocodeLive, LiveSpec's
-    * stub-served e2e) differ only in how `pts` was produced.
+    * buffers ([[eraseBuffers]]). This is the ONE downstream DAG every
+    * acquisition path feeds — the fixture/mock path ([[eraseSelection]],
+    * the oracle-checked surface) and the live HTTP path (downloadSheet +
+    * geocodeLive, LiveSpec's stub-served e2e) differ only in how `pts`
+    * was produced.
     *
     * @param pts    frame with c_custkey/x_ft/y_ft (plus carried columns)
     * @param zn     zone catalog ([[zones]] shape)
     * @param optPts opt-out point frame with x_ft/y_ft
     */
   def eraseSelectionFrom(pts: DataFrame, zn: DataFrame,
-      optPts: DataFrame): DataFrame = {
-    val cell = BufferFt
-    val inRisk = pts
-      .join(broadcast(zn.filter(col("high_risk"))),
-        inZone(col("x_ft"), col("y_ft")), "left_semi")
-      .withColumn("gx", floor(col("x_ft") / cell))
-      .withColumn("gy", floor(col("y_ft") / cell))
-    val bufCells = optPts
-      .select(col("x_ft").as("ox"), col("y_ft").as("oy"))
-      .withColumn("gx", explode(sequence(
-        floor((col("ox") - BufferFt) / cell), floor((col("ox") + BufferFt) / cell))))
-      .withColumn("gy", explode(sequence(
-        floor((col("oy") - BufferFt) / cell), floor((col("oy") + BufferFt) / cell))))
-    inRisk.join(
-        bufCells,
-        inRisk("gx") === bufCells("gx") && inRisk("gy") === bufCells("gy") &&
-          (Geo.dist2(col("x_ft"), col("y_ft"), col("ox"), col("oy"))
-            <= lit(BufferFt * BufferFt)),
-        "left_anti")
-      .drop("gx", "gy")
-  }
+      optPts: DataFrame): DataFrame =
+    eraseBuffers(inRisk(pts, zn), col("x_ft"), col("y_ft"),
+      optPts.select(col("x_ft").as("ox"), col("y_ft").as("oy")))
 
   /** J2 over the testdata fixture path (mock geocode). */
   def eraseSelection(spark: SparkSession, dir: String): DataFrame =
@@ -192,10 +194,7 @@ object Wnv {
     * erase-selection frame, unsorted: the core of `wnv_pipeline_e2e`,
     * `wnv_symbology` and `wnv_map_export`. */
   private def zoneCounts(sel: DataFrame, zn: DataFrame): DataFrame =
-    sel.join(broadcast(zn.filter(col("high_risk"))),
-        inZone(col("x_ft"), col("y_ft")), "inner")
-      .groupBy(col("zone_id"))
-      .agg(count(lit(1)).as("n_targets"))
+    zoneJoinCount(sel, highRisk(zn), Seq("zone_id"), "n_targets")
 
   /** Flagship tail: [[zoneCounts]] by zone_id — `wnv_pipeline_e2e` and
     * the live path's e2e test.
@@ -278,14 +277,12 @@ object Wnv {
     // written as the PLAIN theta join — no hand bucketing. Catalyst
     // alone would plan a CartesianProduct (no equi key);
     // [[graft.plans.DistJoinRule]] — the 2-D twin of the band-join
-    // rule — rewrites it to the 3×3 grid-cell equi-join with the exact
-    // squared-distance predicate as residual (cell size = the radius,
-    // one ulp up). The oracle stays the naive theta join: the rewrite
-    // must be lossless pair for pair. This is the automated form of
-    // the hand-written WNV erase grid — the operator a user writes
-    // naively and the planner fixes.
+    // rule, which also grids every Erase — rewrites it to the 3×3
+    // grid-cell equi-join with the exact squared-distance predicate as
+    // residual (cell size = the radius, one ulp up). The oracle stays
+    // the naive theta join: the rewrite must be lossless pair for pair.
     "wnv_point_pairs_auto" -> ((s: SparkSession, d: String) => {
-      graft.plans.DistJoinRule.register(s)
+      graft.plans.register(s, graft.plans.DistJoinRule)
       val a = points(s, d)
         .select(col("c_custkey").as("i"), col("x_ft").as("axf"),
           col("y_ft").as("ayf"))
@@ -352,7 +349,7 @@ object Wnv {
     "wnv_zone_extent" -> ((s: SparkSession, d: String) => {
       val extent = udaf(graft.functions.ExtentAgg)
       points(s, d)
-        .join(broadcast(zones(s, d).filter(col("high_risk"))),
+        .join(broadcast(highRisk(zones(s, d))),
           inZone(col("x_ft"), col("y_ft")), "inner")
         .groupBy(col("zone_id"))
         .agg(extent(col("x_ft"), col("y_ft")).as("e"))
@@ -587,36 +584,22 @@ object Wnv {
 
   /** J2 SELECTION semantics under POLYGON subtrahends (the
     * oracle-checked companion of `wnv_erase_poly_sub`): in-risk points
-    * minus the points inside any parcel footprint. Same grid-cell
-    * hash anti-join shape as [[eraseSelectionFrom]]; the residual
-    * predicate is rotated-L1 square membership |u| + |v| ≤ hd with
-    * (u, v) the point offset in the footprint's frame — rational
-    * rotation, so the DuckDB twin computes the bit-identical IEEE
-    * expression (the area queries' clipping has no SQL form; the
-    * selection predicate does).
+    * minus the points inside any parcel footprint, as an [[erase]].
+    * Membership is rotated-L1 |u| + |v| ≤ hd with (u, v) the point
+    * offset in the footprint's frame — rational rotation, so the DuckDB
+    * twin computes the bit-identical IEEE expression. It implies
+    * u² + v² ≤ hd², so the looser dist2 ≤ 2·hd² (the 2× absorbs
+    * rounding) loses no member and gives the erase its grid.
     */
   def erasePolySubSelection(spark: SparkSession, dir: String): DataFrame = {
-    val cell = BufferFt
-    val bbox = ParcelHalfDiag // footprint bbox half-extent hd·max(c,s) < hd
-    val inRisk = points(spark, dir)
-      .join(broadcast(zones(spark, dir).filter(col("high_risk"))),
-        inZone(col("x_ft"), col("y_ft")), "left_semi")
-      .withColumn("gx", floor(col("x_ft") / cell))
-      .withColumn("gy", floor(col("y_ft") / cell))
-    val footCells = optOut(spark, dir)
-      .select(col("x_ft").as("ox"), col("y_ft").as("oy"))
-      .withColumn("gx", explode(sequence(
-        floor((col("ox") - bbox) / cell), floor((col("ox") + bbox) / cell))))
-      .withColumn("gy", explode(sequence(
-        floor((col("oy") - bbox) / cell), floor((col("oy") + bbox) / cell))))
     val dx = col("x_ft") - col("ox"); val dy = col("y_ft") - col("oy")
     val u = dx * lit(RotC) + dy * lit(RotS)
     val v = dy * lit(RotC) - dx * lit(RotS)
-    inRisk.join(footCells,
-        inRisk("gx") === footCells("gx") && inRisk("gy") === footCells("gy") &&
-          (abs(u) + abs(v) <= lit(ParcelHalfDiag)),
-        "left_anti")
-      .drop("gx", "gy")
+    val hd = ParcelHalfDiag
+    erase(inRisk(points(spark, dir), zones(spark, dir)),
+      optOut(spark, dir).select(col("x_ft").as("ox"), col("y_ft").as("oy")),
+      Geo.dist2(col("x_ft"), col("y_ft"), col("ox"), col("oy"))
+        <= lit(2 * hd * hd) && abs(u) + abs(v) <= lit(hd))
   }
 
   /** Diamond (4-vertex convex ring) form of the zone catalog: vertices

@@ -36,17 +36,6 @@ object BandJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 
   private val BktPrefix = "__graft_band_bkt"
 
-  /** Register on a session's `experimental.extraOptimizations` if absent —
-    * covers driver-supplied sessions built without
-    * [[graft.GraftExtensions]] (which injects this rule properly).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .experimental
-    if (!exp.extraOptimizations.contains(BandJoinRule))
-      exp.extraOptimizations = exp.extraOptimizations :+ BandJoinRule
-  }
-
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case j @ Join(_, _, Inner, Some(cond), _) if eligible(j, cond) =>
       rewrite(j).getOrElse(j)

@@ -67,20 +67,6 @@ object BoundAntiJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 
   private val KeyPrefix = "__graft_bound"
 
-  /** Register on a session's `experimental.extraOptimizations` — the
-    * "User Provided Optimizers" batch, which runs AFTER Catalyst's
-    * RewriteSubquery turns EXISTS predicates into semi/anti joins.
-    * (`injectOptimizerRule` lands in the operator-optimization batch,
-    * which is BEFORE that — the join this rule matches does not exist
-    * yet there.)
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .experimental
-    if (!exp.extraOptimizations.contains(BoundAntiJoinRule))
-      exp.extraOptimizations = exp.extraOptimizations :+ BoundAntiJoinRule
-  }
-
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case j @ Join(_, _, LeftAnti, Some(cond), _) =>
       rewrite(j, cond, anti = true).getOrElse(j)

@@ -1,36 +1,41 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.Inner
+import org.apache.spark.sql.catalyst.plans.{Inner, LeftAnti, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-/** Optimizer rule: rewrite a pure planar DISTANCE join — an inner join
-  * whose only cross-side predicate is the squared-distance form
-  * `(ax−bx)² + (ay−by)² <= r²` with literal radius-squared — into a
-  * 3×3 grid-cell equi-join: the 2-D counterpart of [[BandJoinRule]],
-  * and the automated form of the hand-written grid trick in the WNV
-  * erase (`graft.ops.Wnv`) and `events_range_join`.
+/** Optimizer rule: rewrite a pure planar DISTANCE join — an inner,
+  * left-semi or left-anti join whose only cross-side predicate is the
+  * squared-distance form `(ax−bx)² + (ay−by)² <= r²` with literal
+  * radius-squared — into a 3×3 grid-cell equi-join: the 2-D
+  * counterpart of [[BandJoinRule]], and the one grid planner for planar
+  * distance joins: every WNV Erase (`graft.ops.Wnv.erase`) and
+  * `wnv_point_pairs_auto` are written as plain theta joins.
   *
   * Without an equi key Catalyst plans CartesianProduct /
   * BroadcastNestedLoopJoin — O(n·m) distance evaluations, the classic
   * spatial-join trap. The rewrite snaps both sides to a square grid of
   * cell size s = nextUp(√r²) (one ulp above the true radius, so IEEE
   * sqrt rounding can never shrink the cell below the radius), explodes
-  * the LEFT side to its 3×3 covering cells (two chained Generates, 9×
-  * fan-out), projects the single cell on the right, and equi-joins on
+  * the RIGHT side to its 3×3 covering cells (two chained Generates, 9×
+  * fan-out), projects the single cell on the left, and equi-joins on
   * the (cellX, cellY) pair with the exact distance predicate kept as a
   * residual. Any pair within distance r has per-axis deltas <= r <= s,
   * so their cell indices differ by at most 1 per axis and meet in a
   * covering cell — lossless; the residual removes same-cell pairs
   * outside the radius. Cost drops to O(pairs within one cell
-  * neighborhood), shuffled as an ordinary hash join on the cell key —
-  * at 100 TB the win between a single-task nested loop and a keyed
-  * shuffle whose fan-out is bounded by spatial density.
+  * neighborhood), shuffled as an ordinary hash join on the cell key.
+  *
+  * Only the right (for semi/anti, existential) side fans out: a left
+  * row keeps its multiplicity, and a NULL coordinate gives a NULL cell
+  * that matches nothing — anti keeps the row, semi drops it, as the
+  * NULL distance predicate does.
   *
   * Scope guards (mirroring [[BandJoinRule]]):
-  *   - inner joins only; double-typed coordinates; literal r² > 0;
+  *   - inner, left-semi and left-anti joins; double-typed coordinates;
+  *     literal r² > 0;
   *   - fires only when NO cross-side equality conjunct exists;
   *   - idempotent via the reserved cell-attribute name prefix.
   */
@@ -38,19 +43,9 @@ object DistJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 
   private val CellPrefix = "__graft_dist_cell"
 
-  /** Register on a session's `experimental.extraOptimizations` if absent —
-    * covers driver-supplied sessions built without [[graft.GraftExtensions]].
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .experimental
-    if (!exp.extraOptimizations.contains(DistJoinRule))
-      exp.extraOptimizations = exp.extraOptimizations :+ DistJoinRule
-  }
-
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case j @ Join(_, _, Inner, Some(cond), _) if eligible(j, cond) =>
-      rewrite(j).getOrElse(j)
+    case j @ Join(_, _, Inner | LeftSemi | LeftAnti, Some(cond), _)
+        if eligible(j, cond) => rewrite(j).getOrElse(j)
   }
 
   /** `(x1−x2)·(x1−x2) + (y1−y2)·(y1−y2) <= r2` (both multiply operands
@@ -144,26 +139,26 @@ object DistJoinRule extends Rule[LogicalPlan] with PredicateHelper {
       def covering(c: Expression): Expression =
         CreateArray(Seq(Subtract(c, one), c, Add(c, one)))
 
-      // left: two chained generates → the 3×3 covering cells
-      val cxAttr = AttributeReference(s"${CellPrefix}_lx", LongType)()
-      val cyAttr = AttributeReference(s"${CellPrefix}_ly", LongType)()
-      val genX = Generate(Explode(covering(cell(lx))),
+      // right: two chained generates → the 3×3 covering cells
+      val cxAttr = AttributeReference(s"${CellPrefix}_rx", LongType)()
+      val cyAttr = AttributeReference(s"${CellPrefix}_ry", LongType)()
+      val genX = Generate(Explode(covering(cell(rx))),
         unrequiredChildIndex = Nil, outer = false, qualifier = None,
-        generatorOutput = Seq(cxAttr), child = j.left)
-      val genY = Generate(Explode(covering(cell(ly))),
+        generatorOutput = Seq(cxAttr), child = j.right)
+      val genY = Generate(Explode(covering(cell(ry))),
         unrequiredChildIndex = Nil, outer = false, qualifier = None,
         generatorOutput = Seq(cyAttr), child = genX)
 
-      // right: project the single cell per axis
-      val rxAlias = Alias(cell(rx), s"${CellPrefix}_rx")()
-      val ryAlias = Alias(cell(ry), s"${CellPrefix}_ry")()
-      val proj = Project(j.right.output :+ rxAlias :+ ryAlias, j.right)
+      // left: project the single cell per axis
+      val lxAlias = Alias(cell(lx), s"${CellPrefix}_lx")()
+      val lyAlias = Alias(cell(ly), s"${CellPrefix}_ly")()
+      val proj = Project(j.left.output :+ lxAlias :+ lyAlias, j.left)
 
       val others = conjuncts.filterNot(_ eq pred)
       val newCond = (others :+
-        EqualTo(cxAttr, rxAlias.toAttribute) :+
-        EqualTo(cyAttr, ryAlias.toAttribute) :+ pred).reduce(And)
-      Project(j.output, Join(genY, proj, Inner, Some(newCond), j.hint))
+        EqualTo(lxAlias.toAttribute, cxAttr) :+
+        EqualTo(lyAlias.toAttribute, cyAttr) :+ pred).reduce(And)
+      Project(j.output, Join(proj, genY, j.joinType, Some(newCond), j.hint))
     }
   }
 }

@@ -51,7 +51,7 @@ object EraseRingsCheck {
     (Int, Long, Long, (Double, Double), (Double, Double), Double, Double)
   /** Per query: name, ok, rows, (max absolute, max relative) error,
     * reference node step, note. */
-  private type Result =
+  type Result =
     (String, Boolean, Long, (Double, Double), Option[Double], String)
   /** Per zone: the reference area and its 64- vs 128-node step. */
   private type Ref = Map[Int, (Double, Double)]
@@ -61,6 +61,21 @@ object EraseRingsCheck {
     val spark = graft.GraftSession.build(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     spark.sparkContext.setLogLevel("ERROR")
+    val results = check(spark, sfDir, outDir)
+    results.foreach { case (q, ok, rows, (abs, rel), step, note) =>
+      println(s"""{"query": "$q", "status": "${if (ok) "ok" else "fail"}", """ +
+        s""""rows": $rows, "max_abs_err": $abs, "max_rel_err": $rel, """ +
+        s""""node_step": ${step.getOrElse("null")}, """ +
+        s""""note": "${note.replace("\"", "'")}"}""")
+    }
+    spark.stop()
+    if (!results.forall(_._2)) sys.exit(1)
+  }
+
+  /** The nine checks over the dump in `outDir` of the queries run on
+    * the tables in `sfDir`, one [[Result]] per query. */
+  def check(spark: SparkSession, sfDir: String, outDir: String)
+      : Seq[Result] = {
     import spark.implicits._
     def read(q: String): DataFrame = spark.read.parquet(s"$outDir/$q")
     def areas(q: String): Map[Int, Double] =
@@ -104,7 +119,7 @@ object EraseRingsCheck {
       circles.map { case (z, cx, cy, bigR) =>
         z -> SlabArea.Circle(cx, cy, bigR) },
       near(spark, circles, disks))
-    val results = Seq(
+    Seq(
       replay("wnv_erase_poly", areas("wnv_erase_poly"), reference(
         polygons(diamonds), near(spark, bounds(diamonds), disks))),
       replay("wnv_erase_concave", areas("wnv_erase_concave"), reference(
@@ -126,14 +141,6 @@ object EraseRingsCheck {
         circleRef.map { case (z, (a, _)) => z -> a },
         Some(circleRef.values.map(_._2).max)),
       arcs(read("wnv_erase_arcs"), read("wnv_erase_rings")))
-    results.foreach { case (q, ok, rows, (abs, rel), step, note) =>
-      println(s"""{"query": "$q", "status": "${if (ok) "ok" else "fail"}", """ +
-        s""""rows": $rows, "max_abs_err": $abs, "max_rel_err": $rel, """ +
-        s""""node_step": ${step.getOrElse("null")}, """ +
-        s""""note": "${note.replace("\"", "'")}"}""")
-    }
-    spark.stop()
-    if (!results.forall(_._2)) sys.exit(1)
   }
 
   /** (max absolute, max relative) error over (got, want) pairs. */

@@ -28,7 +28,7 @@ object PairCount {
     val spark = graft.GraftSession.build(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.DistJoinRule.register(spark)
+    graft.plans.register(spark, graft.plans.DistJoinRule)
     val pts = graft.ops.Wnv.points(spark, dir)
     val a = pts.select(col("c_custkey").as("i"), col("x_ft").as("axf"),
       col("y_ft").as("ayf"))

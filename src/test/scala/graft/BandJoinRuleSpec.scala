@@ -21,7 +21,7 @@ class BandJoinRuleSpec extends SparkSpec {
 
   test("rewritten band join matches a driver-side brute force") {
     import spark.implicits._
-    graft.plans.BandJoinRule.register(spark)
+    graft.plans.register(spark, graft.plans.BandJoinRule)
     val l = Seq((1L, 0L), (2L, 95L), (3L, 200L), (4L, -40L)).toDF("id", "a")
     val r = Seq(10L, 90L, 105L, 250L, -11L, -39L).toDF("b")
     val got = l.join(r, abs(col("a") - col("b")) <= 10L)
@@ -38,7 +38,7 @@ class BandJoinRuleSpec extends SparkSpec {
 
   test("band join WITH an equi key is left to the regular hash join") {
     import spark.implicits._
-    graft.plans.BandJoinRule.register(spark)
+    graft.plans.register(spark, graft.plans.BandJoinRule)
     val l = Seq((1L, 0L), (1L, 50L), (2L, 0L)).toDF("k", "a")
     val r = Seq((1L, 5L), (2L, 100L)).toDF("k2", "b")
     val df = l.join(r, col("k") === col("k2") &&
@@ -50,7 +50,7 @@ class BandJoinRuleSpec extends SparkSpec {
 
   test("strict < band predicates are rewritten losslessly too") {
     import spark.implicits._
-    graft.plans.BandJoinRule.register(spark)
+    graft.plans.register(spark, graft.plans.BandJoinRule)
     val l = Seq(0L, 100L).toDF("a")
     val r = Seq(10L, 110L, 12L).toDF("b")
     val got = l.join(r, abs(col("a") - col("b")) < 11L)

@@ -227,6 +227,21 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("a cluster_labels build runs one action per round plus a constant") {
+    // the label sum is observed by each round's checkpoint job, so a
+    // round is one action (its adaptive query stages are jobs of that
+    // action) and there is no separate convergence job. Measured on the
+    // second build, after the first has built every memoized input.
+    Dedup.propagateLabels(spark, sf)
+    var rounds = 0
+    val (jobs, actions) =
+      jobsAndActionsDuring { rounds = Dedup.propagateLabels(spark, sf)._2 }
+    // sf0.001: 2 rounds, 4 actions and 19 jobs; with a separate sum job
+    // per round it was 7 actions (2 · rounds + 3) and 25 jobs
+    assert(rounds > 0)
+    assert(actions === rounds + 2, s"$jobs jobs")
+  }
+
   test("ngram jaccard pairs equal the brute-force all-pairs answer") {
     import spark.implicits._
     val got = graft.SparkEntry.queries("dedup_ngram_jaccard")(spark, sf)

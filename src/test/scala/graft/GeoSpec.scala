@@ -48,19 +48,17 @@ class GeoSpec extends SparkSpec {
 
   test("mock geocoder is deterministic and misses ~5%") {
     import spark.implicits._
-    val addrs = (1 to 2000).map(i => s"$i Main St Boulder CO").toDF("addr")
-    val out = addrs.select(
-      Geo.geocodeHit(col("addr")).as("hit"),
-      Geo.geocodeLon(col("addr")).as("lon"),
-      Geo.geocodeLat(col("addr")).as("lat")).cache()
-    val hitRate = out.filter(col("hit")).count().toDouble / 2000
+    // Geo.geocode appends " Boulder CO": the addresses are "<i> Main St Boulder CO"
+    val streets = (1 to 2000).map(i => s"$i Main St").toDF("street")
+    val out = Geo.geocode(streets, col("street"), Seq("street")).cache()
+    val hitRate = out.count().toDouble / 2000
     assert(hitRate > 0.92 && hitRate < 0.98, s"hit rate $hitRate")
     // coordinates land in the documented synthetic bounding box
     val bad = out.filter(col("lon") < -105.5 || col("lon") > -105.0 ||
       col("lat") < 39.9 || col("lat") > 40.2).count()
     assert(bad === 0)
     // determinism: identical second evaluation
-    val again = addrs.select(Geo.geocodeLon(col("addr")).as("lon"))
+    val again = Geo.geocode(streets, col("street"), Nil).select("lon")
     assert(out.select("lon").except(again).count() === 0)
     out.unpersist()
   }

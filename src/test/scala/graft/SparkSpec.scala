@@ -22,12 +22,18 @@ abstract class SparkSpec extends AnyFunSuite {
 
   /** Spark jobs started by `body`: on this thread, or on a thread that
     * inherits its local properties (a concurrent warm's pool). */
-  def jobsDuring(body: => Unit): Int = {
+  def jobsDuring(body: => Unit): Int = jobsAndActionsDuring(body)._1
+
+  /** (jobs, actions) started by `body`, where an action is one SQL
+    * execution: adaptive execution runs each of its query stages as a
+    * job of the same execution. */
+  def jobsAndActionsDuring(body: => Unit): (Int, Int) = {
     val tag = "graft.sparkSpec"
-    val tags = new ConcurrentLinkedQueue[String]()
+    val tags = new ConcurrentLinkedQueue[(String, String)]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(tag)))
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag))
+          .map(_ -> String.valueOf(p.getProperty("spark.sql.execution.id"))))
           .foreach(tags.add)
     }
     val sc = spark.sparkContext
@@ -40,10 +46,11 @@ abstract class SparkSpec extends AnyFunSuite {
       sc.setLocalProperty(tag, "sentinel")
       spark.range(1).count()
       val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!tags.contains("sentinel") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(tags.contains("sentinel"), "listener never saw the sentinel")
-      tags.asScala.count(_ == "body")
+      def seen = tags.asScala.exists(_._1 == "sentinel")
+      while (!seen && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen, "listener never saw the sentinel")
+      val ran = tags.asScala.filter(_._1 == "body").map(_._2).toSeq
+      (ran.size, ran.distinct.size)
     } finally {
       sc.setLocalProperty(tag, null)
       sc.removeSparkListener(listener)

@@ -39,9 +39,10 @@ class WnvSpec extends SparkSpec {
     val expLon = -105.5 + (h32(addr, 9) % 100000).toDouble / 200000.0
     val expLat = 39.9 + (h32(addr, 17) % 100000).toDouble / 333333.0
     import spark.implicits._
-    val got = Seq(addr).toDF("addr")
-      .select(graft.geo.Geo.geocodeLon(col("addr")),
-        graft.geo.Geo.geocodeLat(col("addr"))).head()
+    // Geo.geocode appends the " Boulder CO" suffix itself
+    val got = graft.geo.Geo.geocode(
+        Seq(addr.stripSuffix(" Boulder CO")).toDF("street"), col("street"), Nil)
+      .select(col("lon"), col("lat")).head()
     assert(got.getDouble(0) === expLon)
     assert(got.getDouble(1) === expLat)
   }
@@ -89,15 +90,27 @@ class WnvSpec extends SparkSpec {
     val sel = Wnv.erasePolySubSelection(spark, sf)
     val got = sel.select("c_custkey").collect().map(_.getLong(0)).toSet
     assert(got === expected)
-    // the corpus-scale ANTI join must plan as a grid-cell HASH join
-    // (the 100 TB shape) — never a nested loop over points ×
-    // footprints. The zone SEMI join against the 25-row catalog is the
-    // intended broadcast theta join and MAY be a nested loop.
-    val p = sel.queryExecution.executedPlan.toString
+    assertGridAnti(sel)
+  }
+
+  /** The corpus-scale Erase ANTI join must plan as a grid-cell HASH join
+    * (the 100 TB shape) — never a nested loop over points × members.
+    * The zone SEMI join against the 25-row catalog is the intended
+    * broadcast theta join and MAY be a nested loop. */
+  private def assertGridAnti(df: org.apache.spark.sql.DataFrame): Unit = {
+    val p = df.queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"), p.take(1500))
     assert(p.linesIterator.filter(_.contains("LeftAnti"))
       .forall(l => l.contains("HashJoin")), p.take(1500))
     assert(p.contains("LeftAnti"), p.take(1500))
+  }
+
+  test("erase selection and the ETL finalAnalysis plan grid hash anti-joins") {
+    assertGridAnti(Wnv.eraseSelection(spark, sf))
+    val out = java.nio.file.Files.createTempDirectory("wnv_etl").toString
+    val etl = new graft.api.OptOutEtl(spark, fixture, "", s"$out/pts")
+    etl.process()
+    assertGridAnti(etl.finalAnalysis(Wnv.zones(spark, sf)))
   }
 
   test("spatial join_count equals brute-force zone membership count") {

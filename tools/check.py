@@ -6,10 +6,20 @@ Usage: python3 tools/check.py [sfDir] [outDir] [--timeout SEC]
 
 Assumes `sbt "runMain graft.Verify <sfDir> <outDir>"` already ran.
 For each query result parquet under outDir, runs the matching oracle SQL
-(outDir/oracle_sql.json) in DuckDB over the sfDir tables and compares:
-  - row count, column name set
-  - exact equality for non-float columns
-  - exact + approx (1e-9 rel) equality for float columns, reported separately
+(outDir/oracle_sql.json) in DuckDB over the sfDir tables and compares
+them the way the driver does:
+  - row count, column name set;
+  - the verdict: every cell RENDERED (`repr`, so `290` vs `290.0` vs
+    `Decimal('290')` differ, as they do in the driver's value hash),
+    columns sorted by name and rows by all columns, compared exactly.
+    The Spark side is read with pandas/pyarrow like the driver (parquet
+    DECIMAL becomes decimal.Decimal, not float64);
+  - the 1e-9 reading: on a mismatch, each differing column is counted
+    again as value diffs and beyond-1e-9-relative diffs, which tells a
+    dtype-only or last-bit difference from a wrong value. The summary
+    prints how many queries pass at 1e-9 besides the exact verdict.
+The last line is the exact reading over every query dir in outDir, the
+ones with no oracle (NO-ORACLE) counted as passing: `N/N pass`.
 
 Round-9 additions for the sf1 (100x gate) scale-up:
   --timeout N   interrupt an oracle after N seconds (con.interrupt() from
@@ -24,7 +34,7 @@ Round-9 additions for the sf1 (100x gate) scale-up:
 The value compare is vectorized (numpy/pandas) — the elementwise Python
 loop was fine at sf0.01 but took minutes per 1.5M-row result at sf1.
 """
-import json, math, os, sys, threading, time
+import glob, json, math, os, sys, threading, time
 import duckdb
 import numpy as np
 import pandas as pd
@@ -131,6 +141,20 @@ def run_oracle(sql):
         timer.cancel()
 
 
+def render(v):
+    # one canonical rendering per cell, dtype-sensitive like the
+    # driver's hash: repr distinguishes 290 / 290.0 / Decimal('290')
+    return v if isinstance(v, str) else repr(v)
+
+
+def canon(df):
+    """Columns sorted by name, cells rendered, rows sorted by all
+    columns: the driver's order-insensitive form of a result."""
+    df = df.reindex(sorted(df.columns), axis=1)
+    rendered = df.apply(lambda col: col.map(render))
+    return rendered.sort_values(by=list(rendered.columns), ignore_index=True)
+
+
 def col_diffs(a, b, tie_ok=False):
     """(exact_diffs, beyond_tolerance_diffs, r6_ties) for two aligned
     columns. With tie_ok, float diffs of exactly one 1e-6 bucket are
@@ -179,7 +203,7 @@ if "only" in opts:
     only = set(opts["only"].split(","))
     oracle = {k: v for k, v in oracle.items() if k in only}
 results = {}
-ok = bad = timed_out = skipped = 0
+ok = bad = timed_out = skipped = compared = tol_pass = 0
 for name, sql in sorted(oracle.items()):
     if name in skip_ok:
         print(f"ok   {name} (resumed from previous run)")
@@ -192,8 +216,9 @@ for name, sql in sorted(oracle.items()):
         continue
     t0 = time.time()
     try:
-        mine = con.sql(
-            f"SELECT * FROM read_parquet('{OUT}/{name}/*.parquet')").df()
+        parts = sorted(glob.glob(f"{OUT}/{name}/*.parquet"))
+        mine = pd.concat([pd.read_parquet(p) for p in parts],
+                         ignore_index=True)
     except Exception as e:
         print(f"FAIL {name}: no spark output: {str(e)[:100]}")
         results[name] = {"status": "fail", "err": "no spark output"}
@@ -210,23 +235,41 @@ for name, sql in sorted(oracle.items()):
         timed_out += 1
         continue
     errs = []
+    tie_total = 0
+    tol_ok = True
     if sorted(mine.columns) != sorted(ora.columns):
         errs.append(f"cols mine={sorted(mine.columns)} ora={sorted(ora.columns)}")
+        tol_ok = False
     elif len(mine) != len(ora):
         errs.append(f"rows mine={len(mine)} ora={len(ora)}")
+        tol_ok = False
     else:
-        mine = mine[sorted(mine.columns)]
-        ora = ora[sorted(ora.columns)]
-        tie_total = 0
-        for c in mine.columns:
+        # the 1e-9 reading: value diffs per column, rows in dump order
+        # (each oracle's ORDER BY matches its query's)
+        m, o = mine[sorted(mine.columns)], ora[sorted(ora.columns)]
+        reading = []
+        for c in m.columns:
             exact, approx, ties = col_diffs(
-                mine[c], ora[c], tie_ok=(name in round_ties))
+                m[c], o[c], tie_ok=(name in round_ties))
             tie_total += ties
+            tol_ok = tol_ok and approx == 0
             if exact:
                 tag = "EXACT-ONLY" if approx == 0 else "VALUE"
-                errs.append(
-                    f"col {c}: {exact} exact diffs, "
-                    f"{approx} beyond-1e-9 diffs [{tag}]")
+                reading.append(f"col {c}: {exact} exact diffs, "
+                               f"{approx} beyond-1e-9 diffs [{tag}]")
+        a, b = canon(mine), canon(ora)
+        if a.equals(b):
+            tol_ok = True
+        elif not (name in round_ties and tie_total and not reading):
+            # a declared r6 tie is the only rendered difference forgiven
+            cells = int((a != b).to_numpy().sum())
+            errs.append(f"{cells} rendered cells differ; " + (
+                "; ".join(reading) if reading else
+                "values equal, dtypes differ [DTYPE]: " + ", ".join(
+                    f"{c} {m[c].dtype}/{o[c].dtype}" for c in m.columns
+                    if (a[c] != b[c]).any())))
+    compared += 1
+    tol_pass += tol_ok
     if len(mine) == 0 and not errs:
         if name in allow_empty:
             print(f"ok   {name} (0 rows - adjudicated empty regime)")
@@ -252,6 +295,15 @@ for name, sql in sorted(oracle.items()):
 summary = f"\n{ok} ok, {bad} fail" + (
     f", {timed_out} oracle-timeout" if timed_out else "")
 print(summary)
+print(f"1e-9 reading: {tol_pass} of {compared} compared queries within "
+      "tolerance")
+# the exact reading over every dumped query: no-oracle dirs pass
+dumped = sorted(n for n in os.listdir(OUT) if os.path.isdir(f"{OUT}/{n}")
+                and ("only" not in opts or n in opts["only"].split(",")))
+no_oracle = [n for n in dumped if n not in oracle]
+n_pass = ok + len(no_oracle)
+print(f"exact rendered reading: {n_pass}/{len(results) + len(no_oracle)} "
+      f"pass ({len(no_oracle)} NO-ORACLE)")
 if "json" in opts:
     with open(opts["json"], "w") as f:
         json.dump({"sf": SF, "ok": ok, "fail": bad,
