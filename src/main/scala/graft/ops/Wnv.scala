@@ -92,7 +92,7 @@ object Wnv {
     val pts = addresses
       .withColumn("x_ft", Geo.xFt(col("x")))
       .withColumn("y_ft", Geo.yFt(col("y")))
-    zoneJoinCount(pts, zones, reportCols, "join_count")
+    zoneJoinAgg(pts, zones, reportCols, count(lit(1)).as("join_count"))
       .filter(col("join_count") === 1)
       .select(reportCols.map(col): _*)
   }
@@ -132,20 +132,21 @@ object Wnv {
 
   /** J1 core: each `pts` row (x_ft/y_ft) spatial-joined to the `zn`
     * zones that contain it (KEEP_COMMON, a broadcast theta join against
-    * the tiny catalog), counted per `keys` as `name`. */
-  private def zoneJoinCount(pts: DataFrame, zn: DataFrame, keys: Seq[String],
-      name: String): DataFrame =
+    * the tiny catalog), aggregated per `keys` with `agg` (a Join_Count
+    * or, for `wnv_zone_extent`, the layer extent). */
+  private def zoneJoinAgg(pts: DataFrame, zn: DataFrame, keys: Seq[String],
+      agg: Column): DataFrame =
     pts.join(broadcast(zn), inZone(col("x_ft"), col("y_ft")))
       .groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as(name))
+      .agg(agg)
 
   /** J1: spatial inner join (KEEP_COMMON) + per-address Join_Count,
     * keeping the `carry` columns of [[points]] (which c_custkey, the
     * customer key, determines). */
   def spatialJoinCount(spark: SparkSession, dir: String,
       carry: Seq[String] = Nil): DataFrame =
-    zoneJoinCount(points(spark, dir, carry), highRisk(zones(spark, dir)),
-      "c_custkey" +: carry, "join_count")
+    zoneJoinAgg(points(spark, dir, carry), highRisk(zones(spark, dir)),
+      "c_custkey" +: carry, count(lit(1)).as("join_count"))
 
   /** The points of `pts` inside some high-risk zone of `zn`. */
   private def inRisk(pts: DataFrame, zn: DataFrame): DataFrame =
@@ -194,7 +195,7 @@ object Wnv {
     * erase-selection frame, unsorted: the core of `wnv_pipeline_e2e`,
     * `wnv_symbology` and `wnv_map_export`. */
   private def zoneCounts(sel: DataFrame, zn: DataFrame): DataFrame =
-    zoneJoinCount(sel, highRisk(zn), Seq("zone_id"), "n_targets")
+    zoneJoinAgg(sel, highRisk(zn), Seq("zone_id"), count(lit(1)).as("n_targets"))
 
   /** Flagship tail: [[zoneCounts]] by zone_id — `wnv_pipeline_e2e` and
     * the live path's e2e test.
@@ -348,11 +349,8 @@ object Wnv {
     // layer-extent summary, one pass, merge-order-independent.
     "wnv_zone_extent" -> ((s: SparkSession, d: String) => {
       val extent = udaf(graft.functions.ExtentAgg)
-      points(s, d)
-        .join(broadcast(highRisk(zones(s, d))),
-          inZone(col("x_ft"), col("y_ft")), "inner")
-        .groupBy(col("zone_id"))
-        .agg(extent(col("x_ft"), col("y_ft")).as("e"))
+      zoneJoinAgg(points(s, d), highRisk(zones(s, d)), Seq("zone_id"),
+          extent(col("x_ft"), col("y_ft")).as("e"))
         .select(col("zone_id"), col("e.min_x"), col("e.max_x"),
           col("e.min_y"), col("e.max_y"),
           col("e.centroid_x"), col("e.centroid_y"), col("e.n_points"))
